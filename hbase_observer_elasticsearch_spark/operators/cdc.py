@@ -218,8 +218,8 @@ def apply_changefeed(cf: DataFrame, info_envelope: bool = False) -> DataFrame:
 
     # Latest value per (rowkey, qualifier); family desc == "last family in
     # byte order wins" for same-ts collisions (#4).  Same ordering as the
-    # streaming compactor (streaming/pipeline.compact_epoch) so batch
-    # replay and streamed state agree exactly.
+    # sink MERGE (sinks/state_sink.merge_epoch) so batch replay and
+    # streamed state agree exactly.
     w_q = Window.partitionBy("rowkey", "qualifier").orderBy(
         F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc()
     )
@@ -567,8 +567,8 @@ def cdc_replicate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch("replicate_bucketed_")
     # r14 optimization round (guide §2.2 — fewer, larger reduce
     # partitions): the per-epoch bucketed MERGE shuffles one epoch's
-    # compacted cells (~50 k rows here), so 32 near-empty reduce tasks
-    # per window/join stage dominated the drain. Run the merge loop at 4
+    # mutations (~50 k rows here), so 32 near-empty reduce tasks per
+    # window stage dominated the drain. Run the merge loop at 4
     # partitions like sink_merge_idempotent_epochs — measured 4.4 s vs
     # 5.8-6.5 s end-to-end at sf0.1 (same-session A/B). At real scale
     # this knob is the state table's bucket count, not the core count.
@@ -1202,17 +1202,18 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each epoch slice is a seq-range predicate PUSHED to the
     parquet scan (row-group pruning); each MERGE is one hash shuffle on
-    rowkey (union -> window); at 100 TB the state table is bucketed by
-    rowkey so the stored side co-locates without reshuffling, and the
-    version-pointer swap is the same atomic-rename commit a lakehouse
-    MERGE uses.
+    rowkey (state + cells + tombstone rows, then the tombstone-max and
+    row_number windows on that one exchange); at 100 TB the state table
+    is bucketed by rowkey so the stored side co-locates without
+    reshuffling, and the version-pointer swap is the same atomic-rename
+    commit a lakehouse MERGE uses.
     """
     ensure_session_conf(spark)
     import shutil
 
     from ..sinks.state_sink import EmulatedEsSink
     from ..sources.changefeed import events_as_changefeed
-    from ..streaming.pipeline import compact_epoch
+    from ..streaming.pipeline import split_epoch
 
     cf = events_as_changefeed(load_table(spark, sf_dir, "events"))
     lo, hi = cf.agg(F.min("seq"), F.max("seq")).first()
@@ -1228,7 +1229,7 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch("merge_epochs_")
     # Per-epoch state is small (one row per live (rowkey, qualifier)), so
     # the merge loop runs at 4 shuffle partitions like the streaming-twin
-    # drains — 32 near-empty tasks per window/join stage otherwise
+    # drains — 32 near-empty tasks per window stage otherwise
     # dominate the wall clock. At real scale this maps to sizing the
     # merge's partitioning to the state table's bucket count.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1239,8 +1240,7 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch = cf.filter(
                 (F.col("seq") >= e_lo) & (F.col("seq") <= e_hi)
             )
-            cells, dels = compact_epoch(batch)
-            sink.apply(cells, dels)
+            sink.apply(*split_epoch(batch))
         out = (
             sink.read_cells()
             .filter(F.col("qualifier").isNotNull())

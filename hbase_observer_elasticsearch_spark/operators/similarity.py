@@ -1048,12 +1048,11 @@ def _rhp_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded rows × 16 planes = 2 M rows through a hash aggregate.
     # The hyperplane table is 16×64 ints; nest it into ONE broadcast row
     # and compute every projection MAP-SIDE with a zip_with/aggregate
-    # fold per plane. Arithmetic is identical: the same
-    # decimal(18,10)·int products, summed exactly (decimal addition is
-    # exact and commutative, so fold order vs hash-agg order cannot
-    # change the value), so the sign bits — and every downstream
-    # candidate set and cosine — are bit-identical. One narrow explode
-    # of (vec, p, s) remains for the band aggregation below.
+    # fold per plane over the same decimal(18,10)·int products. Only the
+    # sign of each sum is consumed (see the fold below), so the sign bits
+    # — and every downstream candidate set and cosine — match the SUM
+    # form. One narrow explode of (vec, p, s) remains for the band
+    # aggregation below.
     hp_nested = (
         hp.groupBy("p")
         .agg(F.array_sort(F.collect_list(F.struct("d", "w"))).alias("dw"))
@@ -1070,11 +1069,14 @@ def _rhp_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "planes",
                     lambda pl: F.struct(
                         pl["p"].alias("p"),
-                        # products are decimal(38,9) (the exact type the
-                        # old SUM aggregated); the fold re-casts each
-                        # partial back to (38,9) so the accumulator type
-                        # — and therefore every rounded digit — matches
-                        # SUM's internal accumulator bit for bit.
+                        # products are decimal(38,9), but Spark types
+                        # decimal(38,9) + decimal(38,9) as decimal(38,8),
+                        # so each fold step rounds the partial to 8
+                        # places: the sum is NOT bit-identical to SUM.
+                        # Only its sign is used, and the 64-dim fold rounds
+                        # it by at most 64 * 0.5e-8 = 3.2e-7, so a bit can
+                        # differ from SUM's only for a projection within
+                        # 3.2e-7 of zero.
                         F.aggregate(
                             F.zip_with(
                                 "embedding",

@@ -1386,15 +1386,10 @@ def ranked_topk(
     where the site cast it, int32 where it did not) so schemas are
     byte-identical to the pre-rewrite form.
 
-    GUARDRAIL (r13 ADVICE, low): limit(k) keeps a DIFFERENT tie row
-    than the window form unless ``order_cols`` is a total order, so
-    every call site must end with a unique tie-break column — enforced
-    minimally here (every current site passes the score plus at least
-    one key column)."""
-    assert len(order_cols) >= 2, (
-        "ranked_topk requires a total order: pass the score column(s) "
-        "PLUS a unique tie-break key as the last order column"
-    )
+    limit(k) keeps a DIFFERENT tie row than the window form unless
+    ``order_cols`` is a total order, so every call site must end with a
+    unique column: a score plus a key column, or one column that is
+    already unique (``search_pinned_query``'s ``ord``)."""
     w = Window.orderBy(*order_cols)
     rk = F.row_number().over(w)
     if rk_cast is not None:

@@ -10,7 +10,9 @@ state is a non-starter. This sink hash-partitions the state by
    small ints — driver-safe at any scale);
 2. reads ONLY those bucket partitions (path-level pruning via the
    manifest);
-3. LWW-merges the batch in (state_sink.merge_epoch — identical semantics);
+3. LWW-merges the epoch's puts and deletes, raw or compacted, into them
+   with state_sink.merge_epoch (the same one-rowkey-shuffle merge as
+   EmulatedEsSink; the write then repartitions by bucket);
 4. writes the touched buckets' NEW VERSIONS to the side
    (``bkt=K/v=N+1``), then atomically swaps a single ``_MANIFEST``
    pointer file mapping bucket → live version.

@@ -19,7 +19,8 @@ State is stored at cell granularity, versioned per cell:
   cell's — family byte-order breaks same-ts collisions exactly like the
   reference's NavigableMap iteration (HbaseDataSyncEsObserver.java:93-102)
   and the batch replay (operators/cdc.apply_changefeed), so streamed state
-  is invariant to how same-ts mutations split across micro-batches;
+  is invariant to how same-ts mutations split across micro-batches (but
+  see merge_epoch's cross-epoch limit when a delete splits them);
 - a tombstone kills every cell with (ts, seq) ≤ the tombstone's and
   PERSISTS, so a stale pre-delete put arriving epochs later cannot
   resurrect a deleted document (at 100 TB you expire tombstones past the
@@ -105,48 +106,47 @@ class EsSinkConfig:
 
 
 def merge_epoch(cur: DataFrame, cells: DataFrame, dels: DataFrame) -> DataFrame:
-    """Pure LWW merge of one epoch's (cells, dels) into the current cell
-    state; returns the next cell state (live cells + persistent
-    tombstones). Shared by both sink layouts; idempotent by construction
-    (max/row_number over the same inputs). Same-ts collisions resolve by
-    (ts, family, seq) — identical to apply_changefeed / compact_epoch /
-    streaming.stateful, so final state is invariant to micro-batch
-    partitioning even across epochs."""
-    cur, cells = _with_family(cur), _with_family(cells)
-    cur_cells = cur.filter(F.col("qualifier").isNotNull())
-    cur_dels = cur.filter(F.col("qualifier").isNull()).select("rowkey", "ts", "seq")
+    """Pure LWW merge of one epoch's raw puts (`cells`) and deletes (`dels`:
+    rowkey, ts, seq) into the current cell state; returns the next state
+    (live cells + persistent tombstones). Shared by both sink layouts.
 
-    all_cells = cur_cells.unionByName(cells.select(*_CELL_COLS))
-    all_dels = (
-        cur_dels.unionByName(dels.select("rowkey", "ts", "seq"))
-        .groupBy("rowkey")
-        .agg(F.max(F.struct("ts", "seq")).alias("d"))
-        .select(
-            "rowkey", F.col("d.ts").alias("del_ts"), F.col("d.seq").alias("del_seq")
-        )
+    One rowkey shuffle: the deletes join as qualifier-NULL tombstone rows,
+    a window over rowkey drops every cell at or below the latest tombstone
+    (ts, seq), then row_number over (rowkey, qualifier) by (ts, family, seq)
+    desc keeps each winner; the NULL-qualifier winner is the tombstone.
+    Filtering before ranking gives apply_changefeed's answer for any mix of
+    mutations within one epoch; replaying an epoch is a no-op.
+
+    Cross-epoch limit: state keeps only the winning cell per (rowkey,
+    qualifier). If two same-ts puts land in one epoch, the family winner
+    has the lower seq, and a delete between their seqs lands in a later
+    epoch, the losing put is already gone and cannot outlive the delete
+    as it does in apply_changefeed."""
+    none = F.lit(None).cast("string")
+    tombs = dels.select(
+        "rowkey", *(none.alias(c) for c in ("qualifier", "value", "family")),
+        "ts", "seq",
     )
-
-    live = all_cells.join(all_dels, "rowkey", "left").filter(
-        F.col("del_ts").isNull()
-        | (F.struct("ts", "seq") > F.struct(F.col("del_ts"), F.col("del_seq")))
+    rows = (
+        cur.select(*_CELL_COLS)
+        .unionByName(_with_family(cells).select(*_CELL_COLS))
+        .unionByName(tombs)
+    )
+    is_tomb = F.col("qualifier").isNull()
+    last_del = F.max(F.when(is_tomb, F.struct("ts", "seq"))).over(
+        Window.partitionBy("rowkey")
     )
     w = Window.partitionBy("rowkey", "qualifier").orderBy(
         F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc()
     )
-    latest = (
-        live.withColumn("__rn", F.row_number().over(w))
+    after_del = F.col("__del").isNull() | (F.struct("ts", "seq") > F.col("__del"))
+    return (
+        rows.withColumn("__del", last_del)
+        .filter(is_tomb | after_del)
+        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(*_CELL_COLS)
     )
-    tombstones = all_dels.select(
-        "rowkey",
-        F.lit(None).cast("string").alias("qualifier"),
-        F.lit(None).cast("string").alias("value"),
-        F.lit(None).cast("string").alias("family"),
-        F.col("del_ts").alias("ts"),
-        F.col("del_seq").alias("seq"),
-    )
-    return latest.unionByName(tombstones)
 
 
 class EmulatedEsSink:
@@ -156,9 +156,11 @@ class EmulatedEsSink:
     names the live version.  Each `apply` writes v=n+1 from v=n + batch,
     then swaps the pointer — a crashed epoch leaves the old version live.
 
-    Scale shape: the MERGE is one hash shuffle on rowkey (union → window),
-    and at 100 TB the state table would be bucketed by rowkey so the merge
-    co-locates without reshuffling the stored side.
+    Scale shape: one `apply` is one hash shuffle on rowkey (state ∪ puts ∪
+    tombstones → two windows on that one exchange) plus the write: two
+    Spark jobs, whatever the epoch's size. At 100 TB the state table would
+    be bucketed by rowkey so the merge co-locates without reshuffling the
+    stored side.
     """
 
     def __init__(
@@ -188,7 +190,7 @@ class EmulatedEsSink:
         path = os.path.join(self.root, f"v={v}")
         if v == 0 and not os.path.exists(path):
             return self.spark.createDataFrame([], CELLS_SCHEMA)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(CELLS_SCHEMA).parquet(path)
 
     # -- the MERGE ----------------------------------------------------------
     def apply(
@@ -196,9 +198,9 @@ class EmulatedEsSink:
     ) -> None:
         """LWW-merge one epoch into the state table.
 
-        cells: (rowkey, qualifier, value, ts, seq) — the epoch's latest put
-        per touched (rowkey, qualifier).
-        dels:  (rowkey, ts, seq) — the epoch's latest delete per key.
+        cells: (rowkey, qualifier, value, family, ts, seq) — the epoch's
+        puts, raw or pre-compacted (family optional).
+        dels:  (rowkey, ts, seq) — the epoch's deletes, raw or one per key.
         """
         next_state = merge_epoch(self.read_cells(), cells, dels)
 

@@ -8,10 +8,11 @@ One streaming query replaces all three of the reference's control paths:
 - buffer + bulk execute + reconnect     → `foreachBatch` MERGE into the
   idempotent sink + checkpoint replay (beats #22's at-least-once)
 
-Per micro-batch, the epoch's mutations are pre-compacted (last value per
-(rowkey, qualifier) since the epoch's last delete) before the MERGE — the
-same one-shuffle plan as operators/cdc.apply_changefeed, so state-table IO
-per epoch is O(|touched keys|), not O(|mutations|).
+Per micro-batch, the epoch's raw puts and deletes go straight into the
+sink MERGE (sinks/state_sink.merge_epoch), which does the whole
+last-writer-wins reduction in the same rowkey shuffle that merges them
+into state: one shuffle and two Spark jobs per epoch, with no separate
+compaction pass.
 
 Delivery semantics: file-source + checkpoint gives exactly-once batch
 replay; the sink MERGE is idempotent per epoch → effectively exactly-once
@@ -43,10 +44,11 @@ def compact_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     DIFFERENT micro-batches (merge_epoch orders by the same triple).
     dels: the latest delete per touched key.
 
-    No epoch-local delete filtering is needed: the sink's persistent
-    tombstones subsume it (a cell with (ts, seq) ≤ the tombstone's never
-    becomes visible), which is what makes the pipeline's final state
-    invariant to how the changefeed is partitioned into micro-batches.
+    It ranks BEFORE the delete filter, so a same-ts put that loses the
+    family tiebreak but has a higher seq than the epoch's delete is dropped
+    although apply_changefeed keeps it. The sink write path therefore does
+    not use it: it feeds merge_epoch the raw split_epoch halves, and
+    merge_epoch filters first and ranks in the same shuffle.
     """
     w_q = Window.partitionBy("rowkey", "qualifier").orderBy(
         F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc()
@@ -64,6 +66,15 @@ def compact_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         .select("rowkey", F.col("d.ts").alias("ts"), F.col("d.seq").alias("seq"))
     )
     return cells, dels
+
+
+def split_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """An epoch's raw mutations as the sink MERGE's (cells, dels): its
+    `op='put'` rows and the (rowkey, ts, seq) of its deletes, unreduced —
+    merge_epoch does the whole last-writer-wins reduction itself."""
+    puts = batch.filter(F.col("op") == "put")
+    dels = batch.filter(F.col("op") == "delete").select("rowkey", "ts", "seq")
+    return puts, dels
 
 
 def start_pipeline(
@@ -96,8 +107,7 @@ def start_pipeline(
     )
 
     def write_epoch(batch: DataFrame, epoch_id: int) -> None:
-        cells, dels = compact_epoch(batch)
-        sink.apply(cells, dels, epoch_id)
+        sink.apply(*split_epoch(batch), epoch_id)
 
     writer = (
         cf.writeStream.foreachBatch(write_epoch)
