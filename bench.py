@@ -6,8 +6,8 @@ output-format cost). The headline metric is total wall-seconds across the
 registered query set PLUS the named memo_build_* rows, which charge each
 memoized family's cold build (dedup pair tables, CC labels, ANN top-k
 tables, the drained-changefeed fixture dir) explicitly instead of hiding
-it in whichever query touches the memo first (r5 verdict directive #2) —
-per-query numbers are then honest warm incremental costs.
+it in whichever query touches the memo first — per-query numbers are
+then honest warm incremental costs.
 """
 
 from __future__ import annotations
@@ -77,12 +77,10 @@ def load_prior(
 def run_probe(spark) -> float:
     """ONE draw of the fixed pure-JVM host-throughput probe: xxhash64
     over 8e9 ids, 32 partitions — no IO, no Python, no shuffle. Sized to
-    ~2-3 s of work (r11 verdict directive #2: the old 0.1-0.2 s probe's
-    own spread was 2.15x within one run, too light to bear the
-    net-of-probe conclusions drawn from it; a multi-second draw
-    amortizes task-launch jitter so the draw measures sustained JVM
-    throughput). Callers take >=5 draws spread across the bench run and
-    quote the median + spread, never a single draw."""
+    ~2-3 s of work, so task-launch jitter amortizes and the draw
+    measures sustained JVM throughput. Callers take >=5 draws spread
+    across the bench run and quote the median + spread, never a single
+    draw."""
     import pyspark.sql.functions as _F
 
     t0 = time.perf_counter()
@@ -92,20 +90,17 @@ def run_probe(spark) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def memo_build_rows(spark, sf_dir: str, per_query: dict) -> None:
-    """Charge each memo family's cold build to a named memo_build_* row
-    (r5 verdict directive #2): the per-(app, sf_dir) localCheckpoint
-    memos (dedup pair tables, CC labels, ANN top-k tables, the shared
-    drained-changefeed fixture dir) amortize shared subtrees across the
-    query loop — the materialized-view idiom — but without these rows
-    the warm per-query numbers hid the build cost entirely (e.g.
-    similarity_topk_pq read 0.026 s warm vs ~14 s cold in SCALE_r5).
-    Build rows are timed cold, included in the headline total, and every
-    registered query then measures its honest warm incremental cost.
-    Ordering matters: CC labels read the verified-pairs memo, the RHP
-    top-k reads the scored-candidate memo — so each row isolates one
-    build stage."""
+def memo_builds() -> list[tuple[str, str, object]]:
+    """(bench row, memo family it charges, build call) for every memo
+    family in `memos._REGISTRY`. Ordered so each row times one build
+    stage: a memo's parents are built by an earlier row (the shingles
+    before the pair tables, the verified pairs before the CC labels,
+    the RHP scored candidates before the RHP top-k, the postings before
+    the dl/stats)."""
     from hbase_observer_elasticsearch_spark.operators import dedup as _dd
+    from hbase_observer_elasticsearch_spark.operators import (
+        relational as _rel,
+    )
     from hbase_observer_elasticsearch_spark.operators import (
         similarity as _sim,
     )
@@ -114,39 +109,53 @@ def memo_build_rows(spark, sf_dir: str, per_query: dict) -> None:
         shared_changefeed_stream_dir,
     )
 
-    builds = [
-        # r13 optimization round: the corpus shingle pass (explode + md5
-        # per shingle) is now memoized once per (app, sf_dir) — it was
-        # recomputed by 13 queries (and twice inside diamond plans);
-        # charge its cold build first so the verified-pairs/LSH rows
-        # below measure their own incremental work.
-        ("memo_build_dedup_shingles", _dd._shingles_memo),
-        ("memo_build_dedup_verified_pairs", _dd._verified_pairs_memo),
-        ("memo_build_dedup_lsh_candidates", _dd._lsh_cand_memo),
-        ("memo_build_dedup_cc_labels", _dd._jaccard_cc_labels),
-        ("memo_build_similarity_topk_bf", _sim.similarity_topk_bruteforce),
-        ("memo_build_similarity_rhp_scored", _sim._rhp_scored),
-        ("memo_build_similarity_topk_rhp", _sim.similarity_topk_rhp),
-        ("memo_build_similarity_topk_pq", _sim.similarity_topk_pq),
-        # renamed from memo_build_similarity_topk_ivfpq in r8 (r7 advice):
-        # the shared 'ivfpq' memo has materialized the 3x wider ADC pool
-        # (rk <= IVFPQ_POOL = 30, feeding both top-k and the exact
-        # re-rank) since 40e4beb — the new name marks the semantic change
-        # so cross-round deltas aren't misread as regression.
-        ("memo_build_similarity_ivfpq_pool", _sim.similarity_topk_ivfpq),
-        # one corpus-pass inverted-index build shared by the whole
-        # lexical-retrieval family (BM25/PRF/champion/MLT/fuzzy/
-        # rank_feature/dis_max) — r11
-        ("memo_build_text_postings", _txt._postings_memo),
-        # r13: index-time doc-length + corpus stats, shared by the whole
-        # BM25 family (each query previously re-aggregated dl twice).
-        ("memo_build_text_dl_stats", _txt._dl_stats_memo),
+    topk = "similarity_topk"
+    return [
+        ("memo_build_dedup_shingles", "dedup_shingles", _dd._shingles_memo),
+        (
+            "memo_build_dedup_verified_pairs",
+            "dedup_verified_pairs",
+            _dd._verified_pairs_memo,
+        ),
+        (
+            "memo_build_dedup_lsh_candidates",
+            "dedup_lsh_candidates",
+            _dd._lsh_cand_memo,
+        ),
+        (
+            "memo_build_dedup_cc_labels",
+            "dedup_cc_labels",
+            _dd._jaccard_cc_labels,
+        ),
+        ("memo_build_similarity_topk_bf", topk, _sim.similarity_topk_bruteforce),
+        ("memo_build_similarity_rhp_scored", topk, _sim._rhp_scored),
+        ("memo_build_similarity_topk_rhp", topk, _sim.similarity_topk_rhp),
+        ("memo_build_similarity_topk_pq", topk, _sim.similarity_topk_pq),
+        # the 'ivfpq' memo holds the ADC pool (rk <= IVFPQ_POOL), which
+        # feeds both the IVF-PQ top-k and its exact re-rank
+        ("memo_build_similarity_ivfpq_pool", topk, _sim.similarity_topk_ivfpq),
+        ("memo_build_text_postings", "text_postings", _txt._postings_memo),
+        ("memo_build_text_dl_stats", "text_dl_stats", _txt._dl_stats_memo),
         (
             "memo_build_changefeed_dir",
+            "shared_changefeed_dirs",
             lambda s, d: shared_changefeed_stream_dir(s, d, n_files=2),
         ),
+        ("memo_build_bucketed_facts", "bucketed_facts", _rel._bucketed_facts),
     ]
-    for name, fn in builds:
+
+
+def memo_build_rows(spark, sf_dir: str, per_query: dict) -> None:
+    """Charge each memo family's cold build to a named memo_build_* row.
+    The per-(app, sf_dir) memos (dedup pair tables, CC labels, ANN top-k
+    tables, BM25 postings, the shared changefeed dir, the bucketed fact
+    tables) amortize shared subtrees across the query loop — the
+    materialized-view idiom — but without these rows the warm per-query
+    numbers would hide the build cost entirely (e.g. similarity_topk_pq
+    reads in 0.026 s warm vs ~14 s cold). Build rows are timed cold and
+    included in the headline total, so every registered query then
+    measures its honest warm incremental cost."""
+    for name, _, fn in memo_builds():
         t0 = time.perf_counter()
         fn(spark, sf_dir)  # localCheckpoint inside the memo is eager
         per_query[name] = round(time.perf_counter() - t0, 3)
@@ -171,48 +180,22 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    # Host-throughput probe (r8; hardened r9 per verdict #5): the fixed
-    # pure-JVM job timed best-of-3 at bench START, MIDPOINT, and END —
-    # the probe itself swings >2x within one boot (r8 builder runs:
-    # 0.251/0.288/0.443; judge same boot: 0.709), so a single sample is
-    # too noisy to normalize with. Cross-boot absolute walls drift
-    # 1.3-2.6x (code-unchanged pure-JVM queries measured at 2.6x across
-    # boots on an idle machine, zero steal, nominal MHz). The delta block
-    # reports BOTH the raw cross-round ratio and the net-of-probe ratio;
-    # neither is quoted without the other. r12: >=5 draws (start, three
-    # in-loop quartile points, end), each a single ~2-3 s fixed job; an
-    # untimed light warm-up first so the start draw doesn't carry
-    # first-job JIT/codegen cost.
-    run_probe(spark)  # untimed full-size warm-up: the first draw of the
-    # job pays JIT/codegen (measured 2.9 s vs 1.8 s steady) and would
-    # otherwise inflate the start draw and the spread.
+    # Host-throughput probe: the fixed pure-JVM job drawn >= 5 times
+    # (start, three in-loop quartile points, end). The probe swings > 2x
+    # within one boot and absolute walls drift 1.3-2.6x across boots, so
+    # the delta block reports the raw cross-round ratio and the
+    # net-of-probe ratio together. The first draw pays JIT/codegen
+    # (2.9 s vs 1.8 s steady), so an untimed draw warms it up.
+    run_probe(spark)
     probe_draws: dict[str, float] = {"start": run_probe(spark)}
 
-    # best-of-2 per query, escalating to best-of-3 when the two samples
-    # disagree by >30% — r3→r4 diagnosis of the flagged "regressions"
-    # (dedup_simhash, q21_waiting_supplier, join_asof — all code-unchanged
-    # since r2) found they are stage-overhead-dominated at this SF and
-    # carry ±1s run-to-run JVM noise (quiet-machine solo samples for
-    # 2026-08-14 follow-up: a BROAD uniform inflation of the common
-    # subset (+25% across code-unchanged queries, e.g. q1 0.72→1.22s
-    # MINIMUM of solo best-of-3) tracks sustained host load, not any
-    # query: solo best-of-3 on an otherwise idle session reproduces the
-    # inflation, so per-query deltas only mean something when the
-    # whole-run baseline ratio is ~1. Compare the common-subset TOTAL
-    # first; read per-query regressions only net of that ratio.
-    # r5 follow-up (2026-08-14): the shift is CROSS-BOOT, not just
-    # cross-load — on a verified-idle machine (0 leftover JVMs, load
-    # <2), solo best-of-3 of queries untouched since r2 ran uniformly
-    # 30-60% above their r4-recorded times (agg_cube 1.0->1.29,
-    # join_range_binned 0.36->0.64, q9 0.58->0.89), while queries
-    # optimized THIS round improved against the same baseline
-    # (streaming twins 28.6s->~21s). Absolute per-query times are only
-    # comparable within one boot; across rounds, read the ratio of the
-    # common-subset total and the direction of same-boot A/B deltas.
-    # dedup_simhash: 2.4/2.0/3.2/1.9s; a 13.9s GC outlier observed once),
-    # so single unlucky draws masqueraded as regressions. The System.gc()
-    # settle drains cross-query allocation debt so query N doesn't pay
-    # query N-1's collection.
+    # best-of-2 per query, escalating to best-of-3 when the samples
+    # disagree: at this SF most queries are stage-overhead-dominated and
+    # carry ±1 s run-to-run JVM noise (a 13.9 s GC outlier was seen
+    # once). Host load and boot shift whole runs uniformly, so compare
+    # the common-subset TOTAL first and read per-query deltas net of it.
+    # A System.gc() settle before each query drains cross-query
+    # allocation debt so query N doesn't pay query N-1's collection.
     repo = os.path.dirname(os.path.abspath(__file__))
     prior = load_prior(repo, sf, current_names=set(qs))
     prev_q: dict = prior[1] if prior else {}
@@ -222,10 +205,8 @@ def main() -> None:
     jvm_system = spark._jvm.System  # noqa: SLF001 — JVM GC hook
     memo_build_rows(spark, sf_dir, per_query)
     names_sorted = sorted(qs)
-    # Dedupe quartile indices (r12 advice, low): at n<4 the three
-    # indices collapse onto the same key and the dict silently dropped
-    # draws; keep the first label per distinct index so a filtered run
-    # still reports however many in-loop draws its size supports.
+    # at n < 4 the quartile indices collide: keep the first label per
+    # distinct index, so a filtered run reports the draws it supports
     quartiles: dict[int, str] = {}
     for idx, label in (
         (len(names_sorted) // 4, "q1"),
@@ -243,12 +224,9 @@ def main() -> None:
             materialize(qs[name](spark, sf_dir))
             times.append(time.perf_counter() - t0)
         # Escalate best-of-2 -> best-of-3 when the two samples disagree
-        # by >30%, OR when the best-of-2 would be recorded as a
-        # regression vs the prior snapshot (r5 verdict directive #6:
-        # agg_case_bucketing regressed 0.38->1.32 s code-unchanged and
-        # the sample-disagreement trigger alone missed it — a
-        # would-be-regression is exactly the case worth one more draw
-        # before it lands in the committed artifact).
+        # by >30%, or when the best-of-2 would be recorded as a
+        # regression vs the prior snapshot: a would-be regression is
+        # worth one more draw before it lands in the committed artifact.
         looks_regressed = name in prev_q and min(times) > prev_q[name] + max(
             0.3, 0.3 * prev_q[name]
         )
@@ -275,17 +253,16 @@ def main() -> None:
         "spread": round(probes[-1] / max(probes[0], 1e-9), 2),
     }
 
-    # Bound memo lifetime (r4 verdict directive #7): the per-(app, sf_dir)
-    # localCheckpoint memos and /dev/shm changefeed dirs served their
+    # Bound memo lifetime: the per-(app, sf_dir) memos (checkpointed
+    # tables, /dev/shm changefeed dirs, bucketed tables) served their
     # purpose during the loop; release them so a long-lived process (or a
-    # multi-sf bench) doesn't pin block-manager storage indefinitely.
+    # multi-sf bench) doesn't pin storage indefinitely.
     from hbase_observer_elasticsearch_spark.memos import clear_memos
 
     clear_memos(spark)
 
-    # Common-subset delta vs the newest committed BENCH_r{N}.json at the
-    # same sf, so round-over-round regressions are visible in the driver
-    # artifact itself (r2 verdict #8).
+    # Common-subset delta vs the newest committed prior map at the same
+    # sf, so regressions are visible in the bench artifact itself.
     delta = None
     if prior is not None:
         fname, prev_q, prev_parsed = prior
@@ -312,9 +289,8 @@ def main() -> None:
             }
             if warm_vs_cold_prior:
                 delta["warm_vs_cold_prior"] = True
-            # Raw AND net-of-probe cross-round ratios, always together
-            # (r8 verdict #5: one-sided probe normalization misled both
-            # directions; net means nothing without raw beside it).
+            # Raw AND net-of-probe cross-round ratios, always together:
+            # the net ratio means nothing without the raw one beside it.
             prev_total = sum(prev_q[k] for k in common)
             if prev_total > 0:
                 delta["raw_ratio"] = round(
@@ -332,10 +308,8 @@ def main() -> None:
                         / (host_probe_s["median"] / prev_probe),
                         3,
                     )
-                    # r12 probe redesign (~0.15 s triad -> ~1.8 s 5-draw):
-                    # a prev map carrying the OLD light probe makes the
-                    # net ratio meaningless across the transition — flag
-                    # it so nobody reads 0.07x as a real speedup.
+                    # a prior map timed with the old ~0.15 s probe makes
+                    # the net ratio meaningless; flag the transition
                     if prev_probe < 1.0 <= host_probe_s["median"]:
                         delta["probe_methodology_changed"] = True
 
@@ -349,17 +323,14 @@ def main() -> None:
         "delta": delta,
         "noisy_reruns": noisy,
     }
-    # Full detail to a file (r1's single long stdout line was tail-truncated
-    # by the capture — BENCH_r01.json recorded parsed: null).
+    # Full detail to a file: a single long stdout line can be
+    # tail-truncated by whatever captures it.
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                             "bench_out.json")
     with open(out_path, "w") as f:
         json.dump(full, f, indent=1)
-    # TEARDOWN BEFORE PRINTING (r12 verdict directive #1): BENCH_r12
-    # recorded parsed:null because a StateStore maintenance-thread WARN
-    # stacktrace landed on stdout AFTER the summary JSON line. Stop the
-    # SparkSession first — killing the state-store maintenance threads —
-    # then flush, so the summary JSON is the true last thing on stdout.
+    # Stop the session before printing: a StateStore maintenance-thread
+    # WARN can otherwise land on stdout after the summary JSON line.
     spark.stop()
     sys.stdout.flush()
     sys.stderr.flush()
@@ -379,10 +350,8 @@ def main() -> None:
                 "sf": float(sf),
                 "n_queries": len(per_query),
                 "queries": {k: round(v, 2) for k, v in slowest.items()},
-                # the probe rides the SHORT line too, so the driver's
-                # BENCH_r{N}.json carries it and next round's
-                # net-of-probe ratio comes from committed artifacts
-                # alone (r10 verdict directive #4).
+                # the probe rides the short line too, so a capture of
+                # only this line still yields the net-of-probe ratio
                 "host_probe_s": host_probe_s,
                 "delta": delta,
                 "queries_full": "bench_out.json",

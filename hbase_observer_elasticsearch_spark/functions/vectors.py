@@ -28,6 +28,18 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    """Sequential double squared euclidean distance (zip_with diff², then
+    a left-to-right fold)."""
+    d2 = F.zip_with(
+        a,
+        b,
+        lambda x, y: (x.cast("double") - y.cast("double"))
+        * (x.cast("double") - y.cast("double")),
+    )
+    return F.aggregate(d2, F.lit(0.0), lambda acc, v: acc + v)
+
+
 # SQL twins (DuckDB): identical sequential fold.
 def sql_dot(a: str, b: str) -> str:
     return (
@@ -49,9 +61,8 @@ def sql_cosine(a: str, b: str) -> str:
 
 def sql_sq_dist(a: str, b: str) -> str:
     """Squared euclidean distance, same sequential fold as the Spark twin
-    in operators/similarity.py:kmeans_fit.assign (zip_with diff² then
-    left-to-right aggregate) — bit-identical doubles, so the k-means
-    argmin assignment is oracle-comparable."""
+    `sq_dist` — bit-identical doubles, so the k-means argmin assignment
+    is oracle-comparable."""
     d = f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
     return (
         f"list_reduce(list_transform(list_zip({a}, {b}), "

@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views, spread
-from ..functions.deterministic import davg, dec, dsum, sql_davg, sql_dsum
+from ..functions.deterministic import dec, dsum, sql_dsum
+from ..memos import Memo
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -917,11 +918,23 @@ def subquery_exists_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Process-lifetime memo of the bucketed fact tables: written ONCE per
-# (application, sf_dir) — the "pay the shuffle at ingest" half of the
-# bucketing contract — so every downstream co-located join, including
-# repeated bench samples, times the exchange-free join itself.
-_BUCKETED_TABLES: dict[tuple[str, str], tuple[str, str]] = {}
+# Memo of the bucketed fact tables: written ONCE per (app, sf_dir) — the
+# "pay the shuffle at ingest" half of the bucketing contract — so every
+# downstream co-located join, including repeated bench samples, times
+# the exchange-free join itself. An entry is (scratch dir, table names);
+# eviction drops the tables and removes the dir.
+def _drop_bucketed_facts(entry: tuple[str, tuple[str, str]]) -> None:
+    import shutil
+
+    base, tables = entry
+    spark = SparkSession.getActiveSession()
+    if spark is not None:  # without a live session the tables are gone
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    shutil.rmtree(base, ignore_errors=True)
+
+
+_BUCKETED_FACTS = Memo("bucketed_facts", on_evict=_drop_bucketed_facts)
 
 
 def _bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -932,32 +945,30 @@ def _bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from ..sinks.bucketed import write_bucketed
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BUCKETED_TABLES.get(key)
-    if got is not None:
-        return got
-    tag = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix="bucketed_facts_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    o_name, l_name = f"b_orders_{tag}", f"b_lineitem_{tag}"
-    write_bucketed(
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
-        ),
-        o_name,
-        "o_orderkey",
-        path=f"{base}/o",
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey"), "l_extendedprice"
-        ),
-        l_name,
-        "l_orderkey",
-        path=f"{base}/l",
-    )
-    _BUCKETED_TABLES[key] = (o_name, l_name)
-    return o_name, l_name
+    def build() -> tuple[str, tuple[str, str]]:
+        tag = uuid.uuid4().hex[:8]
+        base = tempfile.mkdtemp(prefix="bucketed_facts_")
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
+        o_name, l_name = f"b_orders_{tag}", f"b_lineitem_{tag}"
+        write_bucketed(
+            load_table(spark, sf_dir, "orders").select(
+                "o_orderkey", "o_orderpriority"
+            ),
+            o_name,
+            "o_orderkey",
+            path=f"{base}/o",
+        )
+        write_bucketed(
+            load_table(spark, sf_dir, "lineitem").select(
+                F.col("l_orderkey"), "l_extendedprice"
+            ),
+            l_name,
+            "l_orderkey",
+            path=f"{base}/l",
+        )
+        return base, (o_name, l_name)
+
+    return _BUCKETED_FACTS.get(spark, sf_dir, build)[1]
 
 
 @register(

@@ -24,8 +24,10 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
 from ..functions import hashing as H
-from ..functions.vectors import cosine, dot, norm, sql_cosine, sql_dot, sql_sq_dist
-from ..memos import register_memo
+from ..functions.vectors import (
+    cosine, dot, norm, sq_dist, sql_cosine, sql_dot, sql_sq_dist,
+)
+from ..memos import Memo
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -108,25 +110,14 @@ ivf AS (
 """
 
 
-# Materialized-intermediate cache for top-k result tables shared across
-# queries (the brute-force baseline feeds three recall audits; the RHP
-# top-k feeds its own recall audit): computed once per (application,
-# sf_dir), localCheckpoint'd (a <= |queries|*k row table), reused by every
-# consumer — the same materialized-view idiom as the dedup CC labels. At
-# 100 TB the baseline/ANN result tables would be persisted tables, with
-# every audit reading them rather than re-running the search.
-_TOPK_CACHE: dict[tuple[str, str, str], DataFrame] = register_memo(
-    "similarity_topk", {}
-)
-
-
-def _memo_topk(spark: SparkSession, sf_dir: str, kind: str, builder) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    got = _TOPK_CACHE.get(key)
-    if got is None:
-        got = builder().localCheckpoint()
-        _TOPK_CACHE[key] = got
-    return got
+# Memo of the shared ANN artifacts, keyed by kind: top-k result tables
+# (the brute-force baseline feeds three recall audits; each ANN top-k
+# feeds its own audit), the PQ codes, the coarse codebook and the
+# SemDeDup assignment. Each is built once per (app, sf_dir) and reused
+# by every consumer. At 100 TB these are persisted tables (and one
+# model artifact), with every audit reading them rather than re-running
+# the search.
+_TOPK = Memo("similarity_topk")
 
 
 @register(
@@ -144,8 +135,11 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (application, sf_dir) — three recall audits consume it.
     """
     ensure_session_conf(spark)
-    return _memo_topk(
-        spark, sf_dir, "bf", lambda: _bruteforce_topk(spark, sf_dir)
+    return _TOPK.get(
+        spark,
+        sf_dir,
+        lambda: _bruteforce_topk(spark, sf_dir).localCheckpoint(),
+        "bf",
     )
 
 
@@ -276,18 +270,6 @@ def kmeans_fit(
     # init centroids don't depend on the gate.
     e = spread(train if train is not None else e)
 
-    def d2(emb_col, cv_col) -> F.Column:
-        return F.aggregate(
-            F.zip_with(
-                emb_col,
-                cv_col,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     for _ in range(iters):
         nested = cent.groupBy().agg(
             F.collect_list(
@@ -300,7 +282,7 @@ def kmeans_fit(
                 F.transform(
                     "cents",
                     lambda c: F.struct(
-                        d2(F.col("embedding"), c["cv"]).alias("d2"),
+                        sq_dist(F.col("embedding"), c["cv"]).alias("d2"),
                         c["cid"].alias("cid"),
                     ),
                 )
@@ -408,9 +390,8 @@ def _coarse_cents(
     is collected — once per (app, sf_dir) — so all consumers can share
     it as a broadcast-sized literal. The one driver action added by the
     k derivation is a COUNT(*) per memo build, amortized identically."""
-    key = (spark.sparkContext.applicationId, sf_dir, "coarse_cents")
-    got = _TOPK_CACHE.get(key)
-    if got is None:
+
+    def build() -> list[tuple[int, list[float]]]:
         e = load_table(spark, sf_dir, "embeddings")
         n = e.count()
         k = _derived_k(n)
@@ -433,14 +414,14 @@ def _coarse_cents(
                 )
                 < thr
             )
-        got = sorted(
+        return sorted(
             (int(r["cluster_id"]), list(r["cv"]))
             for r in kmeans_fit(
                 e, k=k, iters=KMEANS_ITERS, train=train
             ).collect()
         )
-        _TOPK_CACHE[key] = got
-    return got
+
+    return _TOPK.get(spark, sf_dir, build, "coarse_cents")
 
 
 def _sql_lloyd_iter(prev_cent: str, idx: int) -> str:
@@ -633,6 +614,28 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall(truth: DataFrame, ann: DataFrame) -> DataFrame:
+    """(query_id, n_matched, recall): per query of the ground-truth
+    top-k ``truth``, how many of its (query_id, neighbor_id) rows the
+    approximate top-k ``ann`` also returned, and that count over TOPK."""
+    hits = (
+        truth.join(ann, ["query_id", "neighbor_id"])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    n = F.coalesce(F.col("n"), F.lit(0))
+    return (
+        truth.select("query_id")
+        .distinct()
+        .join(hits, "query_id", "left")
+        .select(
+            "query_id",
+            n.cast("bigint").alias("n_matched"),
+            (n.cast("double") / F.lit(TOPK)).alias("recall"),
+        )
+    )
+
+
 @register(
     "similarity_recall_ivf",
     oracle=f"""
@@ -663,23 +666,7 @@ def similarity_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
     ivf = similarity_topk_ivf(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        bf.join(ivf, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        bf.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_matched"),
-            (
-                F.coalesce(F.col("n"), F.lit(0)).cast("double") / F.lit(TOPK)
-            ).alias("recall"),
-        )
-    )
+    return _recall(bf, ivf)
 
 
 # int8-style scalar quantization: code = floor(x * 64). Multiplying a
@@ -947,6 +934,23 @@ rcand AS (
 )
 """
 
+# The RHP top-k over `rcand` (exact cosine re-rank, then the per-query
+# window), as the rank-fusion oracles read it.
+_SQL_RHP_TOP = f"""rhp_scored AS (
+  SELECT r.query_id, r.neighbor_id,
+         {sql_cosine('qe.embedding', 'ce.embedding')} AS cos_sim
+  FROM rcand r
+  JOIN embeddings qe ON qe.vec_id = r.query_id
+  JOIN embeddings ce ON ce.vec_id = r.neighbor_id
+),
+rhp_top AS (
+  SELECT query_id, neighbor_id, rk FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                 ORDER BY cos_sim DESC, neighbor_id) AS rk
+    FROM rhp_scored
+  ) t WHERE rk <= {TOPK}
+)"""
+
 
 @register(
     "similarity_topk_rhp",
@@ -985,7 +989,12 @@ def similarity_topk_rhp(spark: SparkSession, sf_dir: str) -> DataFrame:
     what upgrades this from rows-only to hash-checked.
     """
     ensure_session_conf(spark)
-    return _memo_topk(spark, sf_dir, "rhp", lambda: _rhp_topk(spark, sf_dir))
+    return _TOPK.get(
+        spark,
+        sf_dir,
+        lambda: _rhp_topk(spark, sf_dir).localCheckpoint(),
+        "rhp",
+    )
 
 
 def _rhp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1009,12 +1018,13 @@ def _rhp_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, neighbor_id, cos_sim): exact cosine over the RHP
     band-bucket candidate set — shared by the top-k query and the
     radius (range) search. Memoized per (app, sf_dir) like the top-k
-    result tables (r5 advice: without this, running top-k and range
-    search in one process recomputed the signature/band/cosine
-    pipeline twice — now the second consumer reads the checkpointed
-    scored table)."""
-    return _memo_topk(
-        spark, sf_dir, "rhp_scored", lambda: _rhp_scored_build(spark, sf_dir)
+    result tables, so the signature/band/cosine pipeline runs once and
+    the second consumer reads the checkpointed scored table."""
+    return _TOPK.get(
+        spark,
+        sf_dir,
+        lambda: _rhp_scored_build(spark, sf_dir).localCheckpoint(),
+        "rhp_scored",
     )
 
 
@@ -1312,18 +1322,6 @@ def _pq_codes_and_qd(
         .localCheckpoint()
     )
 
-    def sqd(x_col, y_col) -> F.Column:
-        return F.aggregate(
-            F.zip_with(
-                x_col,
-                y_col,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     def argmin_cid(cents_col) -> F.Column:
         # identical tiebreak to kmeans_fit.assign: lexicographic
         # array_min over (d2, cid) structs
@@ -1331,7 +1329,7 @@ def _pq_codes_and_qd(
             F.transform(
                 cents_col,
                 lambda c: F.struct(
-                    sqd(F.col("sv"), c["cv"]).alias("d2"),
+                    sq_dist(F.col("sv"), c["cv"]).alias("d2"),
                     c["cid"].alias("cid"),
                 ),
             )
@@ -1384,7 +1382,7 @@ def _pq_codes_and_qd(
             F.col("vec_id").alias("query_id"),
             "s",
             "cid",
-            sqd(F.col("sv"), F.col("cv")).alias("qd"),
+            sq_dist(F.col("sv"), F.col("cv")).alias("qd"),
         )
     )
     return codes, qd
@@ -1398,13 +1396,12 @@ def _pq_codes_qd_memo(
     and both the flat PQ top-k and the IVF-PQ composite read the SAME
     codes/ADC-partials tables — at 100 TB these are persisted index
     tables built once per corpus snapshot."""
-    app = spark.sparkContext.applicationId
-    ck, qk = (app, sf_dir, "pq_codes"), (app, sf_dir, "pq_qd")
-    if ck not in _TOPK_CACHE:
+
+    def build() -> tuple[DataFrame, DataFrame]:
         codes, qd = _pq_codes_and_qd(spark, sf_dir)
-        _TOPK_CACHE[ck] = codes.localCheckpoint()
-        _TOPK_CACHE[qk] = qd.localCheckpoint()
-    return _TOPK_CACHE[ck], _TOPK_CACHE[qk]
+        return codes.localCheckpoint(), qd.localCheckpoint()
+
+    return _TOPK.get(spark, sf_dir, build, "pq_codes_qd")
 
 
 def _pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1443,7 +1440,12 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 4-term addition is order-free.
     """
     ensure_session_conf(spark)
-    return _memo_topk(spark, sf_dir, "pq", lambda: _pq_topk(spark, sf_dir)).select(
+    return _TOPK.get(
+        spark,
+        sf_dir,
+        lambda: _pq_topk(spark, sf_dir).localCheckpoint(),
+        "pq",
+    ).select(
         "query_id",
         "neighbor_id",
         F.col("dist").cast("double").alias("adc_dist"),
@@ -1451,11 +1453,9 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "similarity_recall_pq",
-    oracle=f"""
-{_SQL_PQ},
-exact AS (
+# `exact`: the squared-L2 top-k ground truth over `e`, the SQL twin of
+# _exact_sq_topk shared by the PQ and IVF-PQ recall audits.
+_SQL_EXACT_SQ = f"""exact AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (
@@ -1465,7 +1465,14 @@ exact AS (
     FROM e q JOIN e v ON v.vec_id <> q.vec_id
     WHERE q.vec_id < {N_QUERIES}
   ) t WHERE rk <= {TOPK}
-)
+)"""
+
+
+@register(
+    "similarity_recall_pq",
+    oracle=f"""
+{_SQL_PQ},
+{_SQL_EXACT_SQ}
 SELECT b.query_id,
        CAST(COALESCE(h.n, 0) AS BIGINT) AS n_matched,
        CAST(COALESCE(h.n, 0) AS DOUBLE) / {TOPK} AS recall
@@ -1487,50 +1494,8 @@ def similarity_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline; at scale it runs over a query SAMPLE as the audit sidecar.
     """
     ensure_session_conf(spark)
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            "qv",
-            "embedding",
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        spread(e)
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), d2.alias("d2")
-        )
-        .select("*", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= TOPK)
-        .select("query_id", "neighbor_id")
-    )
     ann = similarity_topk_pq(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(ann, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_matched"),
-            (
-                F.coalesce(F.col("n"), F.lit(0)).cast("double") / F.lit(TOPK)
-            ).alias("recall"),
-        )
-    )
+    return _recall(_exact_sq_topk(spark, sf_dir), ann)
 
 
 @register(
@@ -1837,22 +1802,10 @@ def _ivfpq_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_list(F.struct("cid", "cv")).alias("cents")
     )
 
-    def d2(emb_col, cv_col) -> F.Column:
-        return F.aggregate(
-            F.zip_with(
-                emb_col,
-                cv_col,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     scored = F.transform(
         "cents",
         lambda c: F.struct(
-            d2(F.col("embedding"), c["cv"]).alias("d2"),
+            sq_dist(F.col("embedding"), c["cv"]).alias("d2"),
             c["cid"].alias("cid"),
         ),
     )
@@ -1929,7 +1882,12 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     return (
-        _memo_topk(spark, sf_dir, "ivfpq", lambda: _ivfpq_pool(spark, sf_dir))
+        _TOPK.get(
+            spark,
+            sf_dir,
+            lambda: _ivfpq_pool(spark, sf_dir).localCheckpoint(),
+            "ivfpq",
+        )
         .filter(F.col("rk") <= TOPK)
         .select(
             "query_id",
@@ -1951,17 +1909,7 @@ ivfpq AS (
     FROM adc
   ) t WHERE rk <= {TOPK}
 ),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {sql_sq_dist('q.embedding', 'v.embedding')}, v.vec_id)
-             AS rk
-    FROM e q JOIN e v ON v.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) t WHERE rk <= {TOPK}
-)
+{_SQL_EXACT_SQ}
 SELECT b.query_id,
        CAST(COALESCE(h.n, 0) AS BIGINT) AS n_matched,
        CAST(COALESCE(h.n, 0) AS DOUBLE) / {TOPK} AS recall
@@ -1981,30 +1929,14 @@ def similarity_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be measured, not inferred from the separate IVF and PQ audits.
     Reads the memoized composite top-k; the exact side is the shared
     `_exact_sq_topk` ground truth (same fold/window/tiebreak as the
-    re-rank audit — one copy, per r7 advice).
+    re-rank audit).
     """
     ensure_session_conf(spark)
     exact = _exact_sq_topk(spark, sf_dir)
     ann = similarity_topk_ivfpq(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    hits = (
-        exact.join(ann, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_matched"),
-            (
-                F.coalesce(F.col("n"), F.lit(0)).cast("double") / F.lit(TOPK)
-            ).alias("recall"),
-        )
-    )
+    return _recall(exact, ann)
 
 
 # --- Hybrid-retrieval fusion and truncation audits (late r6) ---------------
@@ -2017,20 +1949,7 @@ RRF_K = 60  # the classic reciprocal-rank-fusion damping constant
     oracle=f"""
 {_SQL_PQ},
 {_SQL_RHP.strip().lstrip()},
-rhp_scored AS (
-  SELECT r.query_id, r.neighbor_id,
-         {sql_cosine('qe.embedding', 'ce.embedding')} AS cos_sim
-  FROM rcand r
-  JOIN embeddings qe ON qe.vec_id = r.query_id
-  JOIN embeddings ce ON ce.vec_id = r.neighbor_id
-),
-rhp_top AS (
-  SELECT query_id, neighbor_id, rk FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cos_sim DESC, neighbor_id) AS rk
-    FROM rhp_scored
-  ) t WHERE rk <= {TOPK}
-),
+{_SQL_RHP_TOP},
 lists AS (
   SELECT query_id, neighbor_id, rk FROM rhp_top
   UNION ALL
@@ -2178,17 +2097,7 @@ def similarity_recall_truncated(
         .filter(F.col("rk") <= TOPK)
         .select("query_id", "neighbor_id")
     )
-    hits = trunc_top.join(bf, ["query_id", "neighbor_id"]).groupBy(
-        "query_id"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    base = bf.select("query_id").distinct()
-    return base.join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_matched"),
-        (
-            F.coalesce(F.col("n"), F.lit(0)).cast("double") / F.lit(TOPK)
-        ).alias("recall"),
-    )
+    return _recall(bf, trunc_top)
 
 
 # --- r7: exact re-rank over the ADC pool, and SemDeDup -----------------------
@@ -2196,21 +2105,13 @@ def similarity_recall_truncated(
 
 def _exact_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact squared-L2 top-k ids per query (broadcast-queries fold scan)
-    — the ground truth shared by the IVF-PQ recall and re-rank audits."""
+    — the ground truth shared by the PQ and IVF-PQ recall audits and the
+    IVF-PQ re-rank audit."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            "qv",
-            "embedding",
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    d2 = sq_dist(F.col("qv"), F.col("embedding"))
     w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
     return (
         spread(e)
@@ -2249,17 +2150,7 @@ rr AS (
     JOIN embeddings ce ON ce.vec_id = p.neighbor_id
   ) t WHERE rk <= {TOPK}
 ),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY {sql_sq_dist('q.embedding', 'v.embedding')}, v.vec_id)
-             AS rk
-    FROM e q JOIN e v ON v.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-  ) t WHERE rk <= {TOPK}
-)
+{_SQL_EXACT_SQ}
 SELECT b.query_id,
        CAST(COALESCE(ha.n, 0) AS BIGINT) AS n_matched_adc,
        CAST(COALESCE(ha.n, 0) AS DOUBLE) / {TOPK} AS recall_adc,
@@ -2297,8 +2188,11 @@ def similarity_rerank_recall_ivfpq(
     that makes the architecture viable at 100 TB.
     """
     ensure_session_conf(spark)
-    pool = _memo_topk(
-        spark, sf_dir, "ivfpq", lambda: _ivfpq_pool(spark, sf_dir)
+    pool = _TOPK.get(
+        spark,
+        sf_dir,
+        lambda: _ivfpq_pool(spark, sf_dir).localCheckpoint(),
+        "ivfpq",
     )
     adc_top = pool.filter(F.col("rk") <= TOPK).select(
         "query_id", "neighbor_id"
@@ -2311,16 +2205,7 @@ def similarity_rerank_recall_ivfpq(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("nv"),
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            "qv",
-            "nv",
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    d2 = sq_dist(F.col("qv"), F.col("nv"))
     w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
     rr = (
         pool.select("query_id", "neighbor_id")
@@ -2401,51 +2286,48 @@ def _semdedup_asgn(spark: SparkSession, sf_dir: str) -> DataFrame:
     would re-introduce the quadratic the derived k removes). IEEE
     negation is exact and struct comparison is lexicographic, so the
     (−cos, cid) min is bit-identical to the oracle's ROW_NUMBER() ORDER
-    BY cosine DESC, cid."""
-    # r13 optimization round: memoize the MATERIALIZED assignment table,
-    # not just the codebook — four registered queries consume it, and
-    # two of them reference it on both branches of a diamond (the
-    # within-cell pair joins), so un-memoized the n x k argmin pass ran
-    # up to twice per execution. n rows with the embedding array —
-    # block-manager-small at fixture scale; at 100 TB this is the
-    # persisted assignment column written next to the vectors.
-    key = (spark.sparkContext.applicationId, sf_dir, "semdedup_asgn")
-    got = _TOPK_CACHE.get(key)
-    if got is not None:
-        return got
-    cent = spark.createDataFrame(
-        _coarse_cents(spark, sf_dir), "cluster_id int, cv array<float>"
-    )
-    nested = cent.groupBy().agg(
-        F.collect_list(
-            F.struct(F.col("cluster_id").alias("cid"), "cv")
-        ).alias("cents")
-    )
-    got = (
-        spread(load_table(spark, sf_dir, "embeddings"))
-        .crossJoin(F.broadcast(nested))
-        .select(
-            "vec_id",
-            "embedding",
-            F.array_min(
-                F.transform(
-                    "cents",
-                    lambda c: F.struct(
-                        (-cosine(F.col("embedding"), c["cv"])).alias(
-                            "negcs"
-                        ),
-                        c["cid"].alias("cid"),
-                    ),
-                )
-            )
-            .getField("cid")
-            .alias("cluster_id"),
+    BY cosine DESC, cid.
+
+    The MATERIALIZED table is memoized, not just the codebook: four
+    registered queries consume it, two of them on both branches of a
+    diamond (the within-cell pair joins), so un-memoized the n x k
+    argmin pass would run up to twice per execution. At 100 TB this is
+    the persisted assignment column written next to the vectors."""
+
+    def build() -> DataFrame:
+        cent = spark.createDataFrame(
+            _coarse_cents(spark, sf_dir), "cluster_id int, cv array<float>"
         )
-        .withColumn("nrm", norm(F.col("embedding")))
-        .localCheckpoint()
-    )
-    _TOPK_CACHE[key] = got
-    return got
+        nested = cent.groupBy().agg(
+            F.collect_list(
+                F.struct(F.col("cluster_id").alias("cid"), "cv")
+            ).alias("cents")
+        )
+        return (
+            spread(load_table(spark, sf_dir, "embeddings"))
+            .crossJoin(F.broadcast(nested))
+            .select(
+                "vec_id",
+                "embedding",
+                F.array_min(
+                    F.transform(
+                        "cents",
+                        lambda c: F.struct(
+                            (-cosine(F.col("embedding"), c["cv"])).alias(
+                                "negcs"
+                            ),
+                            c["cid"].alias("cid"),
+                        ),
+                    )
+                )
+                .getField("cid")
+                .alias("cluster_id"),
+            )
+            .withColumn("nrm", norm(F.col("embedding")))
+            .localCheckpoint()
+        )
+
+    return _TOPK.get(spark, sf_dir, build, "semdedup_asgn")
 
 
 @register(
@@ -2658,20 +2540,7 @@ pq_top AS (
     FROM pq_all
   ) t WHERE rk <= {TOPK}
 ),
-rhp_scored AS (
-  SELECT r.query_id, r.neighbor_id,
-         {sql_cosine('qe.embedding', 'ce.embedding')} AS cos_sim
-  FROM rcand r
-  JOIN embeddings qe ON qe.vec_id = r.query_id
-  JOIN embeddings ce ON ce.vec_id = r.neighbor_id
-),
-rhp_top AS (
-  SELECT query_id, neighbor_id, rk FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cos_sim DESC, neighbor_id) AS rk
-    FROM rhp_scored
-  ) t WHERE rk <= {TOPK}
-),
+{_SQL_RHP_TOP},
 rrf_lists AS (
   SELECT query_id, neighbor_id, rk FROM rhp_top
   UNION ALL
@@ -3190,16 +3059,7 @@ def similarity_mips_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("qaug"),
         )
     )
-    d2aug = F.aggregate(
-        F.zip_with(
-            F.col("qaug"),
-            F.col("aemb"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    d2aug = sq_dist(F.col("qaug"), F.col("aemb"))
     scored = (
         F.broadcast(qa)
         .crossJoin(cand)
@@ -3304,16 +3164,7 @@ def similarity_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = spark.createDataFrame(
         _coarse_cents(spark, sf_dir), "cluster_id int, cv array<float>"
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cv"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    d2 = sq_dist(F.col("embedding"), F.col("cv"))
     dists = (
         spread(e)
         .crossJoin(F.broadcast(cent))
@@ -3958,9 +3809,7 @@ def similarity_filtered_ann_recall(
         .localCheckpoint()  # tiny; joined twice below
     )
     # POST-FILTER: the memoized unfiltered top-k, predicate applied after.
-    bf = _memo_topk(
-        spark, sf_dir, "bf", lambda: _bruteforce_topk(spark, sf_dir)
-    )
+    bf = similarity_topk_bruteforce(spark, sf_dir)
     post = (
         bf.join(
             load_table(spark, sf_dir, "embeddings").select(

@@ -1147,18 +1147,22 @@ def stream_live_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch("stream_live_rollup_")
     try:
         feed_dir = os.path.join(base, "feed")
-        # r14 optimization round (guide §2.6 — overlap independent
-        # jobs): the ground-truth recompute reads only the batch-side
-        # change stream, independent of the drain, so it materializes on
-        # a driver thread WHILE the feed write + availableNow drain run —
-        # the scheduler back-fills its tasks into the drain's idle gaps
-        # (measured: hides ~1.3 s of the 1.4 s batch side at sf0.1).
+        # Overlap independent jobs (guide §2.6): the ground-truth
+        # recompute reads only the batch-side change stream, independent
+        # of the drain, so it materializes on a driver thread WHILE the
+        # feed write + availableNow drain run — the scheduler back-fills
+        # its tasks into the drain's idle gaps (measured: hides ~1.3 s of
+        # the 1.4 s batch side at sf0.1). It runs in its own session:
+        # `_drain_to_local` sets and restores the session-wide shuffle
+        # partition count meanwhile, and a new session does not inherit
+        # runtime-set SQL conf, so it pins its own.
         from concurrent.futures import ThreadPoolExecutor
 
+        rec_spark = ensure_session_conf(spark.newSession())
         with ThreadPoolExecutor(max_workers=1) as pool:
             rec_fut = pool.submit(
                 lambda: _ivm_recompute(
-                    _ivm_change_stream(spark, sf_dir)
+                    _ivm_change_stream(rec_spark, sf_dir)
                 ).localCheckpoint(eager=True)
             )
             write_changefeed_stream_dir(

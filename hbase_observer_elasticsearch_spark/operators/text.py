@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread
 from ..functions import hashing as H
 from ..functions.deterministic import dsum, sql_dsum
-from ..memos import register_memo
+from ..memos import Memo
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -1363,8 +1363,8 @@ agg AS (
 )"""
 
 
-_POSTINGS_MEMO: dict = register_memo("text_postings", {})
-_DL_STATS_MEMO: dict = register_memo("text_dl_stats", {})
+_POSTINGS = Memo("text_postings")
+_DL_STATS = Memo("text_dl_stats")
 
 
 def ranked_topk(
@@ -1405,11 +1405,10 @@ def _postings_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine persists at 100 TB — one token-grain corpus pass, then every
     query touches only its terms' postings. Charged cold to the bench's
     ``memo_build_text_postings`` row."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _POSTINGS_MEMO.get(key)
-    if got is None:
+
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
-        got = (
+        return (
             spread(d)
             .select("doc_id", F.explode(F.split("text", " ")).alias("w"))
             .groupBy("doc_id", "w")
@@ -1424,8 +1423,8 @@ def _postings_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
             .transform(spread)
             .localCheckpoint()
         )
-        _POSTINGS_MEMO[key] = got
-    return got
+
+    return _POSTINGS.get(spark, sf_dir, build)
 
 
 def _dl_stats_memo(
@@ -1433,25 +1432,19 @@ def _dl_stats_memo(
 ) -> tuple[DataFrame, DataFrame]:
     """(dl, stats): the per-doc length table ``(doc_id, dl)`` and the
     1-row corpus stats ``(n_docs, sum_dl)``, materialized once per
-    (app, sf_dir) — r13 optimization round. Every BM25-family query used
-    ``dl`` on TWO plan branches (the per-doc scoring join and the stats
-    aggregate), so un-memoized each query re-ran the postings-table
-    aggregate twice per execution. These are index-time statistics — at
-    100 TB they are persisted next to the postings, exactly like
-    Lucene's norms/sumTotalTermFreq. dl = SUM(tf) per doc is integer-
-    identical to counting the raw token stream, so downstream scores
-    are unchanged bit-for-bit.
-
-    The memo entry stores the parent postings DataFrame it was derived
-    from and is invalidated whenever the postings memo holds a DIFFERENT
-    object for the same key — a postings rebuild (e.g. a test clearing
-    `_POSTINGS_MEMO` alone) forces a dl/stats rebuild, so the two can
-    never disagree about which corpus they describe (r13 verdict item 1:
-    a derived memo must not outlive its parent)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    (app, sf_dir). Every BM25-family query uses ``dl`` on TWO plan
+    branches (the per-doc scoring join and the stats aggregate), so
+    un-memoized each query would re-run the postings-table aggregate
+    twice per execution. These are index-time statistics — at 100 TB
+    they are persisted next to the postings, exactly like Lucene's
+    norms/sumTotalTermFreq. dl = SUM(tf) per doc is integer-identical
+    to counting the raw token stream, so downstream scores are
+    unchanged bit-for-bit. The postings table is the entry's parent:
+    a postings rebuild forces a dl/stats rebuild, so the two always
+    describe the same corpus."""
     parent = _postings_memo(spark, sf_dir)
-    got = _DL_STATS_MEMO.get(key)
-    if got is None or got[0] is not parent:
+
+    def build() -> tuple[DataFrame, DataFrame]:
         dl = (
             parent.groupBy("doc_id")
             .agg(F.sum("tf").alias("dl"))
@@ -1460,9 +1453,9 @@ def _dl_stats_memo(
         stats = dl.agg(
             F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
         ).localCheckpoint()
-        got = (parent, dl, stats)
-        _DL_STATS_MEMO[key] = got
-    return got[1], got[2]
+        return dl, stats
+
+    return _DL_STATS.get(spark, sf_dir, build, parent=parent)
 
 
 def _bm25_agg(

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..memos import register_memo
+from ..memos import Memo
 
 CHANGEFEED_SCHEMA = T.StructType(
     [
@@ -167,13 +167,13 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix)
 
 
-# Process-lifetime cache of drained-changefeed fixture dirs: the three
-# end-to-end streaming queries (stream_static_enrich,
-# stream_put_delete_join, cdc_stateful_stream) all replay the SAME
-# events-derived changefeed, so the dir is written once per (application,
-# sf_dir, n_files) and shared — each query still runs its own full
-# availableNow drain with a fresh checkpoint, only the input layout is
-# reused. Cleaned up at interpreter exit.
+# Memo of drained-changefeed fixture dirs: the end-to-end streaming
+# queries (stream_static_enrich, stream_put_delete_join,
+# cdc_stateful_stream, ...) all replay the SAME events-derived
+# changefeed, so the dir is written once per (app, sf_dir, n_files) and
+# shared — each query still runs its own full availableNow drain with a
+# fresh checkpoint, only the input layout is reused. Eviction removes
+# the dir's scratch parent; interpreter exit removes any left over.
 def _evict_cf_dir(cf_dir: str) -> None:
     import os as _os
     import shutil as _shutil
@@ -181,9 +181,7 @@ def _evict_cf_dir(cf_dir: str) -> None:
     _shutil.rmtree(_os.path.dirname(cf_dir), ignore_errors=True)
 
 
-_SHARED_CF_DIRS: dict[tuple[str, str, int], str] = register_memo(
-    "shared_changefeed_dirs", {}, on_evict=_evict_cf_dir
-)
+_SHARED_CF_DIRS = Memo("shared_changefeed_dirs", on_evict=_evict_cf_dir)
 
 
 def shared_changefeed_stream_dir(
@@ -214,14 +212,17 @@ def shared_changefeed_stream_dir(
                 f"SPARK_GRAFT_CF_FILES must be an integer, "
                 f"got {raw_n_files!r}"
             ) from exc
-    key = (spark.sparkContext.applicationId, sf_dir, n_files)
-    cached = _SHARED_CF_DIRS.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    base = scratch_dir("shared_cf_")
-    atexit.register(_shutil.rmtree, base, ignore_errors=True)
-    cf_dir = os.path.join(base, "cf")
-    cf = events_as_changefeed(load_table(spark, sf_dir, "events"))
-    write_changefeed_stream_dir(cf, cf_dir, n_files=n_files)
-    _SHARED_CF_DIRS[key] = cf_dir
+
+    def build() -> str:
+        base = scratch_dir("shared_cf_")
+        atexit.register(_shutil.rmtree, base, ignore_errors=True)
+        cf_dir = os.path.join(base, "cf")
+        cf = events_as_changefeed(load_table(spark, sf_dir, "events"))
+        write_changefeed_stream_dir(cf, cf_dir, n_files=n_files)
+        return cf_dir
+
+    cf_dir = _SHARED_CF_DIRS.get(spark, sf_dir, build, n_files)
+    if not os.path.isdir(cf_dir):  # removed from outside: write it anew
+        _SHARED_CF_DIRS.evict(spark, sf_dir, n_files)
+        cf_dir = _SHARED_CF_DIRS.get(spark, sf_dir, build, n_files)
     return cf_dir

@@ -337,20 +337,155 @@ def test_nearest_asof_matches_bruteforce(spark, sf_dir):
 
 
 def test_clear_memos_releases_and_rebuilds(spark, sf_dir):
-    """r4 verdict directive #7: the process-wide (app, sf_dir) memos have
-    an explicit lifetime hook. Populate them, clear, verify empty, and
-    verify the consumers rebuild correctly afterwards."""
+    """The process-wide (app, sf_dir) memos have an explicit lifetime
+    hook. Populate them, clear, verify empty, and verify the consumers
+    rebuild correctly afterwards."""
     from hbase_observer_elasticsearch_spark.memos import _REGISTRY, clear_memos
     from hbase_observer_elasticsearch_spark.registry import queries
 
     qs = queries()
     before = qs["dedup_clusters"](spark, sf_dir).count()
-    assert any(len(m) for _, m, _ in _REGISTRY), "memo should be populated"
+    assert any(len(m) for m in _REGISTRY), "memo should be populated"
 
     cleared = clear_memos(spark)
     assert sum(cleared.values()) > 0
-    assert all(len(m) == 0 for _, m, _ in _REGISTRY)
+    assert all(len(m) == 0 for m in _REGISTRY)
 
     # consumers rebuild lazily and give the same answer
     assert qs["dedup_clusters"](spark, sf_dir).count() == before
-    assert any(len(m) for _, m, _ in _REGISTRY)
+    assert any(len(m) for m in _REGISTRY)
+
+
+class _App:
+    """Just enough of a SparkSession for a memo key."""
+
+    class sparkContext:  # noqa: N801 — mirrors the SparkSession attribute
+        applicationId = "app-test"
+
+
+@pytest.fixture
+def fresh_memos(monkeypatch):
+    """Memos built in a test register into a throwaway registry, so
+    `clear_memos` and the bench-row hygiene check never see them."""
+    from hbase_observer_elasticsearch_spark import memos
+
+    monkeypatch.setattr(memos, "_REGISTRY", [])
+    return memos
+
+
+def test_memo_hit_returns_same_object(fresh_memos):
+    memo = fresh_memos.Memo("t")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    first = memo.get(_App, "sf", build)
+    assert memo.get(_App, "sf", build) is first
+    assert len(calls) == 1
+    # extra key parts and other sf_dirs are separate entries
+    assert memo.get(_App, "sf", build, "k") is not first
+    assert memo.get(_App, "other", build) is not first
+    assert len(memo) == 3
+
+
+def test_memo_rebuilt_parent_forces_child_rebuild(fresh_memos):
+    parents = fresh_memos.Memo("parent")
+    children = fresh_memos.Memo("child")
+
+    def child():
+        p = parents.get(_App, "sf", object)
+        return children.get(_App, "sf", lambda: ("derived", p), parent=p)
+
+    c1 = child()
+    assert child() is c1
+    parents.clear()
+    c2 = child()
+    assert c2 is not c1
+    assert c2[1] is parents.get(_App, "sf", object)
+    assert child() is c2
+
+
+def test_memo_clear_counts_and_evicts_each_value(fresh_memos):
+    evicted = []
+    memo = fresh_memos.Memo("t", on_evict=evicted.append)
+    for k in range(3):
+        memo.get(_App, "sf", lambda k=k: f"v{k}", k)
+    assert fresh_memos.clear_memos() == {"t": 3}
+    assert sorted(evicted) == ["v0", "v1", "v2"]
+    assert len(memo) == 0
+    assert memo.clear() == 0
+    assert len(evicted) == 3
+
+
+def test_shared_changefeed_dir_deleted_from_disk_is_rebuilt(spark, sf_dir):
+    import os
+    import shutil
+
+    from hbase_observer_elasticsearch_spark.sources.changefeed import (
+        shared_changefeed_stream_dir,
+    )
+
+    first = shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
+    assert shared_changefeed_stream_dir(spark, sf_dir, n_files=2) == first
+    shutil.rmtree(first)
+    again = shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
+    assert again != first
+    assert os.path.isdir(again) and os.listdir(again)
+
+
+def test_cc_labels_follow_rebuilt_verified_pairs(spark, monkeypatch):
+    """Clearing only the verified-pairs memo must invalidate the CC
+    labels derived from it. Corpus B is corpus A plus one document with
+    no near-duplicate; the shingle memo is left in place, so the edges
+    are unchanged and only the new vertex shows whether the labels were
+    rebuilt over B's documents."""
+    import hbase_observer_elasticsearch_spark.operators.dedup as dd
+    from hbase_observer_elasticsearch_spark.memos import _REGISTRY, clear_memos
+
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    t1 = "alpha beta gamma delta epsilon zeta"
+    t2 = "one two three four five six"
+    t3 = "red green blue cyan magenta yellow"
+    rows_a = [(1, t1, "en", "s", 1), (2, t1, "en", "s", 1), (3, t2, "en", "s", 1)]
+    corpus_a = spark.createDataFrame(rows_a, schema)
+    corpus_b = spark.createDataFrame(rows_a + [(4, t3, "en", "s", 1)], schema)
+    sf = "memo-parent-cc"
+
+    def clusters():
+        return {
+            (r.doc_id, r.cluster_id, r.cluster_size)
+            for r in dd.dedup_clusters(spark, sf).collect()
+        }
+
+    try:
+        monkeypatch.setattr(dd, "load_table", lambda s, d, n: corpus_a)
+        assert clusters() == {(1, 1, 2), (2, 1, 2), (3, 3, 1)}
+        next(m for m in _REGISTRY if m.name == "dedup_verified_pairs").clear()
+        monkeypatch.setattr(dd, "load_table", lambda s, d, n: corpus_b)
+        assert clusters() == {(1, 1, 2), (2, 1, 2), (3, 3, 1), (4, 4, 1)}
+    finally:
+        clear_memos()
+
+
+def test_clear_memos_drops_bucketed_fact_tables(spark, sf_dir):
+    import os
+
+    from hbase_observer_elasticsearch_spark.memos import clear_memos
+    from hbase_observer_elasticsearch_spark.operators.relational import (
+        _bucketed_facts,
+    )
+
+    tables = _bucketed_facts(spark, sf_dir)
+    dirs = [
+        spark.sql(f"DESCRIBE FORMATTED {t}")
+        .filter("col_name = 'Location'")
+        .first()
+        .data_type.removeprefix("file:")
+        for t in tables
+    ]
+    assert all(os.path.isdir(d) for d in dirs)
+    clear_memos(spark)
+    assert not any(spark.catalog.tableExists(t) for t in tables)
+    assert not any(os.path.exists(d) for d in dirs)

@@ -9,6 +9,7 @@ import hbase_observer_elasticsearch_spark.operators.dedup as dd
 import hbase_observer_elasticsearch_spark.operators.planning as pl
 import hbase_observer_elasticsearch_spark.operators.skew_agg as sk
 import hbase_observer_elasticsearch_spark.operators.time_windows as tw
+from hbase_observer_elasticsearch_spark.memos import clear_memos
 from hbase_observer_elasticsearch_spark.operators.dedup import (
     dedup_minhash_bbit,
 )
@@ -71,9 +72,10 @@ def test_bbit_estimator_identity_on_exact_dupes(spark, monkeypatch):
         [(1, t, "en", "s", len(t)), (2, t, "en", "s", len(t))], DOC_SCHEMA
     )
     monkeypatch.setattr(dd, "load_table", lambda s, sf, n: docs)
-    dd._VERIFIED_PAIRS_CACHE.clear()
-    rows = dedup_minhash_bbit(spark, "r9-bbit").collect()
-    dd._VERIFIED_PAIRS_CACHE.clear()
+    try:
+        rows = dedup_minhash_bbit(spark, "r9-bbit").collect()
+    finally:
+        clear_memos()
     assert len(rows) == 1
     r = rows[0]
     assert (r.j_decile, r.n_pairs) == (9, 1)

@@ -1,6 +1,6 @@
-"""Registry/tooling hygiene (r9 verdict directive #7): the hand-grown
-lists in tools/plan_audit.py and bench.py's memo-build rows must stay
-consistent with the live registry — no silent third state.
+"""Registry/tooling hygiene: the hand-grown lists in tools/plan_audit.py
+and bench.py's memo-build rows must stay consistent with the live
+registry — no silent third state.
 
 Three invariants:
 1. plan_audit's EXECUTING skip-list and BATCH_EXCEPTIONS refer only to
@@ -14,10 +14,10 @@ Three invariants:
    errored, or newer-than-the-artifact-and-slated-for-the-next-audit is
    NOT acceptable silently: new executing queries must be added to
    EXECUTING in the same round they land (this test pins that).
-3. Every memo_build_* row bench.py charges maps to a live registered
-   memo (memos._REGISTRY), and every live memo family has at least one
-   charged build row — a memo without a build row hides its cold cost
-   from the headline.
+3. Every memo_build_* row in bench.memo_builds() charges a live
+   registered memo (memos._REGISTRY), and every live memo family has at
+   least one charged build row — a memo without a build row hides its
+   cold cost from the headline.
 """
 
 from __future__ import annotations
@@ -25,7 +25,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -105,48 +104,33 @@ def test_every_query_audited_or_skipped_no_silent_third_state():
 
 
 def test_memo_build_rows_match_live_memos():
-    bench_src = open(os.path.join(REPO, "bench.py")).read()
-    build_rows = set(re.findall(r'"(memo_build_\w+)"', bench_src))
-    assert build_rows, "bench.py charges no memo builds?"
+    import bench
 
-    live = {name for name, _, _ in memos._REGISTRY}
-    row_to_memo = {
-        "memo_build_dedup_verified_pairs": "dedup_verified_pairs",
-        "memo_build_dedup_lsh_candidates": "dedup_lsh_candidates",
-        "memo_build_dedup_cc_labels": "dedup_cc_labels",
-        "memo_build_similarity_topk_bf": "similarity_topk",
-        "memo_build_similarity_rhp_scored": "similarity_topk",
-        "memo_build_similarity_topk_rhp": "similarity_topk",
-        "memo_build_similarity_topk_pq": "similarity_topk",
-        "memo_build_similarity_ivfpq_pool": "similarity_topk",
-        "memo_build_changefeed_dir": "shared_changefeed_dirs",
-        "memo_build_text_postings": "text_postings",
-        # r13 optimization round: the corpus shingle pass and the BM25
-        # index-time dl/stats tables became first-class memos with their
-        # own cold-build rows.
-        "memo_build_dedup_shingles": "dedup_shingles",
-        "memo_build_text_dl_stats": "text_dl_stats",
-    }
-    unmapped = build_rows - set(row_to_memo)
-    assert not unmapped, f"bench memo rows with no mapping: {unmapped}"
-    for row, memo_name in row_to_memo.items():
-        assert row in build_rows, f"mapping references absent row {row}"
-        assert memo_name in live, (
-            f"bench row {row} charges memo {memo_name!r} which is not a "
-            f"live registered memo ({sorted(live)})"
-        )
-    uncharged = live - set(row_to_memo.values())
+    builds = bench.memo_builds()
+    assert builds, "bench.py charges no memo builds?"
+    rows = [row for row, _, _ in builds]
+    assert len(rows) == len(set(rows)), f"duplicate memo build rows: {rows}"
+    assert all(row.startswith("memo_build_") for row in rows)
+
+    live = {m.name for m in memos._REGISTRY}
+    charged = {memo_name for _, memo_name, _ in builds}
+    dead = charged - live
+    assert not dead, (
+        f"bench rows charge memos that are not live registered memos: "
+        f"{dead} (live: {sorted(live)})"
+    )
+    uncharged = live - charged
     assert not uncharged, f"live memos with no bench build row: {uncharged}"
 
-    # and the last bench artifact, if present, only charged mapped rows
+    # and the last bench artifact, if present, only charged declared rows
     out = os.path.join(REPO, "bench_out.json")
     if os.path.exists(out):
-        charged = {
+        emitted = {
             q
             for q in json.load(open(out))["queries"]
             if q.startswith("memo_build_")
         }
-        assert charged <= set(row_to_memo), charged - set(row_to_memo)
+        assert emitted <= set(rows), emitted - set(rows)
 
 
 def test_stream_audit_contracts_cover_every_executing_query():
