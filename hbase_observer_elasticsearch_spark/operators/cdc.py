@@ -312,6 +312,8 @@ SELECT n.rowkey,
        n.n_mutations
 FROM nmut n LEFT JOIN quals q USING (rowkey)
 """,
+    # keyed by rowkey = user_id, a population constant under longer history
+    stream="flat",
 )
 def cdc_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END check of the applyInPandasWithState operator
@@ -428,6 +430,8 @@ SELECT n_fields,
 FROM docs WHERE purchase IS NOT NULL
 GROUP BY n_fields
 """.format(sum_purchase=sql_dsum("purchase")),
+    # foreachBatch MERGE: durable state lives in the sink's parquet
+    stream="stateless",
 )
 def cdc_replicate_then_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's FULL user story in one checked row: bind the
@@ -539,6 +543,8 @@ SELECT n_fields,
 FROM docs WHERE purchase IS NOT NULL
 GROUP BY n_fields
 """.format(sum_purchase=sql_dsum("purchase")),
+    # foreachBatch MERGE: durable state lives in the sink's parquet
+    stream="stateless",
 )
 def cdc_replicate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cdc_replicate_then_query's 100-TB-layout twin: the SAME

@@ -111,6 +111,8 @@ dim AS (
 SELECT c.seq, c.rowkey, c.op, c.qualifier, d.segment
 FROM cf c LEFT JOIN dim d USING (rowkey)
 """,
+    # changefeed passthrough + stream-static broadcast join: no state
+    stream="stateless",
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast join, end-to-end: the live changefeed is
@@ -154,6 +156,8 @@ FROM cf p JOIN cf d
  AND p.op = 'put' AND d.op = 'delete'
  AND d.ts >= p.ts AND d.ts <= p.ts + INTERVAL 2 HOUR
 """,
+    # watermark-evicted join state
+    stream="flat",
 )
 def stream_put_delete_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream INTERVAL join, end-to-end: each put matched to the
@@ -211,6 +215,8 @@ FROM j
 WHERE del_ts IS NULL
   AND put_ts + INTERVAL 2 HOUR < (SELECT w FROM wm)
 """,
+    # watermark-evicted join state
+    stream="flat",
 )
 def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join, end-to-end: every put
@@ -283,6 +289,8 @@ FROM d
 WHERE NOT EXISTS (SELECT 1 FROM matched m WHERE m.del_seq = d.del_seq)
   AND d.del_ts < (SELECT w FROM wm)
 """,
+    # watermark-evicted join state
+    stream="flat",
 )
 def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream FULL OUTER interval join, end-to-end — the complete
@@ -328,6 +336,8 @@ SELECT date_trunc('day', ts) AS win_start,
 FROM cf
 GROUP BY 1, 2
 """,
+    # watermark-evicted window state
+    stream="flat",
 )
 def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation, end-to-end: the changefeed
@@ -406,6 +416,8 @@ closed AS (
 SELECT * FROM closed
 WHERE session_end <= (SELECT MAX(ts) FROM cf) - INTERVAL 1 HOUR
 """,
+    # watermark-evicted session state
+    stream="flat",
 )
 def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked SESSION-window aggregation, end-to-end in APPEND mode:
@@ -456,6 +468,8 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH cf AS ({_SQL_CF})
 SELECT seq, op, rowkey, ts FROM cf
 """,
+    # watermark-evicted dedup state
+    stream="flat",
 )
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once from at-least-once, end-to-end: the changefeed is
@@ -511,6 +525,8 @@ agg AS (
 SELECT win_start, op, n_mutations
 FROM agg WHERE win_end <= (SELECT w FROM wm)
 """,
+    # watermark-evicted window state in both stages
+    stream="flat",
 )
 def stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED stateful streaming operators in one query — at-least-once
@@ -579,6 +595,8 @@ FROM g
 WHERE prev_ts IS NULL
    OR epoch_us(ts) - epoch_us(prev_ts) > {DEBOUNCE_GAP_US}
 """,
+    # watermark-evicted debounce state
+    stream="flat",
 )
 def stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END streaming debounce: the changefeed drained through the
@@ -651,6 +669,8 @@ SELECT op,
 FROM cf
 GROUP BY op
 """,
+    # groupBy(op) complete agg: 2 groups, constant forever
+    stream="flat",
 )
 def cdc_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom Python DataSource consumed as a STREAM — now through the
@@ -757,6 +777,8 @@ SELECT op,
 FROM cf
 GROUP BY op
 """,
+    # passthrough append; the groupBy(op) runs batch-side after the drain
+    stream="stateless",
 )
 def stream_pushdown_region_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-SIDE REGION PRUNING (r12 verdict directive #3): the
@@ -854,6 +876,12 @@ SELECT md5(array_to_string(list_sort(string_split(text, ' ')), ' '))
 FROM documents
 GROUP BY 1
 """,
+    # seen-set keyed by canonical doc hash: O(distinct docs)
+    stream=(
+        "keyed",
+        "SELECT COUNT(DISTINCT array_to_string(list_sort("
+        "string_split(text, ' ')), ' ')) FROM '{dir}/documents.parquet'",
+    ),
 )
 def stream_exact_dedup_keyed_state(
     spark: SparkSession, sf_dir: str
@@ -965,6 +993,8 @@ from .similarity import _SQL_SEM_INCR as _SQL_SEM_ADMISSION  # noqa: E402
     # same batch restatement as dedup_semantic_incremental: the streaming
     # drain must emit exactly the batch admission table
     oracle=_SQL_SEM_ADMISSION,
+    # update-mode admission agg keyed by incoming vec_id
+    stream=("keyed", "SELECT COUNT(*) FROM '{dir}/embeddings.parquet'"),
 )
 def stream_semantic_admission(
     spark: SparkSession, sf_dir: str
@@ -1113,6 +1143,12 @@ from .skew_agg import _SQL_LIVE_ROLLUP as _SQL_LIVE_ROLLUP_IVM  # noqa: E402
     # same oracle as the batch query: the drained state-store deltas,
     # folded, must reproduce the identical maintained trajectory
     oracle=_SQL_LIVE_ROLLUP_IVM,
+    # keyed by rollup group (event_type x day): grows with days
+    stream=(
+        "keyed",
+        "SELECT COUNT(*) FROM (SELECT DISTINCT event_type,"
+        " CAST(ts AS DATE) FROM '{dir}/events.parquet')",
+    ),
 )
 def stream_live_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's raison d'etre END TO END: a keyed change stream
@@ -1229,6 +1265,12 @@ agg AS (
 SELECT win_start, n_entities
 FROM agg WHERE win_end <= (SELECT w FROM wm)
 """,
+    # keyed by (day, user), closed days evicted by the watermark
+    stream=(
+        "keyed",
+        "SELECT COUNT(*) FROM (SELECT DISTINCT CAST(ts AS DATE), user_id"
+        " FROM '{dir}/events.parquet')",
+    ),
 )
 def stream_daily_active_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming COUNT(DISTINCT) — the streaming-DAU pattern, end to
@@ -1312,6 +1354,8 @@ SELECT op,
             ELSE CAST(COUNT(*) AS DOUBLE) END AS est_distinct
 FROM sk GROUP BY op
 """,
+    # theta sketch keyed by op: O(k) codes for each of 2 keys
+    stream="flat",
 )
 def stream_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming THETA (KMV) distinct-count sketch over the live

@@ -1,8 +1,23 @@
 """Query registry: the single source of truth for the driver contract.
 
-Every implemented operator registers a named query (a callable
-``(spark, sf_dir) -> DataFrame``) and, where ANSI-SQL-expressible, a DuckDB
-oracle SQL string computing the same result over the same parquet tables.
+Each query is declared once, by ``@register`` on its function (a callable
+``(spark, sf_dir) -> DataFrame``), with:
+
+- ``name``: the key in ``queries()``, unique across the package;
+- ``oracle``: where ANSI-SQL-expressible, a DuckDB SQL string computing the
+  same result over the same parquet tables (``oracle_sql()``);
+- ``stream``: only for a query that starts a streaming query when it
+  runs, its state contract in the Structured Streaming state-store model.
+  ``tools/stream_audit.py`` drains each such query at 1x and at 10x event
+  history and checks the contract; ``tools/plan_audit.py`` skips them.
+
+  - ``"stateless"``: no stateful operator; the max state rows are 0.
+  - ``"flat"``: state is bounded by a watermark or a constant key set; the
+    10x-history max state rows stay within a small slack of the 1x value.
+  - ``("keyed", key_count_sql)``: state is O(distinct keys) by design; it
+    may grow no faster than the key count, which ``key_count_sql`` (DuckDB,
+    with ``{dir}`` the fixture directory) returns as one integer.
+
 ``__spark_entry__.queries()`` / ``oracle_sql()`` read from here.
 
 Determinism rules every registered query follows (the driver hash-compares
@@ -29,8 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+StreamContract = str | tuple[str, str]
+
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
+_STREAMS: dict[str, StreamContract] = {}
 
 # Modules whose import registers queries (order = SURVEY §2 walk order).
 _OPERATOR_MODULES = (
@@ -58,8 +76,27 @@ _OPERATOR_MODULES = (
 )
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register ``fn`` under ``name`` with an optional oracle."""
+def _is_contract(stream: object) -> bool:
+    if stream in ("stateless", "flat"):
+        return True
+    return (
+        isinstance(stream, tuple)
+        and len(stream) == 2
+        and stream[0] == "keyed"
+        and isinstance(stream[1], str)
+    )
+
+
+def register(
+    name: str, oracle: str | None = None, *, stream: StreamContract | None = None
+) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: register ``fn`` under ``name`` with an optional oracle
+    and, for a query that starts a stream, its state contract."""
+    if stream is not None and not _is_contract(stream):
+        raise ValueError(
+            f"{name}: stream= must be 'stateless', 'flat' or "
+            f"('keyed', key_count_sql), got {stream!r}"
+        )
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _QUERIES:
@@ -67,6 +104,8 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLES[name] = oracle
+        if stream is not None:
+            _STREAMS[name] = stream
         return fn
 
     return deco
@@ -75,30 +114,19 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 def _load() -> None:
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
+    unknown = [n for n in ATTESTATION_WINDOW if n not in _QUERIES]
+    if unknown or len(set(ATTESTATION_WINDOW)) != len(ATTESTATION_WINDOW):
+        raise ValueError(
+            f"ATTESTATION_WINDOW must name distinct registered queries; "
+            f"unknown: {unknown}"
+        )
 
 
-# Explicit walk order for the driver contract. The driver's correctness
-# harness checks a bounded prefix of the registry (r1 recorded exactly the
-# first 50 entries), so the prefix carries the surface that most needs an
-# official green row each round: the LLM-pipeline operators (dedup /
-# similarity / text / UDF / multimodal / time-window / window / scalar
-# batteries), then this round's new-or-changed queries, then the flagship
-# CDC set. The long-stable TPC-H/relational tail follows (green in
-# CORRECTNESS_r01.json). Names not yet registered are skipped; registered
-# names not listed append in module-import order.
-#
-# ATTESTATION HYGIENE RULE (r8 verdict directive #7): any commit that
-# touches an already-attested query's executed code path — including
-# shared-helper extractions, oracle-SQL refactors, and constant changes —
-# MUST add the affected query names to the head of the NEXT round's window
-# in the SAME commit. A query's newest official row must always postdate
-# the code it attests.
-_PRIORITY = (
-    # --- r13 window (the driver checks a ~50-entry prefix) ---
-    # Leads (r12 verdict directive #6): the wave-5/6 rows that landed
-    # after the official r12 window was recorded and so have never had
-    # an official row, then this round's new surface (stream-side
-    # region pruning, directive #3; column pruning, directive #4).
+# The correctness harness that runs ``__spark_entry__`` checks the first 50
+# names of ``queries()``; this window fixes them, and every other query
+# follows in module-import order. Edit it only to bring a query whose
+# executed code changed into the checked prefix; git keeps its history.
+ATTESTATION_WINDOW = (
     "search_intervals_ordered",
     "agg_multi_terms",
     "agg_auto_date_histogram",
@@ -106,7 +134,6 @@ _PRIORITY = (
     "agg_sibling_pipeline",
     "search_explain_bm25",
     "search_track_total_hits",
-    # --- new in r13 ---
     "stream_pushdown_region_tail",
     "cdc_projection_prune_scan",
     "search_script_score",
@@ -120,8 +147,6 @@ _PRIORITY = (
     "agg_variable_width_histogram",
     "agg_categorize_text",
     "agg_geo_line",
-    # --- wave 8 (es_surface.py): remaining pipeline aggs, robust-stat
-    # aggs, and search-API surfaces ---
     "agg_serial_diff",
     "agg_normalize",
     "agg_stats_bucket",
@@ -140,19 +165,9 @@ _PRIORITY = (
     "es_compile_filter_search",
     "es_compile_aggs_request",
     "es_compile_histogram_request",
-    # --- changed in r13 (re-attest per the hygiene rule): the Python
-    # DataSource readers were rewritten for projection pruning (all
-    # reader classes now thread out_cols/src_cols through their parquet
-    # reads) and the region planner's eq∩range intersection was fixed
-    # (r12 advice, high) — every query whose executed path goes through
-    # sources/python_datasource.py re-attests.
     "cdc_pushdown_region_scan",
     "cdc_python_datasource",
     "cdc_python_datasource_stream",
-    # --- r12 window (the driver checks a ~50-entry prefix) ---
-    # Leads: new surface this round — the pushdown region scan (r11
-    # verdict directive #3) and the two optional-#8 ES shapes.
-    "cdc_pushdown_region_scan",
     "search_nested_block_join",
     "search_after_cursor",
     "search_span_near",
@@ -162,236 +177,11 @@ _PRIORITY = (
     "agg_date_histogram_pipeline",
     "agg_adjacency_matrix",
     "agg_histogram_empty_buckets",
-    "agg_extended_stats",
-    "agg_percentile_ranks",
-    "agg_filters_other_bucket",
-    "agg_top_hits",
-    "search_geo_distance_plane",
-    "search_regexp_term",
-    "agg_sampler_lang_breakdown",
-    "agg_weighted_avg",
-    "agg_missing_bucket",
-    "agg_geo_bounds_centroid",
-    "agg_bucket_script_sort",
-    "agg_range_open_buckets",
-    "search_intervals_ordered",
-    "agg_multi_terms",
-    "agg_auto_date_histogram",
-    "search_pinned_query",
-    "agg_sibling_pipeline",
-    "search_explain_bm25",
-    "search_track_total_hits",
-    # --- changed in r12 wave 5: FS_TERM/FS_TOPK rename fallout re-attest
-    "search_function_score_decay",
-    # --- changed in r12 (re-attest per the hygiene rule) ---
-    # await_drained now raises on timeout (executed by both replicate
-    # demos); multimodal decode gained strict length validation;
-    # cdc_python_datasource's reader module was refactored (projection
-    # split out, reader class split); the shared changefeed fixture's
-    # env-knob parse changed (representative consumers re-attested:
-    # the replicate demos above plus the two below).
-    "cdc_replicate_then_query",
-    "cdc_replicate_bucketed",
-    "multimodal_decode_real",
-    "cdc_python_datasource",
-    "cdc_stateful_stream",
-    "stream_put_delete_join",
-    # --- r11 window (the driver checks a ~50-entry prefix) ---
-    # Leads: the codebook family re-attestation after the √n _derived_k
-    # law (r10 verdict directive #1) — every query whose executed path
-    # consumes _coarse_cents / _SQL_C0 (k changed 8 → 23 at sf0.01, so
-    # every one of these has new oracle hashes).
-    "similarity_topk_ivfpq",
-    "similarity_recall_ivfpq",
-    "similarity_rerank_recall_ivfpq",
-    "similarity_topk_ivf",
-    "similarity_recall_ivf",
-    "similarity_ivf_kmeans",
-    "similarity_kmeans_silhouette",
-    "dedup_semantic_kmeans",
-    "dedup_semantic_incremental",
-    "quality_knn_label_noise",
-    "stream_semantic_admission",
-    # --- changed in r11 (ADVICE fixes; re-attest per the hygiene rule:
-    # conformal degenerate-shape guard, ACF zero-variance guard,
-    # clustering-factor single-pass window) ---
-    "quality_conformal_interval",
-    "events_acf_daily",
-    "layout_clustering_factor",
-    # --- new in r11 ---
-    # (names prepended here as they land, per the hygiene rule above)
-    "search_fuzzy_term",
-    "cdc_replicate_then_query",
-    "multimodal_decode_real",
-    "search_significant_terms",
-    "search_rank_feature",
-    "search_dis_max",
-    "cdc_replicate_bucketed",
-    # --- changed in r11, second wave (re-attest per the hygiene rule):
-    # the lexical-retrieval family now rides the shared text_postings
-    # memo (values unchanged; executed path changed) ---
-    "search_match_phrase_prefix",
-    "search_collapse_field",
-    "search_highlight_offsets",
-    "search_composite_agg",
-    "search_bm25_topk",
-    "search_prf_expansion",
-    "search_bm25_expanded",
-    "search_champion_lists",
-    "search_more_like_this",
-    # --- r10 window (the driver checks a ~50-entry prefix) ---
-    # Leads: the 16 late-r9 queries that sat at positions 51+ of the r9
-    # window (never officially attested; judge-verified green in r9,
-    # builder rows in CORRECTNESS_FULL_r09.json).
-    "cdc_version_gc_policy",
-    "basket_apriori_triples",
-    "sample_permutation_test",
-    "events_funnel_time_stats",
-    "events_uplift_did",
-    "quality_classifier_auc",
-    "events_attribution_position",
-    "layout_dynamic_partition_pruning",
-    "profile_chi2_independence",
-    "events_forecast_backtest",
-    "quality_ipw_adjusted_diff",
-    "orders_cohort_ltv",
-    "parts_abc_classification",
-    "stream_daily_active_entities",
-    "corpus_collocations_llr",
-    "quality_brier_decomposition",
-    # --- changed in r10 (ADVICE fixes + plan fixes; re-attest per the
-    # hygiene rule: events_uplift_did anchor-from-filtered-frame,
-    # quality_brier_decomposition covariance term, events_ols_trend_daily
-    # degenerate-series guard, similarity_pca_collapse_audit power-step
-    # checkpoints; the first three also lead above / below) ---
-    "events_ols_trend_daily",
-    "similarity_pca_collapse_audit",
-    # --- new in r10 ---
-    # (names prepended here as they land, per the hygiene rule above)
-    "sketch_theta_set_ops",
-    "dedup_cluster_ari",
-    "search_es_join_field",
-    "quality_conformal_interval",
-    "agg_weighted_median",
-    "stream_theta_distinct",
-    "similarity_filtered_ann_recall",
-    "similarity_mutual_knn",
-    "layout_clustering_factor",
-    "sample_group_split_noleak",
-    "similarity_centroid_drift",
-    "search_terms_agg_shard_error",
-    "search_date_histogram_pipeline",
-    "search_percolate_queries",
-    "search_term_suggester",
-    "events_quantile_regression",
-    "events_acf_daily",
-    "search_function_score_decay",
-    "search_more_like_this",
-    "quality_isotonic_calibration",
-    "graph_modularity_score",
-    "basket_covisitation_topk",
-    "join_range_skew_salted",
-    "sink_bulk_failure_replay",
-    "join_record_linkage_fs",
-    "join_record_linkage_em",
-    "join_record_linkage_entities",
-    "events_theil_sen_trend",
-    # --- r9 window (official r9 rows; kept for stable ordering) ---
-    "search_quality_ndcg",
-    "corpus_bigram_pmi",
-    "text_readability_score",
-    "layout_sort_key_advisor",
-    "profile_correlation_matrix",
-    "quality_winsorize_impact",
-    "similarity_pca_collapse_audit",
-    "events_markov_stationary",
-    "text_keyphrase_rake",
-    "profile_entropy_by_column",
-    "quality_gini_split_gain",
-    "events_changepoint_cusum",
-    "sample_neyman_allocation",
-    "events_conversion_wilson",
-    "agg_mode_median",
-    "search_quality_scorecard",
-    # --- changed in r9 (corpus-derived codebook k: every query whose
-    # oracle or code path consumes the shared coarse codebook; re-attest) ---
-    "dedup_semantic_kmeans",
-    "dedup_semantic_incremental",
-    "stream_semantic_admission",
-    "similarity_ivf_kmeans",
-    "similarity_topk_ivfpq",
-    "similarity_recall_ivfpq",
-    "similarity_rerank_recall_ivfpq",
-    "quality_knn_label_noise",
-    "similarity_kmeans_silhouette",
-    "similarity_mips_augment",
-    "similarity_hard_negatives",
-    # --- changed in r9 (advisor-fix + plan-fix re-attestations) ---
-    "layout_compaction_plan",
-    "sample_matched_pairs",
-    "quality_bucket_checksum_diff",
-    "udf_cogroup_pandas",
-    "layout_range_partition_balance",
-    # --- new in r9 ---
-    # (names prepended here as they land, per the hygiene rule above)
-    "similarity_mmr_diversify",
-    "search_bool_query",
-    "search_prefix_wildcard",
-    "corpus_bigram_lm_perplexity",
-    "text_winnowing_fingerprints",
-    "events_stl_decompose",
-    "agg_grouping_sets_cube",
-    "events_new_vs_returning",
-    "events_ols_trend_daily",
-    "sample_poisson_bootstrap_ci",
-    "events_survival_km",
-    "cdc_live_rollup_ivm",
-    "stream_live_rollup_ivm",
-    "dedup_minhash_bbit",
-    "corpus_dedup_cascade_report",
-    "layout_partition_pruning_sim",
-    "events_sprt_monitor",
-    "sketch_hll_audience_overlap",
-    # --- r8 window tail (official r8 rows; kept for stable ordering) ---
-    "corpus_bigram_familiarity",
-    "search_prf_expansion",
-    "text_dup_span_merge",
-    "search_bm25_topk",
-    "search_bm25_expanded",
-    "text_dedup_apply_spans",
-    "corpus_dsir_importance",
-    "corpus_bpe_merges",
-    "corpus_bpe_apply",
-    "corpus_pipeline_funnel",
-    "profile_join_cardinality_est",
-    "stream_watermark_lateness_audit",
-    "corpus_perplexity_buckets",
-    "search_postings_delta_stats",
-    "mv_join_delta_maintenance",
-    "layout_zone_map_skipping",
-    "dedup_graph_kcore",
-    "profile_encoding_advisor",
-    "quality_k_anonymity",
-    "corpus_mix_unimax",
-    "corpus_mix_waterfill",
-    "quality_hash_classifier",
-    "quality_classifier_calibration",
-    "sample_weighted_reservoir",
-    "graph_label_propagation",
-    "events_seq3_patterns",
-    "quality_labeler_kappa",
-    "corpus_curriculum_order",
-    "corpus_decontam_apply",
-    "graph_link_prediction",
-    "search_champion_lists",
-    "profile_ks_drift",
-    "join_fuzzy_levenshtein_blocked",
-    "sort_skyline_pareto",
 )
 
 
 def _ordered(d: dict) -> dict:
-    head = {n: d[n] for n in _PRIORITY if n in d}
+    head = {n: d[n] for n in ATTESTATION_WINDOW if n in d}
     return head | {n: v for n, v in d.items() if n not in head}
 
 
@@ -403,3 +193,9 @@ def queries() -> dict[str, QueryFn]:
 def oracle_sql() -> dict[str, str]:
     _load()
     return _ordered(_ORACLES)
+
+
+def stream_contracts() -> dict[str, StreamContract]:
+    """Name -> declared state contract of every query that runs a stream."""
+    _load()
+    return dict(_STREAMS)

@@ -1,24 +1,44 @@
-"""Smoke: every registered query runs at sf0.001 with a stable schema and
-every oracle parses in DuckDB. (Exact value parity vs DuckDB is covered by
+"""Smoke: every registered query runs at sf0.001 with a stable schema,
+starts a stream exactly when it declares a ``stream=`` contract, and every
+oracle parses in DuckDB. (Exact value parity vs DuckDB is covered by
 tools/check.py at sf0.01 — too slow for the unit suite.)"""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.sql.streaming.readwriter import DataStreamWriter
 
 from hbase_observer_elasticsearch_spark.catalog import TABLES
-from hbase_observer_elasticsearch_spark.registry import oracle_sql, queries
+from hbase_observer_elasticsearch_spark.registry import (
+    oracle_sql,
+    queries,
+    stream_contracts,
+)
 
 QS = queries()
 ORACLES = oracle_sql()
+STREAMS = stream_contracts()
 
 
 @pytest.mark.parametrize("name", sorted(QS))
-def test_query_runs(spark, sf_dir, name):
+def test_query_runs(spark, sf_dir, name, monkeypatch):
+    starts = []
+    for method in ("start", "toTable"):
+        real = getattr(DataStreamWriter, method)
+
+        def counted(self, *a, _real=real, **kw):
+            starts.append(1)
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(DataStreamWriter, method, counted)
     df = QS[name](spark, sf_dir)
     assert len(df.columns) > 0
     assert df.count() >= 0
+    assert bool(starts) == (name in STREAMS), (
+        f"{name}: started {len(starts)} streams but "
+        f"{'declares' if name in STREAMS else 'does not declare'} stream="
+    )
 
 
 def test_every_oracle_parses_and_oracle_coverage(sf_dir):

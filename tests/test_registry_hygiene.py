@@ -1,106 +1,89 @@
-"""Registry/tooling hygiene: the hand-grown lists in tools/plan_audit.py
-and bench.py's memo-build rows must stay consistent with the live
-registry — no silent third state.
+"""Registry/tooling hygiene: the registry's declarations, the committed
+plan-audit artifact and bench.py's memo-build rows agree with each other.
 
-Three invariants:
-1. plan_audit's EXECUTING skip-list and BATCH_EXCEPTIONS refer only to
-   queries that exist, and together they partition the registry cleanly
-   (every query is deterministically either audited or skipped; a
-   BATCH_EXCEPTION must actually be shadowed by an EXECUTING prefix,
-   otherwise it is dead configuration).
-2. The latest PLAN_AUDIT artifact's names are a subset of the current
-   registry (catches renames leaving stale audit rows), and every
-   CURRENT stream_/sink query is accounted for there — audited, skipped,
-   errored, or newer-than-the-artifact-and-slated-for-the-next-audit is
-   NOT acceptable silently: new executing queries must be added to
-   EXECUTING in the same round they land (this test pins that).
-3. Every memo_build_* row in bench.memo_builds() charges a live
+Invariants:
+1. The attestation window is exactly the first 50 names of ``queries()``,
+   and a window naming an unknown or repeated query fails at load.
+2. ``stream=`` accepts only the three contract shapes, and every keyed
+   contract's key-count SQL returns one integer in DuckDB.
+3. PLAN_AUDIT.json skipped exactly the queries that declare a stream
+   contract, audited every other query, and recorded no errors.
+4. Every memo_build_* row in bench.memo_builds() charges a live
    registered memo (memos._REGISTRY), and every live memo family has at
    least one charged build row — a memo without a build row hides its
    cold cost from the headline.
+
+Whether a declared contract matches what the query does (it starts a
+stream when it runs, and no undeclared query does) is checked per query
+in tests/test_queries_smoke.py.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
 
+import duckdb
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from hbase_observer_elasticsearch_spark import memos  # noqa: E402
-from hbase_observer_elasticsearch_spark.registry import queries  # noqa: E402
+from hbase_observer_elasticsearch_spark import memos, registry  # noqa: E402
+from hbase_observer_elasticsearch_spark.registry import (  # noqa: E402
+    queries,
+    stream_contracts,
+)
 
 
-def _plan_audit_lists():
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import plan_audit
-
-    return plan_audit.EXECUTING, plan_audit.BATCH_EXCEPTIONS
+def test_attestation_window_is_the_registry_prefix():
+    names = list(queries())
+    assert tuple(names[:50]) == registry.ATTESTATION_WINDOW
 
 
-def test_executing_skiplist_matches_registry():
-    executing, batch_exceptions = _plan_audit_lists()
-    names = set(queries())
-    for entry in executing:
-        assert any(
-            n.startswith(entry) or n == entry for n in names
-        ), f"stale EXECUTING entry: {entry!r} matches no registered query"
-    for b in batch_exceptions:
-        assert b in names, f"stale BATCH_EXCEPTIONS entry: {b!r}"
-        assert any(
-            b.startswith(p) for p in executing
-        ), f"BATCH_EXCEPTIONS entry {b!r} shadowed by no EXECUTING prefix"
+@pytest.mark.parametrize(
+    "window",
+    [
+        registry.ATTESTATION_WINDOW + ("no_such_query",),
+        registry.ATTESTATION_WINDOW + registry.ATTESTATION_WINDOW[:1],
+    ],
+    ids=["unknown", "duplicate"],
+)
+def test_bad_attestation_window_fails_at_load(monkeypatch, window):
+    monkeypatch.setattr(registry, "ATTESTATION_WINDOW", window)
+    with pytest.raises(ValueError, match="ATTESTATION_WINDOW"):
+        queries()
 
 
-def test_every_query_audited_or_skipped_no_silent_third_state():
-    executing, batch_exceptions = _plan_audit_lists()
-    names = set(queries())
+@pytest.mark.parametrize(
+    "stream",
+    ["keyed", ("keyed",), ("flat", "SELECT 1"), "stateful"],
+    ids=["bare-keyed", "keyed-no-sql", "flat-with-sql", "unknown-name"],
+)
+def test_register_rejects_unknown_stream_contract(stream):
+    with pytest.raises(ValueError, match="stream="):
+        registry.register("never_registered", stream=stream)
 
-    def is_skipped(n: str) -> bool:
-        return n not in batch_exceptions and any(
-            n.startswith(p) or n == p for p in executing
-        )
 
-    skipped_now = {n for n in names if is_skipped(n)}
-    audited_now = names - skipped_now
-    assert skipped_now | audited_now == names
-    assert not (skipped_now & audited_now)
-
-    artifacts = sorted(glob.glob(os.path.join(REPO, "PLAN_AUDIT_r*.json")))
-    assert artifacts, "no PLAN_AUDIT artifact found"
-    art = json.load(open(artifacts[-1]))
-    recorded = (
-        set(art["queries"])
-        | set(art["skipped_streaming"])
-        | set(art.get("errors", {}))
-    )
-    gone = recorded - names
-    assert not gone, f"PLAN_AUDIT rows for unregistered queries: {gone}"
-    # every stream_/sink/cdc-drain query must already be classified the
-    # same way the artifact will classify it — i.e. no new executing
-    # query may sit in the "will be audited" bucket unintentionally:
-    # anything that drains a stream or writes a sink on BUILD belongs in
-    # EXECUTING the round it lands.
-    drainish = {
-        n
-        for n in names
-        if (n.startswith("stream_") or n.startswith("sink_"))
-        and n not in batch_exceptions
+def test_keyed_contract_key_sql_returns_one_integer(sf_dir):
+    keyed = {
+        n: c[1] for n, c in stream_contracts().items() if not isinstance(c, str)
     }
-    unskipped_drains = {n for n in drainish if not is_skipped(n)}
-    # the only batch-shaped sink queries allowed to be audited are the
-    # ones that build a plain DataFrame after their side work completes
-    allowed_audited_sinks = {
-        "sink_bulk_failure_replay",  # faults drained at build; plan = result
-        "sink_partitioned_prune",  # write-then-read-back; plan = the scan
-    }
-    assert unskipped_drains <= allowed_audited_sinks, (
-        f"executing-on-build queries missing from EXECUTING: "
-        f"{unskipped_drains - allowed_audited_sinks}"
-    )
+    assert keyed, "no keyed stream contract declared?"
+    for name, key_sql in keyed.items():
+        rows = duckdb.sql(key_sql.format(dir=sf_dir)).fetchall()
+        assert len(rows) == 1 and len(rows[0]) == 1, (name, rows)
+        assert isinstance(rows[0][0], int), (name, rows)
+
+
+def test_plan_audit_artifact_matches_registry():
+    with open(os.path.join(REPO, "PLAN_AUDIT.json")) as f:
+        art = json.load(f)
+    skipped = set(art["skipped_streaming"])
+    assert skipped == set(stream_contracts())
+    assert set(art["queries"]) | skipped == set(queries())
+    assert not art["errors"], art["errors"]
 
 
 def test_memo_build_rows_match_live_memos():
@@ -133,32 +116,11 @@ def test_memo_build_rows_match_live_memos():
         assert emitted <= set(rows), emitted - set(rows)
 
 
-def test_stream_audit_contracts_cover_every_executing_query():
-    """tools/stream_audit.py's CONTRACTS must cover exactly the queries
-    plan_audit skips as EXECUTING — a streaming query with no declared
-    state contract is the silent third state the r9 hygiene rule bans."""
-    executing, batch_exceptions = _plan_audit_lists()
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import stream_audit
-
-    names = set(queries())
-    exec_names = {
-        n
-        for n in names
-        if n not in batch_exceptions
-        and any(n.startswith(p) or n == p for p in executing)
-    }
-    contracts = set(stream_audit.CONTRACTS)
-    assert contracts <= names, f"stale contracts: {sorted(contracts - names)}"
-    uncovered = exec_names - contracts
-    assert not uncovered, f"executing queries with no state contract: {sorted(uncovered)}"
-
-
 def test_no_duplicate_module_constants():
     """A module-level ALL_CAPS constant defined twice in one operator
     module silently rebinds for every function that reads it at CALL
     time while module-level oracle f-strings keep the FIRST value —
-    splitting a query from its oracle (r12: a second FS_TERM broke
+    splitting a query from its oracle (a second FS_TERM once did this to
     search_function_score_decay). Pin: one definition per name."""
     import re as _re
 

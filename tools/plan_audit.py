@@ -1,6 +1,6 @@
 """Repo-wide physical-plan audit: one row per registered query with the
 plan-quality facts the 100 TB design cares about, written to
-PLAN_AUDIT_r12.json.
+PLAN_AUDIT.json.
 
 Per query (plans are inspected AFTER any eager build stages run: many
 queries execute real jobs while the DataFrame is constructed — the
@@ -19,10 +19,10 @@ are excluded entirely):
   for queries that filter base tables);
 - codegen: WholeStageCodegen span count (JVM-side execution evidence).
 
-Streaming end-to-end queries (the drain twins) EXECUTE a stream when
-built, so they are listed under "skipped_streaming" rather than paying a
-full drain per audit; their plan story is carried by the dedicated tests
-in tests/test_streaming.py and tests/test_plans.py.
+Queries that declare a ``stream=`` contract on ``@register`` run a stream
+when built, so they are listed under "skipped_streaming" rather than
+paying a full drain per audit; tools/stream_audit.py drains them, and
+tests/test_streaming.py and tests/test_plans.py cover their plans.
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
@@ -38,23 +38,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from hbase_observer_elasticsearch_spark import plans  # noqa: E402
-from hbase_observer_elasticsearch_spark.registry import queries  # noqa: E402
-from hbase_observer_elasticsearch_spark.session import get_spark  # noqa: E402
-
-# end-to-end streaming/sink queries: building the DataFrame runs a drain
-# or a multi-epoch write — audit would re-execute them, so they are
-# covered by their dedicated tests instead.
-EXECUTING = (
-    "stream_",
-    "cdc_stateful_stream",
-    "cdc_python_datasource_stream",
-    "cdc_replicate_then_query",
-    "cdc_replicate_bucketed",
-    "sink_merge_idempotent_epochs",
+from hbase_observer_elasticsearch_spark.registry import (  # noqa: E402
+    queries,
+    stream_contracts,
 )
-# batch queries whose name matches an EXECUTING prefix but that build a
-# plain DataFrame (no drain): audit them normally.
-BATCH_EXCEPTIONS = ("stream_watermark_lateness_audit",)
+from hbase_observer_elasticsearch_spark.session import get_spark  # noqa: E402
 
 
 def audit_one(df) -> dict:
@@ -81,13 +69,12 @@ def main() -> None:
     spark = get_spark("plan_audit", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
+    streams = stream_contracts()
     out: dict = {}
     skipped: list[str] = []
     errors: dict[str, str] = {}
     for name, fn in sorted(qs.items()):
-        if name not in BATCH_EXCEPTIONS and any(
-            name.startswith(p) or name == p for p in EXECUTING
-        ):
+        if name in streams:
             skipped.append(name)
             continue
         try:
@@ -123,7 +110,7 @@ def main() -> None:
         "errors": errors,
         "queries": out,
     }
-    with open(os.path.join(REPO, "PLAN_AUDIT_r13.json"), "w") as f:
+    with open(os.path.join(REPO, "PLAN_AUDIT.json"), "w") as f:
         json.dump(result, f, indent=1, sort_keys=True)
     print(json.dumps(summary, indent=1, sort_keys=True))
 

@@ -1,7 +1,8 @@
 """Sweep every registered query's physical plan for the one-reducer
-anti-pattern: a Window or global Sort fed by Exchange SinglePartition
-(r13 verdict "Next round" item 4). Writes one line per query with the
-matching plan fragments so candidates can be inspected by hand.
+anti-pattern: a Window or global Sort fed by Exchange SinglePartition.
+Prints one line per query with the matching plan fragments so candidates
+can be inspected by hand. Queries that declare a ``stream=`` contract are
+skipped: building them drains a stream.
 
 Usage: python tools/scan_single_partition.py [sf_dir] > /tmp/sp_scan.txt
 """
@@ -15,18 +16,21 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from hbase_observer_elasticsearch_spark.registry import queries  # noqa: E402
+from hbase_observer_elasticsearch_spark.registry import (  # noqa: E402
+    queries,
+    stream_contracts,
+)
 from hbase_observer_elasticsearch_spark.session import get_spark  # noqa: E402
-from tools.plan_audit import EXECUTING  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("sp_scan")
     qs = queries()
+    streams = stream_contracts()
     hits = 0
     for name in sorted(qs):
-        if name.startswith(EXECUTING):
+        if name in streams:
             continue
         try:
             df = qs[name](spark, sf_dir)

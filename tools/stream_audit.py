@@ -1,8 +1,7 @@
-"""Streaming state audit (r10 verdict directive #3): drain EVERY
-registered streaming query — the 17 names `tools/plan_audit.py` lists as
-`skipped_streaming` — and record, per query, the per-micro-batch state
-footprint from StreamingQueryProgress events, then assert each query's
-documented state contract:
+"""Streaming state audit: drain every query that declares a ``stream=``
+contract on ``@register`` (``registry.stream_contracts()``) and record,
+per query, the per-micro-batch state footprint from
+StreamingQueryProgress events, then check its contract:
 
 - ``stateless``  : no stateful operator — max state rows must be 0.
 - ``flat``       : watermark- or constant-key-bounded — max state rows
@@ -12,6 +11,10 @@ documented state contract:
 - ``keyed``      : state is O(distinct keys) BY DESIGN (seen-set dedup,
   per-entity aggregates) — state may grow, but no faster than the key
   count: state_10x/state_1x <= KEYED_SLACK * keys_10x/keys_1x.
+
+Every contract also requires that the 1x and the 10x drain each started
+at least one stream; a row with ``n_streams == 0`` fails, because a
+state bound measured on no stream tests nothing.
 
 The 10x fixture dir is composed as: events = sf0.1's events replicated
 10x with full-span time shifts (constant rate, 10x history; file knob
@@ -26,14 +29,13 @@ QueryProgressEvent in the process (queries run sequentially, events are
 bucketed by wall-clock window per query; listener delivery is async so
 each query waits for the event stream to go quiet before snapshotting).
 
-Writes STREAM_AUDIT_r{N}.json with one row per streaming query:
+Writes STREAM_AUDIT.json with one row per streaming query:
 {n_streams, n_batches, input_rows, max_state_rows (max over batches of
 the SUM across state operators), max_state_bytes, wall_s} at 1x and 10x,
 the contract, the bound check, and ok: true/false. Exit 1 if any check
 fails.
 
-Usage: python tools/stream_audit.py [round_tag]   (default r11)
-"""
+Usage: python tools/stream_audit.py"""
 
 from __future__ import annotations
 
@@ -53,61 +55,6 @@ AUDIT_DIR = os.path.join(REPO, ".stream_audit_fixture")
 HIST_MULT = 10
 FLAT_SLACK = 1.6  # flat contract: 10x-history state <= 1.6x + 64 rows
 KEYED_SLACK = 1.3  # keyed contract: state ratio <= 1.3x key ratio
-
-# query -> (contract, key-count SQL at {dir} or None). Key SQLs run in
-# DuckDB against the fixture dir the query consumed.
-CONTRACTS: dict[str, tuple[str, str | None]] = {
-    # changefeed passthrough + stream-static broadcast join: no state.
-    "stream_static_enrich": ("stateless", None),
-    # foreachBatch MERGE pipeline: durable state lives in the SINK's
-    # parquet (LWW-compacted), no Spark state-store operator.
-    "cdc_replicate_then_query": ("stateless", None),
-    "cdc_replicate_bucketed": ("stateless", None),
-    # groupBy(op) complete agg: 2 groups, constant forever.
-    "cdc_python_datasource_stream": ("flat", None),
-    # region-pruned passthrough append: no state-store operator; the
-    # groupBy(op) restatement runs batch-side after the drain.
-    "stream_pushdown_region_tail": ("stateless", None),
-    # watermark-evicted window/session/dedup/join state.
-    "stream_tumbling_agg": ("flat", None),
-    "stream_session_agg": ("flat", None),
-    "stream_dedup_within_watermark": ("flat", None),
-    "stream_debounce": ("flat", None),
-    "stream_put_delete_join": ("flat", None),
-    "stream_left_outer_join": ("flat", None),
-    "stream_full_outer_join": ("flat", None),
-    "stream_chained_stateful": ("flat", None),
-    # keyed by rowkey = user_id; the user population is constant under
-    # longer history, so state is flat.
-    "cdc_stateful_stream": ("flat", None),
-    "sink_merge_idempotent_epochs": ("flat", None),
-    # keyed by (day, user) with watermark eviction of closed days.
-    "stream_daily_active_entities": (
-        "keyed",
-        "SELECT COUNT(*) FROM (SELECT DISTINCT CAST(ts AS DATE), user_id"
-        " FROM '{dir}/events.parquet')",
-    ),
-    # keyed by rollup group (event_type x day bucket): grows with days.
-    "stream_live_rollup_ivm": (
-        "keyed",
-        "SELECT COUNT(*) FROM (SELECT DISTINCT event_type,"
-        " CAST(ts AS DATE) FROM '{dir}/events.parquet')",
-    ),
-    # theta sketch keyed by op: O(k) codes per key, 2 keys.
-    "stream_theta_distinct": ("flat", None),
-    # seen-set keyed by canonical doc hash: O(distinct docs) BY DESIGN.
-    "stream_exact_dedup_keyed_state": (
-        "keyed",
-        "SELECT COUNT(DISTINCT array_to_string(list_sort("
-        "string_split(text, ' ')), ' ')) FROM '{dir}/documents.parquet'",
-    ),
-    # update-mode admission agg keyed by incoming vec_id: O(new vectors).
-    "stream_semantic_admission": (
-        "keyed",
-        "SELECT COUNT(*) FROM '{dir}/embeddings.parquet'",
-    ),
-}
-
 
 class _Collector:
     """Buckets QueryProgressEvents; queries run one-at-a-time so a simple
@@ -220,11 +167,13 @@ def summarize(events: list[dict]) -> dict:
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r11"
     import duckdb
 
     from hbase_observer_elasticsearch_spark.memos import clear_memos
-    from hbase_observer_elasticsearch_spark.registry import queries
+    from hbase_observer_elasticsearch_spark.registry import (
+        queries,
+        stream_contracts,
+    )
     from hbase_observer_elasticsearch_spark.session import get_spark
 
     audit_dir = build_audit_fixture()
@@ -233,28 +182,13 @@ def main() -> None:
     collector = _Collector()
     spark.streams.addListener(_mk_listener(collector))
     qs = queries()
-    missing = sorted(set(CONTRACTS) - set(qs))
-    if missing:
-        raise SystemExit(f"contract names not in registry: {missing}")
-    # completeness: every query plan_audit skips as EXECUTING must carry
-    # a state contract here — no silent third state (the same invariant
-    # tests/test_registry_hygiene.py pins for the plan audit itself).
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import plan_audit as _pa
-
-    executing = sorted(
-        n
-        for n in qs
-        if n not in _pa.BATCH_EXCEPTIONS
-        and any(n.startswith(p) or n == p for p in _pa.EXECUTING)
-    )
-    uncovered = sorted(set(executing) - set(CONTRACTS))
-    if uncovered:
-        raise SystemExit(f"executing queries with no state contract: {uncovered}")
 
     out: dict = {"queries": {}, "hist_mult": HIST_MULT}
     failures = []
-    for name, (contract, key_sql) in sorted(CONTRACTS.items()):
+    for name, declared in sorted(stream_contracts().items()):
+        contract, key_sql = (
+            (declared, None) if isinstance(declared, str) else declared
+        )
         rec: dict = {"contract": contract}
         for label, d, cf_files in (
             ("1x", SF1, None),
@@ -288,6 +222,9 @@ def main() -> None:
                 KEYED_SLACK * max(s1, 1) * (k10 / max(k1, 1)), 1
             )
             rec["ok"] = s10 <= rec["bound_10x"]
+        # a bound measured on a drain that started no stream tests nothing
+        streamed = rec["1x"]["n_streams"] > 0 and rec["10x"]["n_streams"] > 0
+        rec["ok"] = rec["ok"] and streamed
         if not rec["ok"]:
             failures.append(name)
         out["queries"][name] = rec
@@ -297,7 +234,7 @@ def main() -> None:
 
     out["failures"] = failures
     out["n_ok"] = sum(1 for r in out["queries"].values() if r["ok"])
-    path = os.path.join(REPO, f"STREAM_AUDIT_{tag}.json")
+    path = os.path.join(REPO, "STREAM_AUDIT.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(
