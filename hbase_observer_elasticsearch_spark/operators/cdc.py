@@ -330,48 +330,18 @@ def cdc_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries.
     """
     ensure_session_conf(spark)
-    import os
-    import shutil
-    import uuid
-
     from ..sources.changefeed import shared_changefeed_stream_dir
+    from ..streaming.pipeline import drain
     from ..streaming.stateful import stateful_doc_state
 
-    # The changefeed fixture is shared with the stream-join twins
-    # (stream_queries._changefeed_dir): one memoized 2-file write per
-    # process instead of a private 4-file dir per query — still a
-    # multi-micro-batch proof, half the micro-batch fixed cost.
+    # the 2-file changefeed fixture the stream_queries twins share
     cf_dir = shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
-    base = _scratch("cdc_stateful_")
-    try:
-        name = "stateful_emit_" + uuid.uuid4().hex[:8]
-        # NOTE: unlike the JVM-side stream joins (stream_queries._drain_to_
-        # local, drained at 8 partitions), this drain keeps the session's
-        # shuffle partitions: the cost here is the parallel Pandas state
-        # function, which WANTS the parallelism; state-store overhead is
-        # secondary (measured 5.7s at 32 partitions vs 7.3s at 8, sf0.1).
-        q = (
-            stateful_doc_state(spark, cf_dir, max_files_per_trigger=1)
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("cdc_stateful_stream: availableNow drain timed out")
-
-        # The memory sink holds emitted rows driver-side; pin them JVM-side
-        # (eager localCheckpoint — no py4j row round-trip) so the returned
-        # plan no longer references the sink (or the temp changefeed dir
-        # we are about to delete).
-        emitted = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
+    # The pandas state function wants the cores, so this drain keeps the
+    # caller's shuffle partitions (measured at sf0.1: 5.7 s at 32
+    # partitions vs 7.3 s at 8).
+    emitted = drain(
+        spark, lambda s: stateful_doc_state(s, cf_dir), "update", parts=None
+    )
     final = latest_by_key(emitted, ["rowkey"], [F.col("version")])
     # qualifiers is stringified (not array<string>): the driver's pandas
     # canonicalizer cannot sort/hash list-valued columns.
@@ -385,9 +355,9 @@ def cdc_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "cdc_replicate_then_query",
-    oracle="""
+# Replicate the events changefeed, then query the index it filled: the
+# batch LWW replay both replicate queries are checked against.
+_SQL_REPLICATE_THEN_QUERY = """
 WITH cf AS (
   SELECT event_id AS seq,
          CASE WHEN event_type = 'error' THEN 'delete' ELSE 'put' END AS op,
@@ -429,7 +399,58 @@ SELECT n_fields,
        {sum_purchase} AS sum_purchase
 FROM docs WHERE purchase IS NOT NULL
 GROUP BY n_fields
-""".format(sum_purchase=sql_dsum("purchase")),
+""".format(sum_purchase=sql_dsum("purchase"))
+
+
+def _replicate_then_query(
+    spark: SparkSession, sf_dir: str, sink_cls: type
+) -> DataFrame:
+    """Run CdcReplicator over the shared 2-file changefeed into a
+    ``sink_cls`` state table until drained, then an ES-shaped query over
+    the index: the bool ``exists: purchase`` filter with a terms-agg over
+    document width (per n_fields bucket, matched-doc count and the exact
+    sum of ``purchase``), pinned before the state dir is removed."""
+    import os
+    import shutil
+
+    from ..replicator import CdcReplicator
+    from ..sources.changefeed import shared_changefeed_stream_dir
+
+    cf_dir = shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
+    base = _scratch("replicate_")
+    try:
+        rep = CdcReplicator(
+            spark,
+            cf_dir,
+            os.path.join(base, "state"),
+            os.path.join(base, "ckpt"),
+        )
+        rep.start(sink_cls=sink_cls, trigger={"availableNow": True})
+        rep.await_drained(timeout_s=300)
+        rep.stop()
+        return (
+            rep.state()
+            .select(
+                F.size("doc").cast("bigint").alias("n_fields"),
+                F.element_at(F.col("doc"), F.lit("purchase"))
+                .cast("double")
+                .alias("purchase"),
+            )
+            .filter(F.col("purchase").isNotNull())
+            .groupBy("n_fields")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                dsum("purchase").alias("sum_purchase"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+@register(
+    "cdc_replicate_then_query",
+    oracle=_SQL_REPLICATE_THEN_QUERY,
     # foreachBatch MERGE: durable state lives in the sink's parquet
     stream="stateless",
 )
@@ -459,90 +480,14 @@ def cdc_replicate_then_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     field's column chunk.
     """
     ensure_session_conf(spark)
-    import os
-    import shutil
+    from ..sinks.state_sink import EmulatedEsSink
 
-    from ..replicator import CdcReplicator
-    from ..sources.changefeed import shared_changefeed_stream_dir
-
-    cf_dir = shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
-    base = _scratch("replicate_demo_")
-    try:
-        rep = CdcReplicator(
-            spark,
-            cf_dir,
-            os.path.join(base, "state"),
-            os.path.join(base, "ckpt"),
-        )
-        rep.start(trigger={"availableNow": True})
-        rep.await_drained(timeout_s=300)
-        rep.stop()
-        res = (
-            rep.state()
-            .select(
-                F.size("doc").cast("bigint").alias("n_fields"),
-                F.element_at(F.col("doc"), F.lit("purchase"))
-                .cast("double")
-                .alias("purchase"),
-            )
-            .filter(F.col("purchase").isNotNull())
-            .groupBy("n_fields")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                dsum("purchase").alias("sum_purchase"),
-            )
-            .localCheckpoint(eager=True)  # pin before the state dir dies
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return res
+    return _replicate_then_query(spark, sf_dir, EmulatedEsSink)
 
 
 @register(
     "cdc_replicate_bucketed",
-    oracle="""
-WITH cf AS (
-  SELECT event_id AS seq,
-         CASE WHEN event_type = 'error' THEN 'delete' ELSE 'put' END AS op,
-         CAST(user_id AS VARCHAR) AS rowkey,
-         CASE WHEN event_type = 'error' THEN NULL ELSE event_type END
-           AS qualifier,
-         CASE WHEN event_type = 'error' THEN NULL ELSE value END AS value,
-         ts
-  FROM events
-),
-lastdel AS (
-  SELECT rowkey, ts, seq FROM (
-    SELECT rowkey, ts, seq,
-           ROW_NUMBER() OVER (PARTITION BY rowkey
-                              ORDER BY ts DESC, seq DESC) AS rn
-    FROM cf WHERE op = 'delete'
-  ) t
-  WHERE rn = 1
-),
-livecell AS (
-  SELECT rowkey, qualifier, value FROM (
-    SELECT c.rowkey, c.qualifier, c.value,
-           ROW_NUMBER() OVER (PARTITION BY c.rowkey, c.qualifier
-                              ORDER BY c.ts DESC, c.seq DESC) AS rn
-    FROM cf c LEFT JOIN lastdel d USING (rowkey)
-    WHERE c.op = 'put'
-      AND (d.ts IS NULL OR (c.ts, c.seq) > (d.ts, d.seq))
-  ) t
-  WHERE rn = 1
-),
-docs AS (
-  SELECT rowkey,
-         CAST(COUNT(*) AS BIGINT) AS n_fields,
-         MAX(CASE WHEN qualifier = 'purchase' THEN value END) AS purchase
-  FROM livecell GROUP BY rowkey
-)
-SELECT n_fields,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       {sum_purchase} AS sum_purchase
-FROM docs WHERE purchase IS NOT NULL
-GROUP BY n_fields
-""".format(sum_purchase=sql_dsum("purchase")),
+    oracle=_SQL_REPLICATE_THEN_QUERY,
     # foreachBatch MERGE: durable state lives in the sink's parquet
     stream="stateless",
 )
@@ -562,54 +507,17 @@ def cdc_replicate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the emulated-sink twin.
     """
     ensure_session_conf(spark)
-    import os
-    import shutil
-
-    from ..replicator import CdcReplicator
     from ..sinks.bucketed_state_sink import BucketedStateSink
-    from ..sources.changefeed import shared_changefeed_stream_dir
+    from ..streaming.pipeline import scoped_session
 
-    cf_dir = shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
-    base = _scratch("replicate_bucketed_")
-    # r14 optimization round (guide §2.2 — fewer, larger reduce
-    # partitions): the per-epoch bucketed MERGE shuffles one epoch's
-    # mutations (~50 k rows here), so 32 near-empty reduce tasks per
-    # window stage dominated the drain. Run the merge loop at 4
-    # partitions like sink_merge_idempotent_epochs — measured 4.4 s vs
-    # 5.8-6.5 s end-to-end at sf0.1 (same-session A/B). At real scale
-    # this knob is the state table's bucket count, not the core count.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        rep = CdcReplicator(
-            spark,
-            cf_dir,
-            os.path.join(base, "state"),
-            os.path.join(base, "ckpt"),
-        )
-        rep.start(sink_cls=BucketedStateSink, trigger={"availableNow": True})
-        rep.await_drained(timeout_s=300)
-        rep.stop()
-        res = (
-            rep.state()
-            .select(
-                F.size("doc").cast("bigint").alias("n_fields"),
-                F.element_at(F.col("doc"), F.lit("purchase"))
-                .cast("double")
-                .alias("purchase"),
-            )
-            .filter(F.col("purchase").isNotNull())
-            .groupBy("n_fields")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                dsum("purchase").alias("sum_purchase"),
-            )
-            .localCheckpoint(eager=True)  # pin before the state dir dies
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(base, ignore_errors=True)
-    return res
+    # Each epoch's bucketed MERGE shuffles one epoch of mutations (~50 k
+    # rows here), so it runs on a child session at 4 shuffle partitions:
+    # near-empty reduce tasks otherwise dominate the drain (measured
+    # 4.4 s vs 5.8-6.5 s end to end at sf0.1). At real scale this count
+    # is the state table's bucket count, not the core count.
+    return _replicate_then_query(
+        scoped_session(spark, 4), sf_dir, BucketedStateSink
+    )
 
 
 @register(
@@ -1045,8 +953,8 @@ GROUP BY rowkey
     ),
 )
 def cdc_pushdown_region_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SOURCE-SIDE FILTER PUSHDOWN through the custom Python DataSource
-    (r11 verdict directive #3): a rowkey-prefix scan — the HBase
+    """SOURCE-SIDE FILTER PUSHDOWN through the custom Python DataSource:
+    a rowkey-prefix scan — the HBase
     region-scan analog (the reference coprocessor routes by rowkey,
     observer6/HbaseDataSyncEsObserver.java:36-43) — planned so the
     predicate is applied BY THE CONNECTOR, not by Spark post-scan.
@@ -1108,7 +1016,7 @@ GROUP BY 1
 )
 def cdc_projection_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COLUMN PRUNING + FILTER PUSHDOWN combined in the custom Python
-    DataSource (r12 verdict directive #4): the query needs only
+    DataSource: the query needs only
     (seq, rowkey), so the connector is opened with
     ``.option("columns", "seq,rowkey")`` — its declared schema narrows
     to two columns and every region task's parquet read shrinks to
@@ -1187,7 +1095,7 @@ WHERE rn = 1
 )
 def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE-equivalent sink with PROVEN per-epoch replay idempotence —
-    the exactly-once story's last edge (r5 verdict directive #9): the
+    the exactly-once story's last edge: the
     events changefeed is split into 3 contiguous seq-range epochs and
     applied through the versioned-parquet LWW MERGE sink
     (sinks/state_sink.EmulatedEsSink.apply), with epoch 2 applied TWICE
@@ -1219,9 +1127,14 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sinks.state_sink import EmulatedEsSink
     from ..sources.changefeed import events_as_changefeed
-    from ..streaming.pipeline import split_epoch
+    from ..streaming.pipeline import scoped_session, split_epoch
 
-    cf = events_as_changefeed(load_table(spark, sf_dir, "events"))
+    # Per-epoch state is small (one row per live (rowkey, qualifier)), so
+    # the merge loop runs on a child session at 4 shuffle partitions:
+    # near-empty tasks per window stage otherwise dominate the wall
+    # clock. At real scale this count is the state table's bucket count.
+    s = scoped_session(spark, 4)
+    cf = events_as_changefeed(load_table(s, sf_dir, "events"))
     lo, hi = cf.agg(F.min("seq"), F.max("seq")).first()
     n_epochs = 3
     span = (hi - lo + n_epochs) // n_epochs
@@ -1233,15 +1146,8 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     schedule = [ranges[0], ranges[1], ranges[1], ranges[2]]
 
     root = _scratch("merge_epochs_")
-    # Per-epoch state is small (one row per live (rowkey, qualifier)), so
-    # the merge loop runs at 4 shuffle partitions like the streaming-twin
-    # drains — 32 near-empty tasks per window stage otherwise
-    # dominate the wall clock. At real scale this maps to sizing the
-    # merge's partitioning to the state table's bucket count.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        sink = EmulatedEsSink(spark, root)
+        sink = EmulatedEsSink(s, root)
         for e_lo, e_hi in schedule:
             batch = cf.filter(
                 (F.col("seq") >= e_lo) & (F.col("seq") <= e_hi)
@@ -1258,7 +1164,6 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()  # pin before the state dir is removed
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -1410,7 +1315,7 @@ GROUP BY rowkey, qualifier
 )
 def sink_bulk_failure_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ES sink's FAILURE modes, end-to-end, converging to the clean
-    final state (r9 verdict directive #5). The events changefeed is
+    final state. The events changefeed is
     flushed as 3 seq-range epoch bulks through a fault-injecting `_bulk`
     endpoint that delivers the reference's three distinguishing failure
     behaviors: per-item 429 rejections on first delivery (retried, the

@@ -53,13 +53,7 @@ class CdcReplicator:
             raise RuntimeError("replicator already started")
         self._sink = sink_cls(self.spark, self.state_dir, self.config)
         self._query = start_pipeline(
-            self.spark,
-            self.changefeed_dir,
-            self.state_dir,
-            self.checkpoint_dir,
-            config=self.config,
-            sink=self._sink,
-            **kwargs,
+            self.spark, self.changefeed_dir, self.checkpoint_dir, self._sink, **kwargs
         )
         return self
 

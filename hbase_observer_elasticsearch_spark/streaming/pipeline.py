@@ -22,15 +22,108 @@ crash (SURVEY §6); this loses nothing.
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sinks.state_sink import EmulatedEsSink, EsSinkConfig
-from ..sources.changefeed import CHANGEFEED_SCHEMA
+from ..session import ensure_session_conf
+from ..sources.changefeed import CHANGEFEED_SCHEMA, scratch_dir
 
 # Reference parity constants (observer6/ElasticSearchBulkOperator.java:26,61)
 MAX_BULK_COUNT = 10_000
 FLUSH_PERIOD_SECONDS = 30
+DRAIN_TIMEOUT_S = 300
+
+
+def read_feed(
+    spark: SparkSession, path: str, schema=CHANGEFEED_SCHEMA, max_files: int = 1
+) -> DataFrame:
+    """A file stream over the parquet feed at ``path``: ``max_files``
+    files per micro-batch, so a feed written as n files drains in n
+    epochs."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files)
+        .parquet(path)
+    )
+
+
+def scoped_session(spark: SparkSession, parts: int) -> SparkSession:
+    """A child session of ``spark`` at ``parts`` shuffle partitions.
+
+    It shares the SparkContext and the table cache but not the SQL conf,
+    so the count reaches only what runs on it, never a concurrent job on
+    ``spark``. A stream fixes its state-store partitioning from this conf
+    when it starts (one state store per partition per stateful operator
+    per micro-batch), so small drains want a small count."""
+    s = ensure_session_conf(spark.newSession())
+    s.conf.set("spark.sql.shuffle.partitions", str(parts))
+    return s
+
+
+def drain(
+    spark: SparkSession,
+    build: Callable[[SparkSession], DataFrame],
+    mode: str,
+    *,
+    parts: int | None = 4,
+    expect_rows: int | None = None,
+) -> DataFrame:
+    """Run the stream ``build(s)`` to the end into a memory sink and
+    return its rows, pinned JVM-side with an eager localCheckpoint.
+
+    ``s`` is :func:`scoped_session` at ``parts`` partitions, or ``spark``
+    itself when ``parts`` is None; ``build`` must construct every input
+    on ``s``. The returned plan references neither the sink table nor the
+    checkpoint dir, which is removed on return.
+
+    By default the trigger is availableNow. A source that exposes one
+    range per trigger (the Python DataSource stream reader has no
+    admission-control API) instead runs processingTime-0 micro-batches
+    until the progress reports ``expect_rows`` input rows, and the drain
+    then checks that exactly that many rows were emitted.
+    """
+    s = spark if parts is None else scoped_session(spark, parts)
+    name = "drain_" + uuid.uuid4().hex[:8]
+    base = scratch_dir("drain_")
+    try:
+        writer = (
+            build(s)
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .outputMode(mode)
+        )
+        if expect_rows is None:
+            q = writer.trigger(availableNow=True).start()
+            if not q.awaitTermination(DRAIN_TIMEOUT_S):
+                q.stop()
+                raise RuntimeError(f"drain {name}: availableNow run timed out")
+        else:
+            q = writer.trigger(processingTime="0 seconds").start()
+            deadline = time.monotonic() + DRAIN_TIMEOUT_S
+            # summing numInputRows over recentProgress is a local
+            # read; polling the memory table would be a Spark job per poll
+            while q.isActive and time.monotonic() < deadline:
+                if sum(p["numInputRows"] for p in q.recentProgress) >= expect_rows:
+                    break
+                time.sleep(0.05)
+            q.stop()
+            q.awaitTermination(60)
+        pinned = s.table(name).localCheckpoint(eager=True)
+        s.catalog.dropTempView(name)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    if expect_rows is not None:
+        n = pinned.count()
+        if n != expect_rows:
+            raise RuntimeError(f"drain {name}: emitted {n} of {expect_rows} rows")
+    return pinned
 
 
 def compact_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -80,43 +173,34 @@ def split_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
 def start_pipeline(
     spark: SparkSession,
     changefeed_dir: str,
-    state_dir: str,
     checkpoint_dir: str,
-    config: EsSinkConfig | None = None,
+    sink,
     trigger: dict | None = None,
     max_files_per_trigger: int = 1,
-    sink_cls: type = EmulatedEsSink,
-    sink=None,
 ):
-    """Start the CDC replication stream: changefeed dir → doc state table.
+    """Start the CDC replication stream: changefeed dir → ``sink``.
 
-    `trigger` defaults to the reference's 30 s flush period; pass
-    ``{"availableNow": True}`` in tests to drain the backlog and stop.
-    `max_files_per_trigger` is the size-cap analog of MAX_BULK_COUNT.
-    `sink_cls` selects the state layout: EmulatedEsSink (versioned full
-    rewrite, atomic) or sinks.bucketed_state_sink.BucketedStateSink
-    (incremental per-bucket IO — the 100 TB layout); pass an already-built
-    `sink` instance instead to share it with a reader (CdcReplicator).
+    ``sink`` is any state sink with ``apply(cells, dels, epoch_id)``
+    (EmulatedEsSink's versioned full rewrite, or BucketedStateSink's
+    incremental per-bucket IO); CdcReplicator builds it and reads state
+    back through the same object. `trigger` defaults to the reference's
+    30 s flush period; pass ``{"availableNow": True}`` to drain the
+    backlog and stop. `max_files_per_trigger` is the size-cap analog of
+    MAX_BULK_COUNT.
     """
-    sink = sink or sink_cls(spark, state_dir, config)
-
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changefeed_dir)
-    )
 
     def write_epoch(batch: DataFrame, epoch_id: int) -> None:
         sink.apply(*split_epoch(batch), epoch_id)
 
-    writer = (
-        cf.writeStream.foreachBatch(write_epoch)
+    trigger = trigger or {"processingTime": f"{FLUSH_PERIOD_SECONDS} seconds"}
+    return (
+        read_feed(spark, changefeed_dir, max_files=max_files_per_trigger)
+        .writeStream.foreachBatch(write_epoch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(**trigger)
+        .start()
     )
-    trigger = trigger or {"processingTime": f"{FLUSH_PERIOD_SECONDS} seconds"}
-    writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def streaming_latest_state(spark: SparkSession, changefeed_dir: str) -> DataFrame:
@@ -124,11 +208,7 @@ def streaming_latest_state(spark: SparkSession, changefeed_dir: str) -> DataFram
     watermark — the declarative alternative to the foreachBatch MERGE when
     downstream only needs the latest full put per key within the watermark
     horizon (append-mode friendly)."""
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .parquet(changefeed_dir)
-        .withWatermark("ts", "1 hour")
-    )
+    cf = read_feed(spark, changefeed_dir).withWatermark("ts", "1 hour")
     # latest mutation per (rowkey, qualifier) in arrival order within the
     # watermark: streaming dedup keeps the FIRST seen, so routing through
     # max-ts requires update-mode agg:
@@ -151,12 +231,7 @@ def streaming_dedup_within_watermark(
     bounded by the watermark (unlike plain `dropDuplicates`, whose state
     grows forever on an unbounded stream).
     """
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
-        .withWatermark("ts", watermark)
-    )
+    cf = read_feed(spark, changefeed_dir).withWatermark("ts", watermark)
     return cf.dropDuplicatesWithinWatermark(["rowkey", "seq"])
 
 
@@ -176,12 +251,7 @@ def streaming_windowed_mutation_counts(
     at scale this is the shape that keeps state bounded (state size =
     open windows × op types, independent of throughput).
     """
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
-        .withWatermark("ts", watermark)
-    )
+    cf = read_feed(spark, changefeed_dir).withWatermark("ts", watermark)
     return (
         cf.groupBy(F.window("ts", window_duration), "op")
         .agg(
@@ -211,12 +281,7 @@ def streaming_mutation_sessions(
     can extend it, so state stays bounded by the number of open sessions.
     Batch twin: operators/time_windows.window_session.
     """
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
-        .withWatermark("ts", watermark)
-    )
+    cf = read_feed(spark, changefeed_dir).withWatermark("ts", watermark)
     return (
         cf.groupBy(F.session_window("ts", gap), "rowkey")
         .agg(F.count(F.lit(1)).alias("n_mutations"))
@@ -236,38 +301,50 @@ def streaming_enrich_with_dim(
     dimension (broadcast per micro-batch — the dim is re-resolved each
     epoch, so a refreshed dim table is picked up without restarting).
 
-    At 100 TB of stream this is the standard pattern for key→tenant /
+    At 100 TB this is the standard pattern for key→tenant /
     key→schema routing; the static side must stay broadcast-sized or be
     pre-bucketed on the join key.
     """
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
-    )
-    return cf.join(F.broadcast(dim), on, "left")
+    return read_feed(spark, changefeed_dir).join(F.broadcast(dim), on, "left")
 
 
-def streaming_put_delete_interval_join(
+def streaming_put_delete_join(
     spark: SparkSession,
     changefeed_dir: str,
+    how: str,
     horizon: str = "10 minutes",
     within: str = "5 minutes",
 ) -> DataFrame:
-    """Stream-stream INTERVAL join: each put matched to the delete(s) that
-    killed it within `within` — the audit stream answering "which writes
-    were immediately discarded" (churn/thrash detection on the changefeed).
+    """Stream-stream interval join of each put to the delete(s) of its
+    rowkey within `within` after it; ``how`` is ``inner``, ``leftOuter``
+    or ``fullOuter``. Returns (rowkey, qualifier, put_ts, put_seq, del_ts,
+    del_seq), rowkey coalesced over both sides.
 
-    Both sides carry watermarks and the join predicate bounds del_ts to
-    [put_ts, put_ts + within], so Spark can expire buffered state once the
-    watermark passes the bound — state stays proportional to the event
-    rate inside the horizon, not the stream length (the requirement for an
-    unbounded 100 TB feed).
+    - inner: the writes a delete discarded almost at once (churn/thrash
+      detection on the changefeed).
+    - leftOuter: every put, matched or emitted once with a NULL del_ts
+      when the watermark proves no delete can still match it ("surviving
+      writes").
+    - fullOuter: additionally every delete that provably hit no put (the
+      dropped-mutation reconciliation view).
+
+    Both sides carry watermarks and the predicate bounds del_ts to
+    [put_ts, put_ts + within], so Spark expires buffered state once the
+    watermark passes the bound: state stays proportional to the event
+    rate inside the horizon, not the stream length.
+
+    A null-padded row may only be emitted when its row leaves join state,
+    which the GLOBAL watermark decides: the MIN over both sources' max
+    event time, minus `horizon` (puts and deletes are separate file
+    streams over the same dir, so the lagging side governs). A put emits
+    null-padded once put_ts + within < watermark; a delete once del_ts <
+    watermark (every put it could match has put_ts <= del_ts). Both rules
+    were traced exactly at sf0.001 (38/751/165 matched/put-only/
+    delete-only rows); unmatched rows younger than the cutoff stay in
+    state, unemitted, when a drain ends.
     """
     puts = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
+        read_feed(spark, changefeed_dir)
         .filter(F.col("op") == "put")
         .withWatermark("ts", horizon)
         .select(
@@ -278,112 +355,7 @@ def streaming_put_delete_interval_join(
         )
     )
     dels = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
-        .filter(F.col("op") == "delete")
-        .withWatermark("ts", horizon)
-        .select(F.col("rowkey").alias("d_rowkey"), F.col("ts").alias("del_ts"))
-    )
-    return puts.join(
-        dels,
-        F.expr(
-            "rowkey = d_rowkey AND del_ts >= put_ts "
-            f"AND del_ts <= put_ts + INTERVAL {within}"
-        ),
-    ).select("rowkey", "qualifier", "put_ts", "put_seq", "del_ts")
-
-
-def streaming_put_delete_left_outer_join(
-    spark: SparkSession,
-    changefeed_dir: str,
-    horizon: str = "10 minutes",
-    within: str = "5 minutes",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every put, matched to the
-    delete(s) that killed it within `within` — or emitted once with a
-    NULL del_ts when the watermark PROVES no such delete can arrive
-    ("surviving writes" audit, the complement of the inner join's churn
-    report).
-
-    The outer semantics are what make this the hard streaming operator:
-    a null-padded row may only be emitted when the engine can prove the
-    absence of a future match, i.e. when the put is evicted from join
-    state. Eviction uses the GLOBAL watermark, which is the MIN over
-    all sources' watermarks — here puts and deletes are separate
-    file-stream sources over the same dir, so the delete side's slower
-    max event time governs (traced empirically: the emitted/retained
-    boundary sits exactly at min(max put_ts, max del_ts) - horizon -
-    within, 751/751 rows at sf0.001). Unmatched puts younger than that
-    cutoff stay in state, correctly UNEMITTED, when the drain ends.
-    """
-    puts = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
-        .filter(F.col("op") == "put")
-        .withWatermark("ts", horizon)
-        .select(
-            "rowkey",
-            "qualifier",
-            F.col("ts").alias("put_ts"),
-            F.col("seq").alias("put_seq"),
-        )
-    )
-    dels = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
-        .filter(F.col("op") == "delete")
-        .withWatermark("ts", horizon)
-        .select(F.col("rowkey").alias("d_rowkey"), F.col("ts").alias("del_ts"))
-    )
-    return puts.join(
-        dels,
-        F.expr(
-            "rowkey = d_rowkey AND del_ts >= put_ts "
-            f"AND del_ts <= put_ts + INTERVAL {within}"
-        ),
-        "leftOuter",
-    ).select("rowkey", "qualifier", "put_ts", "put_seq", "del_ts")
-
-
-def streaming_put_delete_full_outer_join(
-    spark: SparkSession,
-    changefeed_dir: str,
-    horizon: str = "10 minutes",
-    within: str = "5 minutes",
-) -> DataFrame:
-    """Stream-stream FULL OUTER interval join: matched put/delete pairs,
-    plus null-padded puts that provably outlived every delete, plus
-    null-padded deletes that provably hit no put — the complete
-    reconciliation view (writes that survived + deletes of nonexistent
-    keys, i.e. the reference pipeline's dropped-mutation audit).
-
-    Eviction rules (both traced exactly at sf0.001): a put emits
-    null-padded when put_ts + within < global watermark; a delete emits
-    null-padded when del_ts < global watermark (every put it could match
-    has put_ts <= del_ts, so watermark passage of del_ts itself closes
-    the candidate set). Global watermark = MIN over the two sources'
-    max event time − horizon.
-    """
-    puts = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
-        .filter(F.col("op") == "put")
-        .withWatermark("ts", horizon)
-        .select(
-            "rowkey",
-            "qualifier",
-            F.col("ts").alias("put_ts"),
-            F.col("seq").alias("put_seq"),
-        )
-    )
-    dels = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(changefeed_dir)
+        read_feed(spark, changefeed_dir)
         .filter(F.col("op") == "delete")
         .withWatermark("ts", horizon)
         .select(
@@ -398,7 +370,7 @@ def streaming_put_delete_full_outer_join(
             "rowkey = d_rowkey AND del_ts >= put_ts "
             f"AND del_ts <= put_ts + INTERVAL {within}"
         ),
-        "fullOuter",
+        how,
     ).select(
         F.coalesce(F.col("rowkey"), F.col("d_rowkey")).alias("rowkey"),
         "qualifier",

@@ -34,11 +34,12 @@ from __future__ import annotations
 import json
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..sources.changefeed import CHANGEFEED_SCHEMA
+from .pipeline import read_feed
 
 # state: one JSON blob per key:
 #   {"cells": {qualifier: [value, ts_ns, family, seq]}, "tomb": [ts_ns, seq],
@@ -122,10 +123,7 @@ def _make_handler(ttl_ms: int | None):
 
 
 def stateful_doc_state(
-    spark: SparkSession,
-    changefeed_dir: str,
-    max_files_per_trigger: int = 1,
-    ttl_ms: int | None = None,
+    spark: SparkSession, changefeed_dir: str, ttl_ms: int | None = None
 ) -> DataFrame:
     """Streaming LWW document state with Spark-managed per-key state.
 
@@ -138,16 +136,12 @@ def stateful_doc_state(
     and their state is dropped — the 100 TB requirement that keyed state
     track the active working set instead of growing with key cardinality.
     """
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changefeed_dir)
-    )
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if ttl_ms is not None
         else GroupStateTimeout.NoTimeout
     )
+    cf = read_feed(spark, changefeed_dir)
     return cf.groupBy("rowkey").applyInPandasWithState(
         _make_handler(ttl_ms),
         outputStructType=_OUTPUT_SCHEMA,
@@ -252,11 +246,7 @@ class LwwDocProcessor(StatefulProcessor):
         pass
 
 
-def stateful_doc_state_tws(
-    spark: SparkSession,
-    changefeed_dir: str,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
+def stateful_doc_state_tws(spark: SparkSession, changefeed_dir: str) -> DataFrame:
     """transformWithStateInPandas twin of :func:`stateful_doc_state` —
     identical emission contract (rowkey, doc_json, version, evicted), so
     the two stateful APIs are interchangeable downstream and parity-tested
@@ -267,11 +257,7 @@ def stateful_doc_state_tws(
             "protobuf wheel (the TWS JVM<->Python state protocol); gate "
             "callers on streaming.stateful._HAS_TWS"
         )
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changefeed_dir)
-    )
+    cf = read_feed(spark, changefeed_dir)
     return cf.groupBy("rowkey").transformWithStateInPandas(
         statefulProcessor=LwwDocProcessor(),
         outputStructType=_OUTPUT_SCHEMA,
@@ -286,45 +272,56 @@ _DEBOUNCE_STATE = "last_json string"
 _DEBOUNCE_OUTPUT = "seq long, rowkey string, qualifier string, ts timestamp"
 
 
+def _sorted_batch(frames: list[pd.DataFrame], by) -> pd.DataFrame:
+    """One key's micro-batch chunks as one frame sorted by ``by``."""
+    pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+    return pdf.sort_values(by)
+
+
+def _out_of_order(what: str, row, last) -> ValueError:
+    return ValueError(
+        f"{what}: row {row} is not after the last row {last} this key's "
+        "state has seen; the feed's files must be contiguous, ordered ranges"
+    )
+
+
 def _make_debounce_handler(gap_us: int):
     def _debounce(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        # keyed by rowkey only; per-qualifier last-seen micros live in a
-        # tiny dict (state group count = active keys, not keys×qualifiers
-        # — 5× fewer pandas invocations per micro-batch at this feed).
-        #
-        # r14 optimization round (guide §4.2): the gap decision is
-        # "previous RAW event of the same qualifier, kept or not" — a
-        # per-qualifier shift(1) over the (ts, seq)-sorted batch, seeded
-        # from keyed state for each qualifier's first row. Vectorized
-        # pandas replaces the per-row Python loop; emission and the
-        # stored last-raw map are identical (the changefeed files are
-        # contiguous time ranges, so sorting the whole batch restores
-        # global per-key time order exactly as before).
-        last: dict[str, int] = (
+        # Keyed by rowkey only; per qualifier the state keeps the last RAW
+        # event's [ts_us, seq] (state group count = active keys, not
+        # keys x qualifiers). The gap decision is "previous raw event of
+        # the same qualifier, kept or not": a per-qualifier shift(1) over
+        # the (ts, seq)-sorted batch, seeded from state for each
+        # qualifier's first row. That equals the LAG over the key's whole
+        # history only if no batch row precedes the state, so such a row
+        # raises.
+        last: dict[str, list[int]] = (
             json.loads(state.get[0]) if state.exists else {}
         )
         frames = [pdf for pdf in pdfs if len(pdf)]
         if not frames:
-            state.update((json.dumps(last),))
             return
-        pdf = (
-            frames[0]
-            if len(frames) == 1
-            else pd.concat(frames, ignore_index=True)
-        )
-        pdf = pdf.sort_values(["ts", "seq"])
+        pdf = _sorted_batch(frames, ["ts", "seq"])
         q = pdf["qualifier"].fillna("")
         t_us = pdf["ts"].astype("int64") // 1000
-        prev = t_us.groupby(q).shift(1)
-        seed = q.map(last)  # NaN where the qualifier has no state yet
-        prev = prev.fillna(seed)
-        keep = prev.isna() | ((t_us - prev) > gap_us)
-        kept = pdf.loc[keep.to_numpy(), ["seq", "rowkey", "qualifier", "ts"]]
-        # last raw per qualifier = the final (sorted) row of each group
-        tail = t_us.groupby(q).last()
-        last.update({str(k): int(v) for k, v in tail.items()})
+        prev = t_us.groupby(q).shift(1).to_numpy()
+        qs, t_us, seq = q.to_numpy(), t_us.to_numpy(), pdf["seq"].to_numpy()
+        for i in np.flatnonzero(np.isnan(prev)):  # each qualifier's first row
+            seen = last.get(qs[i])
+            if seen is not None:
+                if (t_us[i], seq[i]) <= tuple(seen):
+                    raise _out_of_order(
+                        f"stateful_debounce rowkey {key[0]!r} qualifier {qs[i]!r}",
+                        (int(t_us[i]), int(seq[i])),
+                        tuple(seen),
+                    )
+                prev[i] = seen[0]
+        keep = np.isnan(prev) | ((t_us - prev) > gap_us)
+        kept = pdf.loc[keep, ["seq", "rowkey", "qualifier", "ts"]]
+        for i in np.flatnonzero(~q.duplicated(keep="last").to_numpy()):
+            last[qs[i]] = [int(t_us[i]), int(seq[i])]  # last raw row
         state.update((json.dumps(last),))
         if len(kept):
             yield kept
@@ -333,24 +330,17 @@ def _make_debounce_handler(gap_us: int):
 
 
 def stateful_debounce(
-    spark: SparkSession,
-    changefeed_dir: str,
-    gap_us: int,
-    max_files_per_trigger: int = 1,
+    spark: SparkSession, changefeed_dir: str, gap_us: int
 ) -> DataFrame:
     """Streaming gap-based debounce: suppress changefeed mutations of the
     same (rowkey, qualifier) arriving within ``gap_us`` of the previous
     raw mutation — the streaming twin of the events_debounce batch
-    operator (operators/time_windows.py), with the previous-event
-    timestamp as the ONLY keyed state (one long per active key: the
-    minimal possible stateful-operator footprint, vs the LWW doc state
-    above which carries the whole document).
+    operator (operators/time_windows.py), with the previous raw event's
+    (ts, seq) per qualifier as the ONLY keyed state (vs the LWW doc state
+    above, which carries the whole document). Raises if a micro-batch
+    holds a row at or before that state's (ts, seq).
     """
-    cf = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changefeed_dir)
-    )
+    cf = read_feed(spark, changefeed_dir)
     return cf.groupBy("rowkey").applyInPandasWithState(
         _make_debounce_handler(gap_us),
         outputStructType=_DEBOUNCE_OUTPUT,
@@ -366,7 +356,7 @@ _IVM_FEED_SCHEMA = (
     "rowkey long, seq long, is_del boolean, value double, "
     "epoch long, grp long"
 )
-_IVM_STATE = "live boolean, value double"
+_IVM_STATE = "live boolean, value double, seq long"
 _IVM_OUTPUT = (
     "grp long, epoch long, live_now boolean, val_now double, "
     "prev_live boolean, prev_value double"
@@ -377,69 +367,47 @@ def _ivm_delta_handler(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """Per-rowkey LWW delta emitter: keyed state is (live, last raw
-    value); each update emits the (now, prev) pair the downstream
-    decimal fold turns into exact (cnt, value) deltas — the streaming
-    half of operators/skew_agg.cdc_live_rollup_ivm. State stores the
-    previous row's RAW value even for tombstones (prev_live masks it),
-    bit-matching the batch LAG chain.
+    value, last seq); each update emits the (now, prev) pair the
+    downstream decimal fold turns into exact (cnt, value) deltas — the
+    streaming half of operators/skew_agg.cdc_live_rollup_ivm. State
+    stores the previous row's RAW value even for tombstones (prev_live
+    masks it), bit-matching the batch LAG chain.
 
-    r14 optimization round (guide §4.2): the per-row Python loop is a
-    vectorized shift — prev = the seq-sorted batch shifted by one with
-    the keyed state as the seed. Identical emission: the (now, prev)
-    chain is exactly a LAG over the key's full seq order, and the feed
-    files are contiguous seq ranges, so sorting the whole micro-batch
-    chunk set by seq reproduces the global per-key order."""
-    import numpy as np
-
-    if state.exists:
-        live, val = bool(state.get[0]), float(state.get[1])
-    else:
-        live, val = False, 0.0
+    prev is the seq-sorted batch shifted by one, seeded from state. That
+    is the LAG over the key's whole seq order only if every batch row
+    comes after the state's last seq, so an earlier row raises."""
     frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        pdf = (
-            frames[0]
-            if len(frames) == 1
-            else pd.concat(frames, ignore_index=True)
-        )
-        pdf = pdf.sort_values("seq")
-        now_live = ~pdf["is_del"].to_numpy(dtype=bool)
-        vals = pdf["value"].to_numpy(dtype="float64")
-        prev_live = np.concatenate(([live], now_live[:-1]))
-        prev_val = np.concatenate(([val], vals[:-1]))
-        out = pd.DataFrame(
-            {
-                "grp": pdf["grp"].to_numpy(dtype="int64"),
-                "epoch": pdf["epoch"].to_numpy(dtype="int64"),
-                "live_now": now_live,
-                "val_now": vals,
-                "prev_live": prev_live,
-                "prev_value": prev_val,
-            }
-        )
-        live, val = bool(now_live[-1]), float(vals[-1])
-        state.update((live, val))
-        yield out
+    if not frames:
         return
-    state.update((bool(live), float(val)))
-
-
-def stateful_ivm_deltas(
-    spark: SparkSession,
-    feed_dir: str,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Streaming per-update delta stream for live-rollup IVM: one
-    (live, value) pair of keyed state per rowkey, emission = one row per
-    mutation carrying (now, prev) — O(active keys) state however long
-    the feed runs, the same bound as the LWW doc state above."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    cf = (
-        spark.readStream.schema(_parse_datatype_string(_IVM_FEED_SCHEMA))
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(feed_dir)
+    live, val, last_seq = state.get if state.exists else (False, 0.0, None)
+    pdf = _sorted_batch(frames, "seq")
+    seqs = pdf["seq"].to_numpy(dtype="int64")
+    if last_seq is not None and seqs[0] <= last_seq:
+        raise _out_of_order(
+            f"stateful_ivm_deltas rowkey {key[0]!r}", int(seqs[0]), int(last_seq)
+        )
+    now_live = ~pdf["is_del"].to_numpy(dtype=bool)
+    vals = pdf["value"].to_numpy(dtype="float64")
+    out = pd.DataFrame(
+        {
+            "grp": pdf["grp"].to_numpy(dtype="int64"),
+            "epoch": pdf["epoch"].to_numpy(dtype="int64"),
+            "live_now": now_live,
+            "val_now": vals,
+            "prev_live": np.concatenate(([bool(live)], now_live[:-1])),
+            "prev_value": np.concatenate(([float(val)], vals[:-1])),
+        }
     )
+    state.update((bool(now_live[-1]), float(vals[-1]), int(seqs[-1])))
+    yield out
+
+
+def stateful_ivm_deltas(spark: SparkSession, feed_dir: str) -> DataFrame:
+    """Streaming per-update delta stream for live-rollup IVM: one
+    (live, value, seq) triple of keyed state per rowkey, emission = one
+    row per mutation carrying (now, prev) — O(active keys) state however
+    long the feed runs, the same bound as the LWW doc state above."""
+    cf = read_feed(spark, feed_dir, _IVM_FEED_SCHEMA)
     return cf.groupBy("rowkey").applyInPandasWithState(
         _ivm_delta_handler,
         outputStructType=_IVM_OUTPUT,

@@ -114,7 +114,7 @@ def test_stream_keeps_same_ts_put_that_outlives_the_delete(spark, tmp_path):
     cf_dir, state_dir = str(tmp_path / "cf"), str(tmp_path / "state")
     write_changefeed_stream_dir(feed, cf_dir, n_files=1)
     q = start_pipeline(
-        spark, cf_dir, state_dir, str(tmp_path / "ckpt"),
+        spark, cf_dir, str(tmp_path / "ckpt"), EmulatedEsSink(spark, state_dir),
         trigger={"availableNow": True},
     )
     q.awaitTermination(120)

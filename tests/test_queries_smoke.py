@@ -1,5 +1,6 @@
 """Smoke: every registered query runs at sf0.001 with a stable schema,
-starts a stream exactly when it declares a ``stream=`` contract, and every
+starts a stream exactly when it declares a ``stream=`` contract, never
+writes the shuffle-partition count of the session it was handed, and every
 oracle parses in DuckDB. (Exact value parity vs DuckDB is covered by
 tools/check.py at sf0.01 — too slow for the unit suite.)"""
 
@@ -7,6 +8,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.sql.conf import RuntimeConfig
 from pyspark.sql.streaming.readwriter import DataStreamWriter
 
 from hbase_observer_elasticsearch_spark.catalog import TABLES
@@ -32,9 +34,25 @@ def test_query_runs(spark, sf_dir, name, monkeypatch):
             return _real(self, *a, **kw)
 
         monkeypatch.setattr(DataStreamWriter, method, counted)
+    # a query sizes its shuffles on a session of its own (newSession());
+    # the handed session's count is visible to every concurrent job on it
+    handed = spark.conf._jconf
+    parts_writes = []
+    real_set = RuntimeConfig.set
+
+    def guarded_set(self, key, value):
+        if key == "spark.sql.shuffle.partitions" and self._jconf == handed:
+            parts_writes.append(value)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", guarded_set)
     df = QS[name](spark, sf_dir)
     assert len(df.columns) > 0
     assert df.count() >= 0
+    assert not parts_writes, (
+        f"{name}: set spark.sql.shuffle.partitions to {parts_writes} "
+        "on the session it was handed"
+    )
     assert bool(starts) == (name in STREAMS), (
         f"{name}: started {len(starts)} streams but "
         f"{'declares' if name in STREAMS else 'does not declare'} stream="

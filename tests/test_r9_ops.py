@@ -186,7 +186,7 @@ def test_ivm_stream_restart_exactly_once(spark, tmp_path, monkeypatch):
             rows.extend(df.collect())
 
         q = (
-            stateful_ivm_deltas(spark, feed, max_files_per_trigger=1)
+            stateful_ivm_deltas(spark, feed)
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .outputMode("update")

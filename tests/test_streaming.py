@@ -3,6 +3,7 @@ sink MERGE, checkpoint restart."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hbase_observer_elasticsearch_spark.operators.cdc import apply_changefeed
@@ -33,8 +34,8 @@ def test_stream_batch_parity(spark, tmp_path):
     write_changefeed_stream_dir(cf, cf_dir, n_files=4)
 
     q = start_pipeline(
-        spark, cf_dir, state_dir, ckpt, trigger={"availableNow": True},
-        max_files_per_trigger=1,
+        spark, cf_dir, ckpt, EmulatedEsSink(spark, state_dir),
+        trigger={"availableNow": True}, max_files_per_trigger=1,
     )
     q.awaitTermination(120)
 
@@ -53,7 +54,8 @@ def test_stream_restart_idempotent(spark, tmp_path):
 
     for _ in range(2):  # second run: nothing new to process
         q = start_pipeline(
-            spark, cf_dir, state_dir, ckpt, trigger={"availableNow": True}
+            spark, cf_dir, ckpt, EmulatedEsSink(spark, state_dir),
+            trigger={"availableNow": True},
         )
         q.awaitTermination(120)
 
@@ -119,7 +121,8 @@ def test_stream_parity_any_file_split(spark, tmp_path):
         ckpt = str(tmp_path / f"ckpt{n_files}")
         write_changefeed_stream_dir(fixture_changefeed(spark), cf_dir, n_files)
         q = start_pipeline(
-            spark, cf_dir, state_dir, ckpt, trigger={"availableNow": True}
+            spark, cf_dir, ckpt, EmulatedEsSink(spark, state_dir),
+            trigger={"availableNow": True},
         )
         q.awaitTermination(120)
         got = state_as_dict(EmulatedEsSink(spark, state_dir).read_state())
@@ -167,7 +170,7 @@ def test_stateful_lww_applyinpandaswithstate(spark, tmp_path):
     write_changefeed_stream_dir(fixture_changefeed(spark), cf_dir, n_files=4)
 
     q = (
-        stateful_doc_state(spark, cf_dir, max_files_per_trigger=1)
+        stateful_doc_state(spark, cf_dir)
         .writeStream.format("memory")
         .queryName("lww_state")
         .outputMode("update")
@@ -598,13 +601,13 @@ def test_streaming_put_delete_interval_join(spark, tmp_path):
     """Stream-stream interval join finds exactly the puts a delete killed
     within the window — identical to the batch range-join twin."""
     from hbase_observer_elasticsearch_spark.streaming.pipeline import (
-        streaming_put_delete_interval_join,
+        streaming_put_delete_join,
     )
 
     cf_dir = str(tmp_path / "cf")
     write_changefeed_stream_dir(fixture_changefeed(spark), cf_dir, n_files=2)
     q = (
-        streaming_put_delete_interval_join(spark, cf_dir, within="5 minutes")
+        streaming_put_delete_join(spark, cf_dir, "inner", within="5 minutes")
         .writeStream.format("memory")
         .queryName("pd_join")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -905,3 +908,75 @@ def test_session_window_merges_on_bridge_event(spark, tmp_path):
     assert out["a"]["e"] == t0 + dt.timedelta(minutes=70)
     # user 'b''s session is still open at the final watermark → absent
     assert "b" not in out
+
+
+def _write_files(spark, batches, schema, path):
+    """One parquet file per list of rows, which a file stream reads in list
+    order (mtimes one second apart)."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    os.makedirs(path)
+    t = time.time()
+    for i, rows in enumerate(batches):
+        tmp = f"{path}.{i}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
+        dst = os.path.join(path, f"{i:05d}.parquet")
+        shutil.move(glob.glob(os.path.join(tmp, "*.parquet"))[0], dst)
+        os.utime(dst, (t + i, t + i))
+        shutil.rmtree(tmp)
+
+
+@pytest.mark.parametrize(
+    "handler,overlap",
+    [("debounce", True), ("debounce", False), ("ivm", True), ("ivm", False)],
+)
+def test_stateful_handlers_reject_overlapping_files(
+    spark, tmp_path, handler, overlap
+):
+    """The debounce and IVM handlers sort each micro-batch and seed it from
+    the key's state, which is the key's whole-history order only if no row
+    of a later file precedes a row of an earlier one. A feed whose second
+    file reaches back before the first file's last row must make the drain
+    raise instead of emitting a different answer; the same rows without
+    the overlap drain."""
+    from hbase_observer_elasticsearch_spark.sources.changefeed import (
+        CHANGEFEED_SCHEMA,
+    )
+    from hbase_observer_elasticsearch_spark.streaming.pipeline import drain
+    from hbase_observer_elasticsearch_spark.streaming.stateful import (
+        _IVM_FEED_SCHEMA,
+        stateful_debounce,
+        stateful_ivm_deltas,
+    )
+
+    feed = str(tmp_path / "feed")
+    second = 15 if overlap else 25  # the first file ends at minute / seq 20
+    if handler == "debounce":
+
+        def put(seq, minute):
+            return (seq, "put", "k", "f", "q", "v", _ts(minute))
+
+        files = [[put(1, 10), put(2, 20)], [put(3, second), put(4, 30)]]
+        _write_files(spark, files, CHANGEFEED_SCHEMA, feed)
+
+        def build(s):
+            return stateful_debounce(s, feed, gap_us=1)
+    else:
+
+        def upd(seq):
+            return (7, seq, False, 1.0, 0, 0)
+
+        files = [[upd(10), upd(20)], [upd(second), upd(30)]]
+        _write_files(spark, files, _IVM_FEED_SCHEMA, feed)
+
+        def build(s):
+            return stateful_ivm_deltas(s, feed)
+
+    if overlap:
+        with pytest.raises(Exception, match="is not after the last row"):
+            drain(spark, build, "update")
+    else:
+        assert drain(spark, build, "update").count() == 4

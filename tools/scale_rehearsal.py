@@ -471,16 +471,16 @@ def run_streaming_scale(
     from hbase_observer_elasticsearch_spark.streaming import pipeline as pl
 
     feed_dir, n_files = _scaled_changefeed_dir(spark, sf_dir, mult)
-    builders = {
-        "interval_join": pl.streaming_put_delete_interval_join,
-        "left_outer_join": pl.streaming_put_delete_left_outer_join,
-        "full_outer_join": pl.streaming_put_delete_full_outer_join,
+    hows = {
+        "interval_join": "inner",
+        "left_outer_join": "leftOuter",
+        "full_outer_join": "fullOuter",
     }
     out: dict = {"mult": mult, "n_files": n_files, "queries": {}}
     try:
         for name in joins or STREAM_JOINS:
-            df = builders[name](
-                spark, feed_dir, horizon="10 minutes", within="2 hours"
+            df = pl.streaming_put_delete_join(
+                spark, feed_dir, hows[name], horizon="10 minutes", within="2 hours"
             )
             m = _drain_state_metrics(spark, df)
             out["queries"][name] = m

@@ -24,10 +24,11 @@ operator); documents/embeddings = the .scale10 corpus (10x docs/vectors,
 the axis the document/embedding-feed queries scale on); remaining tables
 copied from sf0.1.
 
-Progress capture: a StreamingQueryListener collects every
-QueryProgressEvent in the process (queries run sequentially, events are
-bucketed by wall-clock window per query; listener delivery is async so
-each query waits for the event stream to go quiet before snapshotting).
+Progress capture: :func:`record_streams` wraps ``DataStreamWriter.start``
+so every query started in the process is kept, on whatever session it
+runs (a listener on ``spark.streams`` hears only its own session, and
+``drain`` runs most streams on a child session); after each run the
+audit reads each kept query's ``recentProgress``.
 
 Writes STREAM_AUDIT.json with one row per streaming query:
 {n_streams, n_batches, input_rows, max_state_rows (max over batches of
@@ -43,7 +44,6 @@ import json
 import os
 import shutil
 import sys
-import threading
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -56,52 +56,22 @@ HIST_MULT = 10
 FLAT_SLACK = 1.6  # flat contract: 10x-history state <= 1.6x + 64 rows
 KEYED_SLACK = 1.3  # keyed contract: state ratio <= 1.3x key ratio
 
-class _Collector:
-    """Buckets QueryProgressEvents; queries run one-at-a-time so a simple
-    epoch counter separates them."""
+def record_streams() -> list:
+    """Keep every StreamingQuery that ``DataStreamWriter.start`` or
+    ``.toTable`` returns from now on, in the returned list."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-    def __init__(self) -> None:
-        self.lock = threading.Lock()
-        self.events: list[dict] = []
+    started: list = []
+    for method in ("start", "toTable"):
+        real = getattr(DataStreamWriter, method)
 
-    def add(self, progress_json: str) -> None:
-        with self.lock:
-            self.events.append(json.loads(progress_json))
+        def recorded(self, *a, _real=real, **kw):
+            q = _real(self, *a, **kw)
+            started.append(q)
+            return q
 
-    def drain(self) -> list[dict]:
-        # listener delivery is async: wait for quiescence (no new events
-        # for 1.5 s, max 30 s).
-        deadline = time.time() + 30
-        last_n = -1
-        while time.time() < deadline:
-            with self.lock:
-                n = len(self.events)
-            if n == last_n:
-                break
-            last_n = n
-            time.sleep(1.5)
-        with self.lock:
-            out, self.events = self.events, []
-        return out
-
-
-def _mk_listener(collector: _Collector):
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _L(StreamingQueryListener):
-        def onQueryStarted(self, event) -> None:
-            pass
-
-        def onQueryProgress(self, event) -> None:
-            collector.add(event.progress.json)
-
-        def onQueryIdle(self, event) -> None:
-            pass
-
-        def onQueryTerminated(self, event) -> None:
-            pass
-
-    return _L()
+        setattr(DataStreamWriter, method, recorded)
+    return started
 
 
 def build_audit_fixture() -> str:
@@ -179,8 +149,7 @@ def main() -> None:
     audit_dir = build_audit_fixture()
     spark = get_spark("stream_audit", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
-    collector = _Collector()
-    spark.streams.addListener(_mk_listener(collector))
+    started = record_streams()
     qs = queries()
 
     out: dict = {"queries": {}, "hist_mult": HIST_MULT}
@@ -198,11 +167,13 @@ def main() -> None:
                 os.environ["SPARK_GRAFT_CF_FILES"] = str(cf_files)
             else:
                 os.environ.pop("SPARK_GRAFT_CF_FILES", None)
-            collector.drain()  # clear stragglers from the prior query
+            started.clear()
             t0 = time.perf_counter()
             n_out = qs[name](spark, d).count()
             wall = time.perf_counter() - t0
-            s = summarize(collector.drain())
+            s = summarize(
+                [json.loads(p.json) for q in started for p in q.recentProgress]
+            )
             s["output_rows"] = int(n_out)
             s["wall_s"] = round(wall, 3)
             rec[label] = s

@@ -19,14 +19,12 @@ from hbase_observer_elasticsearch_spark.operators.skew_agg import (  # noqa: E40
     _ivm_recompute,
     _ivm_trajectory_from_deltas,
 )
-from hbase_observer_elasticsearch_spark.operators.stream_queries import (  # noqa: E402
-    _drain_to_local,
-)
 from hbase_observer_elasticsearch_spark.session import get_spark  # noqa: E402
 from hbase_observer_elasticsearch_spark.sources.changefeed import (  # noqa: E402
     scratch_dir,
     write_changefeed_stream_dir,
 )
+from hbase_observer_elasticsearch_spark.streaming.pipeline import drain  # noqa: E402
 from hbase_observer_elasticsearch_spark.streaming.stateful import (  # noqa: E402
     stateful_ivm_deltas,
 )
@@ -48,12 +46,7 @@ def main():
         res["feed_write"].append(round(time.perf_counter() - t0, 3))
 
         t0 = time.perf_counter()
-        emitted = _drain_to_local(
-            spark,
-            stateful_ivm_deltas(spark, feed_dir, max_files_per_trigger=1),
-            base,
-            output_mode="update",
-        )
+        emitted = drain(spark, lambda s: stateful_ivm_deltas(s, feed_dir), "update")
         res["drain"].append(round(time.perf_counter() - t0, 3))
 
         t0 = time.perf_counter()

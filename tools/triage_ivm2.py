@@ -9,7 +9,6 @@ import os
 import shutil
 import sys
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -22,33 +21,21 @@ from hbase_observer_elasticsearch_spark.sources.changefeed import (  # noqa: E40
     scratch_dir,
     write_changefeed_stream_dir,
 )
+from hbase_observer_elasticsearch_spark.streaming.pipeline import drain  # noqa: E402
 from hbase_observer_elasticsearch_spark.streaming.stateful import (  # noqa: E402
     stateful_ivm_deltas,
 )
+from stream_audit import record_streams  # noqa: E402
+
+STARTED = record_streams()
 
 
-def drain(spark, feed_dir, base, parts):
-    name = "ivm_probe_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        t0 = time.perf_counter()
-        q = (
-            stateful_ivm_deltas(spark, feed_dir, max_files_per_trigger=1)
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(base, "ckpt_" + name))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        wall = round(time.perf_counter() - t0, 3)
-        prog = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.catalog.dropTempView(name)
-    return wall, prog
+def timed_drain(spark, feed_dir, parts):
+    STARTED.clear()
+    t0 = time.perf_counter()
+    drain(spark, lambda s: stateful_ivm_deltas(s, feed_dir), "update", parts=parts)
+    wall = round(time.perf_counter() - t0, 3)
+    return wall, [json.loads(p.json) for q in STARTED for p in q.recentProgress]
 
 
 def main():
@@ -60,8 +47,8 @@ def main():
         _ivm_change_stream(spark, sf_dir), feed_dir, n_files=IVM_EPOCHS
     )
     # warm
-    drain(spark, feed_dir, base, 4)
-    wall4, prog = drain(spark, feed_dir, base, 4)
+    timed_drain(spark, feed_dir, 4)
+    wall4, prog = timed_drain(spark, feed_dir, 4)
     print("wall parts=4:", wall4)
     for p in prog:
         print(
@@ -72,9 +59,9 @@ def main():
             json.dumps(p["durationMs"]),
         )
     for parts in (1, 2, 8, 32):
-        w, _ = drain(spark, feed_dir, base, parts)
+        w, _ = timed_drain(spark, feed_dir, parts)
         print(f"wall parts={parts}:", w)
-    wall4b, _ = drain(spark, feed_dir, base, 4)
+    wall4b, _ = timed_drain(spark, feed_dir, 4)
     print("wall parts=4 again:", wall4b)
     shutil.rmtree(base, ignore_errors=True)
     spark.stop()
