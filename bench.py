@@ -142,14 +142,41 @@ def memo_builds() -> list[tuple[str, str, object]]:
             lambda s, d: shared_changefeed_stream_dir(s, d, n_files=2),
         ),
         ("memo_build_bucketed_facts", "bucketed_facts", _rel._bucketed_facts),
+        ("memo_build_sink_views", "sink_views", _sink_view),
     ]
+
+
+def _sink_view(spark, sf_dir: str):
+    """The merged read view (the `sink_views` memo) of a scratch
+    EmulatedEsSink holding the shared changefeed as one run. Each CDC
+    query builds the view of its own sink; this row charges one build."""
+    import shutil
+
+    from hbase_observer_elasticsearch_spark.sinks.state_sink import EmulatedEsSink
+    from hbase_observer_elasticsearch_spark.sources.changefeed import (
+        CHANGEFEED_SCHEMA,
+        scratch_dir,
+        shared_changefeed_stream_dir,
+    )
+    from hbase_observer_elasticsearch_spark.streaming.pipeline import split_epoch
+
+    feed = spark.read.schema(CHANGEFEED_SCHEMA).parquet(
+        shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
+    )
+    root = scratch_dir("sink_view_")
+    try:
+        sink = EmulatedEsSink(spark, root)
+        sink.apply(*split_epoch(feed), 0)
+        return sink.read_cells()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def memo_build_rows(spark, sf_dir: str, per_query: dict) -> None:
     """Charge each memo family's cold build to a named memo_build_* row.
     The per-(app, sf_dir) memos (dedup pair tables, CC labels, ANN top-k
     tables, BM25 postings, the shared changefeed dir, the bucketed fact
-    tables) amortize shared subtrees across the query loop — the
+    tables, a sink's merged view) amortize shared subtrees across the query loop — the
     materialized-view idiom — but without these rows the warm per-query
     numbers would hide the build cost entirely (e.g. similarity_topk_pq
     reads in 0.026 s warm vs ~14 s cold). Build rows are timed cold and

@@ -10,12 +10,14 @@ idiom (compute once, read many):
   the BM25 postings and doc-length statistics;
 - collected Python lists: the trained coarse-quantizer codebook;
 - scratch paths: the drained changefeed fixture dirs;
-- catalog table names: the bucketed fact tables.
+- catalog table names: the bucketed fact tables;
+- per-commit views: a state sink's merged cells, keyed by its root.
 
-An entry may record the ``parent`` object it was derived from (another
-memo's value). A hit whose recorded parent is not the object the caller
-passes now is rebuilt, so a derived memo never outlives the memo it
-was built from.
+An entry may record the ``parent`` it was derived from: another memo's
+value, or a version stamp such as a sink's manifest commit. A hit whose
+recorded parent is neither the object the caller passes now nor equal
+to it is rebuilt, so a derived memo never outlives what it was built
+from.
 
 `clear_memos()` bounds their lifetime: dropping the entries releases
 the last references to the checkpointed DataFrames, so Spark's
@@ -48,10 +50,11 @@ class Memo:
 
     def get(self, spark, sf_dir: str, build: Callable, *extra, parent=None):
         """The value under ``(app, sf_dir, *extra)``; ``build()`` makes it
-        on a miss or when the entry was derived from another ``parent``."""
+        on a miss or when the entry was derived from another ``parent``
+        (the replaced value is evicted)."""
         key = (spark.sparkContext.applicationId, sf_dir, *extra)
         hit = self._entries.get(key)
-        if hit is not None and hit[0] is parent:
+        if hit is not None and (hit[0] is parent or hit[0] == parent):
             return hit[1]
         self._entries[key] = (parent, build())
         if hit is not None:

@@ -474,7 +474,8 @@ def cdc_replicate_then_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless), so sums are hash-compared through the decimal path.
 
     Scale shape: replication is the checkpointed micro-batch pipeline
-    (state O(live cells), per-epoch MERGE); the query is one groupBy
+    (a run appended per epoch, folded into a base every fourth version,
+    merged once on read); the query is one groupBy
     over the state table — at 100 TB the state is the bucketed sink's
     partitioned parquet and this exact query prunes to the `purchase`
     field's column chunk.
@@ -494,9 +495,9 @@ def cdc_replicate_then_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_replicate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cdc_replicate_then_query's 100-TB-layout twin: the SAME
     replicate → query story driven through the **BucketedStateSink**
-    (hash-bucketed incremental per-bucket parquet + manifest swap +
-    single-writer lease — the layout that scales, vs EmulatedEsSink's
-    versioned full rewrite), checked against the SAME batch-LWW oracle.
+    (hash-bucketed per-bucket parquet rewrite + manifest swap +
+    single-writer lease, vs EmulatedEsSink's appended runs folded into a
+    base), checked against the SAME batch-LWW oracle.
     A green row here attests the bucketed MERGE path — bucket pruning,
     per-epoch idempotent swap, lease acquisition — end to end under the
     driver's correctness gate, not just in unit tests.
@@ -1097,7 +1098,7 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE-equivalent sink with PROVEN per-epoch replay idempotence —
     the exactly-once story's last edge: the
     events changefeed is split into 3 contiguous seq-range epochs and
-    applied through the versioned-parquet LWW MERGE sink
+    applied through the log-structured LWW sink
     (sinks/state_sink.EmulatedEsSink.apply), with epoch 2 applied TWICE
     — the foreachBatch redelivery a crashed driver produces under
     at-least-once delivery. The reference's requeue replays bulks
@@ -1105,9 +1106,10 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (observer6/ElasticSearchBulkOperator.java:56-66); here merge_epoch
     is a pure max-merge, so the duplicated epoch is algebraically
     absorbed and the oracle can restate the final state as the plain
-    LWW over the WHOLE feed — epoch boundaries and the replay both
-    provably invisible. tests/test_sinks.py additionally checks the
-    replayed run's state table is row-identical to a replay-free run.
+    LWW over the WHOLE feed — epoch boundaries, the replay and the fold
+    the fourth apply triggers all provably invisible. tests/test_sinks.py
+    additionally checks the replayed run's merged cells are
+    row-identical to a replay-free run.
 
     Output is (rowkey, qualifier, last_seq): the winning mutation's seq
     uniquely identifies it — a stronger check than the value string
@@ -1115,12 +1117,12 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hazard.
 
     Scale shape: each epoch slice is a seq-range predicate PUSHED to the
-    parquet scan (row-group pruning); each MERGE is one hash shuffle on
-    rowkey (state + cells + tombstone rows, then the tombstone-max and
-    row_number windows on that one exchange); at 100 TB the state table
-    is bucketed by rowkey so the stored side co-locates without
-    reshuffling, and the version-pointer swap is the same atomic-rename
-    commit a lakehouse MERGE uses.
+    parquet scan (row-group pruning); each apply appends the epoch as a
+    run (one job, no shuffle) and the fourth folds the runs into a base;
+    the read is one hash shuffle on rowkey over the live versions (the
+    tombstone-max and row_number windows on that one exchange); the
+    manifest swap is the same atomic-rename commit a lakehouse MERGE
+    uses.
     """
     ensure_session_conf(spark)
     import shutil

@@ -1,9 +1,9 @@
 """Incremental bucketed state sink: per-epoch IO proportional to the
 TOUCHED key set, not the whole state — with ATOMIC epoch commits.
 
-`EmulatedEsSink` (state_sink.py) rewrites the full cell state every epoch —
-correct and atomic, but O(|state|) per micro-batch, which at 100 TB of doc
-state is a non-starter. This sink hash-partitions the state by
+`EmulatedEsSink` (state_sink.py) appends each epoch as a run and folds
+runs into a base; this sink instead merges each epoch into the state it
+touches. It hash-partitions the state by
 ``bkt = pmod(xxhash64(rowkey), n_buckets)`` and, per epoch:
 
 1. computes the buckets touched by the batch (a collect of ≤ n_buckets
@@ -11,8 +11,8 @@ state is a non-starter. This sink hash-partitions the state by
 2. reads ONLY those bucket partitions (path-level pruning via the
    manifest);
 3. LWW-merges the epoch's puts and deletes, raw or compacted, into them
-   with state_sink.merge_epoch (the same one-rowkey-shuffle merge as
-   EmulatedEsSink; the write then repartitions by bucket);
+   with state_sink.merge_epoch (the one-rowkey-shuffle merge
+   EmulatedEsSink runs on read; the write then repartitions by bucket);
 4. writes the touched buckets' NEW VERSIONS to the side
    (``bkt=K/v=N+1``), then atomically swaps a single ``_MANIFEST``
    pointer file mapping bucket → live version.
@@ -31,25 +31,14 @@ version numbering). This is the write-temp-then-rename layout production
 lakehouse table formats (Delta/Iceberg) implement with a commit log; the
 manifest is the single-writer miniature of it.
 
-Multi-writer safety: the manifest swap is only atomic against READERS;
-two concurrent writers could interleave read-modify-write cycles and
-silently drop each other's buckets. ``apply`` therefore runs under an
-exclusive per-root writer lease (``_WRITER_LOCK``, created with
-O_CREAT|O_EXCL — atomic on POSIX and local filesystems): a second writer
-on the same root raises :class:`ConcurrentWriterError` instead of
-corrupting state, and sequential writers serialize naturally because the
-lease spans one epoch. A lease whose owning pid is dead is stolen (crash
-recovery); as defense-in-depth against lock-steal races the manifest
-carries a monotonically increasing ``gen`` that is compare-and-swapped at
-commit, so even a stolen-lease interleaving fails loudly rather than
-losing an epoch. On a shared object store (no O_EXCL, no pids) the same
-two primitives map to conditional PUTs / a commit-log table — the
-documented swap point for Delta/Iceberg-backed deployments.
+Multi-writer safety: ``apply`` runs under the per-root writer lease and
+commits by the manifest generation compare-and-swap of
+:class:`~.manifest.ManifestRoot`, the commit protocol this sink shares
+with EmulatedEsSink.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -57,29 +46,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .state_sink import CELLS_SCHEMA, EsSinkConfig, _with_family, merge_epoch
+from .manifest import _WRITER_LOCK, ConcurrentWriterError, ManifestRoot  # noqa: F401
+from .state_sink import (
+    CELLS_SCHEMA,
+    EsSinkConfig,
+    _with_family,
+    doc_view,
+    merge_epoch,
+)
 
 N_BUCKETS = 32
 
-_MANIFEST = "_MANIFEST"
-_WRITER_LOCK = "_WRITER_LOCK"
 
-
-class ConcurrentWriterError(RuntimeError):
-    """A second live writer holds (or raced us to) this state root."""
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # exists, owned by someone else
-    return True
-
-
-class BucketedStateSink:
+class BucketedStateSink(ManifestRoot):
     def __init__(
         self,
         spark: SparkSession,
@@ -87,100 +66,24 @@ class BucketedStateSink:
         config: EsSinkConfig | None = None,
         n_buckets: int = N_BUCKETS,
     ):
+        super().__init__(root)
         self.spark = spark
-        self.root = root
         self.config = config or EsSinkConfig()
         self.n_buckets = n_buckets
-        self._token = uuid.uuid4().hex  # identifies THIS writer's lease
-        os.makedirs(root, exist_ok=True)
 
     def _bkt(self) -> F.Column:
         return F.pmod(F.xxhash64("rowkey"), F.lit(self.n_buckets))
 
-    # -- writer lease -------------------------------------------------------
-    def _acquire_lease(self) -> None:
-        """Take the exclusive per-root writer lease or raise.
-
-        O_CREAT|O_EXCL is the atomic claim; a lease owned by a dead pid is
-        stolen once (crash recovery). Two live writers -> the second gets
-        ConcurrentWriterError instead of interleaving manifest swaps.
-        """
-        p = os.path.join(self.root, _WRITER_LOCK)
-        payload = json.dumps({"pid": os.getpid(), "token": self._token})
-        for attempt in (0, 1):
-            try:
-                fd = os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                try:
-                    os.write(fd, payload.encode())
-                finally:
-                    os.close(fd)
-                return
-            except FileExistsError:
-                try:
-                    with open(p) as f:
-                        owner = json.load(f)
-                    pid = int(owner.get("pid", -1))
-                except (OSError, ValueError):
-                    pid = -1  # torn lock file: treat as stale
-                if pid > 0 and _pid_alive(pid):
-                    raise ConcurrentWriterError(
-                        f"state root {self.root!r} already has a live "
-                        f"writer (pid {pid}); refusing to interleave epochs"
-                    )
-                if attempt == 0:
-                    try:
-                        os.unlink(p)  # steal the stale lease, retry once
-                    except FileNotFoundError:
-                        pass
-        raise ConcurrentWriterError(
-            f"could not acquire writer lease on {self.root!r}"
-        )
-
-    def _release_lease(self) -> None:
-        p = os.path.join(self.root, _WRITER_LOCK)
-        try:
-            with open(p) as f:
-                if json.load(f).get("token") != self._token:
-                    return  # stolen from us; not ours to remove
-            os.unlink(p)
-        except (OSError, ValueError):
-            pass
-
     # -- manifest plumbing --------------------------------------------------
-    def _read_manifest_json(self) -> dict:
-        p = os.path.join(self.root, _MANIFEST)
-        if not os.path.exists(p):
-            return {"gen": 0, "buckets": {}}
-        with open(p) as f:
-            return json.load(f)
-
     def _manifest(self) -> dict[int, int]:
         """bucket → live version. Missing manifest = empty state."""
-        raw = self._read_manifest_json()
-        return {int(k): int(v) for k, v in raw["buckets"].items()}
-
-    def _gen(self) -> int:
-        return int(self._read_manifest_json().get("gen", 0))
+        raw = self._read_manifest_json().get("buckets", {})
+        return {int(k): int(v) for k, v in raw.items()}
 
     def _swap_manifest(self, man: dict[int, int], expected_gen: int) -> None:
-        # Compare-and-swap on the generation: if another writer committed
-        # since we read the manifest (possible only through a lock-steal
-        # race), fail loudly rather than silently dropping its epoch.
-        if self._gen() != expected_gen:
-            raise ConcurrentWriterError(
-                f"manifest generation moved under us at {self.root!r} "
-                f"(expected {expected_gen}); another writer committed"
-            )
-        tmp = os.path.join(self.root, _MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "gen": expected_gen + 1,
-                    "buckets": {str(k): v for k, v in man.items()},
-                },
-                f,
-            )
-        os.replace(tmp, os.path.join(self.root, _MANIFEST))
+        self._commit_manifest(
+            {"buckets": {str(k): v for k, v in man.items()}}, expected_gen
+        )
 
     def _bucket_path(self, bkt: int, version: int) -> str:
         return os.path.join(self.root, f"bkt={bkt}", f"v={version}")
@@ -222,8 +125,7 @@ class BucketedStateSink:
         )
         if not touched:
             return
-        self._acquire_lease()
-        try:
+        with self._lease():
             man = self._manifest()
             gen = self._gen()
             cur = self.read_cells(buckets=touched)
@@ -260,8 +162,6 @@ class BucketedStateSink:
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
             self._gc(keep={b: man.get(b, 0) + 1 for b in touched})
-        finally:
-            self._release_lease()
 
     def _gc(self, keep: dict[int, int]) -> None:
         """Drop versions older than the previous one (kept for rollback)
@@ -276,13 +176,4 @@ class BucketedStateSink:
     def read_state(self) -> DataFrame:
         """(rowkey, doc): the ES-document view (same contract as
         EmulatedEsSink.read_state)."""
-        return (
-            self.read_cells()
-            .filter(F.col("qualifier").isNotNull())
-            .groupBy("rowkey")
-            .agg(
-                F.map_from_entries(
-                    F.array_sort(F.collect_list(F.struct("qualifier", "value")))
-                ).alias("doc")
-            )
-        )
+        return doc_view(self.read_cells())

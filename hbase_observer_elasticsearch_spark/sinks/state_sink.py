@@ -3,32 +3,38 @@ reference's ES bulk upsert/delete path (SURVEY §2.1 #7-#14).
 
 The reference buffers UpdateRequest/DeleteRequest and bulk-executes into
 Elasticsearch (observer6/ElasticSearchBulkOperator.java:79-101).  Without a
-live ES in this environment, the sink is a MERGE-emulating parquet state
-table with the same contract — but with *last-write-wins by mutation time*
+live ES in this environment, the sink is a log-structured parquet cell
+store with the same contract — but with *last-write-wins by mutation time*
 instead of the reference's arrival-order overwrite (SURVEY §2.2.5 flags
 arrival order as a defect; ordering by (ts, seq) is strictly better and is
 what makes the sink correct under ANY micro-batch partitioning of the
 changefeed).
 
-State is stored at cell granularity, versioned per cell:
+Cells are stored raw, one row per mutation:
 
-    (rowkey, qualifier, value, family, ts, seq)   — a live cell
+    (rowkey, qualifier, value, family, ts, seq)   — a put
     (rowkey, NULL,      NULL,  NULL,   ts, seq)   — a delete tombstone
 
-- an incoming cell wins iff its (ts, family, seq) beats the stored
-  cell's — family byte-order breaks same-ts collisions exactly like the
+and reduced by last-writer-wins (`merge_epoch`) when read:
+
+- a cell wins iff its (ts, family, seq) beats every other cell's —
+  family byte-order breaks same-ts collisions exactly like the
   reference's NavigableMap iteration (HbaseDataSyncEsObserver.java:93-102)
-  and the batch replay (operators/cdc.apply_changefeed), so streamed state
-  is invariant to how same-ts mutations split across micro-batches (but
-  see merge_epoch's cross-epoch limit when a delete splits them);
+  and the batch replay (operators/cdc.apply_changefeed), so state is
+  invariant to how mutations split across micro-batches;
 - a tombstone kills every cell with (ts, seq) ≤ the tombstone's and
   PERSISTS, so a stale pre-delete put arriving epochs later cannot
   resurrect a deleted document (at 100 TB you expire tombstones past the
   source's max-lateness watermark; here they are kept);
-- replaying an epoch is a no-op by construction: max/row_number over the
-  same inputs — idempotent, so streaming checkpoint replay gives an
-  effectively exactly-once end state (stronger than all three reference
-  variants, SURVEY §2.1 #22).
+- the reduction is a max over a multiset, so applying an epoch twice
+  changes nothing — streaming checkpoint replay gives an effectively
+  exactly-once end state (stronger than all three reference variants,
+  SURVEY §2.1 #22).
+
+Layout (``EmulatedEsSink``), the HBase memstore-flush/HFile-compaction
+model: each epoch is appended as an immutable run; every fourth live
+version is folded into one base (`fold_versions`); readers see one
+merged view per manifest commit.
 
 Config surface mirrors the coprocessor binding params
 (``es_cluster,es_host,es_port,es_index,es_type`` — README_zh.md:378) so a
@@ -46,6 +52,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..memos import Memo
+from .manifest import ManifestRoot
+
 CELLS_SCHEMA = T.StructType(
     [
         T.StructField("rowkey", T.StringType(), False),
@@ -58,6 +67,14 @@ CELLS_SCHEMA = T.StructType(
 )
 
 _CELL_COLS = ("rowkey", "qualifier", "value", "family", "ts", "seq")
+
+# An apply that leaves this many versions live (base included) folds
+# them into one new base.
+FOLD_AT = 4
+
+# One merged, materialized cell view per state root, rebuilt when the
+# root's manifest commit changes.
+_VIEWS = Memo("sink_views")
 
 
 def _with_family(df: DataFrame) -> DataFrame:
@@ -105,127 +122,194 @@ class EsSinkConfig:
         }
 
 
-def merge_epoch(cur: DataFrame, cells: DataFrame, dels: DataFrame) -> DataFrame:
-    """Pure LWW merge of one epoch's raw puts (`cells`) and deletes (`dels`:
-    rowkey, ts, seq) into the current cell state; returns the next state
-    (live cells + persistent tombstones). Shared by both sink layouts.
-
-    One rowkey shuffle: the deletes join as qualifier-NULL tombstone rows,
-    a window over rowkey drops every cell at or below the latest tombstone
-    (ts, seq), then row_number over (rowkey, qualifier) by (ts, family, seq)
-    desc keeps each winner; the NULL-qualifier winner is the tombstone.
-    Filtering before ranking gives apply_changefeed's answer for any mix of
-    mutations within one epoch; replaying an epoch is a no-op.
-
-    Cross-epoch limit: state keeps only the winning cell per (rowkey,
-    qualifier). If two same-ts puts land in one epoch, the family winner
-    has the lower seq, and a delete between their seqs lands in a later
-    epoch, the losing put is already gone and cannot outlive the delete
-    as it does in apply_changefeed."""
+def _epoch_rows(cells: DataFrame, dels: DataFrame) -> DataFrame:
+    """An epoch's puts (`cells`, family optional) and deletes (`dels`:
+    rowkey, ts, seq) as cell rows, each delete a qualifier-NULL
+    tombstone. No shuffle."""
     none = F.lit(None).cast("string")
     tombs = dels.select(
         "rowkey", *(none.alias(c) for c in ("qualifier", "value", "family")),
         "ts", "seq",
     )
-    rows = (
-        cur.select(*_CELL_COLS)
-        .unionByName(_with_family(cells).select(*_CELL_COLS))
-        .unionByName(tombs)
-    )
+    return _with_family(cells).select(*_CELL_COLS).unionByName(tombs)
+
+
+def _lww(rows: DataFrame, keep_ties: bool) -> DataFrame:
+    """Last-writer-wins over cell rows in one rowkey shuffle: a window over
+    rowkey drops every cell at or below the latest tombstone (ts, seq);
+    then, per (rowkey, qualifier), keep the winner by (ts, family, seq)
+    desc — or, with ``keep_ties``, every surviving cell at the winner's ts
+    (duplicates dropped). The NULL-qualifier survivor is the latest
+    tombstone."""
     is_tomb = F.col("qualifier").isNull()
     last_del = F.max(F.when(is_tomb, F.struct("ts", "seq"))).over(
         Window.partitionBy("rowkey")
     )
-    w = Window.partitionBy("rowkey", "qualifier").orderBy(
-        F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc()
-    )
     after_del = F.col("__del").isNull() | (F.struct("ts", "seq") > F.col("__del"))
+    live = rows.withColumn("__del", last_del).filter(is_tomb | after_del)
+    w = Window.partitionBy("rowkey", "qualifier")
+    if keep_ties:
+        keep = F.when(is_tomb, F.struct("ts", "seq") == F.col("__del")).otherwise(
+            F.col("ts") == F.col("__top")
+        )
+        return (
+            live.withColumn("__top", F.max("ts").over(w))
+            .filter(keep)
+            .select(*_CELL_COLS)
+            .dropDuplicates()
+        )
+    ranked = w.orderBy(F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc())
     return (
-        rows.withColumn("__del", last_del)
-        .filter(is_tomb | after_del)
-        .withColumn("__rn", F.row_number().over(w))
+        live.withColumn("__rn", F.row_number().over(ranked))
         .filter(F.col("__rn") == 1)
         .select(*_CELL_COLS)
     )
 
 
-class EmulatedEsSink:
-    """Versioned parquet cell-state dir with atomic pointer swap per epoch.
+def merge_epoch(cur: DataFrame, cells: DataFrame, dels: DataFrame) -> DataFrame:
+    """Pure LWW merge of one epoch's raw puts (`cells`) and deletes (`dels`:
+    rowkey, ts, seq) into cell rows `cur`; returns the winning cell per
+    (rowkey, qualifier) plus the latest tombstone per rowkey. Shared by
+    both sink layouts; EmulatedEsSink's read view is this merge over its
+    live versions.
 
-    Layout: ``<root>/v=<n>/`` holds the full cell state; ``<root>/_CURRENT``
-    names the live version.  Each `apply` writes v=n+1 from v=n + batch,
-    then swaps the pointer — a crashed epoch leaves the old version live.
+    One rowkey shuffle: the deletes join as qualifier-NULL tombstone rows,
+    a window over rowkey drops every cell at or below the latest tombstone
+    (ts, seq), then row_number over (rowkey, qualifier) by (ts, family, seq)
+    desc keeps each winner. Filtering before ranking gives
+    apply_changefeed's answer for any mix of mutations; replaying an epoch
+    is a no-op.
 
-    Scale shape: one `apply` is one hash shuffle on rowkey (state ∪ puts ∪
-    tombstones → two windows on that one exchange) plus the write: two
-    Spark jobs, whatever the epoch's size. At 100 TB the state table would
-    be bucketed by rowkey so the merge co-locates without reshuffling the
-    stored side.
+    Across epochs: the result keeps only the winner, so it may stand in
+    for `cur` only when no later delete can fall between two same-ts
+    puts. EmulatedEsSink therefore never stores it: its runs keep every
+    raw mutation, and its base (`fold_versions`) keeps every cell tying
+    its winner's ts, so a same-ts losing put with a higher seq still
+    outlives a delete that arrives epochs later, as in apply_changefeed.
+    BucketedStateSink stores this result and keeps that limit."""
+    return _lww(cur.select(*_CELL_COLS).unionByName(_epoch_rows(cells, dels)), False)
+
+
+def fold_versions(rows: DataFrame) -> DataFrame:
+    """Compact cell rows into a base that answers every later merge as the
+    rows themselves would: the latest tombstone per rowkey, and every
+    surviving cell whose ts equals its (rowkey, qualifier) maximum.
+
+    A cell below that ts loses to the same-ts cells under any later
+    mutation: a later delete that kills all of them kills it too, since
+    its ts is lower. Only same-ts cells can outlive one another."""
+    return _lww(rows, True)
+
+
+def doc_view(cells: DataFrame) -> DataFrame:
+    """(rowkey, doc MAP<STRING,STRING>): the ES-document view of merged
+    cells (what a search against the index would see)."""
+    return (
+        cells.filter(F.col("qualifier").isNotNull())
+        .groupBy("rowkey")
+        .agg(
+            F.map_from_entries(
+                F.array_sort(F.collect_list(F.struct("qualifier", "value")))
+            ).alias("doc")
+        )
+    )
+
+
+class EmulatedEsSink(ManifestRoot):
+    """Log-structured parquet cell store: append a run per epoch, fold
+    every fourth live version into a base, read one merged view per
+    commit.
+
+    Layout: every directory the sink writes is a new ``<root>/v=<n>``
+    with increasing n — an epoch's run (its raw puts plus qualifier-NULL
+    tombstones) or a base folded from earlier versions. ``_MANIFEST``
+    lists the live versions with the epoch each run holds, under a
+    generation number (the commit protocol of `manifest.ManifestRoot`,
+    writer lease included). A directory not in the manifest is invisible
+    and is removed after the next commit, so a crash before a swap
+    leaves the previous answer readable.
+
+    Per-epoch cost: `apply` writes the run — one Spark job, no shuffle,
+    O(|epoch|) whatever the state size — and swaps the manifest. A
+    replayed epoch whose run is still live rewrites that run; one whose
+    run was folded is appended again, which the merge absorbs. When an
+    apply leaves `FOLD_AT` versions live it also folds them into one new
+    base (`fold_versions`: one rowkey shuffle over the live versions) and
+    swaps again, so reads never merge more than `FOLD_AT` - 1 versions.
+
+    Read side: `read_cells` is `merge_epoch` over the union of the live
+    versions, materialized (localCheckpoint) once per manifest commit in
+    the `sink_views` memo, keyed by the root. The commit is read from
+    disk on every call, so another sink object writing the same root
+    invalidates the view; the previous commit's view is evicted. The
+    first read after a commit pays the merge; later reads scan the view.
     """
 
     def __init__(
         self, spark: SparkSession, root: str, config: EsSinkConfig | None = None
     ):
+        super().__init__(root)
         self.spark = spark
-        self.root = root
         self.config = config or EsSinkConfig()
-        os.makedirs(root, exist_ok=True)
 
-    # -- version plumbing ---------------------------------------------------
-    def _current_version(self) -> int:
-        p = os.path.join(self.root, "_CURRENT")
-        if not os.path.exists(p):
-            return 0
-        with open(p) as f:
-            return int(f.read().strip())
+    # -- versions -----------------------------------------------------------
+    def _path(self, v: int) -> str:
+        return os.path.join(self.root, f"v={v}")
 
-    def _set_version(self, v: int) -> None:
-        tmp = os.path.join(self.root, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, os.path.join(self.root, "_CURRENT"))
-
-    def read_cells(self) -> DataFrame:
-        v = self._current_version()
-        path = os.path.join(self.root, f"v={v}")
-        if v == 0 and not os.path.exists(path):
+    def _scan(self, versions: list[dict]) -> DataFrame:
+        if not versions:
             return self.spark.createDataFrame([], CELLS_SCHEMA)
-        return self.spark.read.schema(CELLS_SCHEMA).parquet(path)
+        paths = [self._path(e["v"]) for e in versions]
+        return self.spark.read.schema(CELLS_SCHEMA).parquet(*paths)
 
-    # -- the MERGE ----------------------------------------------------------
+    def _commit(self, live: list[dict], gen: int) -> int:
+        """Swap the manifest to ``live``, drop every other version dir and
+        return the new generation."""
+        self._commit_manifest({"versions": live}, gen)
+        keep = {f"v={e['v']}" for e in live}
+        for name in os.listdir(self.root):
+            if name.startswith("v=") and name not in keep:
+                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+        return gen + 1
+
+    # -- write --------------------------------------------------------------
     def apply(
         self, cells: DataFrame, dels: DataFrame, epoch_id: int | None = None
     ) -> None:
-        """LWW-merge one epoch into the state table.
+        """Append one epoch as a run, folding when `FOLD_AT` are live.
 
         cells: (rowkey, qualifier, value, family, ts, seq) — the epoch's
         puts, raw or pre-compacted (family optional).
         dels:  (rowkey, ts, seq) — the epoch's deletes, raw or one per key.
         """
-        next_state = merge_epoch(self.read_cells(), cells, dels)
+        with self._lease():
+            man = self._read_manifest_json()
+            gen, versions = int(man["gen"]), man.get("versions", [])
+            # past every dir on disk, a crashed writer's included
+            written = [int(n[2:]) for n in os.listdir(self.root) if n.startswith("v=")]
+            v = max(written, default=0) + 1
+            _epoch_rows(cells, dels).write.parquet(self._path(v))
+            live = [e for e in versions if epoch_id is None or e["epoch"] != epoch_id]
+            live.append({"v": v, "epoch": epoch_id})
+            gen = self._commit(live, gen)
+            if len(live) >= FOLD_AT:
+                fold_versions(self._scan(live)).write.parquet(self._path(v + 1))
+                self._commit([{"v": v + 1, "epoch": None}], gen)
 
-        v = self._current_version()
-        out = os.path.join(self.root, f"v={v + 1}")
-        if os.path.exists(out):  # replayed epoch: rebuild deterministically
-            shutil.rmtree(out)
-        next_state.write.mode("overwrite").parquet(out)
-        self._set_version(v + 1)
-        # GC all but the previous version (kept for crash rollback)
-        for name in os.listdir(self.root):
-            if name.startswith("v=") and int(name[2:]) < v:
-                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+    # -- read ---------------------------------------------------------------
+    def read_cells(self) -> DataFrame:
+        """The merged live cells (winners plus the latest tombstone per
+        rowkey) of the current commit."""
+        man = self._read_manifest_json()
+        versions = man.get("versions", [])
+        return _VIEWS.get(
+            self.spark,
+            self.root,
+            lambda: _lww(self._scan(versions), False).localCheckpoint(eager=True),
+            parent=(man["gen"], man.get("id")),
+        )
 
-    # -- document view ------------------------------------------------------
     def read_state(self) -> DataFrame:
         """(rowkey, doc MAP<STRING,STRING>): the ES-document view of the
         live cells (what a search against the index would see)."""
-        return (
-            self.read_cells()
-            .filter(F.col("qualifier").isNotNull())
-            .groupBy("rowkey")
-            .agg(
-                F.map_from_entries(
-                    F.array_sort(F.collect_list(F.struct("qualifier", "value")))
-                ).alias("doc")
-            )
-        )
+        return doc_view(self.read_cells())

@@ -9,10 +9,11 @@ One streaming query replaces all three of the reference's control paths:
   idempotent sink + checkpoint replay (beats #22's at-least-once)
 
 Per micro-batch, the epoch's raw puts and deletes go straight into the
-sink MERGE (sinks/state_sink.merge_epoch), which does the whole
-last-writer-wins reduction in the same rowkey shuffle that merges them
-into state: one shuffle and two Spark jobs per epoch, with no separate
-compaction pass.
+sink (sinks/state_sink.EmulatedEsSink), which appends them as one run:
+one Spark job and no shuffle per epoch, with no separate compaction pass.
+Every fourth live version the same apply folds the runs into a base (one
+rowkey shuffle), and the last-writer-wins reduction (merge_epoch) runs
+once per commit, on the first read.
 
 Delivery semantics: file-source + checkpoint gives exactly-once batch
 replay; the sink MERGE is idempotent per epoch → effectively exactly-once
@@ -181,9 +182,9 @@ def start_pipeline(
     """Start the CDC replication stream: changefeed dir → ``sink``.
 
     ``sink`` is any state sink with ``apply(cells, dels, epoch_id)``
-    (EmulatedEsSink's versioned full rewrite, or BucketedStateSink's
-    incremental per-bucket IO); CdcReplicator builds it and reads state
-    back through the same object. `trigger` defaults to the reference's
+    (EmulatedEsSink's run per epoch with folds into a base, or
+    BucketedStateSink's per-bucket rewrite); CdcReplicator builds it and
+    reads state back through the same object. `trigger` defaults to the reference's
     30 s flush period; pass ``{"availableNow": True}`` to drain the
     backlog and stop. `max_files_per_trigger` is the size-cap analog of
     MAX_BULK_COUNT.

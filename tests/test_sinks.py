@@ -1,17 +1,19 @@
-"""Epoch-replay idempotence of the MERGE sink (r5 verdict directive #9).
+"""Epoch replay on the log-structured MERGE sink
+(sinks/state_sink.EmulatedEsSink), read back as cell rows.
 
-The exactly-once claim of the pipeline is: per-epoch re-execution of the
-LWW MERGE (sinks/state_sink.EmulatedEsSink.apply) yields identical state
-— so at-least-once redelivery (the reference's blind requeue,
-observer6/ElasticSearchBulkOperator.java:56-66) is algebraically
-absorbed. The registered query sink_merge_idempotent_epochs proves it
-against the DuckDB oracle at driver time; these tests prove the stronger
-row-identity claims directly:
+The exactly-once claim of the pipeline is that re-executing an epoch's
+apply leaves the merged state unchanged, so at-least-once redelivery
+(the reference's blind requeue,
+observer6/ElasticSearchBulkOperator.java:56-66) is absorbed. The
+registered query sink_merge_idempotent_epochs checks it against the
+DuckDB oracle; these tests check row identity of the merged cells:
 
-- replaying an epoch mid-sequence leaves the final cell-state table
-  row-identical to a replay-free run (not merely doc-equivalent);
-- re-executing the SAME sink's apply with the same batch is a no-op on
-  state content (crash-between-write-and-swap recovery).
+- an epoch replayed mid-sequence under its own epoch id rewrites its run:
+  the manifest generation moves one commit further, the merged cells
+  stay row-identical to a replay-free run;
+- redelivering the last epoch to the same sink without an epoch id
+  appends it again, and the merge absorbs it;
+- one epoch or four (crossing a fold) give row-identical cells.
 """
 
 from __future__ import annotations
@@ -35,12 +37,12 @@ def _epoch_ranges(cf, n_epochs: int):
     ]
 
 
-def _run_schedule(spark, cf, schedule, root: str):
+def _run_schedule(spark, cf, schedule, root: str, epoch_ids=None):
     sink = EmulatedEsSink(spark, root)
-    for e_lo, e_hi in schedule:
+    for (e_lo, e_hi), epoch_id in zip(schedule, epoch_ids or range(len(schedule))):
         batch = cf.filter((F.col("seq") >= e_lo) & (F.col("seq") <= e_hi))
         cells, dels = compact_epoch(batch)
-        sink.apply(cells, dels)
+        sink.apply(cells, dels, epoch_id)
     return sink
 
 
@@ -60,11 +62,12 @@ def test_epoch_replay_state_row_identical(spark, sf_dir, tmp_path):
         cf,
         [ranges[0], ranges[1], ranges[1], ranges[2]],
         str(tmp_path / "replay"),
+        [0, 1, 1, 2],
     )
     assert _state_rows(plain) == _state_rows(replayed)
-    # the replayed run is one version further along — the pointer moved,
-    # the state did not
-    assert replayed._current_version() == plain._current_version() + 1
+    # the replay is one manifest commit further along — the pointer
+    # moved, the state did not
+    assert replayed._gen() == plain._gen() + 1
 
 
 def test_same_sink_reapply_is_noop(spark, sf_dir, tmp_path):
@@ -81,8 +84,8 @@ def test_same_sink_reapply_is_noop(spark, sf_dir, tmp_path):
 
 def test_epoch_partitioning_invariance(spark, sf_dir, tmp_path):
     """Final state must not depend on HOW the feed is sliced into
-    epochs: 1 epoch vs 4 epochs give row-identical cell state (the
-    compact_epoch docstring's invariance claim, checked end-to-end)."""
+    epochs: 1 epoch vs 4 epochs (the fourth folds the runs into a base)
+    give row-identical merged cells."""
     cf = events_as_changefeed(load_table(spark, sf_dir, "events"))
     one = _run_schedule(spark, cf, _epoch_ranges(cf, 1), str(tmp_path / "e1"))
     four = _run_schedule(spark, cf, _epoch_ranges(cf, 4), str(tmp_path / "e4"))

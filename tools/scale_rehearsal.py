@@ -37,6 +37,7 @@ sys.path.insert(0, REPO)
 from hbase_observer_elasticsearch_spark.memos import clear_memos  # noqa: E402
 from hbase_observer_elasticsearch_spark.registry import queries  # noqa: E402
 from hbase_observer_elasticsearch_spark.session import get_spark  # noqa: E402
+from tools.stream_audit import record_streams, summarize  # noqa: E402
 
 DOC_QUERIES = [
     "dedup_exact",
@@ -403,59 +404,29 @@ def _scaled_changefeed_dir(spark, sf_dir: str, mult: int) -> tuple[str, int]:
     return feed_dir, n_files
 
 
-def _drain_state_metrics(spark, stream_df, output_mode: str = "append") -> dict:
-    """availableNow drain into a memory sink, recording wall seconds,
-    micro-batch count, total input rows, output rows, and the MAX total
-    state-store rows across all stateful operators and batches (from
-    StreamingQuery progress events — the number the O(rate x horizon)
-    claim is about)."""
-    import shutil
-    import uuid
+# every stream this tool starts, for the per-batch state metrics
+STARTED = record_streams()
 
-    from hbase_observer_elasticsearch_spark.sources.changefeed import (
-        scratch_dir,
-    )
 
-    base = scratch_dir("scale_drain_")
-    name = "scale_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        t0 = time.perf_counter()
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(900):
-            q.stop()
-            raise RuntimeError("scale-rehearsal drain timed out")
-        wall = time.perf_counter() - t0
-        max_state = 0
-        n_batches = 0
-        total_in = 0
-        for p in q.recentProgress:
-            n_batches += 1
-            total_in += int(p.get("numInputRows", 0))
-            for so in p.get("stateOperators", []):
-                max_state = max(max_state, int(so.get("numRowsTotal", 0)))
-        n_out = spark.table(name).count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(base, ignore_errors=True)
+def _drain_state_metrics(spark, build) -> dict:
+    """Drain the stream ``build(s)`` with ``streaming.pipeline.drain``,
+    recording wall seconds, micro-batch count, total input rows, output
+    rows, and the MAX total state-store rows across all stateful
+    operators and batches (from the progress of the queries it started —
+    the number the O(rate x horizon) claim is about)."""
+    from hbase_observer_elasticsearch_spark.streaming.pipeline import drain
+
+    STARTED.clear()
+    t0 = time.perf_counter()
+    n_out = drain(spark, build, "append").count()
+    wall = time.perf_counter() - t0
+    s = summarize([json.loads(p.json) for q in STARTED for p in q.recentProgress])
     return {
         "wall_s": round(wall, 3),
-        "n_batches": n_batches,
-        "input_rows": total_in,
+        "n_batches": s["n_batches"],
+        "input_rows": s["input_rows"],
         "output_rows": n_out,
-        "max_state_rows": max_state,
+        "max_state_rows": s["max_state_rows"],
     }
 
 
@@ -479,10 +450,12 @@ def run_streaming_scale(
     out: dict = {"mult": mult, "n_files": n_files, "queries": {}}
     try:
         for name in joins or STREAM_JOINS:
-            df = pl.streaming_put_delete_join(
-                spark, feed_dir, hows[name], horizon="10 minutes", within="2 hours"
+            m = _drain_state_metrics(
+                spark,
+                lambda s, how=hows[name]: pl.streaming_put_delete_join(
+                    s, feed_dir, how, horizon="10 minutes", within="2 hours"
+                ),
             )
-            m = _drain_state_metrics(spark, df)
             out["queries"][name] = m
             print(
                 f"  stream {name} {mult}x: {m['wall_s']:.2f}s "
