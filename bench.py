@@ -150,9 +150,10 @@ def _sink_view(spark, sf_dir: str):
     """The merged read view (the `sink_views` memo) of a scratch
     EmulatedEsSink holding the shared changefeed as one run. Each CDC
     query builds the view of its own sink; this row charges one build."""
-    import shutil
-
-    from hbase_observer_elasticsearch_spark.sinks.state_sink import EmulatedEsSink
+    from hbase_observer_elasticsearch_spark.sinks.state_sink import (
+        EmulatedEsSink,
+        drop_root,
+    )
     from hbase_observer_elasticsearch_spark.sources.changefeed import (
         CHANGEFEED_SCHEMA,
         scratch_dir,
@@ -169,7 +170,7 @@ def _sink_view(spark, sf_dir: str):
         sink.apply(*split_epoch(feed), 0)
         return sink.read_cells()
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        drop_root(spark, root)
 
 
 def memo_build_rows(spark, sf_dir: str, per_query: dict) -> None:

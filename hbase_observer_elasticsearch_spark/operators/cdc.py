@@ -218,7 +218,7 @@ def apply_changefeed(cf: DataFrame, info_envelope: bool = False) -> DataFrame:
 
     # Latest value per (rowkey, qualifier); family desc == "last family in
     # byte order wins" for same-ts collisions (#4).  Same ordering as the
-    # sink MERGE (sinks/state_sink.merge_epoch) so batch replay and
+    # sink's read merge (sinks/state_sink._lww) so batch replay and
     # streamed state agree exactly.
     w_q = Window.partitionBy("rowkey", "qualifier").orderBy(
         F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc()
@@ -402,52 +402,6 @@ GROUP BY n_fields
 """.format(sum_purchase=sql_dsum("purchase"))
 
 
-def _replicate_then_query(
-    spark: SparkSession, sf_dir: str, sink_cls: type
-) -> DataFrame:
-    """Run CdcReplicator over the shared 2-file changefeed into a
-    ``sink_cls`` state table until drained, then an ES-shaped query over
-    the index: the bool ``exists: purchase`` filter with a terms-agg over
-    document width (per n_fields bucket, matched-doc count and the exact
-    sum of ``purchase``), pinned before the state dir is removed."""
-    import os
-    import shutil
-
-    from ..replicator import CdcReplicator
-    from ..sources.changefeed import shared_changefeed_stream_dir
-
-    cf_dir = shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
-    base = _scratch("replicate_")
-    try:
-        rep = CdcReplicator(
-            spark,
-            cf_dir,
-            os.path.join(base, "state"),
-            os.path.join(base, "ckpt"),
-        )
-        rep.start(sink_cls=sink_cls, trigger={"availableNow": True})
-        rep.await_drained(timeout_s=300)
-        rep.stop()
-        return (
-            rep.state()
-            .select(
-                F.size("doc").cast("bigint").alias("n_fields"),
-                F.element_at(F.col("doc"), F.lit("purchase"))
-                .cast("double")
-                .alias("purchase"),
-            )
-            .filter(F.col("purchase").isNotNull())
-            .groupBy("n_fields")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                dsum("purchase").alias("sum_purchase"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 @register(
     "cdc_replicate_then_query",
     oracle=_SQL_REPLICATE_THEN_QUERY,
@@ -475,50 +429,44 @@ def cdc_replicate_then_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: replication is the checkpointed micro-batch pipeline
     (a run appended per epoch, folded into a base every fourth version,
-    merged once on read); the query is one groupBy
-    over the state table — at 100 TB the state is the bucketed sink's
-    partitioned parquet and this exact query prunes to the `purchase`
-    field's column chunk.
+    merged once on read); the query is one groupBy over the merged
+    cells' document view, pinned before the state dir is removed.
     """
     ensure_session_conf(spark)
-    from ..sinks.state_sink import EmulatedEsSink
+    import os
+    import shutil
 
-    return _replicate_then_query(spark, sf_dir, EmulatedEsSink)
+    from ..replicator import CdcReplicator
+    from ..sinks.state_sink import drop_root
+    from ..sources.changefeed import shared_changefeed_stream_dir
 
-
-@register(
-    "cdc_replicate_bucketed",
-    oracle=_SQL_REPLICATE_THEN_QUERY,
-    # foreachBatch MERGE: durable state lives in the sink's parquet
-    stream="stateless",
-)
-def cdc_replicate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cdc_replicate_then_query's 100-TB-layout twin: the SAME
-    replicate → query story driven through the **BucketedStateSink**
-    (hash-bucketed per-bucket parquet rewrite + manifest swap +
-    single-writer lease, vs EmulatedEsSink's appended runs folded into a
-    base), checked against the SAME batch-LWW oracle.
-    A green row here attests the bucketed MERGE path — bucket pruning,
-    per-epoch idempotent swap, lease acquisition — end to end under the
-    driver's correctness gate, not just in unit tests.
-
-    Scale shape: each epoch rewrites only the buckets its rows hash to
-    (O(touched buckets), not O(state)); the read side unions live
-    bucket files from the manifest. The final exists+terms-agg query is
-    identical to the emulated-sink twin.
-    """
-    ensure_session_conf(spark)
-    from ..sinks.bucketed_state_sink import BucketedStateSink
-    from ..streaming.pipeline import scoped_session
-
-    # Each epoch's bucketed MERGE shuffles one epoch of mutations (~50 k
-    # rows here), so it runs on a child session at 4 shuffle partitions:
-    # near-empty reduce tasks otherwise dominate the drain (measured
-    # 4.4 s vs 5.8-6.5 s end to end at sf0.1). At real scale this count
-    # is the state table's bucket count, not the core count.
-    return _replicate_then_query(
-        scoped_session(spark, 4), sf_dir, BucketedStateSink
-    )
+    cf_dir = shared_changefeed_stream_dir(spark, sf_dir, n_files=2)
+    base = _scratch("replicate_")
+    state_dir = os.path.join(base, "state")
+    try:
+        rep = CdcReplicator(spark, cf_dir, state_dir, os.path.join(base, "ckpt"))
+        rep.start(trigger={"availableNow": True})
+        rep.await_drained(timeout_s=300)
+        rep.stop()
+        return (
+            rep.state()
+            .select(
+                F.size("doc").cast("bigint").alias("n_fields"),
+                F.element_at(F.col("doc"), F.lit("purchase"))
+                .cast("double")
+                .alias("purchase"),
+            )
+            .filter(F.col("purchase").isNotNull())
+            .groupBy("n_fields")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                dsum("purchase").alias("sum_purchase"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        drop_root(spark, state_dir)
+        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -1103,13 +1051,13 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the foreachBatch redelivery a crashed driver produces under
     at-least-once delivery. The reference's requeue replays bulks
     blindly and duplicates side effects
-    (observer6/ElasticSearchBulkOperator.java:56-66); here merge_epoch
-    is a pure max-merge, so the duplicated epoch is algebraically
-    absorbed and the oracle can restate the final state as the plain
-    LWW over the WHOLE feed — epoch boundaries, the replay and the fold
-    the fourth apply triggers all provably invisible. tests/test_sinks.py
-    additionally checks the replayed run's merged cells are
-    row-identical to a replay-free run.
+    (observer6/ElasticSearchBulkOperator.java:56-66); here the sink's
+    last-writer-wins read is a pure max-merge, so the duplicated epoch
+    is algebraically absorbed and the oracle can restate the final state
+    as the plain LWW over the WHOLE feed — epoch boundaries, the replay
+    and the fold the fourth apply triggers all provably invisible.
+    tests/test_sinks.py additionally checks the replayed run's merged
+    cells are row-identical to a replay-free run.
 
     Output is (rowkey, qualifier, last_seq): the winning mutation's seq
     uniquely identifies it — a stronger check than the value string
@@ -1125,16 +1073,13 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses.
     """
     ensure_session_conf(spark)
-    import shutil
-
-    from ..sinks.state_sink import EmulatedEsSink
+    from ..sinks.state_sink import EmulatedEsSink, drop_root
     from ..sources.changefeed import events_as_changefeed
     from ..streaming.pipeline import scoped_session, split_epoch
 
     # Per-epoch state is small (one row per live (rowkey, qualifier)), so
     # the merge loop runs on a child session at 4 shuffle partitions:
-    # near-empty tasks per window stage otherwise dominate the wall
-    # clock. At real scale this count is the state table's bucket count.
+    # near-empty tasks per window stage otherwise dominate the wall clock.
     s = scoped_session(spark, 4)
     cf = events_as_changefeed(load_table(s, sf_dir, "events"))
     lo, hi = cf.agg(F.min("seq"), F.max("seq")).first()
@@ -1147,7 +1092,7 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # epoch 2 applied twice = redelivered micro-batch
     schedule = [ranges[0], ranges[1], ranges[1], ranges[2]]
 
-    root = _scratch("merge_epochs_")
+    root = _scratch("idempotent_epochs_")
     try:
         sink = EmulatedEsSink(s, root)
         for e_lo, e_hi in schedule:
@@ -1166,7 +1111,7 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()  # pin before the state dir is removed
         )
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        drop_root(s, root)
     return out
 
 

@@ -46,10 +46,9 @@ class CdcReplicator:
         """Begin replication. kwargs pass through to start_pipeline
         (`trigger={"availableNow": True}` drains-and-stops for tests;
         default is the reference-parity 30 s processing-time trigger).
-        `sink_cls` selects the state layout (EmulatedEsSink's runs and
-        folded base, or BucketedStateSink's buckets); the constructed sink
-        is kept so `state()` / `cells()` read the layout this replicator
-        actually writes."""
+        `sink_cls` builds the sink (EmulatedEsSink or a subclass); the
+        constructed sink is kept so `state()` / `cells()` read through the
+        object this replicator actually writes."""
         if self._query is not None:
             raise RuntimeError("replicator already started")
         self._sink = sink_cls(self.spark, self.state_dir, self.config)

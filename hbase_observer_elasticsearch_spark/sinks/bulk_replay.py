@@ -2,7 +2,7 @@
 the retry/requeue client that converges anyway.
 
 The reference's sink has three distinguishing failure behaviors this
-module reproduces and *proves convergent* (r9 verdict directive #5):
+module reproduces and *proves convergent*:
 
 - per-item bulk failures: variants A/B log-and-drop the failed item
   (observer6/ElasticSearchBulkOperator.java:85-90); variant C retries

@@ -1,5 +1,5 @@
-"""A state root's commit protocol, shared by both state sinks: one JSON
-``_MANIFEST`` naming the live files, committed by a generation
+"""The state sink's commit protocol (`state_sink.EmulatedEsSink`): one
+JSON ``_MANIFEST`` naming the live files, committed by a generation
 compare-and-swap under an exclusive per-root writer lease.
 
 Readers resolve paths through the manifest, swapped with ``os.replace``,

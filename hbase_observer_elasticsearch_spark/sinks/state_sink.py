@@ -15,7 +15,7 @@ Cells are stored raw, one row per mutation:
     (rowkey, qualifier, value, family, ts, seq)   — a put
     (rowkey, NULL,      NULL,  NULL,   ts, seq)   — a delete tombstone
 
-and reduced by last-writer-wins (`merge_epoch`) when read:
+and reduced by last-writer-wins (`_lww`) when read:
 
 - a cell wins iff its (ts, family, seq) beats every other cell's —
   family byte-order breaks same-ts collisions exactly like the
@@ -78,9 +78,9 @@ _VIEWS = Memo("sink_views")
 
 
 def _with_family(df: DataFrame) -> DataFrame:
-    """Tolerate cell frames without a family column (tombstone-only frames,
-    pre-family state tables): NULL family sorts last in the desc tiebreak,
-    matching the reference's 'last family in byte order wins' rule."""
+    """Tolerate put frames without a family column: NULL family sorts
+    last in the desc tiebreak, matching the reference's 'last family in
+    byte order wins' rule."""
     if "family" in df.columns:
         return df
     return df.withColumn("family", F.lit(None).cast("string"))
@@ -140,7 +140,9 @@ def _lww(rows: DataFrame, keep_ties: bool) -> DataFrame:
     then, per (rowkey, qualifier), keep the winner by (ts, family, seq)
     desc — or, with ``keep_ties``, every surviving cell at the winner's ts
     (duplicates dropped). The NULL-qualifier survivor is the latest
-    tombstone."""
+    tombstone. Filtering before ranking gives apply_changefeed's answer
+    for any mix of mutations, and a replayed epoch's duplicate rows
+    change nothing."""
     is_tomb = F.col("qualifier").isNull()
     last_del = F.max(F.when(is_tomb, F.struct("ts", "seq"))).over(
         Window.partitionBy("rowkey")
@@ -164,30 +166,6 @@ def _lww(rows: DataFrame, keep_ties: bool) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .select(*_CELL_COLS)
     )
-
-
-def merge_epoch(cur: DataFrame, cells: DataFrame, dels: DataFrame) -> DataFrame:
-    """Pure LWW merge of one epoch's raw puts (`cells`) and deletes (`dels`:
-    rowkey, ts, seq) into cell rows `cur`; returns the winning cell per
-    (rowkey, qualifier) plus the latest tombstone per rowkey. Shared by
-    both sink layouts; EmulatedEsSink's read view is this merge over its
-    live versions.
-
-    One rowkey shuffle: the deletes join as qualifier-NULL tombstone rows,
-    a window over rowkey drops every cell at or below the latest tombstone
-    (ts, seq), then row_number over (rowkey, qualifier) by (ts, family, seq)
-    desc keeps each winner. Filtering before ranking gives
-    apply_changefeed's answer for any mix of mutations; replaying an epoch
-    is a no-op.
-
-    Across epochs: the result keeps only the winner, so it may stand in
-    for `cur` only when no later delete can fall between two same-ts
-    puts. EmulatedEsSink therefore never stores it: its runs keep every
-    raw mutation, and its base (`fold_versions`) keeps every cell tying
-    its winner's ts, so a same-ts losing put with a higher seq still
-    outlives a delete that arrives epochs later, as in apply_changefeed.
-    BucketedStateSink stores this result and keeps that limit."""
-    return _lww(cur.select(*_CELL_COLS).unionByName(_epoch_rows(cells, dels)), False)
 
 
 def fold_versions(rows: DataFrame) -> DataFrame:
@@ -215,6 +193,13 @@ def doc_view(cells: DataFrame) -> DataFrame:
     )
 
 
+def drop_root(spark: SparkSession, root: str) -> None:
+    """Remove a state root and evict its merged read view, so a scratch
+    root leaves no materialized view behind."""
+    _VIEWS.evict(spark, root)
+    shutil.rmtree(root, ignore_errors=True)
+
+
 class EmulatedEsSink(ManifestRoot):
     """Log-structured parquet cell store: append a run per epoch, fold
     every fourth live version into a base, read one merged view per
@@ -237,11 +222,12 @@ class EmulatedEsSink(ManifestRoot):
     base (`fold_versions`: one rowkey shuffle over the live versions) and
     swaps again, so reads never merge more than `FOLD_AT` - 1 versions.
 
-    Read side: `read_cells` is `merge_epoch` over the union of the live
-    versions, materialized (localCheckpoint) once per manifest commit in
-    the `sink_views` memo, keyed by the root. The commit is read from
-    disk on every call, so another sink object writing the same root
-    invalidates the view; the previous commit's view is evicted. The
+    Read side: `read_cells` is the last-writer-wins merge (`_lww`) over
+    the union of the live versions, materialized (localCheckpoint) once
+    per manifest commit in the `sink_views` memo, keyed by the root. The
+    commit is read from disk on every call, so another sink object
+    writing the same root invalidates the view; the previous commit's
+    view is evicted, and `drop_root` evicts a removed root's view. The
     first read after a commit pays the merge; later reads scan the view.
     """
 

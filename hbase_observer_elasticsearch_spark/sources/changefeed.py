@@ -141,11 +141,11 @@ def scratch_dir(prefix: str) -> str:
     """mkdtemp on the fastest scratch filesystem available: streaming
     checkpoints and fixture feeds are many small synchronous writes, so
     tmpfs (/dev/shm) cuts the fixed per-micro-batch WAL/commit-log cost
-    that dominates the streaming-twin queries at small SF (r4 verdict
-    directive #3). Falls back to the default temp dir when /dev/shm is
-    absent OR low on free space (r5 advice: tmpfs is typically RAM/2 and
-    checkpoints + cached fixture dirs at larger SF can fill it — an
-    ENOSPC mid-drain is strictly worse than a slower disk drain). The
+    that dominates the streaming-twin queries at small SF. Falls back to
+    the default temp dir when /dev/shm is absent OR low on free space
+    (tmpfs is typically RAM/2 and checkpoints + cached fixture dirs at
+    larger SF can fill it — an ENOSPC mid-drain is strictly worse than a
+    slower disk drain). The
     floor is SPARK_GRAFT_SHM_MIN_MB (default 512 MiB), checked with
     statvfs at every call so a tmpfs that filled up mid-process also
     flips later allocations to disk. On a real cluster the checkpoint

@@ -53,7 +53,7 @@ _FULL_COLS = tuple(_CHANGEFEED_COLS)
 
 def _parse_columns(options) -> tuple[str, ...]:
     """``columns`` option → output columns in canonical order (COLUMN
-    PRUNING, r12 verdict directive #4: Spark 4.1's Python DataSource has
+    PRUNING: Spark 4.1's Python DataSource has
     no pruneColumns hook, so the projection arrives as an option; the
     DataSource narrows its declared schema AND every reader narrows its
     executor-side parquet read to the columns the projection derives
@@ -233,7 +233,7 @@ class ChangefeedReader(DataSourceReader):
 
 class RegionChangefeedReader(DataSourceReader):
     """Batch reader with SOURCE-SIDE FILTER PUSHDOWN (Spark 4.1
-    `pushFilters`; r11 verdict directive #3). Selected via
+    `pushFilters`). Selected via
     ``.option("partitionBy", "rowkey")``; requires
     ``spark.sql.python.filterPushdown.enabled`` (set by
     session.ensure_session_conf).
@@ -322,7 +322,7 @@ class RegionChangefeedReader(DataSourceReader):
                     # prefix filter — read() serves keys without
                     # re-checking ranges, so a key outside the current
                     # ranges must die here or the conjunction silently
-                    # widens (r12 advice, high).
+                    # widens.
                     mine = [
                         k
                         for k in mine
@@ -427,9 +427,8 @@ class ChangefeedStreamReader(DataSourceStreamReader):
     via pyarrow with an eid-range row-group filter. The driver touches
     only the parquet FOOTER (min/max event_id statistics) — it never
     materializes the feed, so driver memory is O(1) in feed size, unlike
-    the SimpleDataSourceStreamReader demo path below (r4 verdict
-    directive #1: the former driver-side `_load` was the last 100 TB
-    scale-killer).
+    the SimpleDataSourceStreamReader demo path below, which loads the
+    feed on the driver.
 
     Replay contract: `partitions(start, end)` is a pure function of the
     offsets, so a restarted query re-planning the checkpointed
@@ -454,7 +453,7 @@ class ChangefeedStreamReader(DataSourceStreamReader):
         self.path = options.get("path")
         self.batch = int(options.get("batchSize", "2500"))
         self.n = int(options.get("numPartitions", "4"))
-        # Stream-side region pruning (r12 verdict directive #3): a
+        # Stream-side region pruning: a
         # comma-separated ``rowkeyPrefix`` option scopes the tail to the
         # rowkey regions the prefixes touch — the replication-log analog
         # of an HBase scan bounded to a key range. Spark 4.1 exposes
@@ -471,13 +470,13 @@ class ChangefeedStreamReader(DataSourceStreamReader):
         self.src_cols = _source_columns(self.out_cols, extra=("event_id",))
         self._bounds = None  # (min_eid, max_eid) from the parquet footer
         self._planned = None  # highest eid watermark handed to Spark
-        # Observability for the partitions() inverted-range guard (r5
-        # advice): the lo-1 first-call ratchet anchor relies on the
-        # traced Spark-4.1 recovery ordering (partitions() before
-        # latestOffset()). If a future Spark changes that order, the
-        # guard silently yields empty triggers until the ratchet catches
-        # up — counting + logging each firing makes a protocol-order
-        # change observable instead of silent.
+        # Observability for the partitions() inverted-range guard: the
+        # lo-1 first-call ratchet anchor relies on the traced Spark-4.1
+        # recovery ordering (partitions() before latestOffset()). If a
+        # future Spark changes that order, the guard silently yields empty
+        # triggers until the ratchet catches up — counting + logging each
+        # firing makes a protocol-order change observable instead of
+        # silent.
         self.inverted_range_count = 0
 
     @staticmethod

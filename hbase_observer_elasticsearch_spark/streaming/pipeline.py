@@ -12,8 +12,8 @@ Per micro-batch, the epoch's raw puts and deletes go straight into the
 sink (sinks/state_sink.EmulatedEsSink), which appends them as one run:
 one Spark job and no shuffle per epoch, with no separate compaction pass.
 Every fourth live version the same apply folds the runs into a base (one
-rowkey shuffle), and the last-writer-wins reduction (merge_epoch) runs
-once per commit, on the first read.
+rowkey shuffle), and the last-writer-wins reduction runs once per commit,
+on the first read.
 
 Delivery semantics: file-source + checkpoint gives exactly-once batch
 replay; the sink MERGE is idempotent per epoch → effectively exactly-once
@@ -135,14 +135,15 @@ def compact_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     like the reference's NavigableMap iteration
     (HbaseDataSyncEsObserver.java:93-102). Family is CARRIED into the sink
     state so the same tiebreak applies when the colliding puts land in
-    DIFFERENT micro-batches (merge_epoch orders by the same triple).
+    DIFFERENT micro-batches (the sink's read merge orders by the same
+    triple).
     dels: the latest delete per touched key.
 
     It ranks BEFORE the delete filter, so a same-ts put that loses the
     family tiebreak but has a higher seq than the epoch's delete is dropped
     although apply_changefeed keeps it. The sink write path therefore does
-    not use it: it feeds merge_epoch the raw split_epoch halves, and
-    merge_epoch filters first and ranks in the same shuffle.
+    not use it: it hands the sink the raw split_epoch halves, and the
+    sink's read merge filters first and ranks in the same shuffle.
     """
     w_q = Window.partitionBy("rowkey", "qualifier").orderBy(
         F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc()
@@ -165,7 +166,7 @@ def compact_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
 def split_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     """An epoch's raw mutations as the sink MERGE's (cells, dels): its
     `op='put'` rows and the (rowkey, ts, seq) of its deletes, unreduced —
-    merge_epoch does the whole last-writer-wins reduction itself."""
+    the sink's read merge does the whole last-writer-wins reduction."""
     puts = batch.filter(F.col("op") == "put")
     dels = batch.filter(F.col("op") == "delete").select("rowkey", "ts", "seq")
     return puts, dels
@@ -182,12 +183,11 @@ def start_pipeline(
     """Start the CDC replication stream: changefeed dir → ``sink``.
 
     ``sink`` is any state sink with ``apply(cells, dels, epoch_id)``
-    (EmulatedEsSink's run per epoch with folds into a base, or
-    BucketedStateSink's per-bucket rewrite); CdcReplicator builds it and
-    reads state back through the same object. `trigger` defaults to the reference's
-    30 s flush period; pass ``{"availableNow": True}`` to drain the
-    backlog and stop. `max_files_per_trigger` is the size-cap analog of
-    MAX_BULK_COUNT.
+    (EmulatedEsSink appends a run per epoch and folds runs into a base);
+    CdcReplicator builds it and reads state back through the same object.
+    `trigger` defaults to the reference's 30 s flush period; pass
+    ``{"availableNow": True}`` to drain the backlog and stop.
+    `max_files_per_trigger` is the size-cap analog of MAX_BULK_COUNT.
     """
 
     def write_epoch(batch: DataFrame, epoch_id: int) -> None:

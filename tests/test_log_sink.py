@@ -6,20 +6,29 @@ and the per-commit read view.
   delete arriving one epoch later, before and after a fold;
 - a crash after a run or a base is written but before its manifest swap
   leaves the previous answer readable, and replaying the epoch converges;
-- a second live writer raises ConcurrentWriterError;
+- a second live writer raises ConcurrentWriterError; a dead writer's
+  lease is stolen, and a commit against a stale generation raises;
 - an apply that does not fold is one Spark job with no shuffle;
 - the read view is built once per commit, and a commit from another
-  sink object on the same root invalidates it.
+  sink object on the same root invalidates it; the queries and the bench
+  row that use a scratch root evict its view when they remove it.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from hbase_observer_elasticsearch_spark.operators.cdc import apply_changefeed
-from hbase_observer_elasticsearch_spark.sinks.manifest import ConcurrentWriterError
+from hbase_observer_elasticsearch_spark.registry import queries
+from hbase_observer_elasticsearch_spark.sinks.manifest import (
+    _WRITER_LOCK,
+    ConcurrentWriterError,
+)
 from hbase_observer_elasticsearch_spark.sinks.state_sink import (
     FOLD_AT,
     EmulatedEsSink,
@@ -156,6 +165,24 @@ def test_second_live_writer_fails_loudly(spark, tmp_path):
     assert _docs(b) == EXPECTED_STATE
 
 
+def test_stale_lease_stolen_and_gen_cas(spark, tmp_path):
+    """A lease left by a crashed (dead-pid) writer is stolen and the epoch
+    commits; the manifest generation CAS rejects a stale expected_gen, the
+    defense-in-depth for lock-steal races."""
+    root = str(tmp_path / "s")
+    sink = EmulatedEsSink(spark, root)
+    lock = os.path.join(root, _WRITER_LOCK)
+    # pid above the largest pid_max Linux allows — guaranteed dead
+    with open(lock, "w") as f:
+        json.dump({"pid": 2**22 + 12345, "token": "crashed-writer"}, f)
+    _apply(spark, sink, FIXTURE_ROWS, 0)  # steals the lease, commits, releases
+    assert _docs(sink) == EXPECTED_STATE
+    assert not os.path.exists(lock)
+    assert sink._gen() == 1  # one commit, no fold
+    with pytest.raises(ConcurrentWriterError):
+        sink._commit_manifest({"versions": []}, expected_gen=0)  # moved under us
+
+
 def test_apply_without_fold_is_one_job_without_shuffle(spark, tmp_path):
     sink = EmulatedEsSink(spark, str(tmp_path / "s"))
     cells, dels = split_epoch(spark.createDataFrame(FIXTURE_ROWS, CHANGEFEED_SCHEMA))
@@ -184,3 +211,13 @@ def test_read_view_once_per_commit_across_sink_objects(spark, tmp_path):
     assert _docs(reader)["r1"]["c9"] == "x"
     app = spark.sparkContext.applicationId
     assert sum(1 for k in _VIEWS._entries if k[:2] == (app, root)) == 1
+
+
+def test_scratch_roots_leave_no_view_behind(spark, sf_dir):
+    import bench
+
+    start = len(_VIEWS)
+    for name in ("cdc_replicate_then_query", "sink_merge_idempotent_epochs"):
+        queries()[name](spark, sf_dir).collect()
+    bench._sink_view(spark, sf_dir).collect()
+    assert len(_VIEWS) == start

@@ -1,8 +1,9 @@
-"""The sink MERGE (`sinks.state_sink.merge_epoch`) on raw epoch mutations:
-it equals the batch replay over a whole feed, replaying an epoch leaves
-the state row-identical, its plan is a single rowkey shuffle, and the
-streaming pipeline that feeds it raw mutations keeps a same-ts put that
-outlives the epoch's delete."""
+"""The sink's last-writer-wins read (`EmulatedEsSink.apply` then
+`read_cells`) on raw epoch mutations: it equals the batch replay over a
+whole feed, replaying an epoch leaves the cells row-identical, the read
+view's build is a single rowkey shuffle, and the streaming pipeline that
+feeds the sink raw mutations keeps a same-ts put that outlives the
+epoch's delete."""
 
 from __future__ import annotations
 
@@ -12,11 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from pyspark.sql import functions as F
 
 from hbase_observer_elasticsearch_spark.operators.cdc import apply_changefeed
-from hbase_observer_elasticsearch_spark.sinks.state_sink import (
-    CELLS_SCHEMA,
-    EmulatedEsSink,
-    merge_epoch,
-)
+from hbase_observer_elasticsearch_spark.sinks.state_sink import EmulatedEsSink
 from hbase_observer_elasticsearch_spark.sources.changefeed import (
     CHANGEFEED_SCHEMA,
     _ts,
@@ -50,11 +47,10 @@ def _rows(state) -> list[tuple]:
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=mutations())
-def test_merge_of_whole_feed_matches_replay(spark, rows):
-    empty = spark.createDataFrame([], CELLS_SCHEMA)
-    feed = spark.createDataFrame(rows, CHANGEFEED_SCHEMA)
-    state = merge_epoch(empty, *split_epoch(feed))
-    assert _docs(state) == spark_replay(spark, rows)
+def test_merge_of_whole_feed_matches_replay(spark, tmp_path_factory, rows):
+    sink = EmulatedEsSink(spark, str(tmp_path_factory.mktemp("s")))
+    sink.apply(*split_epoch(spark.createDataFrame(rows, CHANGEFEED_SCHEMA)), 0)
+    assert _docs(sink.read_cells()) == spark_replay(spark, rows)
 
 
 @settings(
@@ -63,18 +59,18 @@ def test_merge_of_whole_feed_matches_replay(spark, rows):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=mutations())
-def test_merge_replayed_epoch_is_row_identical(spark, rows):
+def test_merge_replayed_epoch_is_row_identical(spark, tmp_path_factory, rows):
     puts, dels = split_epoch(spark.createDataFrame(rows, CHANGEFEED_SCHEMA))
-    once = spark.createDataFrame(
-        _rows(merge_epoch(spark.createDataFrame([], CELLS_SCHEMA), puts, dels)),
-        CELLS_SCHEMA,
-    )
-    assert _rows(merge_epoch(once, puts, dels)) == _rows(once)
+    sink = EmulatedEsSink(spark, str(tmp_path_factory.mktemp("s")))
+    sink.apply(puts, dels)
+    once = _rows(sink.read_cells())
+    sink.apply(puts, dels)  # appended again, as a replay of a folded run is
+    assert _rows(sink.read_cells()) == once
 
 
-def test_merge_plan_is_one_shuffle(spark, tmp_path):
-    """State read back from the sink, merged with an epoch's raw puts and
-    deletes: both windows run on one hash exchange on rowkey."""
+def test_merge_plan_is_one_shuffle(spark, tmp_path, monkeypatch):
+    """Two epochs' runs read back through the sink: the view's build runs
+    both windows on one hash exchange on rowkey."""
     feed = spark.createDataFrame(
         [
             (1, "put", "r1", "a", "c1", "v1", _ts(1)),
@@ -85,10 +81,20 @@ def test_merge_plan_is_one_shuffle(spark, tmp_path):
         CHANGEFEED_SCHEMA,
     )
     sink = EmulatedEsSink(spark, str(tmp_path / "s"))
-    sink.apply(*split_epoch(feed.filter("seq <= 2")))
-    merged = merge_epoch(sink.read_cells(), *split_epoch(feed.filter("seq > 2")))
-    merged.collect()
-    plan = merged._jdf.queryExecution().executedPlan().toString()
+    sink.apply(*split_epoch(feed.filter("seq <= 2")), 0)
+    sink.apply(*split_epoch(feed.filter("seq > 2")), 1)
+
+    built = []
+    checkpoint = type(feed).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        built.append(df)
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(feed), "localCheckpoint", spy)
+    merged = sink.read_cells()
+    [view] = built  # the view is built once, on this read
+    plan = view._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert re.findall(r"(?<![A-Za-z])Exchange (\w+)", final) == ["hashpartitioning"]
     assert _docs(merged) == {"r1": {"c2": "v4"}, "r2": {"c1": "v2"}}

@@ -340,7 +340,7 @@ def test_cdc_replicator_facade(spark, tmp_path):
 
 
 def test_await_drained_raises_on_timeout(spark, tmp_path):
-    """ADVICE r11: a drain that does not finish must raise, not silently
+    """A drain that does not finish must raise, not silently
     hand back a partially-replicated state table."""
     from hbase_observer_elasticsearch_spark.replicator import CdcReplicator
 
@@ -363,7 +363,8 @@ def test_await_drained_raises_on_timeout(spark, tmp_path):
 
 
 def test_cf_files_env_var_validation(monkeypatch, spark):
-    """ADVICE r11: a non-integer SPARK_GRAFT_CF_FILES names the knob."""
+    """A non-integer SPARK_GRAFT_CF_FILES raises an error that names the
+    variable."""
     import pytest as _pytest
 
     from hbase_observer_elasticsearch_spark.sources.changefeed import (
@@ -438,73 +439,12 @@ def test_stateful_ttl_eviction(spark, tmp_path):
         q.stop()
 
 
-def test_bucketed_state_sink_parity_and_incrementality(spark, tmp_path):
-    """BucketedStateSink produces the same final state as EmulatedEsSink
-    over the same epochs, and an epoch leaves untouched buckets' files
-    alone (incremental IO)."""
-    import os
-
-    from hbase_observer_elasticsearch_spark.sinks.bucketed_state_sink import (
-        BucketedStateSink,
-    )
-    from hbase_observer_elasticsearch_spark.sources.changefeed import (
-        FIXTURE_ROWS,
-        fixture_changefeed,
-    )
-
-    sink = BucketedStateSink(spark, str(tmp_path / "bstate"), n_buckets=8)
-    cf = fixture_changefeed(spark)
-    # replay the fixture in two epochs split mid-stream
-    half = len(FIXTURE_ROWS) // 2
-    for lo, hi in [(0, half), (half, len(FIXTURE_ROWS) + 1)]:
-        batch = cf.filter(f"seq >= {lo} AND seq < {hi}")
-        cells, dels = compact_epoch(batch)
-        sink.apply(cells, dels)
-
-    assert state_as_dict(sink.read_state()) == EXPECTED_STATE
-
-    # incrementality: an epoch touching ONE key rewrites only its bucket
-    before = {
-        d: sorted(os.listdir(os.path.join(str(tmp_path / "bstate"), d)))
-        for d in os.listdir(str(tmp_path / "bstate"))
-        if d.startswith("bkt=")
-    }
-    one = spark.createDataFrame(
-        [(99, "put", "r1", "a", "c9", "x", _ts(9))], cf.schema
-    )
-    cells, dels = compact_epoch(one)
-    sink.apply(cells, dels)
-    after = {
-        d: sorted(os.listdir(os.path.join(str(tmp_path / "bstate"), d)))
-        for d in os.listdir(str(tmp_path / "bstate"))
-        if d.startswith("bkt=")
-    }
-    changed = [d for d in before if before[d] != after.get(d)]
-    assert len(changed) == 1  # only r1's bucket rewritten
-    assert state_as_dict(sink.read_state())["r1"]["c9"] == "x"
-
-
-def test_bucketed_state_sink_replay_idempotent(spark, tmp_path):
-    """Re-applying the same epoch (checkpoint replay after crash) leaves
-    the state unchanged."""
-    from hbase_observer_elasticsearch_spark.sinks.bucketed_state_sink import (
-        BucketedStateSink,
-    )
-
-    sink = BucketedStateSink(spark, str(tmp_path / "bstate"), n_buckets=4)
-    cf = fixture_changefeed(spark)
-    cells, dels = compact_epoch(cf)
-    sink.apply(cells, dels)
-    first = state_as_dict(sink.read_state())
-    sink.apply(cells, dels)  # replay
-    assert state_as_dict(sink.read_state()) == first == EXPECTED_STATE
-
-
 def test_cross_epoch_family_tiebreak(spark, tmp_path):
     """Same-ts puts to one (rowkey, qualifier) from different families must
     resolve by family byte order even when they land in DIFFERENT epochs
     with seq order inverted — streamed state equals batch replay under any
-    epoch split (the r3 collision, split across epochs)."""
+    epoch split (the fixture's same-ts family collision on rowkey r3,
+    split across epochs)."""
     cols = "seq long, op string, rowkey string, family string, qualifier string, value string, ts timestamp"
     row_z = (1, "put", "rx", "z", "c1", "vz", _ts(5))  # lower seq, family z
     row_a = (2, "put", "rx", "a", "c1", "va", _ts(5))  # higher seq, family a
@@ -523,13 +463,21 @@ def test_cross_epoch_family_tiebreak(spark, tmp_path):
 
 
 def test_replicator_reads_through_configured_sink(spark, tmp_path):
-    """A replicator started with sink_cls=BucketedStateSink must read its
-    state back through the SAME layout (state()/cells() used to hardcode
-    EmulatedEsSink and silently return empty)."""
+    """A replicator started with a sink_cls reads its state back through
+    the sink object start() built, not a fresh default sink."""
     from hbase_observer_elasticsearch_spark.replicator import CdcReplicator
-    from hbase_observer_elasticsearch_spark.sinks.bucketed_state_sink import (
-        BucketedStateSink,
-    )
+
+    class CountingSink(EmulatedEsSink):
+        built: list = []
+
+        def __init__(self, *args):
+            super().__init__(*args)
+            self.reads = 0
+            self.built.append(self)
+
+        def read_cells(self):
+            self.reads += 1
+            return super().read_cells()
 
     cf_dir = str(tmp_path / "cf")
     write_changefeed_stream_dir(fixture_changefeed(spark), cf_dir, n_files=2)
@@ -537,7 +485,7 @@ def test_replicator_reads_through_configured_sink(spark, tmp_path):
         spark, cf_dir, str(tmp_path / "state"), str(tmp_path / "ckpt")
     )
     rep.start(
-        sink_cls=BucketedStateSink,
+        sink_cls=CountingSink,
         trigger={"availableNow": True},
         max_files_per_trigger=1,
     )
@@ -545,7 +493,8 @@ def test_replicator_reads_through_configured_sink(spark, tmp_path):
     rep.stop()
     assert state_as_dict(rep.state()) == EXPECTED_STATE
     assert rep.cells().filter("qualifier IS NULL").count() > 0  # tombstones
-
+    [sink] = CountingSink.built
+    assert sink.reads == 2  # state() and cells() both read through it
 
 def test_bulk_action_line_escapes_rowkey(spark):
     """A rowkey containing quotes/backslashes must produce valid NDJSON on
@@ -637,152 +586,6 @@ def test_streaming_put_delete_interval_join(spark, tmp_path):
         ).collect()
     }
     assert got == want and len(want) > 0
-
-
-def test_bucketed_sink_crash_mid_epoch_is_atomic(spark, tmp_path):
-    """A writer that dies BETWEEN bucket publishes must leave readers on
-    the complete old epoch (the manifest is the commit point); replaying
-    the epoch afterwards lands the complete new epoch."""
-    from hbase_observer_elasticsearch_spark.sinks.bucketed_state_sink import (
-        BucketedStateSink,
-    )
-
-    class CrashingSink(BucketedStateSink):
-        crashes_left = 0
-
-        def _publish_bucket(self, src, dst):
-            if self.crashes_left == 0:
-                raise RuntimeError("injected crash between bucket publishes")
-            self.crashes_left -= 1
-            super()._publish_bucket(src, dst)
-
-    sink = CrashingSink(spark, str(tmp_path / "bstate"), n_buckets=4)
-    cf = fixture_changefeed(spark)
-
-    # epoch 1 (clean): first half of the fixture
-    sink.crashes_left = 10**9
-    cells, dels = compact_epoch(cf.filter("seq < 7"))
-    sink.apply(cells, dels)
-    old_state = state_as_dict(sink.read_state())
-    assert old_state  # non-empty baseline
-
-    # epoch 2 crashes after ONE of several bucket publishes
-    cells2, dels2 = compact_epoch(cf.filter("seq >= 7"))
-    touched = (
-        cells2.select(sink._bkt().alias("b"))
-        .unionByName(dels2.select(sink._bkt().alias("b")))
-        .distinct()
-        .count()
-    )
-    assert touched > 1  # the crash window genuinely spans buckets
-    sink.crashes_left = 1
-    try:
-        sink.apply(cells2, dels2)
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError:
-        pass
-    # readers see the complete OLD epoch — not a mix
-    assert state_as_dict(sink.read_state()) == old_state
-
-    # checkpoint replay of the epoch commits it fully
-    sink.crashes_left = 10**9
-    sink.apply(cells2, dels2)
-    assert state_as_dict(sink.read_state()) == EXPECTED_STATE
-
-
-def test_bucketed_sink_reads_pre_family_state(spark, tmp_path):
-    """A state dir written before the family column existed must still be
-    readable: read_cells null-fills the missing column instead of failing
-    on a by-name select."""
-    import json
-    import os
-
-    from hbase_observer_elasticsearch_spark.sinks.bucketed_state_sink import (
-        BucketedStateSink,
-    )
-
-    root = str(tmp_path / "bstate")
-    sink = BucketedStateSink(spark, root, n_buckets=4)
-    # hand-write a v=1 bucket WITHOUT the family column + a manifest
-    old = spark.createDataFrame(
-        [("r1", "c1", "v1", _ts(1), 1)],
-        "rowkey string, qualifier string, value string, ts timestamp, seq long",
-    )
-    bkt = old.select(sink._bkt().alias("b")).collect()[0]["b"]
-    old.coalesce(1).write.parquet(os.path.join(root, f"bkt={bkt}", "v=1"))
-    with open(os.path.join(root, "_MANIFEST"), "w") as f:
-        json.dump({"buckets": {str(bkt): 1}}, f)
-
-    got = sink.read_cells().collect()
-    assert [(r["rowkey"], r["qualifier"], r["value"], r["family"]) for r in got] == [
-        ("r1", "c1", "v1", None)
-    ]
-
-    # and a subsequent epoch merges on top of the legacy version cleanly
-    cells, dels = compact_epoch(
-        spark.createDataFrame(
-            [(2, "put", "r1", "info", "c2", "v2", _ts(2))],
-            fixture_changefeed(spark).schema,
-        )
-    )
-    sink.apply(cells, dels)
-    assert state_as_dict(sink.read_state()) == {"r1": {"c1": "v1", "c2": "v2"}}
-
-
-def test_bucketed_sink_second_live_writer_fails_loudly(spark, tmp_path):
-    """Two sinks on one root must serialize or fail loudly: while writer A
-    holds the per-root lease, writer B's apply raises ConcurrentWriterError
-    instead of interleaving manifest swaps; after release, B proceeds."""
-    import pytest as _pytest
-
-    from hbase_observer_elasticsearch_spark.sinks.bucketed_state_sink import (
-        BucketedStateSink,
-        ConcurrentWriterError,
-    )
-
-    root = str(tmp_path / "bstate")
-    a = BucketedStateSink(spark, root, n_buckets=4)
-    b = BucketedStateSink(spark, root, n_buckets=4)
-    cells, dels = compact_epoch(fixture_changefeed(spark))
-
-    a._acquire_lease()  # writer A mid-epoch
-    with _pytest.raises(ConcurrentWriterError):
-        b.apply(cells, dels)
-    a._release_lease()
-
-    b.apply(cells, dels)  # sequential writers serialize
-    assert state_as_dict(b.read_state()) == EXPECTED_STATE
-
-
-def test_bucketed_sink_stale_lease_stolen_and_gen_cas(spark, tmp_path):
-    """A lease left by a crashed (dead-pid) writer is stolen and the epoch
-    commits; the manifest generation CAS rejects a stale expected_gen, the
-    defense-in-depth for lock-steal races."""
-    import json as _json
-    import os as _os
-
-    import pytest as _pytest
-
-    from hbase_observer_elasticsearch_spark.sinks.bucketed_state_sink import (
-        _WRITER_LOCK,
-        BucketedStateSink,
-        ConcurrentWriterError,
-    )
-
-    root = str(tmp_path / "bstate")
-    sink = BucketedStateSink(spark, root, n_buckets=4)
-    # pid above the kernel's default pid_max — guaranteed dead
-    with open(_os.path.join(root, _WRITER_LOCK), "w") as f:
-        _json.dump({"pid": 2**22 + 12345, "token": "crashed-writer"}, f)
-
-    cells, dels = compact_epoch(fixture_changefeed(spark))
-    sink.apply(cells, dels)  # steals the stale lease, commits, releases
-    assert state_as_dict(sink.read_state()) == EXPECTED_STATE
-    assert not _os.path.exists(_os.path.join(root, _WRITER_LOCK))
-    assert sink._gen() == 1  # first commit bumped the generation
-
-    with _pytest.raises(ConcurrentWriterError):
-        sink._swap_manifest({}, expected_gen=0)  # moved under us
 
 
 def test_tws_doc_state_parity(spark, tmp_path):
