@@ -1300,13 +1300,15 @@ def sink_bulk_failure_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.changefeed import events_as_changefeed
 
     # doc values carry the winning put's seq; application order for this
-    # feed is seq order (arrival order), so compaction orders by seq only
+    # feed is seq order (arrival order): with one constant ts and no
+    # family, the (ts, family, seq) merge order reduces to seq
     cf = events_as_changefeed(load_table(spark, sf_dir, "events")).select(
         "seq",
         "op",
         "rowkey",
         "qualifier",
         F.col("seq").cast("string").alias("value"),
+        F.timestamp_seconds(F.lit(0)).alias("ts"),
     )
     lo, hi = cf.agg(F.min("seq"), F.max("seq")).first()
     n_epochs = 3
@@ -1326,17 +1328,18 @@ def sink_bulk_failure_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_keys = 0
     for i, (e_lo, e_hi) in enumerate(ranges):
         ep = cf.filter((F.col("seq") >= e_lo) & (F.col("seq") <= e_hi))
-        lines = epoch_bulk_lines(
-            ep, order_cols=("seq",), del_order_cols=("seq",)
-        )
+        lines = epoch_bulk_lines(ep)
         if i == 1:
             endpoint.arm_drop_response_next()
         post_bulk_with_retry(endpoint, lines)
         n_keys = max(n_keys, len(lines))
     # loud failure if the injection machinery silently did nothing
-    assert endpoint.n_transport_faults == 2, endpoint.n_transport_faults
-    if n_keys >= 40:
-        assert endpoint.n_item_rejections > 0
+    if endpoint.n_transport_faults != 2:
+        raise RuntimeError(
+            f"expected 2 injected transport faults, saw {endpoint.n_transport_faults}"
+        )
+    if n_keys >= 40 and endpoint.n_item_rejections == 0:
+        raise RuntimeError(f"no item rejections injected over {n_keys} bulk lines")
 
     out_rows = [
         (rowkey, qual, int(seq_str))

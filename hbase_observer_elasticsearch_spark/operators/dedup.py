@@ -329,7 +329,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature subtree is shared with dedup_lsh_pr_curve)
     cand = _lsh_cand_memo(spark, sf_dir)
 
-    # Verify-join input pruning (r5 verdict directive #3, the 4.58x 10x
+    # Verify-join input pruning (it flattened a 4.58x 10x scale
     # curve): only docs that appear in some candidate pair can
     # contribute to n_shared or be looked up for sizes, so the shingle
     # table is semi-joined down to candidate docs BEFORE the two verify
@@ -1842,9 +1842,9 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EVAL_SPLIT_MOD = 17  # doc_id % 17 == 0 -> held-out "benchmark" split
-# Contamination threshold as an exact integer fraction (r5 advice: the old
-# CONTAM_T float constant was dead — the predicate hard-coded the
-# cross-multiplication). A doc is contaminated when
+# Contamination threshold as an exact integer fraction (no float
+# constant: the predicate is the integer cross-multiplication). A doc is
+# contaminated when
 # n_in_train / n_shingles >= CONTAM_NUM / CONTAM_DEN, evaluated as
 # n_in_train * CONTAM_DEN >= n_shingles * CONTAM_NUM in BOTH engines so
 # the flag is exact integer arithmetic, never a float compare.
@@ -2001,8 +2001,8 @@ GROUP BY 1
 """,
 )
 def dedup_pair_mass_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair-mass accounting for the exact shingle-verify path (r5 verdict
-    directive #3): per power-of-two posting-list-size band, how many
+    """Pair-mass accounting for the exact shingle-verify path: per
+    power-of-two posting-list-size band, how many
     shingle buckets there are and how many candidate pairs they generate
     — Σ n·(n−1)/2 raw, and again under the PAIR_BUCKET_CAP hot-bucket
     cut. `capped_pair_mass` IS the work the inverted-index verify join
@@ -2929,8 +2929,8 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and A,B < P = 1e9+7), so min % 2 is exactly 0/1 and XOR bit
     # agreement is identical to per-column equality — solo-verified
     # row-identical, 5.06 s -> 1.56 s best-of-3 at sf0.1 (the 16-wide
-    # checkpoint + broadcast + 16 CASEs per pair was the r13 regression
-    # flagged in the verdict). The checkpoint stays: siga/sigb below are
+    # checkpoint + broadcast + 16 CASEs per pair was the slow shape).
+    # The checkpoint stays: siga/sigb below are
     # two plan branches and the narrow table is block-manager-cheap.
     packed = None
     for k in range(H.MINHASH_K):

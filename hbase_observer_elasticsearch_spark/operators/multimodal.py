@@ -278,7 +278,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
     """Decode an image payload to (height, width, channels, pixel_bytes).
 
-    REAL for uncompressed 24-bit BMP (r10 verdict directive #6): the
+    REAL for uncompressed 24-bit BMP: the
     container format needs no codec — BITMAPFILEHEADER + BITMAPINFOHEADER
     are fixed little-endian structs, and the pixel array is raw BGR rows.
     Parsed with stdlib ``struct`` only; every header field is validated
@@ -320,7 +320,7 @@ def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
 def extract_audio_features(payload: bytes) -> dict:
     """Decode an audio payload to exact-integer features.
 
-    REAL for RIFF/WAVE PCM16 (r10 verdict directive #6): the WAV
+    REAL for RIFF/WAVE PCM16: the WAV
     container is stdlib-parseable — RIFF header, ``fmt `` chunk
     (format/channels/rate/bits), ``data`` chunk of little-endian int16
     samples. Returns {sample_rate, n_samples, sum_vals, sum_sq, peak} —
@@ -504,7 +504,7 @@ GROUP BY doc_id, media_type
 """,
 )
 def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL container decode over the media column (r10 verdict #6): each
+    """REAL container decode over the media column: each
     doc's payload bytes become an actual on-disk format — an 8x8 24-bit
     BMP for image/video docs, a PCM16 mono WAV for audio docs — and the
     statistics come from PARSING those containers with the stdlib

@@ -30,7 +30,7 @@ RANGE_PARTS = 32  # target partition count (mirrors spark.sql.shuffle.partitions
 # COUNT-bounded boundary sample: the RANGE_PARTS*128 rows with the
 # smallest md5 — real RangePartitioner bounds the sample COUNT
 # (sampleSizePerPartition), not a fraction, so the boundary sort stays
-# O(parts x per-part sample) however large the table is (r8 verdict #6).
+# O(parts x per-part sample) however large the table is.
 SAMPLE_CAP = RANGE_PARTS * 128
 
 # stream_watermark_lateness_audit
@@ -252,7 +252,7 @@ def layout_range_partition_balance(spark: SparkSession, sf_dir: str) -> DataFram
     size(filter(boundaries, b -> key > b)) over a broadcast boundary
     array — no row blow-up, no extra shuffle).
 
-    ``load_x_avg`` (n_rows x P / total) is the balance verdict: 1.0 is
+    ``load_x_avg`` (n_rows x P / total) is the balance score: 1.0 is
     perfect; a partition at 2.0 would straggle at 2x. Duplicate keys
     must land in one partition (range partitioning cannot split a key),
     so heavy keys surface here as load > 1 — the audit a 100 TB sort or
@@ -531,7 +531,7 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact integer division on the BIGINT prefix sum (DIV, not
     # floor(double /): the double route diverges from the oracle's `//`
-    # once cumulative bytes exceed 2^53 — r8 advice)
+    # once cumulative bytes exceed 2^53)
     planned = files.withColumn(
         "prefix",
         F.coalesce(F.sum("bytes").over(w), F.lit(0)).cast("bigint"),
@@ -670,8 +670,8 @@ def layout_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     pred_cols = sorted({w[1] for w in _WORKLOAD})
-    # TWO table passes total (r8 verdict directive #3 — the old shape
-    # re-scanned per (key, predicate): 32 scans / 48 exchanges):
+    # TWO table passes total (a re-scan per (key, predicate) would be
+    # 32 scans / 48 exchanges):
     #  pass 1: explode to (key, value), groupBy-count the distinct
     #          values (distributed), per-key cumulative window over the
     #          DISTINCT values only, broadcast rank-interval join at

@@ -173,7 +173,7 @@ def corpus_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: every gate is a map-side array/HOF expression over one
     corpus scan; the report is a single-row multi-aggregate (map-side
     partials, one tiny final reduce). At 100 TB this is strictly cheaper
-    than materializing any gate's verdict column — which is exactly why
+    than materializing any gate's pass/fail column — which is exactly why
     the report comes first and the gated write second.
     """
     ensure_session_conf(spark)
@@ -967,7 +967,7 @@ def quality_bucket_checksum_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         # F.concat (null-propagating) mirrors the oracle's `||`: a NULL
         # field nulls the whole payload, md5(NULL) -> NULL, dropped from
         # SUM on both engines. concat_ws would silently SKIP the null
-        # field on the Spark side only (r8 advice).
+        # field on the Spark side only.
         h = F.conv(
             F.substring(
                 F.md5(

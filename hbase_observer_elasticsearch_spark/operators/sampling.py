@@ -447,7 +447,7 @@ def sample_matched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         # substring with NO length cap, mirroring the oracle's
         # substr(source, 4): a numeric suffix longer than a fixed cap
-        # would otherwise truncate only on the Spark side (r8 advice).
+        # would otherwise truncate only on the Spark side.
         F.when(
             F.expr("substring(source, 4)").cast("bigint") % 2 == 0, "A"
         )

@@ -316,7 +316,7 @@ KMEANS_K = 8
 KMEANS_ITERS = 2
 
 # Codebook granularity scales with corpus size — k = max(KMEANS_K, ⌈√n⌉),
-# the FAISS nlist ∝ √n practice (r10 verdict directive #1). History of the
+# the FAISS nlist ∝ √n practice. History of the
 # law, because both failure modes were MEASURED here:
 # - fixed k (pre-r8): SemDeDup's within-cell pair stage is quadratic in n
 #   (SCALE_r8: 108.8x pair mass / 16.3x wall at 10x data);
@@ -2440,7 +2440,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cosine >= {SEMDEDUP_T} within its assigned codebook cluster).
     Emits every new vector with its cluster, standing-near-dup count,
     best standing cosine (-2.0 sentinel when none — below any real
-    cosine), and the admit verdict. New-vs-new duplicates are
+    cosine), and the admit decision. New-vs-new duplicates are
     deliberately out of scope (next run's corpus problem; keep-first
     admits exactly one of them today).
 
@@ -3289,7 +3289,7 @@ def similarity_pca_collapse_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     At 100 TB: the explode+self-join is the textbook distributed Gram
     matrix (dim² accumulators, map-side partials); power steps touch
     only dim-sized state. dim, not n, bounds everything downstream of
-    the one Gram pass. Lineage discipline (r9 verdict fix): cov, nn and
+    the one Gram pass. Lineage discipline: cov, nn and
     every power-step vector are localCheckpoint()ed and v0 is a pure
     literal range, so the FINAL plan contains zero parquet scans — the
     corpus is read exactly once, inside the cov build (was 49 re-scans

@@ -363,7 +363,7 @@ FROM probe_hits ph LEFT JOIN members m ON ph.k = m.k
 def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership (m=1024 bits, k=3 md5-affine hashes) built
     over the January-1995 buyer set, probed with EVERY customer: per
-    probe, the bloom verdict, the exact membership, and the
+    probe, the bloom answer, the exact membership, and the
     false-positive flag. The green oracle row certifies the defining
     guarantee — zero false NEGATIVES — and prices the false-positive
     rate (~fill_ratio^k) that a bloom-pruned join pays at 100 TB.
@@ -377,7 +377,7 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: member bit positions are a map-side explode + distinct
     over a dimension-scan; probes explode to k integer positions and
     LEFT-join the (≤ m row) bit table — broadcast by construction; the
-    verdict is one aggregate per probe key. Nothing fact-sized shuffles.
+    answer is one aggregate per probe key. Nothing fact-sized shuffles.
     """
     ensure_session_conf(spark)
     orders = load_table(spark, sf_dir, "orders")

@@ -771,7 +771,7 @@ def cdc_live_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Binned range join under planted skew (r9 verdict directive #8): the
+# Binned range join under planted skew: the
 # telemetry shape that kills naive plans at 100 TB — "which events fall
 # inside each incident window" where one window covers the WHOLE range.
 RANGE_BIN_SEC = 1800  # 30-minute bins = the incident-window length

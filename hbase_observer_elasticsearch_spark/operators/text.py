@@ -5905,7 +5905,7 @@ FROM (
 """,
 )
 def search_nested_block_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES ``nested`` query (r11 verdict optional-#8a): each document's
+    """ES ``nested`` query: each document's
     fixed-size token chunks stand in for its array of nested objects —
     Lucene indexes those as hidden child docs in the parent's block,
     scores each child INDEPENDENTLY against the inner query (here:
@@ -6006,8 +6006,8 @@ FROM page2 WHERE rk <= {SA_PAGE_SIZE}
 """,
 )
 def search_after_cursor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES ``search_after`` deep pagination (r11 verdict optional-#8b,
-    the hits-side twin of search_composite_agg's after-key contract):
+    """ES ``search_after`` deep pagination (the hits-side twin of
+    search_composite_agg's after-key contract):
     page 2 of the {SA_TERM!r} BM25 hit list is fetched NOT by
     from+size offset (which re-sorts and discards page 1's hits on
     every deep page) but by the cursor predicate — the last hit of
@@ -7776,8 +7776,8 @@ def search_track_total_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r13 wave: script_score, geohash grid, rare_terms, matrix_stats,
-# string_stats, t_test (r12 verdict directive #8 + agg-DSL closure) ---
+# --- script_score, geohash grid, rare_terms, matrix_stats, string_stats,
+# t_test: the rest of the ES query and aggregation DSL ---
 
 SSC_TERM = "query"  # same term family as function_score; different script
 SSC_K = 128.0  # saturation pivot — power of two
@@ -7807,7 +7807,7 @@ FROM (
 )
 def search_script_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES ``script_score`` query with a deterministic script subset
-    (r12 verdict optional #8a — the last mainstream function_score
+    (the last mainstream function_score
     sibling): script = ``{SSC_W} * _score + saturation(n_chars,
     {SSC_K})``, i.e. the painless ``saturation(x, k) = x / (x + k)``
     pivot function ES ships for exactly this use, blended with the
@@ -7895,7 +7895,7 @@ FROM (
 """,
 )
 def agg_geohash_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES ``geohash_grid`` aggregation (r12 verdict optional #8c, next
+    """ES ``geohash_grid`` aggregation (next
     to geo_bounds/centroid): quantize each point to a {2**GH_BITS}x
     {2**GH_BITS} grid over fixed world bounds and BIT-INTERLEAVE the
     axis indices into the cell key — the Z-order structure geohash IS

@@ -1454,7 +1454,7 @@ def orders_open_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same-day-complete orders contribute NO delta at all — both branches
     filter end_day > start_day, so the +1 and -1 that would cancel are
-    simply never emitted (r4 advice: filtering only the -1 side counted
+    simply never emitted (filtering only the -1 side would count
     same-day orders as open forever; latent on TPC-H because l_shipdate
     is always after o_orderdate, but wrong on general data). The
     cumulative window runs over the DAY-grain delta table — thousands

@@ -391,7 +391,7 @@ def _spend_vs_balance(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         )
     cust = left.iloc[0]
     # int64 BEFORE summing: a float64 sum is exact only under 2^53 cents,
-    # while the oracle sums BIGINTs exactly (r8 advice)
+    # while the oracle sums BIGINTs exactly
     spend = (
         int(
             np.floor(right["o_totalprice"].to_numpy() * 100)

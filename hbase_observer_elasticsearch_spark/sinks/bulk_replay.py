@@ -28,12 +28,14 @@ of the data, never of wall-clock or randomness.
 
 ONE-ACTION-PER-ID RULE. Per-item retry is only order-safe if no two
 actions in a body touch the same _id (a retried delete landing after a
-same-body update would wipe it). The epoch builder therefore FUSES
-"delete then surviving partial puts" into a single ES ``index`` action
-(full-document replace) — the post-delete merge of partial docs IS a
-full document. Result: every body's items commute, per-item retries and
-whole-body replays are both absorbed, and the bulk needs fewer actions
-than the reference's delete+update pairs — strictly better at scale.
+same-body update would wipe it). The epoch builder (``epoch_bulk_lines``)
+reduces the epoch with the sink's own last-writer-wins merge
+(state_sink._lww) and then FUSES "delete then surviving partial puts"
+into a single ES ``index`` action (full-document replace) — the
+post-delete merge of partial docs IS a full document. Result: every
+body's items commute, per-item retries and whole-body replays are both
+absorbed, and the bulk needs fewer actions than the reference's
+delete+update pairs — strictly better at scale.
 """
 
 from __future__ import annotations
@@ -113,57 +115,25 @@ class FaultInjectingBulkEndpoint:
         items, i, any_err = [], 0, False
         while i < len(lines):
             act = json.loads(lines[i])
-            if "index" in act:
-                meta, payload = act["index"], json.loads(lines[i + 1])
-                if self._item_should_fail(meta["_id"]):
-                    self.n_item_rejections += 1
-                    any_err = True
-                    items.append(
-                        {"index": {"_id": meta["_id"], "status": 429}}
-                    )
-                else:
-                    self.docs[meta["_id"]] = dict(payload)  # full replace
-                    items.append(
-                        {"index": {"_id": meta["_id"], "status": 200}}
-                    )
-                i += 2
-            elif "update" in act:
-                meta, payload = act["update"], json.loads(lines[i + 1])
-                assert payload.get("doc_as_upsert") is True
-                if self._item_should_fail(meta["_id"]):
-                    self.n_item_rejections += 1
-                    any_err = True
-                    items.append(
-                        {"update": {"_id": meta["_id"], "status": 429}}
-                    )
-                else:
-                    doc = self.docs.setdefault(meta["_id"], {})
-                    doc.update(payload["doc"])
-                    items.append(
-                        {"update": {"_id": meta["_id"], "status": 200}}
-                    )
-                i += 2
-            elif "delete" in act:
-                meta = act["delete"]
-                if self._item_should_fail(meta["_id"]):
-                    self.n_item_rejections += 1
-                    any_err = True
-                    items.append(
-                        {"delete": {"_id": meta["_id"], "status": 429}}
-                    )
-                else:
-                    existed = self.docs.pop(meta["_id"], None) is not None
-                    items.append(
-                        {
-                            "delete": {
-                                "_id": meta["_id"],
-                                "status": 200 if existed else 404,
-                            }
-                        }
-                    )
-                i += 1
-            else:  # pragma: no cover — malformed body is a bug
-                raise AssertionError(f"unknown bulk action: {act}")
+            (kind, meta), = act.items()
+            if kind not in ("index", "update", "delete"):
+                raise ValueError(f"unknown bulk action: {act}")
+            payload = None if kind == "delete" else json.loads(lines[i + 1])
+            i += 1 if payload is None else 2
+            if kind == "update" and payload.get("doc_as_upsert") is not True:
+                raise ValueError(f"update without doc_as_upsert: {payload}")
+            _id, status = meta["_id"], 200
+            if self._item_should_fail(_id):
+                self.n_item_rejections += 1
+                any_err = True
+                status = 429
+            elif kind == "index":
+                self.docs[_id] = dict(payload)  # full replace
+            elif kind == "update":
+                self.docs.setdefault(_id, {}).update(payload["doc"])
+            elif self.docs.pop(_id, None) is None:
+                status = 404
+            items.append({kind: {"_id": _id, "status": status}})
 
         if ordinal in self._drop_after:
             self.n_transport_faults += 1
@@ -230,24 +200,17 @@ def post_bulk_with_retry(
     return stats
 
 
-def epoch_bulk_lines(
-    ep,
-    index: str = "docs",
-    order_cols: tuple[str, ...] = ("ts", "family", "seq"),
-    del_order_cols: tuple[str, ...] = ("ts", "seq"),
-    value_col: str = "value",
-) -> list[str]:
+def epoch_bulk_lines(ep, index: str = "docs") -> list[str]:
     """Compact one epoch of changefeed mutations into NDJSON bulk lines
     obeying the one-action-per-_id rule.
 
-    Per rowkey: survivors are puts strictly after the epoch's last
-    delete (ordered by ``del_order_cols``); the doc keeps the latest put
-    per qualifier (ordered by ``order_cols``, which must end in a
-    tiebreak-unique column such as seq). A key with a delete and no
-    survivors emits one `delete`; delete + survivors FUSE into one
-    full-doc `index`; puts only emit one partial-doc `update`
-    (doc_as_upsert). The returned list is rowkey-ordered for
-    deterministic bodies.
+    The epoch is reduced by the sink's last-writer-wins merge
+    (state_sink._lww over split_epoch's halves): per rowkey, the latest
+    delete and the winning put per qualifier among the puts after it.
+    Then per rowkey: a delete and no surviving cells emits one `delete`;
+    a delete and cells FUSE into one full-doc `index`; cells alone emit
+    one partial-doc `update` (doc_as_upsert). The returned list is
+    rowkey-ordered for deterministic bodies.
 
     Driver-side collect is bounded by live keys (post-compaction), not
     mutations; a cluster deployment runs the identical plan and POSTs
@@ -255,57 +218,38 @@ def epoch_bulk_lines(
     """
     from pyspark.sql import functions as F
 
+    from ..streaming.pipeline import split_epoch
     from .bulk_format import (
         action_line,
         doc_line,
         index_action_line,
         index_doc_line,
     )
+    from .state_sink import _epoch_rows, _lww
 
-    deleted = (
-        ep.filter(F.col("op") == "delete")
+    is_cell = F.col("qualifier").isNotNull()
+    keys = (
+        _lww(_epoch_rows(*split_epoch(ep)), False)
         .groupBy("rowkey")
         .agg(
-            F.max(F.struct(*[F.col(c) for c in del_order_cols])).alias(
-                "__dcut"
-            )
-        )
-    )
-    latest = (
-        ep.filter(F.col("op") == "put")
-        .join(deleted, "rowkey", "left")
-        .filter(
-            F.col("__dcut").isNull()
-            | (F.struct(*[F.col(c) for c in del_order_cols]) > F.col("__dcut"))
-        )
-        .groupBy("rowkey", "qualifier")
-        .agg(
-            F.max(
-                F.struct(
-                    *[F.col(c) for c in order_cols],
-                    F.col(value_col).cast("string").alias("__v"),
+            F.bool_or(~is_cell).alias("has_del"),
+            F.map_from_entries(
+                F.array_sort(
+                    F.collect_list(F.when(is_cell, F.struct("qualifier", "value")))
                 )
-            ).alias("m")
+            ).alias("doc"),
         )
     )
-    docs = latest.groupBy("rowkey").agg(
-        F.map_from_entries(
-            F.array_sort(
-                F.collect_list(F.struct("qualifier", F.col("m.__v")))
-            )
-        ).alias("doc")
-    )
-    merged = deleted.join(docs, "rowkey", "full")
-    has_del = F.col("__dcut").isNotNull()
-    has_doc = F.col("doc").isNotNull()
+    has_del = F.col("has_del")
+    has_doc = F.size("doc") > 0
     rows = (
-        merged.select(
+        keys.select(
             "rowkey",
             F.when(
                 has_del & ~has_doc,
                 action_line(F.col("rowkey"), F.lit(True), index),
             )
-            .when(has_del & has_doc, index_action_line(F.col("rowkey"), index))
+            .when(has_del, index_action_line(F.col("rowkey"), index))
             .otherwise(action_line(F.col("rowkey"), F.lit(False), index))
             .alias("a"),
             F.when(has_del & has_doc, index_doc_line(F.col("doc")))

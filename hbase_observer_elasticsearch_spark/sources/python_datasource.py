@@ -17,11 +17,14 @@ The partition count is an option (`numPartitions`, default 4); rows are
 dealt to partitions by `seq % numPartitions`, a stand-in for region
 ranges. Reading is Arrow-batch-friendly (pyarrow table → per-row tuples;
 a production reader would yield RecordBatches).
+
+The streaming face is one reader, `ChangefeedStreamReader`: offsets are
+event-id watermarks and each micro-batch is read on executors in
+``numPartitions`` slices; the driver reads only parquet footers.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -107,18 +110,7 @@ class ChangefeedDataSource(DataSource):
         return ChangefeedReader(self.options)
 
     def streamReader(self, schema) -> "ChangefeedStreamReader":
-        # ``readerMode=simple`` opts back into the driver-side
-        # SimpleDataSourceStreamReader demo path (raising NotImplemented
-        # triggers pyspark's documented fallback to simpleStreamReader).
-        if self.options.get("readerMode", "partitioned") == "simple":
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader (readerMode=simple)"},
-            )
         return ChangefeedStreamReader(self.options)
-
-    def simpleStreamReader(self, schema) -> "ChangefeedSimpleStreamReader":
-        return ChangefeedSimpleStreamReader(self.options)
 
 
 def _project_changefeed(t, out_cols=None):
@@ -426,9 +418,7 @@ class ChangefeedStreamReader(DataSourceStreamReader):
     ``numPartitions`` mod-slices of the offset range, read ON EXECUTORS
     via pyarrow with an eid-range row-group filter. The driver touches
     only the parquet FOOTER (min/max event_id statistics) — it never
-    materializes the feed, so driver memory is O(1) in feed size, unlike
-    the SimpleDataSourceStreamReader demo path below, which loads the
-    feed on the driver.
+    materializes the feed, so driver memory is O(1) in feed size.
 
     Replay contract: `partitions(start, end)` is a pure function of the
     offsets, so a restarted query re-planning the checkpointed
@@ -615,78 +605,3 @@ class ChangefeedStreamReader(DataSourceStreamReader):
 
     def stop(self):
         pass
-
-
-class ChangefeedSimpleStreamReader:
-    """Driver-side streaming reader (Spark 4
-    `SimpleDataSourceStreamReader`): offsets are row positions in seq
-    order, each micro-batch serves `batchSize` mutations — the streaming
-    face of the same connector (a real implementation would tail the
-    replication log / WAL and use log sequence numbers as offsets; the
-    offset/read/readBetweenOffsets replay contract is identical).
-
-    `readBetweenOffsets` makes the source REPLAYABLE: after a restart,
-    Spark re-requests exactly the uncommitted offset range, which is what
-    upgrades the pipeline to effectively-exactly-once (the reference's
-    requeue-on-failure, ElasticSearchBulkOperator.java:56-66, replays
-    blindly and duplicates instead).
-    """
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        self.batch = int(options.get("batchSize", "2500"))
-        self.out_cols = _parse_columns(options)
-        self._rows = None
-
-    # -- helpers ----------------------------------------------------------
-    def _load(self):
-        if self._rows is None:
-            import pyarrow.parquet as pq
-
-            # event_id always read (ordering key); otherwise only the
-            # source columns the projection derives from.
-            t = pq.read_table(
-                self.path,
-                columns=_source_columns(self.out_cols, extra=("event_id",)),
-            )
-            names = t.column_names
-            cols = [t[c].to_pylist() for c in names]
-            rows = sorted(zip(*cols))
-            idx = {c: i for i, c in enumerate(names)}
-
-            def build(r):
-                etype = r[idx["event_type"]] if "event_type" in idx else None
-                full = {
-                    "seq": r[idx["event_id"]],
-                    "op": "delete" if etype == "error" else "put",
-                    "rowkey": (
-                        str(r[idx["user_id"]]) if "user_id" in idx else None
-                    ),
-                    "qualifier": None if etype == "error" else etype,
-                    "value": (
-                        None
-                        if etype == "error" or "value" not in idx
-                        else r[idx["value"]]
-                    ),
-                }
-                return tuple(full[c] for c in self.out_cols)
-
-            self._rows = [build(r) for r in rows]
-        return self._rows
-
-    # -- SimpleDataSourceStreamReader contract ----------------------------
-    def initialOffset(self):
-        return {"pos": 0}
-
-    def read(self, start):
-        rows = self._load()
-        i0 = start["pos"]
-        i1 = min(i0 + self.batch, len(rows))
-        return iter(rows[i0:i1]), {"pos": i1}
-
-    def readBetweenOffsets(self, start, end):
-        rows = self._load()
-        return iter(rows[start["pos"] : end["pos"]])
-
-    def commit(self, end):
-        pass  # file-backed demo source: nothing to release

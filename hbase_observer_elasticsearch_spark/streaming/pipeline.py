@@ -29,10 +29,11 @@ import time
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import ensure_session_conf
+from ..sinks.state_sink import _epoch_rows, _lww
 from ..sources.changefeed import CHANGEFEED_SCHEMA, scratch_dir
 
 # Reference parity constants (observer6/ElasticSearchBulkOperator.java:26,61)
@@ -128,39 +129,21 @@ def drain(
 
 
 def compact_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Reduce an epoch's mutations to (cells, dels) for the LWW sink MERGE.
+    """An epoch reduced by the sink's own last-writer-wins merge (`_lww`),
+    as (cells, dels) for the sink MERGE.
 
-    cells: the latest put per touched (rowkey, qualifier), ordered by
-    (ts, family, seq) — family byte-order breaks same-ts collisions exactly
-    like the reference's NavigableMap iteration
-    (HbaseDataSyncEsObserver.java:93-102). Family is CARRIED into the sink
-    state so the same tiebreak applies when the colliding puts land in
-    DIFFERENT micro-batches (the sink's read merge orders by the same
-    triple).
-    dels: the latest delete per touched key.
+    cells: the winning put per (rowkey, qualifier) by (ts, family, seq)
+    among the puts after the epoch's latest delete — family byte-order
+    breaks same-ts collisions like the reference's NavigableMap iteration
+    (HbaseDataSyncEsObserver.java:93-102).
+    dels: (rowkey, ts, seq) of the latest delete per deleted key.
 
-    It ranks BEFORE the delete filter, so a same-ts put that loses the
-    family tiebreak but has a higher seq than the epoch's delete is dropped
-    although apply_changefeed keeps it. The sink write path therefore does
-    not use it: it hands the sink the raw split_epoch halves, and the
-    sink's read merge filters first and ranks in the same shuffle.
+    The sink write path does not need it: it hands the sink the raw
+    split_epoch halves, which the sink's read merge reduces the same way.
     """
-    w_q = Window.partitionBy("rowkey", "qualifier").orderBy(
-        F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc()
-    )
-    cells = (
-        batch.filter(F.col("op") == "put")
-        .withColumn("__rn", F.row_number().over(w_q))
-        .filter(F.col("__rn") == 1)
-        .select("rowkey", "qualifier", "value", "family", "ts", "seq")
-    )
-    dels = (
-        batch.filter(F.col("op") == "delete")
-        .groupBy("rowkey")
-        .agg(F.max(F.struct("ts", "seq")).alias("d"))
-        .select("rowkey", F.col("d.ts").alias("ts"), F.col("d.seq").alias("seq"))
-    )
-    return cells, dels
+    rows = _lww(_epoch_rows(*split_epoch(batch)), False)
+    tomb = F.col("qualifier").isNull()
+    return rows.filter(~tomb), rows.filter(tomb).select("rowkey", "ts", "seq")
 
 
 def split_epoch(batch: DataFrame) -> tuple[DataFrame, DataFrame]:

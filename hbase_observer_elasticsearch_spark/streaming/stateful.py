@@ -27,6 +27,11 @@ Scale design (100 TB changefeed):
 - at real scale add a state TTL via ``GroupStateTimeout`` (keys idle past
   the retention horizon are evicted and re-hydrated from the lakehouse
   state table on next touch).
+
+Every stateful operator here uses ``applyInPandasWithState``. The
+typed-state ``transformWithStateInPandas`` API is not used: its
+JVM<->Python state protocol needs the protobuf wheel, and this module's
+operators run without it.
 """
 
 from __future__ import annotations
@@ -148,121 +153,6 @@ def stateful_doc_state(
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=timeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Second-generation stateful API: transformWithStateInPandas (Spark 4.x).
-# Same LWW semantics as the applyInPandasWithState operator above, but the
-# doc lives in TYPED Spark state: a MapState keyed by qualifier plus a
-# small ValueState for (tombstone, version). With the RocksDB state store
-# this makes a put touch ONE map entry instead of rewriting a whole
-# serialized JSON blob per key — the difference that matters when docs are
-# wide and mutations are narrow (the reference's exact workload shape:
-# single-cell HBase puts, observer6/HbaseDataSyncEsObserver.java:93-102).
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover - import guard exercised implicitly
-    # The TWS state protocol speaks protobuf between the JVM and the Python
-    # driver worker; without the protobuf wheel the query crashes at
-    # PRE_INIT (observed: STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE,
-    # ImportError google.protobuf.descriptor). This container has no
-    # protobuf and installs are out of scope, so the operator is a
-    # documented environment-gated swap point, exactly like the multimodal
-    # codec stubs (operators/multimodal.py) — the processor logic itself is
-    # complete and parity-tested wherever the wheel exists
-    # (tests/test_streaming.py::test_tws_doc_state_parity skips without it).
-    import google.protobuf  # noqa: F401
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    _HAS_TWS = True
-except ImportError:  # Spark < 4.0 or no protobuf wheel
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-_TWS_CELL_KEY_SCHEMA = "qualifier string"
-_TWS_CELL_VAL_SCHEMA = "value string, ts_ns long, family string, seq long"
-_TWS_META_SCHEMA = "tomb_ts long, tomb_seq long, n long"
-
-
-class LwwDocProcessor(StatefulProcessor):
-    """Per-key LWW doc assembly on typed state primitives."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self.cells = handle.getMapState(
-            "cells", _TWS_CELL_KEY_SCHEMA, _TWS_CELL_VAL_SCHEMA
-        )
-        self.meta = handle.getValueState("meta", _TWS_META_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (rowkey,) = key
-        tomb_ts, tomb_seq, n = (
-            self.meta.get() if self.meta.exists() else (None, None, 0)
-        )
-        for pdf in rows:
-            n += len(pdf)
-            ts_ns = pdf["ts"].astype("int64")
-            for op, qual, val, fam, seq, t in zip(
-                pdf["op"], pdf["qualifier"], pdf["value"], pdf["family"],
-                pdf["seq"], ts_ns,
-            ):
-                seq, t = int(seq), int(t)
-                if op == "delete":
-                    if tomb_ts is None or (t, seq) > (tomb_ts, tomb_seq):
-                        tomb_ts, tomb_seq = t, seq
-                else:
-                    old = (
-                        self.cells.getValue((qual,))
-                        if self.cells.containsKey((qual,))
-                        else None
-                    )
-                    if old is None or _cell_key(t, fam, seq) > _cell_key(
-                        old[1], old[2], old[3]
-                    ):
-                        self.cells.updateValue((qual,), (val, t, fam, seq))
-        if tomb_ts is not None:
-            # prune map entries the tombstone killed (bounds state size);
-            # one pass over THIS key's map only
-            dead = [
-                k
-                for k, v in self.cells.iterator()
-                if (v[1], v[3]) <= (tomb_ts, tomb_seq)
-            ]
-            for k in dead:
-                self.cells.removeKey(k)
-        self.meta.update((tomb_ts, tomb_seq, n))
-        doc = {k[0]: v[0] for k, v in self.cells.iterator()}
-        yield pd.DataFrame(
-            {
-                "rowkey": [rowkey],
-                "doc_json": [json.dumps(doc, sort_keys=True)],
-                "version": [n],
-                "evicted": [False],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_doc_state_tws(spark: SparkSession, changefeed_dir: str) -> DataFrame:
-    """transformWithStateInPandas twin of :func:`stateful_doc_state` —
-    identical emission contract (rowkey, doc_json, version, evicted), so
-    the two stateful APIs are interchangeable downstream and parity-tested
-    against the same golden state."""
-    if not _HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0 and the "
-            "protobuf wheel (the TWS JVM<->Python state protocol); gate "
-            "callers on streaming.stateful._HAS_TWS"
-        )
-    cf = read_feed(spark, changefeed_dir)
-    return cf.groupBy("rowkey").transformWithStateInPandas(
-        statefulProcessor=LwwDocProcessor(),
-        outputStructType=_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

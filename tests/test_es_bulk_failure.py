@@ -5,7 +5,7 @@ apply — the reference's actual failure modes
 failures and requeues on transport error; variant C retries items,
 README_zh.md:305-312). The retry client must converge to EXACTLY the
 clean run's final document state (the exactly-once claim under the
-reference's failure modes, r9 verdict directive #5).
+reference's failure modes).
 
 Wire realism: the faulty server genuinely closes the TCP connection
 without a response (http.client.RemoteDisconnected on the client), not
@@ -22,6 +22,7 @@ import urllib.error
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pytest
 from pyspark.sql import functions as F
 
 from hbase_observer_elasticsearch_spark.sinks.bulk_replay import (
@@ -216,3 +217,29 @@ def test_streaming_foreachbatch_drain_through_faulty_endpoint(
     assert endpoint.docs == EXPECTED_STATE
     assert endpoint.n_transport_faults == 2
     assert endpoint.n_item_rejections >= 1
+
+
+def test_endpoint_rejects_update_without_doc_as_upsert():
+    """A partial-doc update must be create-if-absent; the endpoint
+    raises on any other update body instead of guessing."""
+    ep = FaultInjectingBulkEndpoint()
+    body = '{"update":{"_id":"k"}}\n{"doc":{"c1":"v"}}\n'
+    with pytest.raises(ValueError, match="doc_as_upsert"):
+        ep.post(body)
+
+
+def test_failure_replay_raises_when_a_fault_is_not_injected(
+    spark, sf_dir, monkeypatch
+):
+    """sink_bulk_failure_replay checks its fault schedule ran: with the
+    lost-response fault disarmed it sees one transport fault, not two,
+    and raises."""
+    from hbase_observer_elasticsearch_spark.operators.cdc import (
+        sink_bulk_failure_replay,
+    )
+
+    monkeypatch.setattr(
+        FaultInjectingBulkEndpoint, "arm_drop_response_next", lambda self: None
+    )
+    with pytest.raises(RuntimeError, match="transport faults"):
+        sink_bulk_failure_replay(spark, sf_dir)

@@ -405,8 +405,8 @@ def test_share_of_group_windows_over_aggregate(spark, sf_dir):
 
 
 def test_aqe_skew_join_splits_hot_partition(spark, sf_dir):
-    """A/B partner of test_salted_join_is_shuffle_join_on_salt (r4 verdict
-    directive #6): the UNSALTED skewed join, run under AQE with the skew
+    """A/B partner of test_salted_join_is_shuffle_join_on_salt: the
+    UNSALTED skewed join, run under AQE with the skew
     thresholds scaled down to fixture size, must show runtime skew-join
     splitting in the FINAL adaptive plan (SortMergeJoin(skew=true)).
 

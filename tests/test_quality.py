@@ -105,7 +105,7 @@ def test_dedup_savings_monotone(spark, sf_dir):
     # deliberately NOT ordered against each other: exact groups on a
     # sorted-word canonical hash while near-dup clusters on shingle
     # Jaccard, and a same-word-bag/different-order pair can be an exact
-    # dup yet fall under the Jaccard threshold (r4 advice).
+    # dup yet fall under the Jaccard threshold.
     assert raw.n_docs >= ex.n_docs
     assert raw.n_docs >= near.n_docs
     assert raw.total_chars >= ex.total_chars

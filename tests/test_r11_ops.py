@@ -40,13 +40,13 @@ class TestRealDecode:
             decode_image(b"\x89PNG\r\n\x1a\n....")
 
     def test_bmp_short_headers_raise_valueerror(self):
-        # ADVICE r11: 'BM' prefix shorter than the 54-byte headers must
+        # A 'BM' prefix shorter than the 54-byte headers must
         # be the documented ValueError, not a leaked struct.error.
         with pytest.raises(ValueError, match="truncated BMP headers"):
             decode_image(b"BM" + b"\x00" * 10)
 
     def test_wav_data_size_overrun_raises(self):
-        # ADVICE r11: a data chunk whose declared size overruns the
+        # A data chunk whose declared size overruns the
         # payload must fail loudly, not return stats over a silent
         # truncation (mirrors the BMP truncated-pixel-array check).
         import struct as _struct

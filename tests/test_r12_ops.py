@@ -1,5 +1,5 @@
 """r12 operator tests: source-side filter pushdown in the changefeed
-Python DataSource (rowkey-region pruning, r11 verdict directive #3)."""
+Python DataSource (rowkey-region pruning)."""
 
 from __future__ import annotations
 
@@ -43,7 +43,7 @@ class TestPrefixRanges:
 
 class TestReaderLevelPruning:
     """Planning-time partition pruning asserted at the reader level —
-    the 'planned partition count' proof the r11 verdict asked for."""
+    the 'planned partition count' proof."""
 
     def _reader(self):
         return RegionChangefeedReader({"path": EVENTS})
@@ -296,7 +296,7 @@ class TestPushdownProperty:
         check()
 
     def test_prefix_then_eq_conjunction_is_empty(self):
-        # r12 advice (high): StartsWith('43') ∧ EqualTo('4') matches no
+        # StartsWith('43') ∧ EqualTo('4') matches no
         # rowkey; the eq branch must intersect keys with the ranges the
         # earlier prefix filter narrowed, or read() (which prefers keys
         # over ranges) silently widens the conjunction to user_id=4.
@@ -346,7 +346,7 @@ class TestPushdownProperty:
         assert got == expected
 
     def test_eq_key_beyond_int64_is_planned_away(self):
-        # r12 advice (low): a >int64 eq key can never equal a canonical
+        # A >int64 eq key can never equal a canonical
         # str(int64) rowkey; it must die at planning, not OverflowError
         # pyarrow's int64 in-filter on the executor.
         r = RegionChangefeedReader({"path": EVENTS})

@@ -1,5 +1,5 @@
 """r13 operator tests: STREAM-side region pruning in the changefeed
-Python DataSource (r12 verdict directive #3) — the batch reader's
+Python DataSource — the batch reader's
 rowkey pushdown brought to `ChangefeedStreamReader` via the
 ``rowkeyPrefix`` option, with per-micro-batch planned partitions pinned
 at the reader level (the `cdc_pushdown_region_scan` pattern, stream
@@ -120,8 +120,7 @@ class TestStreamRegionPruning:
 
 
 class TestColumnPruning:
-    """Column pruning via the ``columns`` option (r12 verdict directive
-    #4): the DataSource narrows its declared schema AND every reader's
+    """Column pruning via the ``columns`` option: the DataSource narrows its declared schema AND every reader's
     executor-side parquet read shrinks to the source columns the
     projection derives from."""
 
@@ -212,18 +211,3 @@ class TestColumnPruning:
         assert sorted(map(tuple, narrow.collect())) == sorted(
             map(tuple, full.collect())
         )
-
-    def test_simple_stream_reader_honors_projection(self):
-        from hbase_observer_elasticsearch_spark.sources.python_datasource import (
-            ChangefeedSimpleStreamReader,
-        )
-
-        r = ChangefeedSimpleStreamReader(
-            {"path": EVENTS, "columns": "seq,value", "batchSize": "50"}
-        )
-        rows, off = r.read(r.initialOffset())
-        rows = list(rows)
-        assert off == {"pos": 50} and len(rows) == 50
-        assert all(len(t) == 2 for t in rows)
-        # seq ordering preserved; value None on deletes
-        assert [t[0] for t in rows] == sorted(t[0] for t in rows)

@@ -65,7 +65,7 @@ def test_pattern_within_bruteforce(spark, sf_dir):
     for uid, grp in ev.groupby("user_id"):
         # mirror the operator's (ts, event_id) tie-break: a purchase at
         # the SAME timestamp as the view but with a later event_id is a
-        # following row, hence a conversion candidate (r4 advice — a
+        # following row, hence a conversion candidate (a
         # ts-only comparison would miss same-ts collisions)
         views = list(
             grp[grp.event_type == "view"][["ts", "event_id"]].itertuples(

@@ -11,7 +11,8 @@ Invariants:
 4. Every memo_build_* row in bench.memo_builds() charges a live
    registered memo (memos._REGISTRY), and every live memo family has at
    least one charged build row — a memo without a build row hides its
-   cold cost from the headline.
+   cold cost from the headline. Every row of the committed bench_out.json
+   is a registered query or one of those build rows.
 
 Whether a declared contract matches what the query does (it starts a
 stream when it runs, and no undeclared query does) is checked per query
@@ -105,15 +106,13 @@ def test_memo_build_rows_match_live_memos():
     uncharged = live - charged
     assert not uncharged, f"live memos with no bench build row: {uncharged}"
 
-    # and the last bench artifact, if present, only charged declared rows
+    # and every row of the last bench artifact, if present, is a
+    # registered query or a declared memo build row
     out = os.path.join(REPO, "bench_out.json")
     if os.path.exists(out):
-        emitted = {
-            q
-            for q in json.load(open(out))["queries"]
-            if q.startswith("memo_build_")
-        }
-        assert emitted <= set(rows), emitted - set(rows)
+        emitted = set(json.load(open(out))["queries"])
+        stale = emitted - set(rows) - set(queries())
+        assert not stale, f"bench_out.json rows for no query or memo: {stale}"
 
 
 def test_no_duplicate_module_constants():

@@ -25,7 +25,7 @@ from hbase_observer_elasticsearch_spark.sinks.state_sink import EmulatedEsSink
 from hbase_observer_elasticsearch_spark.sources.changefeed import (
     events_as_changefeed,
 )
-from hbase_observer_elasticsearch_spark.streaming.pipeline import compact_epoch
+from hbase_observer_elasticsearch_spark.streaming.pipeline import split_epoch
 
 
 def _epoch_ranges(cf, n_epochs: int):
@@ -41,8 +41,7 @@ def _run_schedule(spark, cf, schedule, root: str, epoch_ids=None):
     sink = EmulatedEsSink(spark, root)
     for (e_lo, e_hi), epoch_id in zip(schedule, epoch_ids or range(len(schedule))):
         batch = cf.filter((F.col("seq") >= e_lo) & (F.col("seq") <= e_hi))
-        cells, dels = compact_epoch(batch)
-        sink.apply(cells, dels, epoch_id)
+        sink.apply(*split_epoch(batch), epoch_id)
     return sink
 
 
@@ -77,8 +76,7 @@ def test_same_sink_reapply_is_noop(spark, sf_dir, tmp_path):
     before = _state_rows(sink)
     e_lo, e_hi = ranges[1]
     batch = cf.filter((F.col("seq") >= e_lo) & (F.col("seq") <= e_hi))
-    cells, dels = compact_epoch(batch)
-    sink.apply(cells, dels)  # redelivered last epoch
+    sink.apply(*split_epoch(batch))  # redelivered last epoch
     assert _state_rows(sink) == before
 
 

@@ -175,8 +175,8 @@ def test_python_datasource_stream_restart_exactly_once(spark, sf_dir, tmp_path):
 
 def test_python_datasource_stream_partition_parallel(spark, sf_dir, tmp_path):
     """The streaming face of the connector must plan >1 input partition
-    per micro-batch (r4 verdict directive #1: executors — not the driver
-    — read each offset range; the DataSourceStreamReader plans
+    per micro-batch (executors — not the driver — read each offset
+    range; the DataSourceStreamReader plans
     numPartitions mod-slices of every eid range)."""
     import os
 
@@ -233,45 +233,3 @@ def test_python_datasource_stream_partition_parallel(spark, sf_dir, tmp_path):
         per_batch_partitions,
         per_batch_rows,
     )
-
-
-def test_python_datasource_simple_reader_fallback(spark, sf_dir, tmp_path):
-    """readerMode=simple keeps the SimpleDataSourceStreamReader demo path
-    reachable (pyspark's documented fallback when streamReader raises
-    NotImplemented)."""
-    import os
-
-    from hbase_observer_elasticsearch_spark.sources.python_datasource import (
-        register_changefeed_datasource,
-    )
-
-    register_changefeed_datasource(spark)
-    events_path = os.path.join(sf_dir, "events.parquet")
-    expected = spark.read.parquet(events_path).count()
-    out = str(tmp_path / "out")
-    q = (
-        spark.readStream.format("changefeed_py")
-        .option("path", events_path)
-        .option("readerMode", "simple")
-        .option("batchSize", str(expected))  # one prefetched batch
-        .load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import time
-
-    deadline = time.monotonic() + 120
-    while time.monotonic() < deadline:
-        try:
-            if spark.read.parquet(out).count() >= expected:
-                break
-        except Exception:
-            pass
-        time.sleep(0.2)
-    q.stop()
-    q.awaitTermination(60)
-    assert spark.read.parquet(out).count() == expected

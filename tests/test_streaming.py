@@ -16,6 +16,7 @@ from hbase_observer_elasticsearch_spark.sources.changefeed import (
 )
 from hbase_observer_elasticsearch_spark.streaming.pipeline import (
     compact_epoch,
+    split_epoch,
     start_pipeline,
 )
 
@@ -74,6 +75,26 @@ def test_compact_epoch(spark):
     assert got[("r3", "c1")] == "from_b"  # family byte-order collision
     assert got[("r4", "c1")] == "winner"  # out-of-order resolved by ts
     assert {r["rowkey"] for r in dels.collect()} == {"r2", "r5"}
+
+
+def test_compact_epoch_matches_batch_replay(spark, tmp_path):
+    """A same-ts put that loses the family tiebreak to a pre-delete put
+    but comes after the delete survives compaction: compact_epoch filters
+    the deleted cells before it ranks, as apply_changefeed does."""
+    cols = "seq long, op string, rowkey string, family string, qualifier string, value string, ts timestamp"
+    batch = spark.createDataFrame(
+        [
+            (1, "put", "k", "z", "c1", "vz", _ts(5)),
+            (2, "delete", "k", None, None, None, _ts(5)),
+            (3, "put", "k", "a", "c1", "va", _ts(5)),
+        ],
+        cols,
+    )
+    expected = state_as_dict(apply_changefeed(batch))
+    assert expected == {"k": {"c1": "va"}}
+    sink = EmulatedEsSink(spark, str(tmp_path / "s"))
+    sink.apply(*compact_epoch(batch))
+    assert state_as_dict(sink.read_state()) == expected
 
 
 def _cells(spark, rows):
@@ -457,8 +478,7 @@ def test_cross_epoch_family_tiebreak(spark, tmp_path):
     for order in ([row_z, row_a], [row_a, row_z]):
         sink = EmulatedEsSink(spark, str(tmp_path / f"s{order[0][0]}"))
         for row in order:  # one epoch per mutation
-            cells, dels = compact_epoch(spark.createDataFrame([row], cols))
-            sink.apply(cells, dels)
+            sink.apply(*split_epoch(spark.createDataFrame([row], cols)))
         assert state_as_dict(sink.read_state()) == expected
 
 
@@ -586,47 +606,6 @@ def test_streaming_put_delete_interval_join(spark, tmp_path):
         ).collect()
     }
     assert got == want and len(want) > 0
-
-
-def test_tws_doc_state_parity(spark, tmp_path):
-    """transformWithStateInPandas twin must converge to the same golden
-    state as the applyInPandasWithState operator and the batch replay.
-    Skips where the TWS protobuf dependency is absent (this container);
-    the operator raises a clear NotImplementedError there instead of
-    crashing the streaming runner at PRE_INIT."""
-    import json
-
-    import pytest
-
-    from hbase_observer_elasticsearch_spark.streaming import stateful
-
-    cf_dir = str(tmp_path / "cf")
-    write_changefeed_stream_dir(fixture_changefeed(spark), cf_dir, n_files=3)
-    if not stateful._HAS_TWS:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful.stateful_doc_state_tws(spark, cf_dir)
-        pytest.skip("transformWithStateInPandas protobuf dependency absent")
-
-    q = (
-        stateful.stateful_doc_state_tws(spark, cf_dir)
-        .writeStream.format("memory")
-        .queryName("tws_parity")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    last: dict = {}
-    for r in spark.table("tws_parity").collect():
-        if r["rowkey"] not in last or r["version"] > last[r["rowkey"]]["version"]:
-            last[r["rowkey"]] = r
-    got = {
-        k: json.loads(v["doc_json"])
-        for k, v in last.items()
-        if json.loads(v["doc_json"])
-    }
-    assert got == EXPECTED_STATE
 
 
 def test_session_window_merges_on_bridge_event(spark, tmp_path):

@@ -10,7 +10,7 @@ Usage: python tools/check.py [sf_dir] [query_name ...]
 
 --json writes a CORRECTNESS_r{N}.json-shaped artifact, so every round can
 record the FULL suite locally even though the external driver only checks
-a 50-entry prefix of the registry (r2 advice: rotated-out queries would
+a 50-entry prefix of the registry (queries outside that prefix would
 otherwise have no recorded check at all).
 """
 

@@ -1,6 +1,6 @@
 """Generate a 10x documents/embeddings fixture for the scale rehearsal.
 
-The r4 verdict (directive #4) asks for empirical evidence that the LSH /
+The scale rehearsal gives empirical evidence that the LSH /
 CC / ANN plans follow their claimed complexity curves, not just plan
 shape. /root/testdata is read-only, so this writes a statistically
 matched 10x set (50k docs, 20k embeddings vs sf0.1's 5k/2k) under

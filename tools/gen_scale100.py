@@ -1,5 +1,5 @@
 """Generate a 100x documents/embeddings fixture for the 100x spot
-rehearsal (r9 verdict directive #6).
+rehearsal.
 
 The 10x rehearsal (tools/gen_scale10.py + tools/scale_rehearsal.py)
 gives one decade of scaling evidence; the brief's bar is "survives a

@@ -1,8 +1,8 @@
 """Refresh BENCH_PREV.json from the newest bench_out.json — KEEPING
-host_probe_s (r10 verdict directive #4: the cross-boot delta methodology
-reads net-of-probe ratios, so the committed prev map must carry the probe
-it was measured under; the r10 refresh dropped it and the net ratio had
-to be reconstructed from commit prose).
+host_probe_s (the cross-boot delta methodology reads net-of-probe
+ratios, so the committed prev map must carry the probe it was measured
+under; without it the net ratio can only be reconstructed from commit
+prose).
 
 Usage: python tools/refresh_bench_prev.py  (after a bench.py run)
 """

@@ -1,12 +1,11 @@
-"""100x spot rehearsal for the scale-anchor families (r9 verdict
-directive #6; postings/retrieval families added per r11 directives
-#4/#6): dedup verify, winnowing fingerprints, IVF-PQ, pair-mass audit,
+"""100x spot rehearsal for the scale-anchor families (and the
+postings/retrieval families): dedup verify, winnowing fingerprints, IVF-PQ, pair-mass audit,
 the text_postings memo build, postings delta-stats, dis_max, fuzzy.
 
 The 10x rehearsal fits one decade of scaling; this measures a SECOND
 decade (sf0.1 -> .scale10 -> .scale100 = 5k/50k/500k docs, 2k/20k/200k
 vectors) and judges each family's decade-2 (10x->100x) wall ratio
-against its DESIGN exponent (r11 directive #5) — decade-1 fits are
+against its DESIGN exponent — decade-1 fits are
 recorded but never extrapolated, because an overhead-flat first decade
 makes a log-linear fit meaningless. Pair mass is also recorded so a
 super-linear wall can be attributed to real duplicate mass rather than
@@ -46,7 +45,7 @@ SCALES = {
 # one cold draw (the build is the measurement); linear queries best-of-2.
 # "postings_memo" is special-cased below: it times the text_postings
 # memo build cold, and the retrieval families after it ride warm —
-# the bench execution context (r11 verdict directives #4/#6).
+# the bench execution context.
 FAMILIES = {
     "dedup_pair_mass_audit": ("dedup_pair_mass_audit", 2),
     "dedup_verify": ("dedup_ngram_jaccard", 1),
@@ -56,7 +55,7 @@ FAMILIES = {
     "postings_delta": ("search_postings_delta_stats", 2),
     "dis_max": ("search_dis_max", 2),
     "fuzzy": ("search_fuzzy_term", 2),
-    # positional-join retrieval (r12 verdict directive #5): the one
+    # positional-join retrieval: the one
     # retrieval shape whose pair mass can exceed postings grain
     # (positions^2-per-doc in the worst case) — measured here so the
     # decade-2 ratio either lands within the postings-family cap or
@@ -65,15 +64,14 @@ FAMILIES = {
     "intervals": ("search_intervals_ordered", 2),
     "match_phrase_prefix": ("search_match_phrase_prefix", 2),
     "nested_block_join": ("search_nested_block_join", 2),
-    # reverse search at scale (r12 verdict optional #8b): registered
+    # reverse search at scale: registered
     # queries matched against the incoming corpus — per-doc work is a
     # bounded query-set probe, so the pass is linear in corpus tokens.
     "percolate": ("search_percolate_queries", 2),
 }
 
 # Per-family DESIGN scaling law (exponent of wall vs corpus size), the
-# yardstick decade-2 growth is judged against (r11 verdict directive
-# #5: never extrapolate a log-linear fit from an overhead-flat decade
+# yardstick decade-2 growth is judged against (never extrapolate a log-linear fit from an overhead-flat decade
 # — the fit explodes on any real growth; measure against what the
 # operator is DESIGNED to do instead). The anchors are O(n^1.5)
 # (pair-join / codebook families); the postings/retrieval families are
@@ -137,7 +135,7 @@ def main() -> None:
             out["scales"][scale][fam] = rec
             print(f"{scale:>5} {fam:<22} {rec}", flush=True)
 
-    # Headline methodology (r11 verdict directive #5): judge each family
+    # Headline methodology: judge each family
     # by its MEASURED DECADE-2 EXPONENT against its DESIGN exponent.
     # Decade 1 (1x->10x) is routinely fixed-overhead-flat at these
     # absolute walls, so a log-linear fit on it has no predictive

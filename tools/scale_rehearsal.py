@@ -1,4 +1,4 @@
-"""Scale rehearsal (r4 verdict directive #4): run the dedup + similarity
+"""Scale rehearsal: run the dedup + similarity
 + connected-components families at sf0.1 (5k docs / 2k vectors) and at
 the 10x fixture (tools/gen_scale10.py: 50k / 20k), and record wall time,
 shuffle read/write bytes (Spark REST API), and the structural counts
@@ -12,7 +12,7 @@ that prove the complexity claims empirically:
   data is ~10x scan at worst (brute-force baseline) and far less for the
   bucketed families.
 
-r6 additions (r5 verdict directives #3/#5): the dedup_pair_mass_audit
+Also: the dedup_pair_mass_audit
 band decomposition is committed into the structure section, and a
 streaming family drains the three put-delete interval joins over 1x vs
 10x HISTORY (same rate) recording max state-store rows — the empirical
@@ -180,7 +180,7 @@ def run_scale(spark, ui, app_id, sf_dir, qs) -> dict:
     verified = dd._verified_pairs_memo(spark, sf_dir).count()
     labels = dd._jaccard_cc_labels(spark, sf_dir)
     n_clusters = labels.select("label").distinct().count()
-    # pair-mass decomposition (r5 directive #3): band rows are tiny
+    # pair-mass decomposition: band rows are tiny
     # (<= ~20), and their capped_pair_mass totals ARE the work the
     # exact verify path performs — committed here so wall-ratio growth
     # is attributable to duplicate mass, not guessed at.
@@ -228,7 +228,7 @@ def run_scale(spark, ui, app_id, sf_dir, qs) -> dict:
 
 
 def run_semdedup_scale(spark, sf_dir: str, base_n: int) -> dict:
-    """SemDeDup cluster-granularity rehearsal (r7 verdict directive #3):
+    """SemDeDup cluster-granularity rehearsal:
     within-cluster pair mass is sum_cell |cell|*(|cell|-1)/2 — with k
     FIXED it grows ~quadratically in corpus size (each cell ~n/k), with
     k scaled proportionally to n each cell stays ~constant and total
@@ -254,7 +254,7 @@ def run_semdedup_scale(spark, sf_dir: str, base_n: int) -> dict:
     for label, k in (
         ("fixed_k", sm.KMEANS_K),
         ("k_prop_n", k_prop),
-        ("k_sqrt_n", sm._derived_k(n)),  # the SHIPPED law (r10 verdict #1)
+        ("k_sqrt_n", sm._derived_k(n)),  # the SHIPPED law
     ):
         t0 = time.perf_counter()
         cent = sm.kmeans_fit(e, k=k, iters=sm.KMEANS_ITERS)
@@ -337,9 +337,8 @@ def run_semdedup_scale(spark, sf_dir: str, base_n: int) -> dict:
             f"wall={pairs_wall:.2f}s",
             flush=True,
         )
-    # r9: the REGISTERED query end-to-end (derives k = _derived_k(n)
-    # itself since the r8-verdict fix) — cold codebook train + assignment
-    # + pair emit, the number the verdict's done-criterion asks for.
+    # the REGISTERED query end-to-end (it derives k = _derived_k(n)
+    # itself) — cold codebook train + assignment + pair emit.
     t2 = time.perf_counter()
     n_reg = sm.dedup_semantic_kmeans(spark, sf_dir).count()
     out["registered_query"] = {
@@ -492,7 +491,7 @@ def main() -> None:
     ten = run_scale(spark, ui, app_id, scale_dir, qs)
     clear_memos(spark)
 
-    # streaming state family (r5 verdict directive #5): same event rate,
+    # streaming state family: same event rate,
     # 1x vs 10x HISTORY — max state rows must stay ~flat while input
     # rows grow 10x, or the O(rate x (horizon + within)) docstring bound
     # is prose, not fact.
@@ -502,7 +501,7 @@ def main() -> None:
     print("=== streaming state: 10x history ===", flush=True)
     s_ten = run_streaming_scale(spark, "/root/testdata/sf0.1", 10)
     clear_memos(spark)
-    # r10 verdict directive #7: a SECOND decade for the state-heaviest
+    # a SECOND decade for the state-heaviest
     # join — 100x history at constant rate must leave max state rows at
     # the same watermark-bounded plateau.
     print("=== streaming state: 100x history (interval join) ===", flush=True)
@@ -541,7 +540,7 @@ def main() -> None:
         },
     }
 
-    # SemDeDup cluster-granularity rehearsal (r7 verdict directive #3):
+    # SemDeDup cluster-granularity rehearsal:
     # fixed k vs k ∝ n at 1x and 10x — the pair-mass growth law, measured.
     print("=== semdedup k-scaling: 1x ===", flush=True)
     sem_one = run_semdedup_scale(spark, "/root/testdata/sf0.1", base_n=2000)
@@ -564,7 +563,7 @@ def main() -> None:
         },
         "k_scaling_rule": (
             "the SHIPPED law is k = ceil(sqrt(n)) (FAISS nlist "
-            "practice, r10 verdict #1): fixed k makes the within-cell "
+            "practice): fixed k makes the within-cell "
             "PAIR stage quadratic (measured ~100x pair mass at 10x "
             "data), k ∝ n bounds pairs but makes the ASSIGNMENT stage "
             "(n x k distances) quadratic (measured 12.9x over its "
@@ -606,7 +605,7 @@ def main() -> None:
             "dedup_semantic_kmeans derives k from the corpus count "
             "(k=8 at 1x, k=80 at 10x) — semdedup_k_scaling's "
             "registered_query rows measure the shipped operator "
-            "end-to-end (r8 verdict directive #1 done criterion); the "
+            "end-to-end; the "
             "fixed_k variant is retained as the counterfactual "
             "(~109x pair mass / ~8x pair wall at 10x)."
         ),
