@@ -36,8 +36,8 @@ def load_prior(
     committed snapshot of the previous round's official full map, then
     the last bench_out.json; the driver's BENCH_r{N}.json wrappers only
     parse the slowest-10 tail line, so they are the final fallback
-    (sorted by parsed round number — lexicographic order would put r9
-    after r10 from round 10 on). A candidate that shares no query names
+    (sorted by the number parsed from the file name — lexicographic order
+    would put BENCH_r9 after BENCH_r10). A candidate that shares no query names
     with the current registry (e.g. after a rename sweep) is skipped so
     the delta falls through to an older comparable prior instead of
     silently becoming null and disabling looks_regressed escalation."""

@@ -36,26 +36,34 @@ from ..functions.deterministic import (
     sql_davg,
     sql_dsum,
 )
+from ..functions.ranking import ranked_topk_per
 from ..registry import register
 from ..sources.changefeed import scratch_dir as _scratch
 from ..session import ensure_session_conf
 
 
-def latest_by_key(
-    df: DataFrame, key_cols: list[str], order_cols: list
-) -> DataFrame:
-    """Last-write-wins: keep the single latest record per key.
+def _latest_event(events: DataFrame) -> DataFrame:
+    """Each user's latest event by (ts, event_id): the reference's
+    idempotent doc upsert (#7) for whole-record mutations."""
+    return ranked_topk_per(
+        events, ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()],
+        1, rk_col=None,
+    )
 
-    Spark restatement of the reference's idempotent doc upsert (#7): the
-    final ES doc state for a key is the merge of its mutations in order;
-    for whole-record mutations that is simply the latest record.  One
-    shuffle on ``key_cols``; survives 100 TB because state per key is O(1).
-    """
-    w = Window.partitionBy(*key_cols).orderBy(*[c.desc() for c in order_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+
+def _events_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events`` read as a cell changefeed (seq, op, rowkey, qualifier,
+    value, ts): an ``error`` event stands for a delete."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.select(
+        F.col("event_id").alias("seq"),
+        F.when(F.col("event_type") == "error", "delete")
+        .otherwise("put")
+        .alias("op"),
+        F.col("user_id").alias("rowkey"),
+        F.col("event_type").alias("qualifier"),
+        "value",
+        "ts",
     )
 
 
@@ -94,7 +102,7 @@ def cdc_last_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     events = load_table(spark, sf_dir, "events")
-    latest = latest_by_key(events, ["user_id"], [F.col("ts"), F.col("event_id")])
+    latest = _latest_event(events)
     return latest.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_users"),
         dsum("value").alias("sum_value"),
@@ -129,7 +137,7 @@ def cdc_delete_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     events = load_table(spark, sf_dir, "events")
-    latest = latest_by_key(events, ["user_id"], [F.col("ts"), F.col("event_id")])
+    latest = _latest_event(events)
     surviving = latest.filter(F.col("event_type") != "error")
     return surviving.agg(
         F.count(F.lit(1)).alias("n_surviving"),
@@ -342,7 +350,9 @@ def cdc_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted = drain(
         spark, lambda s: stateful_doc_state(s, cf_dir), "update", parts=None
     )
-    final = latest_by_key(emitted, ["rowkey"], [F.col("version")])
+    final = ranked_topk_per(
+        emitted, ["rowkey"], [F.col("version").desc()], 1, rk_col=None
+    )
     # qualifiers is stringified (not array<string>): the driver's pandas
     # canonicalizer cannot sort/hash list-valued columns.
     return final.select(
@@ -672,24 +682,10 @@ def cdc_retention_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bound that matters on an unbounded feed.
     """
     ensure_session_conf(spark)
-    ev = load_table(spark, sf_dir, "events")
-    cf = ev.select(
-        F.col("event_id").alias("seq"),
-        F.when(F.col("event_type") == "error", "delete")
-        .otherwise("put")
-        .alias("op"),
-        F.col("user_id").alias("rowkey"),
-        F.col("event_type").alias("qualifier"),
-        "value",
-        "ts",
-    )
-    w = Window.partitionBy("rowkey", "qualifier").orderBy(
-        F.col("ts").desc(), F.col("seq").desc()
-    )
-    latest = (
-        cf.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    cf = _events_changefeed(spark, sf_dir)
+    latest = ranked_topk_per(
+        cf, ["rowkey", "qualifier"], [F.col("ts").desc(), F.col("seq").desc()],
+        1, rk_col=None,
     )
     cutoff = cf.agg(
         (F.max("ts") - F.expr("INTERVAL 7 DAY")).alias("cutoff")
@@ -766,31 +762,21 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters here push to the scan.
     """
     ensure_session_conf(spark)
-    ev = load_table(spark, sf_dir, "events")
-    cf = ev.select(
-        F.col("event_id").alias("seq"),
-        F.when(F.col("event_type") == "error", "delete")
-        .otherwise("put")
-        .alias("op"),
-        F.col("user_id").alias("rowkey"),
-        F.col("event_type").alias("qualifier"),
-        "value",
-        "ts",
-    )
+    cf = _events_changefeed(spark, sf_dir)
     cuts = cf.agg(
         (F.max("ts") - F.expr("INTERVAL 14 DAY")).alias("t1"),
         (F.max("ts") - F.expr("INTERVAL 7 DAY")).alias("t2"),
     )
-    w = Window.partitionBy("rowkey", "qualifier").orderBy(
-        F.col("ts").desc(), F.col("seq").desc()
-    )
-
     def state_at(cut_col: str) -> DataFrame:
         return (
-            cf.crossJoin(F.broadcast(cuts))
-            .filter(F.col("ts") <= F.col(cut_col))
-            .select("*", F.row_number().over(w).alias("rn"))
-            .filter((F.col("rn") == 1) & (F.col("op") == "put"))
+            ranked_topk_per(
+                cf.crossJoin(F.broadcast(cuts)).filter(
+                    F.col("ts") <= F.col(cut_col)
+                ),
+                ["rowkey", "qualifier"],
+                [F.col("ts").desc(), F.col("seq").desc()], 1, rk_col=None,
+            )
+            .filter(F.col("op") == "put")
             .select("rowkey", "qualifier", "value")
         )
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
 from ..functions import hashing as H
+from ..functions.ranking import ranked_topk_per
 from ..functions.vectors import dot, norm, sql_cosine
 from ..memos import Memo
 from ..registry import register
@@ -212,10 +213,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates = pairs sharing ≥1 shingle via shingle equi-join (inverted
     index), then exact Jaccard from integer set sizes — never all-pairs.
 
-    Plan-shape note (r3 profiling): the r2 bench "regression" (1.23 →
-    2.12 s) was run-to-run variance — this exact shape measures 1.5-1.7 s
-    warm, interleaved A/B. Carrying each doc's set size THROUGH the
-    explode (to skip the sizes join-back) is 5× slower, not faster: any
+    Plan shape: this shape measures 1.5-1.7 s warm in interleaved A/B
+    runs (single bench runs have read 1.2-2.1 s from host variance).
+    Carrying each doc's set size THROUGH the explode (to skip the sizes
+    join-back) is 5× slower, not faster: any
     expression depending on the exploded array forces Spark to keep the
     full array in Generate's requiredChildOutput and copy it into every
     exploded output row — O(shingles × array bytes) per doc. The separate
@@ -2193,7 +2194,7 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8: end-to-end pipeline funnel ------------------------------------------
+# --- end-to-end pipeline funnel ----------------------------------------------
 
 
 @register(
@@ -2453,7 +2454,7 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     strips every degree-1 leaf until only multiply-corroborated
     duplicate cliques remain. Rounds report (n_removed, n_edges,
     n_nodes) after each peel; a round with n_removed = 0 is the fixed
-    point (the fixture converges by round 2 — pinned in tests).
+    point (the fixture converges after two peels — pinned in tests).
 
     Peeling is the textbook distributed k-core: per round one degree
     count (groupBy over both edge endpoints) and two anti-joins to drop
@@ -2512,7 +2513,7 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-# --- r8e: semi-supervised label propagation over the near-dup graph --------
+# --- semi-supervised label propagation over the near-dup graph -------------
 
 _LPA_ROUNDS = 2
 
@@ -2586,17 +2587,11 @@ def _lpa_labels(
             .agg(F.count(F.lit(1)).alias("c"))
         )
         cur = labels.select("id", F.col("lbl").alias("cur_lbl"))
-        w = Window.partitionBy("id").orderBy(
-            F.col("c").desc(),
-            F.when(F.col("lbl") == F.col("cur_lbl"), 0).otherwise(1),
-            F.col("lbl"),
-        )
-        labels = (
-            cnt.join(cur, "id")
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("id", "lbl")
-        )
+        keep_cur = F.when(F.col("lbl") == F.col("cur_lbl"), 0).otherwise(1)
+        labels = ranked_topk_per(
+            cnt.join(cur, "id"), ["id"],
+            [F.col("c").desc(), keep_cur, F.col("lbl")], 1, rk_col=None,
+        ).select("id", "lbl")
     return l0, labels
 
 
@@ -2655,7 +2650,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8f: decontamination apply + link prediction ---------------------------
+# --- decontamination apply + link prediction --------------------------------
 
 # Train-side decontamination: drop a TRAIN doc when >= NUM/DEN of its
 # distinct shingles appear in the eval split (integer cross-multiplied,
@@ -2835,7 +2830,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cand.join(ed, ["doc_a", "doc_b"], "left_anti")
 
 
-# --- r9: b-bit MinHash (storage-compressed signatures, accuracy-audited) ----
+# --- b-bit MinHash (storage-compressed signatures, accuracy-audited) --------
 
 
 @register(
@@ -2921,7 +2916,7 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     coded = _coded(spark, sf_dir).join(F.broadcast(pair_docs), "doc_id", "semi")
-    # r14 optimization round: PACK the 16 sign bits into one BIGINT at
+    # PACK the 16 sign bits into one BIGINT at
     # aggregation time (sum of bit_k << k) so the signature table is
     # (doc_id, packed) — 2 columns instead of 17 — and per-pair agreement
     # is one bit_count(XOR) instead of 16 CASE WHEN comparisons. Every
@@ -2975,7 +2970,7 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r9: dedup cascade funnel (exact -> near-dup, per source) ---------------
+# --- dedup cascade funnel (exact -> near-dup, per source) -------------------
 
 
 @register(
@@ -3080,7 +3075,7 @@ def corpus_dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10: modularity of the near-dup graph's label partitions ---------------
+# --- modularity of the near-dup graph's label partitions --------------------
 
 
 def _sql_modularity_block(tag: str, label_rel: str) -> str:
@@ -3214,7 +3209,7 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q_block("lang0", l0).unionByName(q_block("lpa_final", labels))
 
 
-# --- r10: partition agreement (Adjusted Rand Index) --------------------------
+# --- partition agreement (Adjusted Rand Index) -------------------------------
 
 
 @register(

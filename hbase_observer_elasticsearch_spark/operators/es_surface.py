@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread
 from ..functions import hashing as H
 from ..functions.deterministic import dsum, sql_dsum
+from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..registry import register
 from ..session import ensure_session_conf
 from .text import (
@@ -39,7 +40,6 @@ from .text import (
     _SQL_BM25_CTE,
     _bm25_agg,
     _postings_memo,
-    ranked_topk,
 )
 
 # ---------------------------------------------------------------------------
@@ -621,17 +621,12 @@ def agg_diversified_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
-    wl = Window.partitionBy("lang").orderBy(
-        F.col("n_chars").desc(), "doc_id"
+    order = [F.col("n_chars").desc(), "doc_id"]
+    per_lang = ranked_topk_per(
+        d.select("doc_id", "lang", "source", "n_chars"),
+        ["lang"], order, DS_PER_LANG, rk_col="lang_rk",
     )
-    wg = Window.orderBy(F.col("n_chars").desc(), "doc_id")
-    sample = (
-        d.select("doc_id", "lang", "source", "n_chars")
-        .withColumn("lang_rk", F.row_number().over(wl))
-        .filter(F.col("lang_rk") <= DS_PER_LANG)
-        .withColumn("rk", F.row_number().over(wg))
-        .filter(F.col("rk") <= DS_SHARD)
-    )
+    sample = ranked_topk(per_lang, order, DS_SHARD)
     return sample.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("sum_chars"),
@@ -911,13 +906,8 @@ def search_multi_match_cross_fields(
         .alias("score"),
         F.count(F.lit(1)).cast("bigint").alias("n_terms"),
     )
-    top = agg.orderBy(F.col("score").desc(), "doc_id").limit(MMC_TOPK)
-    wr = Window.orderBy(F.col("score").desc(), "doc_id")
-    return top.select(
-        "doc_id",
-        "score",
-        "n_terms",
-        F.row_number().over(wr).cast("bigint").alias("rk"),
+    return ranked_topk(
+        agg, [F.col("score").desc(), "doc_id"], MMC_TOPK, rk_cast="bigint"
     )
 
 
@@ -1058,15 +1048,11 @@ def search_rescore_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
-    wr1 = Window.orderBy(F.col("bm25").desc(), "doc_id")
-    first = (
-        _bm25_agg(spark, sf_dir, BM25_TERMS)
-        .orderBy(F.col("bm25").desc(), "doc_id")
-        .limit(RS_FIRST)
-        .withColumn("rk1", F.row_number().over(wr1))
-        .filter(F.col("rk1") <= RS_WINDOW)
-        .select("doc_id", "bm25")
-    )
+    first = ranked_topk(
+        _bm25_agg(spark, sf_dir, BM25_TERMS),
+        [F.col("bm25").desc(), "doc_id"],
+        min(RS_FIRST, RS_WINDOW),
+    ).select("doc_id", "bm25")
     pos = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("i", "w")
     ).filter(F.col("w").isin(RS_PA, RS_PB))

@@ -362,7 +362,7 @@ def extract_audio_features(payload: bytes) -> dict:
     )
 
 
-# --- r11: REAL container decode (BMP pixels / WAV samples) -------------------
+# --- REAL container decode (BMP pixels / WAV samples) ------------------------
 
 REAL_IMG_W, REAL_IMG_H = 8, 8  # 8x8 24bpp -> 192 pixel bytes, rows unpadded
 REAL_WAV_RATE = 8_000

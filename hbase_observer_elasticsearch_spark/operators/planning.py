@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
+from ..functions.ranking import range_partitioned, range_prefix_sum
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -447,7 +448,7 @@ def stream_watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-# --- r8e: small-file compaction planner -------------------------------------
+# --- small-file compaction planner ------------------------------------------
 
 COMPACT_TARGET = 262_144  # target bytes per compacted file (256 KiB at
 # fixture scale; production uses 128 MiB — the knob scales, the plan
@@ -547,10 +548,9 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: sort-key advisor (equi-depth zone maps, skip-fraction workload) ----
+# --- sort-key advisor (equi-depth zone maps, skip-fraction workload) ---------
 
 N_ZONES = 32  # equi-depth zones per candidate layout
-_ZONE_PROBS = [i / N_ZONES for i in range(1, N_ZONES)]  # i/2^5: exact doubles
 _SORT_KEYS = ("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
 # fixed reference workload: (name, column, lo, hi) — finite sentinels for
 # one-sided ranges keep every compare a plain double <=/>=
@@ -695,44 +695,12 @@ def layout_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kv")
     ).select("kv.k", "kv.v")
     vc = kv.groupBy("k", "v").agg(F.count(F.lit(1)).alias("c"))
-    # Distributed cumulative count (r13 optimization round): the old
-    # per-key window (partitionBy(k).orderBy(v)) funneled each key's
-    # whole distinct-value set through ONE reducer — 583k rows for
-    # l_extendedprice at sf0.1, and unboundedly more at 100 TB, i.e. a
-    # single-reducer-per-key scale defect, not just a slow stage. Two-
-    # pass prefix sum instead: range-partition by (k, v), cumsum within
-    # each partition, then add the per-(key, partition) offsets (a tiny
-    # broadcast). The cum value per (k, v) is the same global prefix sum
-    # regardless of where range boundaries land, so results are
-    # partition-invariant.
-    n_part = spark.sparkContext.defaultParallelism
-    vcp = vc.repartitionByRange(n_part, "k", "v").withColumn(
-        "pid", F.spark_partition_id()
-    ).localCheckpoint()  # pin pid: it must not be recomputed per branch
-    woff = (
-        Window.partitionBy("k")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = (
-        vcp.groupBy("k", "pid")
-        .agg(F.sum("c").alias("pt"))
-        .select(
-            "k",
-            "pid",
-            F.coalesce(F.sum("pt").over(woff), F.lit(0)).alias("off"),
-        )
-    )
-    wlocal = Window.partitionBy("k", "pid").orderBy("v")
-    cum = (
-        vcp.join(F.broadcast(off), ["k", "pid"])
-        .select(
-            "k",
-            "v",
-            "c",
-            (F.sum("c").over(wlocal) + F.col("off")).alias("cum"),
-        )
-    )
+    # Distributed cumulative count per key: a per-key window
+    # (partitionBy(k).orderBy(v)) would funnel each key's whole
+    # distinct-value set through one reducer (583k rows for
+    # l_extendedprice at sf0.1). The range-partitioned prefix sum gives
+    # the same global cum per (k, v) wherever the range boundaries land.
+    cum = range_prefix_sum(vc, ["v"], by=["k"], weight="c")
     # per-key total = |lineitem| for every key (one value per row per
     # key): a parquet count-star, NOT an agg over vc — deriving n from
     # vc would put vc on two plan branches and rescan/regroup the whole
@@ -839,7 +807,7 @@ def layout_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r9: partition-grain pruning simulator (complements zone maps) ----------
+# --- partition-grain pruning simulator (complements zone maps) --------------
 
 _PART_GRAINS = ("month", "quarter", "year")
 # workload: half-open o_orderdate ranges [lo, hi)
@@ -982,7 +950,7 @@ def layout_partition_pruning_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10: column clustering factor under a physical sort order --------------
+# --- column clustering factor under a physical sort order -------------------
 
 # Probe columns measured under the time-ingested layout (l_shipdate,
 # l_orderkey, l_linenumber) — the order a CDC-fed fact table lands in.
@@ -1030,34 +998,25 @@ def layout_clustering_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic: run boundaries are integer LAG comparisons under a
     total order; the two ratios are single divisions of exact counts.
 
-    Scale shape (r14 optimization round — guide §2, single-reducer
-    removal): runs are counted PER RANGE PARTITION (local sort + local
-    LAG, fully parallel) and the partition boundaries are stitched with
-    one tiny pass — each partition contributes its (first, last) row
-    (min/max of a struct led by the unique sort triple), and the exact
-    correction ``local_head_chg − global_head_chg`` is summed over the
-    n_partitions boundary rows. The result is integer-identical to the
-    old single global LAG window for any null pattern, but no stage
-    ever funnels row-grain data through one reducer — the decomposition
-    the zone-map query documents, now actually implemented (the prior
-    form shuffled ALL of lineitem to one partition for the sort:
-    `Exchange SinglePartition` + 600 k-row single-threaded Sort at
-    sf0.1, unbounded at 100 TB).
+    Scale shape (no single-reducer stage): runs are counted PER RANGE
+    PARTITION (local sort + local LAG, fully parallel) and the partition
+    boundaries are stitched with one tiny pass — each partition
+    contributes its (first, last) row (min/max of a struct led by the
+    unique sort triple), and the exact correction
+    ``local_head_chg − global_head_chg`` is summed over the n_partitions
+    boundary rows. The result is integer-identical to a single global
+    LAG window for any null pattern, but no stage ever funnels row-grain
+    data through one reducer (the global window would shuffle ALL of
+    lineitem to one partition for the sort: `Exchange SinglePartition` +
+    a 600 k-row single-threaded Sort at sf0.1, unbounded at 100 TB).
     """
     ensure_session_conf(spark)
     sort_cols = ("l_shipdate", "l_orderkey", "l_linenumber")
     li = load_table(spark, sf_dir, "lineitem").select(
         *sort_cols, *CF_COLUMNS
     )
-    n_part = spark.sparkContext.defaultParallelism
-    # pid pinned by localCheckpoint: the flags pass and the boundary
-    # pass must agree on the partitioning (same doctrine as
-    # layout_sort_key_advisor's prefix sum).
-    rp = (
-        li.repartitionByRange(n_part, *sort_cols)
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
+    # the flags pass and the boundary pass share one pinned partitioning
+    rp = range_partitioned(li, *sort_cols)
     wloc = Window.partitionBy("pid").orderBy(*sort_cols)
     flags = rp.select(
         *[F.col(c) for c in CF_COLUMNS],

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views, spread
+from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -201,12 +202,7 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("p99_cnt"),
     )
-    w = Window.orderBy(F.col("cnt").desc(), "key")
-    heavy = (
-        freq.select("key", "cnt", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= 10)
-        .drop("rk")
-    )
+    heavy = ranked_topk(freq.select("key", "cnt"), [F.col("cnt").desc(), "key"], 10)
     return heavy.crossJoin(F.broadcast(moments)).select(
         F.col("key").alias("hot_key"),
         F.col("cnt").cast("bigint").alias("hot_cnt"),
@@ -781,7 +777,7 @@ def profile_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8f: exact Kolmogorov-Smirnov two-sample drift per source --------------
+# --- exact Kolmogorov-Smirnov two-sample drift per source -------------------
 
 @register(
     "profile_ks_drift",
@@ -885,10 +881,10 @@ def profile_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.lit(total) - F.col("n_s")).cast("double")
         ).alias("dks"),
     )
-    w = Window.partitionBy("source").orderBy(F.col("dks").desc(), "v")
     return (
-        diff.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        ranked_topk_per(
+            diff, ["source"], [F.col("dks").desc(), "v"], 1, rk_col=None
+        )
         .select(
             "source",
             "n_s",
@@ -898,7 +894,7 @@ def profile_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: full pairwise Pearson matrix over the lineitem measures ------------
+# --- full pairwise Pearson matrix over the lineitem measures -----------------
 
 _CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 _CORR_PAIRS = tuple(
@@ -989,7 +985,7 @@ def profile_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: categorical entropy profile ----------------------------------------
+# --- categorical entropy profile ---------------------------------------------
 
 _ENTROPY_COLS = (
     ("orders", "o_orderpriority"),

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ranking import ranked_topk
 from ..registry import register
 from ..session import ensure_session_conf
 from .dedup import _SQL_JACCARD_PAIRS, _SQL_SHINGLES, _jaccard_cc_labels
@@ -1068,7 +1069,7 @@ def quality_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8c: fastText-style hashed linear quality classifier --------------------
+# --- fastText-style hashed linear quality classifier -------------------------
 
 from ..functions.hashing import sql_token_code, token_code  # noqa: E402
 
@@ -1257,7 +1258,7 @@ def quality_classifier_calibration(
     )
 
 
-# --- r8e: chance-corrected labeler agreement + curriculum ordering ----------
+# --- chance-corrected labeler agreement + curriculum ordering ---------------
 
 DIV_THRESHOLD = 500  # lexical-diversity labeler: uniq_tokens*1000//tokens >= 500
 
@@ -1420,7 +1421,7 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: winsorization impact audit -----------------------------------------
+# --- winsorization impact audit ----------------------------------------------
 
 WINSOR_LO = 0.01
 WINSOR_HI = 0.99
@@ -1504,7 +1505,7 @@ def quality_winsorize_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: decision-stump Gini gain per metadata feature -----------------------
+# --- decision-stump Gini gain per metadata feature ----------------------------
 
 GINI_DECILES = [i / 10 for i in range(1, 10)]  # i/10: not exact binary, but
 # rendered with repr() into BOTH dialects so the interpolation inputs match
@@ -1637,11 +1638,11 @@ def quality_gini_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0) - dd("sqr_") / (dd("nr") * dd("nr"))
         )
         qgain = (gini_p - weighted).cast("decimal(28,12)")
-        w = Window.orderBy(F.col("qgain").desc(), "thr")
         row = (
-            s.select("thr", "nl", "nr", qgain.alias("qgain"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
+            ranked_topk(
+                s.select("thr", "nl", "nr", qgain.alias("qgain")),
+                [F.col("qgain").desc(), "thr"], 1,
+            )
             .select(
                 F.lit(feat).alias("feature"),
                 F.col("thr").alias("best_thr"),
@@ -1988,7 +1989,7 @@ def quality_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10: isotonic calibration (pool-adjacent-violators) ---------------------
+# --- isotonic calibration (pool-adjacent-violators) --------------------------
 
 ISO_BINS = 10
 
@@ -2126,7 +2127,7 @@ def quality_isotonic_calibration(
     )
 
 
-# --- r10: split-conformal prediction interval --------------------------------
+# --- split-conformal prediction interval -------------------------------------
 
 CONF_LEVEL_NUM, CONF_LEVEL_DEN = 9, 10  # target coverage 0.9
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views, spread
 from ..functions.deterministic import dec, dsum, sql_dsum
+from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..memos import Memo
 from ..registry import register
 from ..session import ensure_session_conf
@@ -1584,18 +1585,15 @@ def agg_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one partitioning on the group key.
     """
     ensure_session_conf(spark)
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders")
     freq = o.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("c").desc(), "o_orderstatus"
-    )
     md = (
-        freq.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
+        ranked_topk_per(
+            freq, ["o_orderpriority"], [F.col("c").desc(), "o_orderstatus"],
+            1, rk_col=None,
+        )
         .select(
             "o_orderpriority",
             F.col("o_orderstatus").alias("mode_status"),
@@ -1861,12 +1859,9 @@ def basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nabc") * AP_TRIPLE_DEN >= F.col("n"))
         .select("a", "b", "c", "nabc")
     )
-    ranked = cand.withColumn(
-        "rk",
-        F.row_number()
-        .over(Window.orderBy(F.col("nabc").desc(), "a", "b", "c"))
-        .cast("bigint"),
-    ).filter(F.col("rk") <= AP_TOP)
+    ranked = ranked_topk(
+        cand, [F.col("nabc").desc(), "a", "b", "c"], AP_TOP, rk_cast="bigint"
+    )
     ia = freq_items.select(F.col("brand").alias("a"), F.col("nb").alias("na_"))
     ib = freq_items.select(F.col("brand").alias("b"), F.col("nb").alias("nb_"))
     ic = freq_items.select(F.col("brand").alias("c"), F.col("nb").alias("nc_"))
@@ -2058,7 +2053,7 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Fellegi–Sunter probabilistic record linkage (r10) -----------------------
+# --- Fellegi–Sunter probabilistic record linkage -----------------------------
 # Classic large-scale entity resolution (Fellegi & Sunter 1969): blocked
 # candidate pairs, per-field agreement vector, log-odds match weights,
 # three-band decision. Weights are frozen as exact INTEGER micro-units
@@ -2545,7 +2540,7 @@ def join_record_linkage_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10: item-item co-visitation top-k (recommender candidate gen) ---------
+# --- item-item co-visitation top-k (recommender candidate gen) --------------
 
 COVIS_CAP = 8   # per-basket item cap: bounds pair fan-out at C(8,2)=28
 COVIS_TOPK = 3  # neighbors kept per item
@@ -2690,17 +2685,14 @@ def basket_covisitation_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("item").orderBy(
-        F.col("cosine_sim").desc(), F.col("n_both").desc(), F.col("neighbor")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= COVIS_TOPK)
-        .select("item", "neighbor", "n_both", "cosine_sim", "rk")
-    )
+    return ranked_topk_per(
+        scored, ["item"],
+        [F.col("cosine_sim").desc(), F.col("n_both").desc(), F.col("neighbor")],
+        COVIS_TOPK, rk_cast="bigint",
+    ).select("item", "neighbor", "n_both", "cosine_sim", "rk")
 
 
-# --- r10: exact weighted median -----------------------------------------------
+# --- exact weighted median ----------------------------------------------------
 
 
 @register(

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.deterministic import dsum
+from ..functions.ranking import ranked_topk_per
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -182,8 +183,6 @@ def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     desc, then value desc) — built-in `mode()` tiebreaks are unspecified
     in both engines, so the portable formulation is count + rank."""
     ensure_session_conf(spark)
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     counts = (
@@ -191,12 +190,12 @@ def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("n").desc(), F.col("o_orderpriority").desc()
-    )
     return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
+        ranked_topk_per(
+            counts, ["c_mktsegment"],
+            [F.col("n").desc(), F.col("o_orderpriority").desc()], 1,
+            rk_col=None,
+        )
         .select(
             "c_mktsegment",
             F.col("o_orderpriority").alias("mode_priority"),

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
+from ..functions.ranking import ranked_topk_per
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -118,14 +119,10 @@ def sample_stratified_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        _gate(F.col("doc_id"), "strat:"), F.col("doc_id")
-    )
-    return (
-        d.select("doc_id", "lang", "n_chars")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .drop("rn")
+    return ranked_topk_per(
+        d.select("doc_id", "lang", "n_chars"),
+        ["lang"], [_gate(F.col("doc_id"), "strat:"), F.col("doc_id")], 20,
+        rk_col=None,
     )
 
 
@@ -317,11 +314,10 @@ def sample_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     order_key = F.md5(F.concat(F.lit("audit:"), F.col("doc_id").cast("string")))
-    w = Window.partitionBy("lang").orderBy(order_key, "doc_id")
-    return (
-        d.select("doc_id", "lang", "source", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= SAMPLE_K_PER_GROUP)
-        .select("doc_id", "lang", "source", F.col("rn").cast("bigint").alias("rn"))
+    return ranked_topk_per(
+        d.select("doc_id", "lang", "source"),
+        ["lang"], [order_key, "doc_id"], SAMPLE_K_PER_GROUP,
+        rk_col="rn", rk_cast="bigint",
     )
 
 
@@ -559,15 +555,13 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars",
         (F.log(u) / F.col("n_chars")).alias("k"),
     )
-    w = Window.partitionBy("source").orderBy(F.col("k").desc(), "doc_id")
-    return (
-        keyed.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= _RES_K)
-        .select("source", "rk", "doc_id", "n_chars")
-    )
+    return ranked_topk_per(
+        keyed, ["source"], [F.col("k").desc(), "doc_id"], _RES_K,
+        rk_cast="bigint",
+    ).select("source", "rk", "doc_id", "n_chars")
 
 
-# --- r8h: Neyman-optimal stratified sample allocation --------------------------
+# --- Neyman-optimal stratified sample allocation -------------------------------
 
 NEYMAN_BUDGET = 1000  # total sample size to allocate across strata
 
@@ -1006,7 +1000,7 @@ def sample_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10: duplicate-cluster-aware split (group split, no leakage) -----------
+# --- duplicate-cluster-aware split (group split, no leakage) ----------------
 
 from .dedup import (  # noqa: E402  (late import: avoids a cycle at load)
     _SQL_JACCARD_PAIRS,

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
 from ..functions import hashing as H
+from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..functions.vectors import (
     cosine, dot, norm, sq_dist, sql_cosine, sql_dot, sql_sq_dist,
 )
@@ -163,12 +164,9 @@ def _bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOPK)
+    return ranked_topk_per(
+        scored, ["query_id"], [F.col("cos_sim").desc(), F.col("neighbor_id")],
+        TOPK, rk_cast="bigint",
     )
 
 
@@ -225,11 +223,9 @@ def similarity_nn_same_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("nn_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .drop("rk")
+    return ranked_topk_per(
+        scored, ["vec_id"], [F.col("cos_sim").desc(), F.col("nn_id")], 1,
+        rk_col=None,
     )
 
 
@@ -316,14 +312,13 @@ KMEANS_K = 8
 KMEANS_ITERS = 2
 
 # Codebook granularity scales with corpus size — k = max(KMEANS_K, ⌈√n⌉),
-# the FAISS nlist ∝ √n practice. History of the
-# law, because both failure modes were MEASURED here:
-# - fixed k (pre-r8): SemDeDup's within-cell pair stage is quadratic in n
+# the FAISS nlist ∝ √n practice. Both simpler laws fail, as measured:
+# - fixed k: SemDeDup's within-cell pair stage is quadratic in n
 #   (SCALE_r8: 108.8x pair mass / 16.3x wall at 10x data);
-# - k = ⌈n/250⌉ (r8-r10): holds cell size constant, so the PAIR stage is
+# - k = ⌈n/250⌉: holds cell size constant, so the PAIR stage is
 #   linear — but the ASSIGNMENT stage (every vector × every centroid) is
 #   then O(n²/250): the 100x spot measured IVF-PQ at 479 s, 12.9x over
-#   its decade-1 fit (SCALE100_SPOT.json, r10).
+#   its decade-1 fit.
 # k = ⌈√n⌉ balances the two: assignment O(n·k) = O(n^1.5) and pair mass
 # O(n²/k) = O(n^1.5) — the minimum of their sum, and one decade of
 # corpus growth now costs ~31.6x on both stages instead of 100x on one.
@@ -579,20 +574,15 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm(F.col("embedding")).alias("qn"),  # query norm hoisted out of the scan
     )
     # probe selection: 3 best cells per query by centroid cosine
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("c_sim").desc(), F.col("cell")
-    )
-    probes = (
+    probes = ranked_topk_per(
         F.broadcast(q)
         .crossJoin(F.broadcast(cent))
         .select(
             "query_id", "qv", "qn", "cell",
             cosine(F.col("qv"), F.col("cv")).alias("c_sim"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= N_PROBES)
-        .select("query_id", "qv", "qn", "cell")
-    )
+        ),
+        ["query_id"], [F.col("c_sim").desc(), F.col("cell")], N_PROBES,
+    ).select("query_id", "qv", "qn", "cell")
 
     cands = spread(e).withColumn("nrm", norm(F.col("embedding")))
     scored = (
@@ -605,12 +595,9 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOPK)
+    return ranked_topk_per(
+        scored, ["query_id"], [F.col("cos_sim").desc(), F.col("neighbor_id")],
+        TOPK, rk_cast="bigint",
     )
 
 
@@ -727,12 +714,9 @@ def _int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             iscore.alias("iscore"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("iscore").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOPK)
+    return ranked_topk_per(
+        scored, ["query_id"], [F.col("iscore").desc(), F.col("neighbor_id")],
+        TOPK, rk_cast="bigint",
     )
 
 
@@ -889,7 +873,6 @@ def similarity_pair_dot_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generation. The embedding-side complement of the text MinHash LSH.
 
 RHP_BITS = 16
-RHP_BANDS = 4
 RHP_ROWS = 4  # bits per band
 
 # w(p, d) = (md5-code('rhp:p:d') % 2001) - 1000 — integer weights in
@@ -999,18 +982,9 @@ def similarity_topk_rhp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rhp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = _rhp_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cos_sim",
-            F.col("rk").cast("bigint").alias("rk"),
-        )
+    return ranked_topk_per(
+        scored, ["query_id"], [F.col("cos_sim").desc(), "neighbor_id"], TOPK,
+        rk_cast="bigint",
     )
 
 
@@ -1052,10 +1026,9 @@ def _rhp_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("w"),
         )
     )
-    # r14 optimization round (guide §2.3/§2.4 — shuffle fewer bytes /
-    # remove shuffles): the old projection exploded every vector to
-    # (vec, dim) rows and joined the per-dim hyperplane weights — 128 k
-    # exploded rows × 16 planes = 2 M rows through a hash aggregate.
+    # Shuffle fewer bytes: exploding every vector to (vec, dim) rows and
+    # joining the per-dim hyperplane weights would push 128 k exploded
+    # rows × 16 planes = 2 M rows through a hash aggregate.
     # The hyperplane table is 16×64 ints; nest it into ONE broadcast row
     # and compute every projection MAP-SIDE with a zip_with/aggregate
     # fold per plane over the same decimal(18,10)·int products. Only the
@@ -1412,11 +1385,7 @@ def _pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum(F.col("qd").cast("decimal(28,12)")).alias("dist"))
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    return (
-        adc.select("*", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= TOPK)
-    )
+    return ranked_topk_per(adc, ["query_id"], ["dist", "neighbor_id"], TOPK)
 
 
 @register(
@@ -1837,11 +1806,7 @@ def _ivfpq_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum(F.col("qd").cast("decimal(28,12)")).alias("dist"))
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    return (
-        adc.select("*", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= IVFPQ_POOL)
-    )
+    return ranked_topk_per(adc, ["query_id"], ["dist", "neighbor_id"], IVFPQ_POOL)
 
 
 @register(
@@ -2006,12 +1971,10 @@ def similarity_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(contrib).alias("rrf"),
         F.count(F.lit(1)).cast("bigint").alias("n_lists"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf").desc(), F.col("neighbor_id")
+    return ranked_topk_per(
+        fused, ["query_id"], [F.col("rrf").desc(), F.col("neighbor_id")],
+        TOPK, rk_cast="bigint",
     )
-    return fused.select(
-        "*", F.row_number().over(w).cast("bigint").alias("rk")
-    ).filter(F.col("rk") <= TOPK)
 
 
 TRUNC_DIM = 16  # matryoshka prefix length under audit (of 64 dims)
@@ -2089,18 +2052,14 @@ def similarity_recall_truncated(
             .alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    trunc_top = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOPK)
-        .select("query_id", "neighbor_id")
-    )
+    trunc_top = ranked_topk_per(
+        scored, ["query_id"], [F.col("cos_sim").desc(), F.col("neighbor_id")],
+        TOPK,
+    ).select("query_id", "neighbor_id")
     return _recall(bf, trunc_top)
 
 
-# --- r7: exact re-rank over the ADC pool, and SemDeDup -----------------------
+# --- exact re-rank over the ADC pool, and SemDeDup ---------------------------
 
 
 def _exact_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2112,18 +2071,17 @@ def _exact_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     d2 = sq_dist(F.col("qv"), F.col("embedding"))
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    return (
+    pairs = (
         spread(e)
         .crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id", F.col("vec_id").alias("neighbor_id"), d2.alias("d2")
         )
-        .select("*", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= TOPK)
-        .select("query_id", "neighbor_id")
     )
+    return ranked_topk_per(
+        pairs, ["query_id"], ["d2", "neighbor_id"], TOPK
+    ).select("query_id", "neighbor_id")
 
 
 @register(
@@ -2206,16 +2164,13 @@ def similarity_rerank_recall_ivfpq(
         F.col("embedding").alias("nv"),
     )
     d2 = sq_dist(F.col("qv"), F.col("nv"))
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    rr = (
+    rr = ranked_topk_per(
         pool.select("query_id", "neighbor_id")
         .join(nb, "neighbor_id")
         .join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", d2.alias("d2"))
-        .select("*", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= TOPK)
-        .select("query_id", "neighbor_id")
-    )
+        .select("query_id", "neighbor_id", d2.alias("d2")),
+        ["query_id"], ["d2", "neighbor_id"], TOPK,
+    ).select("query_id", "neighbor_id")
     exact = _exact_sq_topk(spark, sf_dir)
     ha = exact.join(adc_top, ["query_id", "neighbor_id"]).groupBy(
         "query_id"
@@ -2395,7 +2350,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8: incremental SemDeDup admission, retrieval quality scorecard ---------
+# --- incremental SemDeDup admission, retrieval quality scorecard -------------
 
 # Same new-batch split rule as dedup.dedup_incremental_new_batch (vec ids in
 # the top quarter of the id space are "today's batch").
@@ -2762,7 +2717,7 @@ def search_quality_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8c: embedding-space curation — contrastive mining + label-noise audit --
+# --- embedding-space curation — contrastive mining + label-noise audit -------
 
 N_ANCHORS = 16  # anchor set for contrastive pair mining (vec_id < N_ANCHORS)
 K_CONTRAST = 5  # pairs mined per (anchor, role)
@@ -2840,15 +2795,13 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("anchor_id", "role").orderBy(
-        F.when(F.col("role") == "hard_pos", F.col("cos_sim"))
-        .otherwise(-F.col("cos_sim"))
-        .asc(),
-        "neighbor_id",
+    hardest = F.when(F.col("role") == "hard_pos", F.col("cos_sim")).otherwise(
+        -F.col("cos_sim")
     )
-    return scored.withColumn(
-        "rk", F.row_number().over(w).cast("bigint")
-    ).filter(F.col("rk") <= K_CONTRAST)
+    return ranked_topk_per(
+        scored, ["anchor_id", "role"], [hardest.asc(), "neighbor_id"], K_CONTRAST,
+        rk_cast="bigint",
+    )
 
 
 @register(
@@ -2917,10 +2870,7 @@ def quality_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = al.select("cluster_id", F.col("vec_id").alias("nb_id"),
                   F.col("label").alias("n_label"),
                   F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("nb_id")
-    )
-    knn = (
+    knn = ranked_topk_per(
         a.join(b, "cluster_id")
         .filter(F.col("nb_id") != F.col("vec_id"))
         .select(
@@ -2929,17 +2879,13 @@ def quality_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_label",
             (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
             .alias("cos_sim"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= K_NOISE)
+        ),
+        ["vec_id"], [F.col("cos_sim").desc(), F.col("nb_id")], K_NOISE,
     )
     votes = knn.groupBy("vec_id", "n_label").agg(F.count("*").alias("c"))
-    w2 = Window.partitionBy("vec_id").orderBy(F.col("c").desc(), "n_label")
-    maj = (
-        votes.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("n_label").alias("maj_label"))
-    )
+    maj = ranked_topk_per(
+        votes, ["vec_id"], [F.col("c").desc(), "n_label"], 1, rk_col=None
+    ).select("vec_id", F.col("n_label").alias("maj_label"))
     flagged = F.sum(
         F.when(
             F.col("maj_label").isNotNull()
@@ -2962,7 +2908,7 @@ def quality_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8e: MIPS -> L2 augmentation transform audit ---------------------------
+# --- MIPS -> L2 augmentation transform audit --------------------------------
 
 def _sql_sq_norm(a: str) -> str:
     return (
@@ -3071,27 +3017,21 @@ def similarity_mips_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
             d2aug.alias("d2aug"),
         )
     )
-    wd = Window.partitionBy("query_id").orderBy(F.col("ip").desc(), "neighbor_id")
-    wa = Window.partitionBy("query_id").orderBy(F.col("d2aug").asc(), "neighbor_id")
-    ranked = scored.select(
-        "query_id",
-        "neighbor_id",
-        F.row_number().over(wd).cast("bigint").alias("rk_dot"),
-        F.row_number().over(wa).cast("bigint").alias("rk_aug"),
-    )
-    rd = ranked.filter(F.col("rk_dot") <= TOPK).select(
-        "query_id", F.col("rk_dot").alias("rk"), F.col("neighbor_id").alias("nb_dot")
-    )
-    ra = ranked.filter(F.col("rk_aug") <= TOPK).select(
-        "query_id", F.col("rk_aug").alias("rk"), F.col("neighbor_id").alias("nb_aug")
-    )
+    def top(order, nb_col: str) -> DataFrame:
+        return ranked_topk_per(
+            scored, ["query_id"], [order, "neighbor_id"], TOPK,
+            rk_cast="bigint",
+        ).select("query_id", "rk", F.col("neighbor_id").alias(nb_col))
+
+    rd = top(F.col("ip").desc(), "nb_dot")
+    ra = top(F.col("d2aug").asc(), "nb_aug")
     return rd.join(ra, ["query_id", "rk"]).select(
         "query_id", "rk", "nb_dot", "nb_aug",
         (F.col("nb_dot") == F.col("nb_aug")).alias("agree"),
     )
 
 
-# --- r8e: simplified silhouette over the trained k-means codebook -----------
+# --- simplified silhouette over the trained k-means codebook ----------------
 
 _SQL_CENTS_ONLY = (
     f"""e AS (SELECT vec_id, label, embedding FROM embeddings),
@@ -3170,16 +3110,15 @@ def similarity_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(cent))
         .select("vec_id", F.col("cluster_id").alias("cid"), F.sqrt(d2).alias("d"))
     )
-    w = Window.partitionBy("vec_id").orderBy("d", "cid")
-    wb = w.rowsBetween(1, Window.unboundedFollowing)
-    ranked = dists.select(
-        "vec_id",
-        "cid",
-        "d",
-        F.row_number().over(w).alias("rn"),
-        F.min("d").over(wb).alias("b"),
+    # b: the distance to the next-nearest centroid
+    wb = Window.partitionBy("vec_id").orderBy("d", "cid").rowsBetween(
+        1, Window.unboundedFollowing
     )
-    sil = ranked.filter(F.col("rn") == 1).select(
+    nearest = ranked_topk_per(
+        dists.withColumn("b", F.min("d").over(wb)),
+        ["vec_id"], ["d", "cid"], 1, rk_col=None,
+    )
+    sil = nearest.select(
         F.col("cid").alias("cluster_id"),
         F.col("d").alias("a"),
         "b",
@@ -3200,7 +3139,7 @@ def similarity_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: top-PC variance share (embedding collapse audit) --------------------
+# --- top-PC variance share (embedding collapse audit) -------------------------
 
 PCA_ITERS = 3  # unrolled power-iteration steps (deterministic fixed plan)
 EMB_DIM = 64
@@ -3523,14 +3462,15 @@ def similarity_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()  # q*k^2 rows; every greedy step reuses it
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.col("rel").desc(), "cand_id")
     # each step's pick is one row per query — localCheckpoint it so step
     # i+1's plan starts from a materialized 5-row table instead of
     # re-deriving the whole greedy prefix (an un-checkpointed unroll
     # compounds to O(k!) plan nodes: 321 exchanges at k=5).
     sel = (
-        cands.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") == 1)
+        ranked_topk_per(
+            cands, ["query_id"], [F.col("rel").desc(), "cand_id"], 1,
+            rk_col=None,
+        )
         .select(
             "query_id",
             "cand_id",
@@ -3551,10 +3491,7 @@ def similarity_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("query_id", F.col("c1").alias("cand_id"))
             .agg(F.max("sim").alias("maxsim"))
         )
-        wi = Window.partitionBy("query_id").orderBy(
-            F.col("mmr_score").desc(), "cand_id"
-        )
-        sel_i = (
+        scored_i = (
             cands.join(
                 F.broadcast(selected), ["query_id", "cand_id"], "left_anti"
             )
@@ -3568,8 +3505,12 @@ def similarity_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - F.lit(0.3) * F.col("maxsim")
                 ).alias("mmr_score"),
             )
-            .withColumn("rn", F.row_number().over(wi))
-            .filter(F.col("rn") == 1)
+        )
+        sel_i = (
+            ranked_topk_per(
+                scored_i, ["query_id"], [F.col("mmr_score").desc(), "cand_id"],
+                1, rk_col=None,
+            )
             .select(
                 "query_id",
                 "cand_id",
@@ -3591,7 +3532,7 @@ def similarity_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- r10: embedding centroid drift between hash cohorts ----------------------
+# --- embedding centroid drift between hash cohorts ---------------------------
 
 DRIFT_TOP_DIMS = 10
 
@@ -3697,16 +3638,17 @@ def similarity_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sq_l2_shift")
     )
-    wr = Window.orderBy(F.abs(F.col("shift")).desc(), "pos")
     return (
-        shift.withColumn("rk", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rk") <= DRIFT_TOP_DIMS)
+        ranked_topk(
+            shift, [F.abs(F.col("shift")).desc(), "pos"], DRIFT_TOP_DIMS,
+            rk_cast="bigint",
+        )
         .crossJoin(F.broadcast(glob))
         .select("pos", "mu_a", "mu_b", "shift", "sq_l2_shift", "rk")
     )
 
 
-# --- r10: filtered vector search (pre-filter vs post-filter) + mutual kNN ----
+# --- filtered vector search (pre-filter vs post-filter) + mutual kNN ---------
 
 FILTER_PRED_SQL = "label % 2 = 0"  # the metadata predicate under test
 
@@ -3799,12 +3741,11 @@ def similarity_filtered_ann_recall(
             ).alias("cos_sim"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
     exact_f = (
-        scored.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= TOPK)
+        ranked_topk_per(
+            scored, ["query_id"],
+            [F.col("cos_sim").desc(), F.col("neighbor_id")], TOPK,
+        )
         .select("query_id", "neighbor_id")
         .localCheckpoint()  # tiny; joined twice below
     )
@@ -3920,7 +3861,7 @@ def similarity_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").withColumn(
         "nrm", norm(F.col("embedding"))
     )
-    # spread the PROBE side too (r13 optimization round): Catalyst
+    # spread the PROBE side too: Catalyst
     # broadcasts the other (already-spread) side, so the streamed side's
     # single scan split was where every pair's dot product ran — one
     # core. Measured 2.9s -> 0.8s for the knn stage, rows identical.
@@ -3945,12 +3886,11 @@ def similarity_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
     knn = (
-        scored.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= MUTUAL_KNN_K)
+        ranked_topk_per(
+            scored, ["query_id"],
+            [F.col("cos_sim").desc(), F.col("neighbor_id")], MUTUAL_KNN_K,
+        )
         .select("query_id", "neighbor_id")
         .localCheckpoint()  # n x k rows; both sides of the mutuality join
     )

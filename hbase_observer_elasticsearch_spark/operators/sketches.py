@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import hashing as H
+from ..functions.ranking import ranked_topk_per
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -478,7 +479,7 @@ def sketch_hll_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- r9: HLL set-operation estimates (audience overlap) ----------------------
+# --- HLL set-operation estimates (audience overlap) --------------------------
 
 
 @register(
@@ -582,7 +583,7 @@ def sketch_hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10: theta (KMV) sketch set algebra ------------------------------------
+# --- theta (KMV) sketch set algebra -----------------------------------------
 
 # KMV/theta sketch size: k smallest distinct md5-derived codes per set.
 # RSE ~ 1/sqrt(k-1) ~ 6.3% for unions; intersections degrade with 1/Jaccard
@@ -696,23 +697,18 @@ def sketch_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         H.token_code(F.col("user_id").cast("string")).alias("code"),
     ).distinct()
-    w = Window.partitionBy("event_type").orderBy("code")
-    ranked = codes.select(
-        "event_type",
-        "code",
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("event_type"))
-        .alias("n_codes"),
+    # each type's THETA_K smallest codes, with its distinct-code count
+    sk_n = ranked_topk_per(
+        codes.withColumn(
+            "n_codes", F.count(F.lit(1)).over(Window.partitionBy("event_type"))
+        ),
+        ["event_type"], ["code"], THETA_K,
     )
-    sk = ranked.filter(F.col("rk") <= THETA_K).select("event_type", "code")
-    theta = ranked.groupBy("event_type").agg(
+    sk = sk_n.select("event_type", "code")
+    theta = sk_n.groupBy("event_type").agg(
         F.when(
             F.max("n_codes") >= THETA_K,
-            F.max(
-                F.when(F.col("rk") <= THETA_K, F.col("code"))
-            ).cast("double")
-            / F.lit(_TWO32),
+            F.max("code").cast("double") / F.lit(_TWO32),
         )
         .otherwise(F.lit(1.0))
         .alias("theta")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ranking import ranked_topk_per
 from ..functions.skew import two_stage
 from ..registry import register
 from ..session import ensure_session_conf
@@ -102,23 +103,6 @@ def skewed_fact_dim(
         )
     )
     return fact, dim
-
-
-def plain_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UNSALTED shuffle join over the same skewed inputs — the shape
-    you write when you let AQE's runtime skew-join splitting
-    (spark.sql.adaptive.skewJoin.enabled) handle the hot key instead of
-    salting by hand. Same answer as join_salted_skew; the A/B note in
-    PARITY.md records when each wins."""
-    ensure_session_conf(spark)
-    fact, dim = skewed_fact_dim(spark, sf_dir)
-    joined = fact.hint("merge").join(dim, "join_key")
-    return joined.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("value").cast("decimal(18,6)"))
-        .cast("double")
-        .alias("sum_value"),
-    )
 
 
 @register(
@@ -506,7 +490,7 @@ def mv_join_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r9: end-to-end CDC -> live-updated aggregate (the IVM story) -----------
+# --- end-to-end CDC -> live-updated aggregate (the IVM story) ---------------
 
 IVM_KEYS = 512  # rowkey space of the synthesized change stream
 IVM_GROUPS = 8  # rollup groups (stable per key: grp = rowkey % 8)
@@ -659,22 +643,13 @@ def _ivm_recompute(ch: DataFrame) -> DataFrame:
     each epoch's end (last update per key per epoch, forward-filled over
     the epoch grid by a bounded argmax join)."""
     spark = ch.sparkSession
-    w_last = Window.partitionBy("rowkey", "epoch").orderBy(F.col("seq").desc())
-    lastup = (
-        ch.withColumn("rn", F.row_number().over(w_last))
-        .filter(F.col("rn") == 1)
-        .select("rowkey", "grp", "epoch", "is_del", "value")
-    )
+    lastup = ranked_topk_per(
+        ch, ["rowkey", "epoch"], [F.col("seq").desc()], 1, rk_col=None
+    ).select("rowkey", "grp", "epoch", "is_del", "value")
     grid_e = spark.range(IVM_EPOCHS).select(F.col("id").alias("g_epoch"))
-    w_ff = Window.partitionBy("rowkey", "g_epoch").orderBy(
-        F.col("epoch").desc()
-    )
-    st = (
-        lastup.join(
-            F.broadcast(grid_e), F.col("epoch") <= F.col("g_epoch")
-        )
-        .withColumn("rn", F.row_number().over(w_ff))
-        .filter(F.col("rn") == 1)
+    st = ranked_topk_per(
+        lastup.join(F.broadcast(grid_e), F.col("epoch") <= F.col("g_epoch")),
+        ["rowkey", "g_epoch"], [F.col("epoch").desc()], 1, rk_col="rn",
     )
     live_val = F.when(
         ~F.col("is_del"), F.col("value").cast("decimal(18,6)")

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ranking import ranked_topk_per
 from ..registry import register
 from ..session import ensure_session_conf
 from ..sources.changefeed import scratch_dir as _scratch
@@ -1208,11 +1209,6 @@ def stream_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     emitted = drain(spark, build, "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("op").orderBy(F.col("n_batches").desc())
-    return (
-        emitted.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("op", "n_retained", "theta", "est_distinct")
-    )
+    return ranked_topk_per(
+        emitted, ["op"], [F.col("n_batches").desc()], 1, rk_col=None
+    ).select("op", "n_retained", "theta", "est_distinct")

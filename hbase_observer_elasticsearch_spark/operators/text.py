@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread
 from ..functions import hashing as H
 from ..functions.deterministic import dsum, sql_dsum
+from ..functions.ranking import range_prefix_sum, ranked_topk, ranked_topk_per
 from ..memos import Memo
 from ..registry import register
 from ..session import ensure_session_conf
@@ -361,13 +362,10 @@ def text_rarest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("term")
     )
     df_tab = dw.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
-    w = Window.partitionBy("doc_id").orderBy("doc_freq", "term")
-    return (
-        dw.join(F.broadcast(df_tab), "term")
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("doc_id", "term", "doc_freq", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+    return ranked_topk_per(
+        dw.join(F.broadcast(df_tab), "term"),
+        ["doc_id"], ["doc_freq", "term"], 5, rk_col="rnk", rk_cast="bigint",
+    ).select("doc_id", "term", "doc_freq", "rnk")
 
 
 @register(
@@ -1367,36 +1365,6 @@ _POSTINGS = Memo("text_postings")
 _DL_STATS = Memo("text_dl_stats")
 
 
-def ranked_topk(
-    df, order_cols, k: int, rk_col: str = "rk", rk_cast: str | None = None
-):
-    """Global top-k with a rank column — r13 optimization round.
-
-    ``row_number().over(Window.orderBy(...))`` then ``filter(rk <= k)``
-    plans as Exchange SinglePartition + full Sort + Window over EVERY
-    scored row — the one-reducer sort that cannot run at 100 TB.
-    ``orderBy(...).limit(k)`` plans as TakeOrderedAndProject (map-side
-    partial top-k per partition, then a k-row merge), and the rank
-    window then runs over just the k survivors. Because ``order_cols``
-    is a total order (every call site carries a unique tie-break
-    column), the two forms are row-identical — the oracle rows pin that
-    per query. Measured ~0.3s per query at sf0.1 on the BM25 shape.
-
-    ``rk_cast`` preserves each call site's original rank dtype (bigint
-    where the site cast it, int32 where it did not) so schemas are
-    byte-identical to the pre-rewrite form.
-
-    limit(k) keeps a DIFFERENT tie row than the window form unless
-    ``order_cols`` is a total order, so every call site must end with a
-    unique column: a score plus a key column, or one column that is
-    already unique (``search_pinned_query``'s ``ord``)."""
-    w = Window.orderBy(*order_cols)
-    rk = F.row_number().over(w)
-    if rk_cast is not None:
-        rk = rk.cast(rk_cast)
-    return df.orderBy(*order_cols).limit(k).withColumn(rk_col, rk)
-
-
 def _postings_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The aggregated postings table ``(doc_id, w, tf)``, materialized
     once per (app, sf_dir) and shared by the whole lexical-retrieval
@@ -1534,16 +1502,9 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     agg = _bm25_agg(spark, sf_dir, BM25_TERMS)
-    # orderBy+limit compiles to TakeOrderedAndProject (per-partition
-    # partial top-k, no global sort Exchange); the rank window then runs
-    # over just the k surviving rows.
-    top = agg.orderBy(F.col("bm25").desc(), F.col("doc_id")).limit(BM25_TOPK)
-    w = Window.orderBy(F.col("bm25").desc(), F.col("doc_id"))
-    return top.select(
-        "doc_id",
-        "bm25",
-        "n_terms",
-        F.row_number().over(w).cast("bigint").alias("rk"),
+    return ranked_topk(
+        agg, [F.col("bm25").desc(), F.col("doc_id")], BM25_TOPK,
+        rk_cast="bigint",
     )
 
 
@@ -1729,7 +1690,7 @@ def search_phrase_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r7: bigram LM scoring, duplicated-span removal map, PRF expansion ------
+# --- bigram LM scoring, duplicated-span removal map, PRF expansion ----------
 
 BACKOFF_NUM = 2  # stupid-backoff alpha = 2/5 = 0.4, kept as exact integers
 BACKOFF_DEN = 5
@@ -2043,7 +2004,7 @@ def search_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8: PRF second pass, span-excision dedup apply --------------------------
+# --- PRF second pass, span-excision dedup apply ------------------------------
 
 
 @register(
@@ -2155,17 +2116,14 @@ def search_bm25_expanded(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_rk = agg1.select(
         "doc_id", F.row_number().over(w1).cast("bigint").alias("rk_first")
     )
-    w2 = Window.orderBy(F.col("bm25_exp").desc(), F.col("doc_id"))
-    top2 = (
+    top2 = ranked_topk(
         agg2.select(
             "doc_id",
             F.col("bm25").alias("bm25_exp"),
             F.col("n_terms").cast("bigint").alias("n_terms_matched"),
-        )
-        .select(
-            "*", F.row_number().over(w2).cast("bigint").alias("rk_exp")
-        )
-        .filter(F.col("rk_exp") <= BM25_TOPK)
+        ),
+        [F.col("bm25_exp").desc(), F.col("doc_id")], BM25_TOPK,
+        rk_col="rk_exp", rk_cast="bigint",
     )
     return top2.join(first_rk, "doc_id", "left").select(
         "doc_id",
@@ -2337,7 +2295,7 @@ def text_dedup_apply_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8: DSIR importance scoring, BPE merge training --------------------------
+# --- DSIR importance scoring, BPE merge training ------------------------------
 
 DSIR_SELECT_DEN = 5  # select the top 1/5 of raw docs by importance
 
@@ -2516,7 +2474,7 @@ def _bpe_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[DataFrame], DataFrame]:
     """Run the {BPE_MERGES}-round BPE trainer over the word-type table:
-    returns (per-round 1-row merge DataFrames, final segmentation
+    returns (one 1-row merge DataFrame per merge, final segmentation
     (word, freq, seg)) — the DataFrame twin of `_SQL_BPE_CHAIN`, shared
     by the merge-table query and the apply/compression query."""
     from ..catalog import spread
@@ -2555,10 +2513,8 @@ def _bpe_train(
             .groupBy("p1", "p2")
             .agg(F.sum("freq").cast("bigint").alias("cnt"))
         )
-        wtop = Window.orderBy(F.col("cnt").desc(), "p1", "p2")
         m = (
-            pc.select("*", F.row_number().over(wtop).alias("rn"))
-            .filter(F.col("rn") == 1)
+            ranked_topk(pc, [F.col("cnt").desc(), "p1", "p2"], 1)
             .select("p1", "p2", "cnt", F.lit(i).alias("rk"))
             .localCheckpoint()  # 1 row: keeps the next round's plan shallow
         )
@@ -3094,7 +3050,7 @@ def corpus_mix_unimax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8f: champion-list static index pruning --------------------------------
+# --- champion-list static index pruning -------------------------------------
 
 CHAMPION_M = 20  # postings kept per term in the champion list
 
@@ -3172,18 +3128,15 @@ def search_champion_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = _bm25_agg(spark, sf_dir, BM25_TERMS)
     # the component relations champion pruning needs (tf/dfq/dl/stats)
     # are index-time tables — read them from the shared postings +
-    # dl/stats memos (r13 optimization round: the re-tokenization here
-    # was a second corpus scan per execution; the memo read is integer-
-    # identical — dl = SUM(tf) per doc equals the raw token count).
+    # dl/stats memos (re-tokenizing here would be a second corpus scan
+    # per execution; the memo read is integer-identical — dl = SUM(tf)
+    # per doc equals the raw token count).
     tf_all = _postings_memo(spark, sf_dir)
     dl, stats = _dl_stats_memo(spark, sf_dir)
     tf = tf_all.filter(F.col("w").isin(*BM25_TERMS))
     dfq = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-    wch = Window.partitionBy("w").orderBy(F.col("tf").desc(), "doc_id")
-    champ = (
-        tf.withColumn("rn", F.row_number().over(wch))
-        .filter(F.col("rn") <= CHAMPION_M)
-        .drop("rn")
+    champ = ranked_topk_per(
+        tf, ["w"], [F.col("tf").desc(), "doc_id"], CHAMPION_M, rk_col=None
     )
     idf = (
         (F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5)
@@ -3215,7 +3168,7 @@ def search_champion_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: collocation mining + readability heuristic -------------------------
+# --- collocation mining + readability heuristic ------------------------------
 
 PMI_MIN_SUPPORT = 5  # bigram must occur this often to get a stable PMI
 PMI_TOP = 30  # emitted rows, ranked by support with lexical tiebreak
@@ -3408,7 +3361,7 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: RAKE keyphrase extraction -------------------------------------------
+# --- RAKE keyphrase extraction ------------------------------------------------
 
 RAKE_MIN_OCC = 3  # a phrase must recur to be a keyphrase, not a typo
 RAKE_TOP = 25
@@ -3700,47 +3653,21 @@ def corpus_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_nll = (
         (-F.col("slp")).cast("double") / F.col("n_bigrams") / F.lit(1e6)
     )
-    # r14 optimization round (guide §2, single-reducer removal): the old
-    # NTILE(4) OVER (ORDER BY avg_nll, doc_id) was a global window over
-    # EVERY held-out document — Exchange SinglePartition at corpus grain,
-    # the one-reducer sort that cannot run at 100 TB. Distributed exact
-    # rank instead (the layout_sort_key_advisor prefix-sum pattern):
-    # range-partition by the order key, per-partition row_number plus a
-    # broadcast per-partition offset, then NTILE's bucket arithmetic
-    # applied to the global rank — bit-identical quartiles (first n%4
-    # buckets get floor(n/4)+1 rows, rest floor(n/4), same as NTILE).
+    # NTILE(4) OVER (ORDER BY avg_nll, doc_id) as a window would sort
+    # every held-out document in one partition; the distributed exact
+    # rank feeds NTILE's bucket arithmetic instead — identical quartiles
+    # (the first n%4 buckets get floor(n/4)+1 rows, the rest floor(n/4)).
     scored = agg.select(
         "doc_id", "source", "n_bigrams", avg_nll.alias("avg_nll")
     )
-    n_part = spark.sparkContext.defaultParallelism
-    rp = (
-        scored.repartitionByRange(n_part, "avg_nll", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # pin pid: both branches must agree
-    )
-    woff = (
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = (
-        rp.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("pt"))
-        .select(
-            "pid",
-            F.coalesce(F.sum("pt").over(woff), F.lit(0)).alias("off"),
-            F.sum("pt").over(Window.partitionBy()).alias("n"),
-        )
-    )
-    wlocal = Window.partitionBy("pid").orderBy("avg_nll", "doc_id")
-    r = F.row_number().over(wlocal) + F.col("off")
     quartile = F.expr(
-        "CASE WHEN __r <= (n % 4) * (n DIV 4 + 1) "
-        "THEN (__r - 1) DIV (n DIV 4 + 1) + 1 "
-        "ELSE (n % 4) + (__r - (n % 4) * (n DIV 4 + 1) - 1) "
+        "CASE WHEN cum <= (n % 4) * (n DIV 4 + 1) "
+        "THEN (cum - 1) DIV (n DIV 4 + 1) + 1 "
+        "ELSE (n % 4) + (cum - (n % 4) * (n DIV 4 + 1) - 1) "
         "DIV greatest(n DIV 4, 1) + 1 END"
     )
     return (
-        rp.join(F.broadcast(off), "pid")
-        .withColumn("__r", r)
+        range_prefix_sum(scored, ["avg_nll", "doc_id"], total_col="n")
         .select(
             "doc_id",
             "source",
@@ -4056,13 +3983,9 @@ def search_bool_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("not_cnt") == 0)
         & (F.col("should_cnt") >= BOOL_MIN_SHOULD)
     )
-    top = hits.orderBy(F.col("score").desc(), "doc_id").limit(BOOL_TOPK)
-    w = Window.orderBy(F.col("score").desc(), "doc_id")
-    return top.select(
-        "doc_id",
-        "should_cnt",
-        "score",
-        F.row_number().over(w).cast("bigint").alias("rk"),
+    return ranked_topk(
+        hits.select("doc_id", "should_cnt", "score"),
+        [F.col("score").desc(), "doc_id"], BOOL_TOPK, rk_cast="bigint",
     )
 
 
@@ -4141,15 +4064,11 @@ def search_prefix_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("clause", "doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_matched_terms"))
     )
-    w = Window.partitionBy("clause").orderBy(
-        F.col("n_matched_terms").desc(), "doc_id"
-    )
-    return (
-        hits.join(F.broadcast(nx), "clause")
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= WILD_TOPK)
-        .select("clause", "doc_id", "n_matched_terms", "n_expansions", "rk")
-    )
+    return ranked_topk_per(
+        hits.join(F.broadcast(nx), "clause"),
+        ["clause"], [F.col("n_matched_terms").desc(), "doc_id"], WILD_TOPK,
+        rk_cast="bigint",
+    ).select("clause", "doc_id", "n_matched_terms", "n_expansions", "rk")
 
 
 LLR_MIN_SUPPORT = 5
@@ -4280,7 +4199,7 @@ def corpus_collocations_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10: ES function_score (linear decay) + more_like_this -----------------
+# --- ES function_score (linear decay) + more_like_this ----------------------
 
 # ES linear decay params: value 1.0 within `offset` of `origin`, dropping
 # linearly to `decay` at `offset + scale` — i.e. slope span s = scale/(1-decay).
@@ -4528,10 +4447,7 @@ def search_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf = (
         (F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5)
     ) / (F.col("df").cast("double") + F.lit(0.5))
-    qw = Window.orderBy(
-        (F.col("tf").cast("double") * F.col("idf")).desc(), F.col("w")
-    )
-    qterms = (
+    qterms = ranked_topk(
         tf_all.join(
             F.broadcast(seed), F.col("doc_id") == F.col("seed_id")
         )
@@ -4541,11 +4457,10 @@ def search_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("tf") >= MLT_MIN_TERM_FREQ)
             & (F.col("df") >= MLT_MIN_DOC_FREQ)
         )
-        .select("w", "tf", idf.alias("idf"))
-        .withColumn("qrk", F.row_number().over(qw))
-        .filter(F.col("qrk") <= MLT_MAX_QUERY_TERMS)
-        .select("w", "idf")
-    )
+        .select("w", "tf", idf.alias("idf")),
+        [(F.col("tf").cast("double") * F.col("idf")).desc(), F.col("w")],
+        MLT_MAX_QUERY_TERMS,
+    ).select("w", "idf")
     tfn = (F.col("tf").cast("double") * F.lit(BM25_K1 + 1.0)) / (
         F.col("tf").cast("double")
         + F.lit(BM25_K1)
@@ -4576,7 +4491,7 @@ def search_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r11: ES fuzzy~1 term query (Lucene FuzzyQuery model) --------------------
+# --- ES fuzzy~1 term query (Lucene FuzzyQuery model) -------------------------
 
 # A deliberate TYPO: "sart" is not in the fixture vocabulary, but "sort"
 # and "part" are both one edit away — the typo-tolerance use case fuzzy
@@ -4726,7 +4641,7 @@ def search_fuzzy_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r11: ES significant_terms (JLH), rank_feature, dis_max ------------------
+# --- ES significant_terms (JLH), rank_feature, dis_max -----------------------
 
 SIG_FG_SOURCE = "src7"  # foreground doc set = one source
 SIG_MIN_DOC_COUNT = 3  # ES significant_terms min_doc_count
@@ -5038,7 +4953,7 @@ def search_dis_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r11: ES match_phrase_prefix ---------------------------------------------
+# --- ES match_phrase_prefix --------------------------------------------------
 
 MPP_FIRST = "batch"  # fixed first phrase term
 MPP_PREFIX = "sc"  # last-position prefix ("batch sc*" — type-ahead shape)
@@ -5126,7 +5041,7 @@ def search_match_phrase_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r11: ES field collapsing ------------------------------------------------
+# --- ES field collapsing -----------------------------------------------------
 
 COLLAPSE_TOPK = 8
 COLLAPSE_INNER = 2  # inner_hits per collapsed group
@@ -5189,20 +5104,16 @@ def search_collapse_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm = _bm25_agg(spark, sf_dir, (RF_TERM,)).select("doc_id", "bm25")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     scored = bm.join(d, "doc_id")
-    wg = Window.partitionBy("source").orderBy(F.col("bm25").desc(), "doc_id")
-    ranked = scored.select(
-        "doc_id",
-        "bm25",
-        "source",
-        F.row_number().over(wg).alias("grp_rk"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("source"))
-        .cast("bigint")
-        .alias("n_in_group"),
+    ranked = ranked_topk_per(
+        scored.withColumn(
+            "n_in_group",
+            F.count(F.lit(1)).over(Window.partitionBy("source")).cast("bigint"),
+        ),
+        ["source"], [F.col("bm25").desc(), "doc_id"], COLLAPSE_INNER,
+        rk_col="grp_rk",
     )
     inner = (
-        ranked.filter(F.col("grp_rk") <= COLLAPSE_INNER)
-        .groupBy("source")
+        ranked.groupBy("source")
         .agg(
             F.concat_ws(
                 ",",
@@ -5228,7 +5139,7 @@ def search_collapse_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r11: ES highlighting offsets + composite-agg pagination -----------------
+# --- ES highlighting offsets + composite-agg pagination ----------------------
 
 HL_TERMS = ("spark", "join")  # highlight query terms
 HL_TOPK = 5  # highlight only the top-k ranked docs (ES: hits on the page)
@@ -5348,20 +5259,13 @@ def search_composite_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("doc_count"),
         F.sum("n_chars").cast("bigint").alias("sum_chars"),
     )
-    w = Window.orderBy("source", "lang")
-    return (
-        buckets.withColumn(
-            "bucket_pos", F.row_number().over(w).cast("bigint")
-        )
-        .filter(
-            (F.col("bucket_pos") > (COMP_PAGE - 1) * COMP_PAGE_SIZE)
-            & (F.col("bucket_pos") <= COMP_PAGE * COMP_PAGE_SIZE)
-        )
-        .select("source", "lang", "doc_count", "sum_chars", "bucket_pos")
-    )
+    return ranked_topk(
+        buckets, ["source", "lang"], COMP_PAGE * COMP_PAGE_SIZE,
+        rk_col="bucket_pos", rk_cast="bigint",
+    ).filter(F.col("bucket_pos") > (COMP_PAGE - 1) * COMP_PAGE_SIZE)
 
 
-# --- r10: ES aggregation-DSL fidelity: terms agg error bounds, percolate,
+# --- ES aggregation-DSL fidelity: terms agg error bounds, percolate,
 # --- term suggester ----------------------------------------------------------
 
 TA_SHARDS = 4      # deterministic pseudo-shards (md5 of doc_id)
@@ -5460,12 +5364,9 @@ def search_terms_agg_shard_error(
     per_shard = sharded.groupBy("shard", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    wk = Window.partitionBy("shard").orderBy(F.col("c").desc(), "source")
-    top_reported = (
-        per_shard.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= TA_SHARD_SIZE)
-        .localCheckpoint()  # candidates/floors/merge all re-read it
-    )
+    top_reported = ranked_topk_per(
+        per_shard, ["shard"], [F.col("c").desc(), "source"], TA_SHARD_SIZE
+    ).localCheckpoint()  # candidates/floors/merge all re-read it
     shard_floor = top_reported.groupBy("shard").agg(
         F.min("c").alias("floor_c"),
         F.count(F.lit(1)).cast("bigint").alias("n_reported"),
@@ -5754,17 +5655,14 @@ def search_term_suggester(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("edit_distance") <= SUGGEST_MAX_EDITS)
     )
-    wr = Window.partitionBy("misspelled").orderBy(
-        "edit_distance", F.col("freq").desc(), "suggestion"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rk") <= SUGGEST_TOPK)
-        .select("misspelled", "suggestion", "edit_distance", "freq", "rk")
-    )
+    return ranked_topk_per(
+        scored, ["misspelled"],
+        ["edit_distance", F.col("freq").desc(), "suggestion"], SUGGEST_TOPK,
+        rk_cast="bigint",
+    ).select("misspelled", "suggestion", "edit_distance", "freq", "rk")
 
 
-# --- r10: ES join-field queries (has_child / has_parent) ---------------------
+# --- ES join-field queries (has_child / has_parent) --------------------------
 
 HC_QUAL_MIN = 45.0  # has_child: a returned line with quantity >= this
 
@@ -5855,7 +5753,7 @@ def search_es_join_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hc.unionByName(hp)
 
 
-# --- r12: ES nested query (block-join scoring) + search_after cursor ---------
+# --- ES nested query (block-join scoring) + search_after cursor --------------
 
 NESTED_TERM = "merge"
 NESTED_CHUNK = 8  # tokens per nested child object (the Lucene block unit)
@@ -5946,20 +5844,18 @@ def search_nested_block_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     )
     wp = Window.partitionBy("doc_id")
-    wr = Window.partitionBy("doc_id").orderBy(
-        F.col("tf").desc(), "child_id"
-    )
     parents = (
-        child_tf.select(
-            "doc_id",
-            "child_id",
-            "tf",
-            F.row_number().over(wr).alias("rn"),
-            F.count(F.lit(1)).over(wp).cast("bigint")
-            .alias("n_matching_children"),
-            F.sum("tf").over(wp).cast("bigint").alias("sum_child_tf"),
+        ranked_topk_per(
+            child_tf.select(
+                "doc_id",
+                "child_id",
+                "tf",
+                F.count(F.lit(1)).over(wp).cast("bigint")
+                .alias("n_matching_children"),
+                F.sum("tf").over(wp).cast("bigint").alias("sum_child_tf"),
+            ),
+            ["doc_id"], [F.col("tf").desc(), "child_id"], 1, rk_col=None,
         )
-        .filter(F.col("rn") == 1)
         .select(
             "doc_id",
             "n_matching_children",
@@ -6040,22 +5936,20 @@ def search_after_cursor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("c_doc"), F.col("bm25").alias("c_score")
         )
     )
-    return (
-        scored.crossJoin(F.broadcast(cursor))
-        .filter(
-            (F.col("bm25") < F.col("c_score"))
-            | (
-                (F.col("bm25") == F.col("c_score"))
-                & (F.col("doc_id") > F.col("c_doc"))
-            )
+    after = scored.crossJoin(F.broadcast(cursor)).filter(
+        (F.col("bm25") < F.col("c_score"))
+        | (
+            (F.col("bm25") == F.col("c_score"))
+            & (F.col("doc_id") > F.col("c_doc"))
         )
-        .withColumn("page_rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("page_rk") <= SA_PAGE_SIZE)
-        .select("doc_id", "bm25", "page_rk")
+    )
+    return ranked_topk(
+        after.select("doc_id", "bm25"), [F.col("bm25").desc(), "doc_id"],
+        SA_PAGE_SIZE, rk_col="page_rk", rk_cast="bigint",
     )
 
 
-# --- r12 second wave: span_near, terms_set, boosting, function_score,
+# --- span_near, terms_set, boosting, function_score,
 # --- date_histogram pipeline aggs, adjacency_matrix --------------------------
 
 SPAN_A = "key"
@@ -6463,7 +6357,7 @@ def agg_adjacency_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r12 third wave: histogram w/ empty buckets, extended_stats,
+# --- histogram w/ empty buckets, extended_stats,
 # --- percentile_ranks, filters agg, top_hits, geo_distance (plane) -----------
 
 HIST_INTERVAL = 50  # events.value histogram interval (ES histogram agg)
@@ -6763,17 +6657,13 @@ def agg_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        F.col("n_chars").desc(), "doc_id"
-    )
-    return (
+    return ranked_topk_per(
         d.select(
             "source", "doc_id", F.col("n_chars").cast("bigint").alias("n_chars")
-        )
-        .withColumn("hit_rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("hit_rank") <= TH_PER_BUCKET)
-        .select("source", "hit_rank", "doc_id", "n_chars")
-    )
+        ),
+        ["source"], [F.col("n_chars").desc(), "doc_id"], TH_PER_BUCKET,
+        rk_col="hit_rank", rk_cast="bigint",
+    ).select("source", "hit_rank", "doc_id", "n_chars")
 
 
 @register(
@@ -6830,7 +6720,7 @@ def search_geo_distance_plane(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r12 fourth wave: regexp, sampler, weighted_avg, missing, geo_bounds,
+# --- regexp, sampler, weighted_avg, missing, geo_bounds,
 # --- bucket_script+bucket_sort, range agg ------------------------------------
 
 RX_PATTERN = "^[a-z]*n$"  # ES regexp query: anchored automaton over terms
@@ -7212,7 +7102,7 @@ def agg_range_open_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r12 fifth wave: intervals, multi_terms, auto_date_histogram, pinned -----
+# --- intervals, multi_terms, auto_date_histogram, pinned ---------------------
 
 IV_A = "group"
 IV_B = "order"
@@ -7526,7 +7416,7 @@ def search_pinned_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "pinned", "score", "rk")
 
 
-# --- r12 sixth wave: sibling pipeline aggs, explain API, track_total_hits ----
+# --- sibling pipeline aggs, explain API, track_total_hits --------------------
 
 SIB_INTERVAL = 86400  # daily buckets for the sibling-pipeline demo
 
@@ -8005,7 +7895,7 @@ def agg_rare_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split(text) once into a column before the transform (the inline
     # form re-ran split() three times per bigram: size + both lambda
     # slots), and spread so the explode doesn't run on the fixture
-    # file's single scan split (r13 optimization round).
+    # file's single scan split.
     big = (
         spread(d)
         .select("doc_id", F.split("text", " ").alias("ws"))
@@ -8424,12 +8314,11 @@ def agg_top_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        F.col("n_chars").desc(), "doc_id"
-    )
     return (
-        d.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
+        ranked_topk_per(
+            d, ["source"], [F.col("n_chars").desc(), "doc_id"], 1,
+            rk_col=None,
+        )
         .select(
             "source",
             F.col("doc_id").alias("top_doc_id"),
@@ -8638,16 +8527,14 @@ def agg_geo_line(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(FLOOR(CAST(element_at(embedding, 2) AS DOUBLE)"
         f" * {GEO_SCALE!r} * 1000.0) AS BIGINT)"
     )
-    w = Window.partitionBy("label").orderBy("vec_id")
-    pts = (
+    pts = ranked_topk_per(
         e.select(
             F.col("label").cast("bigint").alias("label"),
             "vec_id",
             qx.alias("qx"),
             qy.alias("qy"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= GL_POINTS)
+        ),
+        ["label"], ["vec_id"], GL_POINTS,
     )
     return pts.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_points"),

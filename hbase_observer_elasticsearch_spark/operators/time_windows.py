@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
 from ..functions.deterministic import dsum, dsum_expr, sql_dsum
+from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -943,7 +944,7 @@ def recursive_markov_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_conf(spark)
     import uuid as _uuid
 
-    # r13 optimization round: Spark's UnionLoopExec re-evaluates every
+    # Spark's UnionLoopExec re-evaluates every
     # non-recursive relation referenced from the recursive branch ONCE
     # PER ITERATION — the transition-matrix subquery (events scan +
     # window + agg) ran 4x (measured 3.1s -> 0.74s warm after
@@ -1784,7 +1785,7 @@ def events_cep_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8e: 3-step sequential pattern mining ----------------------------------
+# --- 3-step sequential pattern mining ---------------------------------------
 
 SEQ3_MIN_SUP = 25  # minimum occurrence support to report a pattern
 
@@ -1862,7 +1863,7 @@ def events_seq3_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: stationary distribution of the event-type Markov chain -------------
+# --- stationary distribution of the event-type Markov chain ------------------
 
 MARKOV_PI_ITERS = 3
 
@@ -1989,7 +1990,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: CUSUM changepoint on the daily event-count series -------------------
+# --- CUSUM changepoint on the daily event-count series ------------------------
 
 
 @register(
@@ -2081,10 +2082,8 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wrun = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     cs = dev.withColumn("cusum", F.sum("dv").over(wrun))
-    wbest = Window.orderBy(F.abs(F.col("cusum")).desc(), "day")
     cp = (
-        cs.withColumn("rk", F.row_number().over(wbest))
-        .filter(F.col("rk") == 1)
+        ranked_topk(cs, [F.abs(F.col("cusum")).desc(), "day"], 1)
         .select(
             F.col("day").alias("cp_day"),
             F.col("cusum").cast("double").alias("cusum_at"),
@@ -2124,7 +2123,7 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r8h: Wilson confidence interval on daily conversion ----------------------
+# --- Wilson confidence interval on daily conversion ---------------------------
 
 WILSON_Z = 1.959963984540054  # 97.5th normal quantile, inlined verbatim
 
@@ -2235,7 +2234,7 @@ def events_conversion_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r9: SPRT sequential conversion monitor ---------------------------------
+# --- SPRT sequential conversion monitor -------------------------------------
 
 SPRT_P0 = 0.80  # H0 conversion rate (value >= SPRT_SUCCESS_T)
 SPRT_P1 = 0.84  # H1 conversion rate
@@ -3316,11 +3315,8 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("day"), F.lit("1970-01-01")).cast("bigint").alias("di"),
         "y_u",
     ).localCheckpoint()  # grid table read by 5 joins below
-    w = Window.partitionBy("event_type").orderBy(F.col("di").desc())
-    test = (
-        d.withColumn("rk_desc", F.row_number().over(w))
-        .filter(F.col("rk_desc") <= FC_TEST_DAYS)
-        .select("event_type", "di", "y_u")
+    test = ranked_topk_per(
+        d, ["event_type"], [F.col("di").desc()], FC_TEST_DAYS, rk_col=None
     )
 
     def lag_join(df: DataFrame, off: int, alias: str) -> DataFrame:
@@ -3526,7 +3522,7 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10: quantile regression (pinball-loss grid) + autocorrelation ---------
+# --- quantile regression (pinball-loss grid) + autocorrelation --------------
 
 QR_TAU_NUM, QR_TAU_DEN = 3, 4  # tau = 0.75
 QR_GRID = 20  # candidate order-stat positions k/QR_GRID, k = 0..QR_GRID
@@ -3631,10 +3627,8 @@ def events_quantile_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
         )
     )
-    wk = Window.partitionBy("event_type").orderBy("loss4", "c")
     return (
-        loss.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") == 1)
+        ranked_topk_per(loss, ["event_type"], ["loss4", "c"], 1, rk_col=None)
         .select(
             "event_type",
             "n_events",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ranking import ranked_topk_per
 from ..registry import register
 from ..session import ensure_session_conf
 
@@ -216,14 +217,12 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_conf(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("c_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .select("c_custkey", "o_orderkey", "o_totalprice")
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 3)
+    return ranked_topk_per(
+        c.join(o, c.c_custkey == o.o_custkey).select(
+            "c_custkey", "o_orderkey", "o_totalprice"
+        ),
+        ["c_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey")], 3,
+        rk_cast="bigint",
     )
 
 

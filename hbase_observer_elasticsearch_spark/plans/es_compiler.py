@@ -47,6 +47,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.ranking import ranked_topk
+
 # Fields analyzed as whitespace-token text (membership semantics);
 # everything else is keyword/numeric (whole-value semantics).
 TEXT_FIELDS = frozenset({"text"})
@@ -284,12 +286,7 @@ def compile_search(df: DataFrame, request: dict) -> DataFrame:
     tot = filtered.agg(
         F.count(F.lit(1)).cast("bigint").alias("total_hits")
     )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("doc_id")
-    return (
-        filtered.orderBy("doc_id")
-        .limit(size)
-        .crossJoin(F.broadcast(tot))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
+    return ranked_topk(
+        filtered.crossJoin(F.broadcast(tot)), ["doc_id"], size,
+        rk_cast="bigint",
     )

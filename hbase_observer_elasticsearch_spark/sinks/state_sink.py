@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.ranking import ranked_topk_per
 from ..memos import Memo
 from .manifest import ManifestRoot
 
@@ -149,23 +150,21 @@ def _lww(rows: DataFrame, keep_ties: bool) -> DataFrame:
     )
     after_del = F.col("__del").isNull() | (F.struct("ts", "seq") > F.col("__del"))
     live = rows.withColumn("__del", last_del).filter(is_tomb | after_del)
-    w = Window.partitionBy("rowkey", "qualifier")
     if keep_ties:
         keep = F.when(is_tomb, F.struct("ts", "seq") == F.col("__del")).otherwise(
             F.col("ts") == F.col("__top")
         )
+        w = Window.partitionBy("rowkey", "qualifier")
         return (
             live.withColumn("__top", F.max("ts").over(w))
             .filter(keep)
             .select(*_CELL_COLS)
             .dropDuplicates()
         )
-    ranked = w.orderBy(F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc())
-    return (
-        live.withColumn("__rn", F.row_number().over(ranked))
-        .filter(F.col("__rn") == 1)
-        .select(*_CELL_COLS)
-    )
+    order = [F.col("ts").desc(), F.col("family").desc(), F.col("seq").desc()]
+    return ranked_topk_per(
+        live, ["rowkey", "qualifier"], order, 1, rk_col=None
+    ).select(*_CELL_COLS)
 
 
 def fold_versions(rows: DataFrame) -> DataFrame:

@@ -39,25 +39,25 @@ def _ts(minute: int, second: int = 0) -> dt.datetime:
 # reinsert, same-qualifier-two-families collision, out-of-order ts within a
 # key, puts in one flush window + delete in the next.
 FIXTURE_ROWS = [
-    # r1: plain upsert then partial update of one qualifier
+    # rowkey r1 — plain upsert then partial update of one qualifier
     (1, "put", "r1", "info", "c1", "v1", _ts(1)),
     (2, "put", "r1", "info", "c2", "v2", _ts(1, 30)),
     (3, "put", "r1", "info", "c1", "v1b", _ts(2)),
-    # r2: delete-then-reinsert — only post-delete cells survive
+    # rowkey r2 — delete-then-reinsert — only post-delete cells survive
     (4, "put", "r2", "info", "c1", "old", _ts(1)),
     (5, "put", "r2", "info", "c2", "keepme-not", _ts(2)),
     (6, "delete", "r2", None, None, None, _ts(3)),
     (7, "put", "r2", "info", "c1", "new", _ts(4)),
-    # r3: same qualifier in two families at the same ts — last family in
+    # rowkey r3 — same qualifier in two families at the same ts — last family in
     # byte order wins (reference #4: HashMap overwrite in NavigableMap
     # iteration order, HbaseDataSyncEsObserver.java:93-102)
     (8, "put", "r3", "fam_a", "c1", "from_a", _ts(5)),
     (9, "put", "r3", "fam_b", "c1", "from_b", _ts(5)),
-    # r4: out-of-order arrival — older ts arrives later in seq, must lose
+    # rowkey r4 — out-of-order arrival — older ts arrives later in seq, must lose
     (10, "put", "r4", "info", "c1", "late-but-old", _ts(1)),
     (11, "put", "r4", "info", "c1", "winner", _ts(6)),
     (12, "put", "r4", "info", "c1", "stale", _ts(3)),
-    # r5: deleted and never reinserted — absent from final state
+    # rowkey r5 — deleted and never reinserted — absent from final state
     (13, "put", "r5", "info", "c1", "gone", _ts(1)),
     (14, "delete", "r5", None, None, None, _ts(7)),
 ]

@@ -1,5 +1,5 @@
 """Unit tests on tiny literal DataFrames: shingling, hashing portability,
-latest_by_key, vector math."""
+vector math."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from hbase_observer_elasticsearch_spark.functions import hashing as H
 from hbase_observer_elasticsearch_spark.functions.vectors import cosine
-from hbase_observer_elasticsearch_spark.operators.cdc import latest_by_key
 from hbase_observer_elasticsearch_spark.operators.dedup import shingle_docs
 
 
@@ -42,17 +41,6 @@ def test_token_code_matches_duckdb(spark):
             "SELECT CAST(CONCAT('0x', substr(md5(?), 1, 8)) AS BIGINT)", [w]
         ).fetchone()
         assert s_codes[w] == d_code, w
-
-
-def test_latest_by_key(spark):
-    df = spark.createDataFrame(
-        [(1, 10, "a"), (1, 20, "b"), (2, 5, "c")], "k long, ts long, v string"
-    )
-    got = {
-        (r["k"], r["v"])
-        for r in latest_by_key(df, ["k"], [F.col("ts")]).collect()
-    }
-    assert got == {(1, "b"), (2, "c")}
 
 
 def test_cosine_known_values(spark):

@@ -67,7 +67,7 @@ def test_every_oracle_parses_and_oracle_coverage(sf_dir):
         con.sql(sql)  # raises on parse/bind errors
     # every oracle key is a registered query
     assert set(ORACLES) <= set(QS)
-    # every query has an oracle (r3: even the Lloyd trainer is unrolled)
+    # every query has an oracle (even the Lloyd trainer is unrolled)
     assert set(QS) == set(ORACLES)
 
 

@@ -1,4 +1,4 @@
-"""Round-10 operator semantics: Theil–Sen robustness vs OLS, and
+"""Operator semantics: Theil–Sen robustness vs OLS, and
 linkage entity transitivity."""
 
 from __future__ import annotations

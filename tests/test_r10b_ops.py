@@ -1,4 +1,4 @@
-"""Round-10 batch-2 operator semantics: theta-sketch set algebra,
+"""Operator semantics: theta-sketch set algebra,
 isotonic calibration (PAV), modularity, co-visitation, pinball quantile,
 ACF, and the ES function_score / more_like_this query shapes.
 

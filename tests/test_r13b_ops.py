@@ -1,4 +1,4 @@
-"""r13 wave-8 operator tests: the remaining ES pipeline aggs
+"""Operator tests: the remaining ES pipeline aggs
 (serial_diff / normalize / stats_bucket+percentiles_bucket), the robust
 metric aggs (boxplot / median_absolute_deviation), the bucket aggs
 (date_range / global / diversified_sampler / reverse_nested), and the

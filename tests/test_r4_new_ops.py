@@ -1,4 +1,4 @@
-"""Property / cross-check tests for the round-4 additions: trailing EWMA,
+"""Property / cross-check tests for trailing EWMA,
 LOCF gap-fill, trailing median, per-user trend, PageRank, source overlap,
 and dup-ngram coverage. The DuckDB oracles prove cross-engine equality;
 these tests prove the SEMANTICS against independent brute-force

@@ -1,4 +1,4 @@
-"""Round-6 operator invariants: waterfill allocation math and
+"""Operator invariants: waterfill allocation math and
 streaming keyed-state dedup uniqueness."""
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Round-7/8 operator invariants pinned on tiny literal DataFrames and
+"""Operator invariants pinned on tiny literal DataFrames and
 the sf0.001 fixture: span-merge island edges, span-excision accounting,
 PRF empty-overlap degeneracy, re-rank recall dominance, SemDeDup pair
 discipline + incremental consistency, and bigram stupid-backoff

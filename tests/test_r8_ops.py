@@ -1,4 +1,4 @@
-"""Round-8 operator invariants on hand-computed corpora: BPE greedy
+"""Operator invariants on hand-computed corpora: BPE greedy
 left-to-right merge semantics (the overlap rule) and DSIR smoothed
 count-ratio arithmetic."""
 
@@ -22,10 +22,10 @@ def _patched(spark, monkeypatch, rows):
 
 def test_bpe_greedy_overlap_and_merge_order(spark, monkeypatch):
     # vocab: aaa (freq 2), bb (freq 1)
-    # round 1: pairs (a,a) weighted 2*2=4 beats (b,b)=1 -> merge (a,a)
+    # merge 1: pairs (a,a) weighted 2*2=4 beats (b,b)=1 -> merge (a,a)
     #   greedy left-to-right: 'aaa' -> [aa, a]  (NOT [a, aa])
-    # round 2: (aa,a)=2 beats (b,b)=1 -> merge (aa,a)  <- proves greedy
-    # round 3: only (b,b)=1 remains
+    # merge 2: (aa,a)=2 beats (b,b)=1 -> merge (aa,a)  <- proves greedy
+    # merge 3: only (b,b)=1 remains
     # final segmentation: aaa->[aaa] x2, bb->[bb] -> 3 corpus symbols
     _patched(spark, monkeypatch, [(1, "aaa bb aaa")])
     rows = {r.rk: r for r in corpus_bpe_merges(spark, "x").collect()}

@@ -1,4 +1,4 @@
-"""Round-8b operator invariants on hand-computed inputs: the estimator
+"""Operator invariants on hand-computed inputs: the estimator
 ladder actually separating on skew, range-partition disjointness, the
 blocked prefix-scan matching a pure-Python watermark replay, perplexity
 tercile ordering, postings varint arithmetic, and matched-pair counts."""

@@ -1,4 +1,4 @@
-"""Round-8c operator invariants: IVM term algebra, checksum-diff fault
+"""Operator invariants: IVM term algebra, checksum-diff fault
 localization, k-core peel convergence, zone-map amplification ordering."""
 
 from __future__ import annotations
@@ -75,7 +75,7 @@ def test_kcore_peels_chain_keeps_triangle(spark, monkeypatch):
     )
     monkeypatch.setattr(dd, "_jaccard_pairs_memo", lambda s, sf: edges)
     rows = {r.round: r for r in dedup_graph_kcore(spark, "x").collect()}
-    # round 1: leaves 1 and 3 peel; node 2 drops out of the edge list
+    # first peel: leaves 1 and 3 peel; node 2 drops out of the edge list
     assert (rows[1].n_removed, rows[1].n_edges, rows[1].n_nodes) == (2, 3, 3)
     # fixed point: the triangle survives, nothing more peels
     assert (rows[2].n_removed, rows[2].n_edges, rows[2].n_nodes) == (0, 3, 3)

@@ -1,4 +1,4 @@
-"""Round-8d operator invariants: hashed-classifier weight arithmetic,
+"""Operator invariants: hashed-classifier weight arithmetic,
 calibration-diagram accounting, contrastive-mining role semantics, and the
 kNN label-noise vote on a planted mislabel."""
 

@@ -1,4 +1,4 @@
-"""Round-8e operator invariants: cogroup reconciliation arithmetic, A-ES
+"""Operator invariants: cogroup reconciliation arithmetic, A-ES
 weighted-reservoir selection, LPA consensus flip, the MIPS->L2 monotone-map
 guarantee in exact arithmetic, compaction-bin boundary accounting, and the
 seq3 gap/support gates."""
@@ -89,8 +89,9 @@ def test_label_propagation_flips_planted_minority(spark, monkeypatch):
     monkeypatch.setattr(dd, "load_table", lambda s, sf, n: docs)
     monkeypatch.setattr(dd, "_jaccard_pairs_memo", lambda s, sf: pairs)
     rows = {r.doc_id: r for r in graph_label_propagation(spark, "r8e-lpa").collect()}
-    # the 'de' hub is outvoted 3:1 by its 'en' neighbors in round 1 and the
-    # self-anchored vote keeps it there in round 2 (no bipartite 2-cycle)
+    # the 'de' hub is outvoted 3:1 by its 'en' neighbors in the first
+    # vote and the self-anchored second vote keeps it there (no bipartite
+    # 2-cycle)
     assert rows[1].lang0 == "de" and rows[1].lang_final == "en"
     assert rows[1].changed is True
     # leaves tie 1:1 (self 'en' vs hub 'de') -> keep-current wins

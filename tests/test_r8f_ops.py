@@ -1,4 +1,4 @@
-"""Round-8f operator invariants: decontamination apply accounting,
+"""Operator invariants: decontamination apply accounting,
 weak-tie link prediction wedge math, champion-list losslessness at full
 width, and the exact KS statistic on planted distributions."""
 

@@ -1,4 +1,4 @@
-"""Round-8g operator invariants: Pareto-skyline dominance edge cases
+"""Operator invariants: Pareto-skyline dominance edge cases
 (equal-price ties, identical twins, strict domination in one axis) and
 the blocked fuzzy join's three-layer filter (blocking, length band,
 threshold-bounded Levenshtein)."""

@@ -1,4 +1,4 @@
-"""Round-8h operator invariants: PMI arithmetic on a planted corpus,
+"""Operator invariants: PMI arithmetic on a planted corpus,
 Flesch banding on hand-computable docs, and nDCG discount math against
 monkeypatched ranked lists."""
 

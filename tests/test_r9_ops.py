@@ -1,4 +1,4 @@
-"""Round-9 operator invariants: IVM delta maintenance on a planted
+"""Operator invariants: IVM delta maintenance on a planted
 change stream, the 1-bit MinHash estimator identity, partition-pruning touch rules, and SPRT micro-unit math."""
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Property-style invariants for the round-9 operators: the winnowing
+"""Property-style invariants for these operators: the winnowing
 guarantee, KM monotonicity, bootstrap CI ordering, and OLS shift
 equivariance — claims the docstrings make, asserted on generated data."""
 

@@ -1,4 +1,4 @@
-"""Round-9b operator invariants: CUBE lattice arithmetic, the
+"""Operator invariants: CUBE lattice arithmetic, the
 first-occurrence running-distinct trick, closed-form OLS on a planted
 line, Poisson-bootstrap degeneracy on constant data, and the KM
 product-limit on a planted censoring pattern."""

@@ -1,4 +1,4 @@
-"""Round-9c operator invariants: add-one bigram LM math on a planted
+"""Operator invariants: add-one bigram LM math on a planted
 corpus, winnowing's shared-substring guarantee, and STL decomposition
 recovering a planted weekly pattern exactly."""
 

@@ -1,4 +1,4 @@
-"""Round-9d operator invariants: MMR greedy selection against a pure
+"""Operator invariants: MMR greedy selection against a pure
 numpy reference, ES bool-query clause semantics, and Lucene-style
 pattern expansion."""
 

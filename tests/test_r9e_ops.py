@@ -1,4 +1,4 @@
-"""Round-9e operator invariants: HBase TTL+VERSIONS compaction
+"""Operator invariants: HBase TTL+VERSIONS compaction
 classification, Apriori triple support/lift arithmetic, permutation-test
 degeneracy under the null, exact funnel-step percentiles, and DiD
 recovering a planted uplift with a zero placebo."""

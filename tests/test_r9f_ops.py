@@ -1,4 +1,4 @@
-"""Round-9f operator invariants: midrank AUC on planted separations and
+"""Operator invariants: midrank AUC on planted separations and
 U-shaped attribution credit conservation."""
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Round-9g: dynamic partition pruning actually fires — the fact scan
+"""Dynamic partition pruning actually fires — the fact scan
 must carry a `dynamicpruning` subquery on the partition column when the
 join's filter lives only on the dim side."""
 

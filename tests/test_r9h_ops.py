@@ -1,4 +1,4 @@
-"""Round-9h operator invariants: chi-square zero on an independent
+"""Operator invariants: chi-square zero on an independent
 table, perfect seasonal skill on a planted weekly series, and IPW
 collapsing to the raw difference under constant propensity."""
 

@@ -1,4 +1,4 @@
-"""Round-9i operator invariants: cohort LTV triangle arithmetic and ABC
+"""Operator invariants: cohort LTV triangle arithmetic and ABC
 boundary classification on planted revenue shares."""
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Round-9j: streaming COUNT DISTINCT equals the batch restatement, and
+"""Streaming COUNT DISTINCT equals the batch restatement, and
 Dunning G² arithmetic on a planted bigram table."""
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
-"""Round-9k: the generalized Murphy identity
+"""The generalized Murphy identity
 Brier = REL − RES + UNC + within-bin variance − 2·within-bin covariance,
 asserted on planted scores with DELIBERATELY correlated (p, y) so the
-covariance term is non-zero (r10: the r9 ADVICE showed the five-term
-identity only held by coincidence on covariance-free data)."""
+covariance term is non-zero (on covariance-free data the five-term
+identity holds by coincidence)."""
 
 from __future__ import annotations
 

@@ -13,6 +13,9 @@ Invariants:
    least one charged build row — a memo without a build row hides its
    cold cost from the headline. Every row of the committed bench_out.json
    is a registered query or one of those build rows.
+5. No package code outside ``functions/ranking.py`` filters a
+   ``row_number()`` rank to ``<= K`` or ``== 1`` (``apply_changefeed``
+   excepted: the independent LWW reference) or range-partitions.
 
 Whether a declared contract matches what the query does (it starts a
 stream when it runs, and no undeclared query does) is checked per query
@@ -21,9 +24,13 @@ in tests/test_queries_smoke.py.
 
 from __future__ import annotations
 
+import ast
+import io
 import json
 import os
+import re
 import sys
+import tokenize
 
 import duckdb
 import pytest
@@ -134,3 +141,54 @@ def test_no_duplicate_module_constants():
         names = pat.findall(src)
         dupes = {n for n in names if names.count(n) > 1}
         assert not dupes, f"{fname}: duplicate module constants {dupes}"
+
+
+PKG = os.path.join(REPO, "hbase_observer_elasticsearch_spark")
+# a filter/where whose condition keeps rank <= K or rank == 1
+_RANK_FILTER = re.compile(r"\.(?:filter|where)\((?:.|\n)*?(?:<=|==\s*1(?![\d.]))")
+
+
+def _calls_outside_ranking(names: set[str]):
+    """(file, line, name, source lines) of each ``.name(`` call in package
+    code (not comments or strings) outside ``functions/ranking.py`` and
+    ``operators/cdc.apply_changefeed``."""
+    for root, _dirs, files in os.walk(PKG):
+        for fname in sorted(f for f in files if f.endswith(".py")):
+            rel = os.path.relpath(os.path.join(root, fname), PKG)
+            src = open(os.path.join(root, fname)).read()
+            if rel == os.path.join("functions", "ranking.py"):
+                continue
+            exempt = [
+                range(n.lineno, n.end_lineno + 1)
+                for n in ast.walk(ast.parse(src))
+                if isinstance(n, ast.FunctionDef) and n.name == "apply_changefeed"
+            ]
+            skip = (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE)
+            toks = tokenize.generate_tokens(io.StringIO(src).readline)
+            toks = [t for t in toks if t.type not in skip]
+            for prev, t, nxt in zip(toks, toks[1:], toks[2:]):
+                line = t.start[0]
+                if (prev.string, nxt.string) == (".", "(") and t.string in names:
+                    if not any(line in span for span in exempt):
+                        yield rel, line, t.string, src.splitlines()
+
+
+def test_topk_filters_go_through_ranking_module():
+    """A ``row_number()`` whose rank a filter within the next five lines
+    keeps to ``<= K`` or ``== 1`` is a hand-written top-k: it belongs in
+    ``ranked_topk`` / ``ranked_topk_per``, where the plan choice lives."""
+    found = [
+        f"{rel}:{line}"
+        for rel, line, _, lines in _calls_outside_ranking({"row_number"})
+        if _RANK_FILTER.search("\n".join(lines[line - 1 : line + 5]))
+    ]
+    assert not found, f"hand-written top-k outside functions/ranking.py: {found}"
+
+
+def test_range_partitioning_goes_through_ranking_module():
+    """A pinned partition id only means something when every branch reads
+    one checkpointed partitioning: only ``range_partitioned`` may
+    range-partition or read ``spark_partition_id``."""
+    calls = _calls_outside_ranking({"spark_partition_id", "repartitionByRange"})
+    found = [f"{rel}:{line} {name}" for rel, line, name, _ in calls]
+    assert not found, f"range partitioning outside functions/ranking.py: {found}"

@@ -102,7 +102,7 @@ def main() -> int:
         # sort_values over ALL output columns, which raises TypeError on
         # list/array-valued columns. tools/check.py's own canon()
         # str()-coerces, so without this probe an array column passes
-        # locally and still fails the driver (seen r2: cdc_stateful_stream).
+        # locally and still fails the driver.
         try:
             if len(sdf):
                 sdf.sort_values(by=sorted(sdf.columns))

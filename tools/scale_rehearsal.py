@@ -47,7 +47,7 @@ DOC_QUERIES = [
     "dedup_clusters",
     "dedup_keep_best",
     "dedup_cluster_size_histogram",
-    # r8: iterative peel on the same pair memo — wall should track edge
+    # iterative peel on the same pair memo — wall should track edge
     # count (~= verified pairs), and rounds are bounded by peel depth
     "dedup_graph_kcore",
     # r8e/f: LPA rounds and wedge enumeration both ride the pair memo —
@@ -70,15 +70,15 @@ TEXT_QUERIES = [
     # sublinear in corpus size
     "search_bm25_topk",
     "search_phrase_positional",
-    # r8: postings sizing is one distinct+window pass (token grain);
+    # postings sizing is one distinct+window pass (token grain);
     # perplexity bucketing re-runs the bigram-LM joins at doc grain
     "search_postings_delta_stats",
     "corpus_perplexity_buckets",
-    # r8h: PMI and RAKE are token-grain (explode + vocabulary-keyed
+    # PMI and RAKE are token-grain (explode + vocabulary-keyed
     # joins/windows) — wall should track token count, never pairs
     "corpus_bigram_pmi",
     "text_keyphrase_rake",
-    # r9 (this session): the bigram LM is token-grain (two count tables
+    # the bigram LM is token-grain (two count tables
     # + word-keyed joins); winnowing is gram-grain with ~2/(w+1)
     # selection density — wall should track chars, the pair join should
     # track SELECTED fingerprints, never grams^2
@@ -90,7 +90,7 @@ TEXT_QUERIES = [
     # ~linear in corpus size
     "search_more_like_this",
     "search_percolate_queries",
-    # r11: fuzzy rides the dictionary (Heaps-sublinear expansion scan +
+    # fuzzy rides the dictionary (Heaps-sublinear expansion scan +
     # bounded postings join); significant_terms is one distinct-postings
     # pass + term-grain counts; phrase-prefix is postings-pruned
     # positional joins — all should track token mass, never pairs
@@ -99,15 +99,15 @@ TEXT_QUERIES = [
     "search_match_phrase_prefix",
 ]
 EVENT_QUERIES = [
-    # r8: the blocked prefix-scan — wall must grow ~linearly with event
+    # the blocked prefix-scan — wall must grow ~linearly with event
     # count (blocks are fixed-width arrival hours; rows/block grow 10x)
     "stream_watermark_lateness_audit",
-    # r9 (this session): both collapse events to (user, day) / day-grid
+    # both collapse events to (user, day) / day-grid
     # grain in one map-side-combined agg — wall tracks the scan, the
     # windows run on the tiny grid at any scale
     "events_survival_km",
     "events_new_vs_returning",
-    # r10: binned+salted interval-point range join under the planted
+    # binned+salted interval-point range join under the planted
     # whole-range hot window. The 10x feed has NO 'error' rows, so only
     # the planted whole-range window survives — the measurement isolates
     # the hot-window path pure: 10x points must spread over the same
@@ -134,10 +134,10 @@ VEC_QUERIES = [
     "similarity_topk_ivfpq",
     "similarity_recall_ivfpq",
     "dedup_semantic_kmeans",
-    # r8h: the Gram pass is n x dim^2 product rows — wall should grow
+    # the Gram pass is n x dim^2 product rows — wall should grow
     # ~linearly with n (dim fixed), power steps are dim-sized
     "similarity_pca_collapse_audit",
-    # r9 (this session): MMR re-ranks the memoized brute-force top-k —
+    # MMR re-ranks the memoized brute-force top-k —
     # its own cost is O(q·k²) regardless of corpus size; the wall delta
     # vs bruteforce is the flat greedy overhead
     "similarity_mmr_diversify",
@@ -601,7 +601,7 @@ def main() -> None:
             "orders of magnitude under all-pairs, CC rounds are O(log "
             "d), and family wall/shuffle grow sub-linearly in corpus "
             "size on fixed resources, and max streaming state rows stay "
-            "flat under 10x history. r9: the REGISTERED "
+            "flat under 10x history. The REGISTERED "
             "dedup_semantic_kmeans derives k from the corpus count "
             "(k=8 at 1x, k=80 at 10x) — semdedup_k_scaling's "
             "registered_query rows measure the shipped operator "
@@ -610,7 +610,7 @@ def main() -> None:
             "(~109x pair mass / ~8x pair wall at 10x)."
         ),
     }
-    # r10: embed the 100x spot rehearsal (tools/scale100_spot.py) so the
+    # embed the 100x spot rehearsal (tools/scale100_spot.py) so the
     # committed artifact carries both decades of scaling evidence.
     spot = os.path.join(REPO, "SCALE100_SPOT.json")
     if os.path.exists(spot):
