@@ -837,11 +837,12 @@ def cdc_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     real HBase-snapshot/replication-log reader plugs in (reference
     client factory, polyinfo/EsClient.java:29-60).
 
-    The connector declares 4 rowkey-hash partitions (the stand-in for
-    HBase region splits), Spark schedules one task per partition, and
-    this query proves the full surface end-to-end: schema declaration,
-    partition planning, executor-side reads, and a downstream aggregate
-    that must equal the relational restatement of the same feed.
+    The connector declares one partition per leading-digit rowkey
+    region (the pre-split HBase regions; all ten here, since no filter
+    is pushed), Spark schedules one task per region, and this query
+    proves the full surface end-to-end: schema declaration, partition
+    planning, executor-side reads, and a downstream aggregate that must
+    equal the relational restatement of the same feed.
     """
     ensure_session_conf(spark)
     import os
@@ -852,7 +853,6 @@ def cdc_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     cf = (
         spark.read.format("changefeed_py")
         .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("numPartitions", "4")
         .load()
     )
     return cf.groupBy("op").agg(
@@ -900,11 +900,12 @@ def cdc_pushdown_region_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a) prunes partition planning to the single matching region — the
     other nine regions never get a task — and (b) becomes exact numeric
     user_id row-group filters inside the region's parquet read. The
-    pruning itself is pinned by tests/test_r12_ops.py (planned-partition
-    counts asserted at the reader level and through the full Spark
-    plan); this query pins the RESULT equivalence: per-rowkey mutation
-    counts, delete counts, put-value sums, and seq bounds must match
-    the relational restatement DuckDB computes from the raw table.
+    pruning itself is pinned by tests/test_changefeed_datasource.py
+    (planned-partition counts asserted at the reader level and through
+    the full Spark plan); this query pins the RESULT equivalence:
+    per-rowkey mutation counts, delete counts, put-value sums, and seq
+    bounds must match the relational restatement DuckDB computes from
+    the raw table.
 
     Scale shape: at 100 TB the feed is region-partitioned exactly like
     this, and a prefix/range scan touches O(matching regions) tasks and
@@ -920,7 +921,6 @@ def cdc_pushdown_region_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cf = (
         spark.read.format("changefeed_py")
         .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("partitionBy", "rowkey")
         .load()
         .filter(F.col("rowkey").startswith("4"))
     )
@@ -965,9 +965,9 @@ def cdc_projection_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifier reads one column family slice, not the whole row).
 
     The executor-side column-set shrinkage is pinned by
-    tests/test_r13_ops.py::TestColumnPruning; this query pins result
-    equivalence of the narrow scan + region pushdown against the
-    relational restatement.
+    tests/test_changefeed_datasource.py::TestColumnPruning; this query
+    pins result equivalence of the narrow scan + region pushdown
+    against the relational restatement.
 
     Scale shape: at 100 TB a 2-of-5-column projection over a pruned
     region reads O(matching row groups × selected columns) — both
@@ -982,7 +982,6 @@ def cdc_projection_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cf = (
         spark.read.format("changefeed_py")
         .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("partitionBy", "rowkey")
         .option("columns", "seq,rowkey")
         .load()
         .filter(F.col("rowkey").startswith("7"))

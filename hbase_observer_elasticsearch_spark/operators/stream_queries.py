@@ -596,12 +596,12 @@ def cdc_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     python_datasource.ChangefeedStreamReader): `spark.readStream.format(
     "changefeed_py")` drains the changefeed in offset-tracked
     micro-batches (event-id watermarks standing in for replication-log
-    LSNs), each planned as numPartitions executor-side mod-slices — the
-    Spark driver reads only the parquet footer, never the feed. The drained
-    aggregate must equal the batch relational restatement — proving the
-    initialOffset / latestOffset / partitions / read replay contract
-    end-to-end, the final piece of connector parity
-    with the reference's client factory (polyinfo/EsClient.java:29-60):
+    LSNs), each planned as one executor-side task per rowkey region —
+    the Spark driver reads only the parquet footer, never the feed. The
+    drained aggregate must equal the batch relational restatement —
+    proving the initialOffset / latestOffset / partitions / read replay
+    contract end-to-end, the final piece of connector parity with the
+    reference's client factory (polyinfo/EsClient.java:29-60):
     same connector class serves batch reads (cdc_python_datasource) AND
     resumable partition-parallel streams.
     """
@@ -642,12 +642,12 @@ def stream_pushdown_region_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     replication hook). Every micro-batch plans tasks ONLY for the
     rowkey regions the prefixes touch (regions '4' and '7' here; the
     other eight never get a task — pinned by
-    tests/test_r13_ops.py::TestStreamRegionPruning), and each task's
-    parquet read carries both the eid offset range AND the exact
-    prefix→numeric user_id ranges as row-group filters, so per-batch IO
-    tracks selected data, not feed size. The drained aggregate must
-    equal the batch relational restatement over the prefix-filtered
-    feed — the stream face of `cdc_pushdown_region_scan`'s contract.
+    tests/test_changefeed_datasource.py::TestStreamRegionPruning), and
+    each task's parquet read carries both the eid offset range AND the
+    exact prefix→numeric user_id ranges as row-group filters, so
+    per-batch IO tracks selected data, not feed size. The drained
+    aggregate must equal the batch relational restatement over the
+    prefix-filtered feed — the stream face of `cdc_pushdown_region_scan`'s contract.
     """
     ensure_session_conf(spark)
     # the source emits only the rows that survive region pruning

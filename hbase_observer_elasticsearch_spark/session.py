@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for a local session: a third of the
+    host's physical memory, capped at 16g, so two local sessions (a
+    tool beside a test run) fit on one host. ``SPARK_DRIVER_MEM``
+    overrides it."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(phys_mb // 3, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "hbase-observer-es-spark",
     shuffle_partitions: int | None = None,
@@ -31,9 +42,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        # Spark 4.1 refuses a Python DataSource reader that implements
+        # pushFilters (the changefeed connector's batch reader) unless
+        # this is set; on the builder it reaches every newSession() too.
+        .config("spark.sql.python.filterPushdown.enabled", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -69,7 +84,9 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # Source-side filter pushdown for Python DataSources (Spark 4.1):
-    # off by default upstream; required for the changefeed reader's
-    # rowkey-region pruning (sources/python_datasource.py).
+    # off by default upstream, and the changefeed connector's batch
+    # reader cannot run without it (sources/python_datasource.py).
+    # get_spark sets it on the builder; sessions built elsewhere get it
+    # here.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return spark

@@ -5,22 +5,25 @@ replication-log connector plugs in (reference client factory,
 polyinfo/EsClient.java:29-60; our emulated option map,
 sinks/state_sink.py).
 
-Why this shape matters at 100 TB: the reader declares PARTITIONS (here:
-hash ranges of the rowkey space, like HBase regions) and Spark schedules
-one task per partition — the connector controls split granularity while
-Catalyst keeps projection/limit handling. Each task reads only its slice
-via pyarrow (predicate-filterable at the row-group level in a real
-implementation), so adding executors scales reads linearly exactly like
-the built-in parquet source.
+Why this shape matters at 100 TB: the reader declares PARTITIONS and
+Spark schedules one task per partition — the connector controls split
+granularity while Catalyst keeps projection/limit handling. Each task
+reads only its slice via pyarrow row-group filters, so adding executors
+scales reads linearly exactly like the built-in parquet source.
 
-The partition count is an option (`numPartitions`, default 4); rows are
-dealt to partitions by `seq % numPartitions`, a stand-in for region
-ranges. Reading is Arrow-batch-friendly (pyarrow table → per-row tuples;
-a production reader would yield RecordBatches).
+There is one layout: the feed is split into leading-digit rowkey
+regions ('0'..'9', a pre-split HBase table), one task per region, and a
+region reads only the numeric user_id ranges its rowkeys map to. The
+batch reader, `RegionChangefeedReader`, prunes regions by the rowkey
+filters Spark pushes (`pushFilters`); the stream reader,
+`ChangefeedStreamReader`, plans one task per region for each event-id
+offset range and reads only parquet footers on the driver. Both readers
+hand their partitions to one executor read function, `_read_region`,
+which crosses into Spark as Arrow RecordBatches.
 
-The streaming face is one reader, `ChangefeedStreamReader`: offsets are
-event-id watermarks and each micro-batch is read on executors in
-``numPartitions`` slices; the driver reads only parquet footers.
+Options: ``path``, ``columns`` (projection), ``batchSize`` (stream
+rate limit) and ``rowkeyPrefix`` (comma-separated prefixes scoping the
+regions read, on both faces); any other option raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -32,13 +35,9 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-
-class _ModPartition(InputPartition):
-    def __init__(self, mod: int, n_mod: int, path: str):
-        self.mod = mod
-        self.n_mod = n_mod
-        self.path = path
-
+# The connector's options, matched case-insensitively (Spark lowercases
+# option keys before the DataSource sees them).
+_OPTIONS = ("path", "columns", "batchSize", "rowkeyPrefix")
 
 # Output column → (source parquet columns it derives from, DDL type).
 # The projection contract: an output column's cost is exactly its source
@@ -74,21 +73,28 @@ def _parse_columns(options) -> tuple[str, ...]:
     return tuple(c for c in _FULL_COLS if c in set(want))
 
 
-def _source_columns(
-    out_cols: tuple[str, ...], extra: tuple[str, ...] = ()
-) -> list[str]:
-    """Source parquet columns an output projection needs, plus any
-    ``extra`` the reader itself requires (e.g. event_id for eid
-    mod-slicing), in stable parquet-schema order."""
-    need = set(extra)
-    for c in out_cols:
-        need.update(_CHANGEFEED_COLS[c][0])
+def _source_columns(out_cols: tuple[str, ...]) -> list[str]:
+    """Source parquet columns an output projection needs, in stable
+    parquet-schema order. Filter columns (event_id, user_id) are not
+    added: pyarrow evaluates ``filters`` before the ``columns``
+    projection, so a column used only to filter is never read."""
+    need = {s for c in out_cols for s in _CHANGEFEED_COLS[c][0]}
     order = ["event_id", "event_type", "user_id", "value"]
     return [c for c in order if c in need]
 
 
 class ChangefeedDataSource(DataSource):
     """`spark.read.format("changefeed_py").option("path", events_parquet)`."""
+
+    def __init__(self, options):
+        valid = {o.lower() for o in _OPTIONS}
+        unknown = sorted(k for k in options if k.lower() not in valid)
+        if unknown:
+            raise ValueError(
+                f"changefeed_py: unknown options {unknown}; "
+                f"valid: {list(_OPTIONS)}"
+            )
+        super().__init__(options)
 
     @classmethod
     def name(cls) -> str:
@@ -100,14 +106,8 @@ class ChangefeedDataSource(DataSource):
             for c in _parse_columns(self.options)
         )
 
-    def reader(self, schema) -> DataSourceReader:
-        # ``partitionBy=rowkey`` opts into the region-scan layout with
-        # Spark 4.1 filter pushdown (RegionChangefeedReader); the
-        # default mod-slice reader stays pushdown-free so it works in
-        # sessions without spark.sql.python.filterPushdown.enabled.
-        if self.options.get("partitionBy", "hash") == "rowkey":
-            return RegionChangefeedReader(self.options)
-        return ChangefeedReader(self.options)
+    def reader(self, schema) -> "RegionChangefeedReader":
+        return RegionChangefeedReader(self.options)
 
     def streamReader(self, schema) -> "ChangefeedStreamReader":
         return ChangefeedStreamReader(self.options)
@@ -145,27 +145,50 @@ def _project_changefeed(t, out_cols=None):
     yield from out.to_batches()
 
 
-def _changefeed_record_batches(table, mod: int, n_mod: int, out_cols=None):
-    """One mod-slice of the feed (seq % n_mod == mod), projected."""
-    import pyarrow.compute as pc
-
-    eids = table["event_id"]
-    mask = pc.equal(
-        pc.subtract(eids, pc.multiply(pc.divide(eids, n_mod), n_mod)), mod
-    )
-    yield from _project_changefeed(table.filter(mask), out_cols)
-
-
 class _RegionPartition(InputPartition):
-    """One executor task: the rowkey region whose keys start with
-    ``prefix`` (a leading digit — a pre-split HBase region), narrowed by
-    the numeric user_id ranges the pushed rowkey filters translate to."""
+    """One executor task: one rowkey region of the feed at ``path`` —
+    its numeric user_id ``ranges`` (inclusive), or the exact user_id
+    ``keys`` a pushed EqualTo/In left (None = the whole ranges) —
+    bounded on the stream face to the offset range ``lo < event_id <=
+    hi`` (both None on the batch face)."""
 
-    def __init__(self, prefix: str, path: str, ranges, keys):
-        self.prefix = prefix
+    def __init__(self, path: str, ranges, keys=None, lo=None, hi=None):
         self.path = path
-        self.ranges = ranges  # list[(lo, hi)] inclusive user_id ranges
-        self.keys = keys  # exact user_id list from EqualTo/In, or None
+        self.ranges = ranges
+        self.keys = keys
+        self.lo = lo
+        self.hi = hi
+
+
+def _read_region(partition: _RegionPartition | None, src_cols, out_cols):
+    """Executor-side read of one region task, shared by both readers.
+
+    The region predicate (and the offset range, when there is one) rides
+    into the parquet read as DNF row-group filters — exact, see
+    _prefix_ranges — so a task touches only row groups whose user_id
+    and event_id statistics overlap it."""
+    if partition is None:
+        # Fully-pruned batch scan: partitions() returned [] and Spark
+        # schedules one empty task with a None partition.
+        return
+    # Executor-side: import locally so the driver plan never needs it.
+    import pyarrow.parquet as pq
+
+    lo, hi = partition.lo, partition.hi
+    eids = (
+        []
+        if lo is None
+        else [("event_id", ">", lo), ("event_id", "<=", hi)]
+    )
+    if partition.keys is not None:
+        dnf = [eids + [("user_id", "in", list(partition.keys))]]
+    else:
+        dnf = [
+            eids + [("user_id", ">=", rlo), ("user_id", "<=", rhi)]
+            for rlo, rhi in partition.ranges
+        ]
+    t = pq.read_table(partition.path, columns=src_cols, filters=dnf)
+    yield from _project_changefeed(t, out_cols)
 
 
 _MAX_ROWKEY_DIGITS = 19  # str(int64.max) is 19 digits
@@ -195,40 +218,30 @@ def _prefix_ranges(prefix: str) -> list[tuple[int, int]]:
     return out
 
 
-class ChangefeedReader(DataSourceReader):
-    """Default batch reader: ``numPartitions`` mod-slices of the seq
-    space (region-count stand-in; no pruning surface — the pushdown
-    path lives in RegionChangefeedReader so this class stays usable in
-    sessions that never enable
-    ``spark.sql.python.filterPushdown.enabled``)."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        self.n = int(options.get("numPartitions", "4"))
-        self.out_cols = _parse_columns(options)
-        # event_id always read: the mod-slice mask needs it even when
-        # seq is pruned from the projection.
-        self.src_cols = _source_columns(self.out_cols, extra=("event_id",))
-
-    def partitions(self):
-        return [_ModPartition(i, self.n, self.path) for i in range(self.n)]
-
-    def read(self, partition: _ModPartition):
-        # Executor-side: import locally so the driver plan never needs it.
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(partition.path, columns=self.src_cols)
-        yield from _changefeed_record_batches(
-            t, partition.mod, partition.n_mod, self.out_cols
-        )
+def _plan_regions(options) -> dict[str, list[tuple[int, int]]]:
+    """The regions a reader starts from: {leading digit: union of the
+    user_id ranges its prefixes cover}. Without a ``rowkeyPrefix``
+    option that is all ten regions, each its whole decade union; with
+    one, only the regions the comma-separated prefixes touch. A prefix
+    matching no canonical rowkey contributes nothing, so all prefixes
+    unmatchable → {} (a scan or micro-batch of 0 tasks)."""
+    raw = options.get("rowkeyPrefix")
+    prefixes = raw.split(",") if raw else "0123456789"
+    regions: dict[str, list[tuple[int, int]]] = {}
+    for prefix in prefixes:
+        prefix = prefix.strip()
+        pr = _prefix_ranges(prefix)
+        if pr:
+            regions.setdefault(prefix[0], []).extend(pr)
+    return regions
 
 
 class RegionChangefeedReader(DataSourceReader):
-    """Batch reader with SOURCE-SIDE FILTER PUSHDOWN (Spark 4.1
-    `pushFilters`). Selected via
-    ``.option("partitionBy", "rowkey")``; requires
-    ``spark.sql.python.filterPushdown.enabled`` (set by
-    session.ensure_session_conf).
+    """The batch reader, with SOURCE-SIDE FILTER PUSHDOWN (Spark 4.1
+    `pushFilters`). Spark refuses a reader that implements pushFilters
+    unless ``spark.sql.python.filterPushdown.enabled`` is set
+    (DATA_SOURCE_PUSHDOWN_DISABLED); session.get_spark sets it on the
+    builder and session.ensure_session_conf on sessions built elsewhere.
 
     Layout: one partition per leading-digit rowkey region ('0'..'9';
     the '0' region is the single rowkey "0", since canonical str(int)
@@ -254,11 +267,9 @@ class RegionChangefeedReader(DataSourceReader):
 
     def __init__(self, options):
         self.path = options.get("path")
+        self._regions = _plan_regions(options)
         self._pushed: list = []  # serializable (kind, value) pairs
         self.out_cols = _parse_columns(options)
-        # No reader-side slicing dependency: region tasks filter on
-        # user_id via pyarrow `filters`, which pyarrow evaluates before
-        # the `columns` projection — filter columns need not be read.
         self.src_cols = _source_columns(self.out_cols)
 
     # -- Spark 4.1 filter-pushdown hook -------------------------------------
@@ -286,7 +297,7 @@ class RegionChangefeedReader(DataSourceReader):
         """Region prefix → (user_id ranges, exact key list or None),
         intersecting every pushed filter. Empty dict = fully pruned."""
         regions: dict[str, tuple[list, object]] = {
-            d: (_prefix_ranges(d), None) for d in "0123456789"
+            d: (ranges, None) for d, ranges in self._regions.items()
         }
         for kind, val in self._pushed:
             if kind == "eq":
@@ -311,7 +322,7 @@ class RegionChangefeedReader(DataSourceReader):
                         else [k for k in mine if k in ks]
                     )
                     # Intersect with ranges narrowed by any EARLIER
-                    # prefix filter — read() serves keys without
+                    # prefix filter — the read serves keys without
                     # re-checking ranges, so a key outside the current
                     # ranges must die here or the conjunction silently
                     # widens.
@@ -352,73 +363,48 @@ class RegionChangefeedReader(DataSourceReader):
 
     def partitions(self):
         return [
-            _RegionPartition(d, self.path, ranges, keys)
-            for d, (ranges, keys) in sorted(
+            _RegionPartition(self.path, ranges, keys)
+            for _, (ranges, keys) in sorted(
                 self._surviving_regions().items()
             )
         ]
 
     def read(self, partition: _RegionPartition):
-        if partition is None:
-            # Fully-pruned scan: partitions() returned [] and Spark
-            # schedules one empty task with a None partition.
-            return
-        # Executor-side: import locally so the driver plan never needs it.
-        import pyarrow.parquet as pq
-
-        # Region scan: the pushed predicate rides into the parquet read
-        # as DNF row-group filters (exact — see _prefix_ranges), so a
-        # region task touches only row groups whose user_id statistics
-        # overlap its ranges.
-        if partition.keys is not None:
-            dnf = [[("user_id", "in", list(partition.keys))]]
-        else:
-            dnf = [
-                [("user_id", ">=", lo), ("user_id", "<=", hi)]
-                for lo, hi in partition.ranges
-            ]
-        if not dnf:
-            return
-        t = pq.read_table(
-            partition.path, columns=self.src_cols, filters=dnf
-        )
-        yield from _project_changefeed(t, self.out_cols)
+        yield from _read_region(partition, self.src_cols, self.out_cols)
 
 
 def register_changefeed_datasource(spark) -> None:
-    """Idempotent registration of the connector with a SparkSession."""
+    """Idempotent registration of the connector with a SparkSession.
+
+    Spark 4.1 checks a new name against the thread's ACTIVE session, not
+    ``spark``: a newSession() of a session that registered the connector
+    is refused as "already exists" yet cannot see it. So ``spark``'s own
+    registry decides, and ``spark`` is made active while it registers."""
+    jspark = spark._jsparkSession
+    name = ChangefeedDataSource.name()
+    if jspark.sessionState().dataSourceManager().dataSourceExists(name):
+        return
+    jsession = spark.sparkContext._jvm.org.apache.spark.sql.SparkSession
+    active = jsession.getActiveSession()
+    jsession.setActiveSession(jspark)
     try:
         spark.dataSource.register(ChangefeedDataSource)
-    except Exception as e:  # noqa: BLE001 — already-registered is fine
-        if "already" not in str(e).lower():
-            raise
-
-
-class _EidRangePartition(InputPartition):
-    """One executor task: mod-slice ``mod`` of eid range ``(lo, hi]``,
-    optionally narrowed to the user_id ``ranges`` of a rowkey region
-    (stream-side region pruning; None = unpruned)."""
-
-    def __init__(
-        self, mod: int, n_mod: int, path: str, lo: int, hi: int, ranges=None
-    ):
-        self.mod = mod
-        self.n_mod = n_mod
-        self.path = path
-        self.lo = lo
-        self.hi = hi
-        self.ranges = ranges
+    finally:
+        if active.isDefined():
+            jsession.setActiveSession(active.get())
+        else:
+            jsession.clearActiveSession()
 
 
 class ChangefeedStreamReader(DataSourceStreamReader):
     """Partition-parallel streaming reader (Spark 4
     `DataSourceStreamReader`): offsets are event-id watermarks
     (``{"eid": N}`` = everything with event_id <= N served — the LSN of
-    a real replication log), and every micro-batch is planned as
-    ``numPartitions`` mod-slices of the offset range, read ON EXECUTORS
-    via pyarrow with an eid-range row-group filter. The driver touches
-    only the parquet FOOTER (min/max event_id statistics) — it never
-    materializes the feed, so driver memory is O(1) in feed size.
+    a real replication log), and every micro-batch is planned as one
+    task per rowkey region for the offset range, read ON EXECUTORS via
+    pyarrow with eid-range and region row-group filters. The driver
+    touches only the parquet FOOTER (min/max event_id statistics) — it
+    never materializes the feed, so driver memory is O(1) in feed size.
 
     Replay contract: `partitions(start, end)` is a pure function of the
     offsets, so a restarted query re-planning the checkpointed
@@ -442,22 +428,13 @@ class ChangefeedStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.path = options.get("path")
         self.batch = int(options.get("batchSize", "2500"))
-        self.n = int(options.get("numPartitions", "4"))
-        # Stream-side region pruning: a
-        # comma-separated ``rowkeyPrefix`` option scopes the tail to the
-        # rowkey regions the prefixes touch — the replication-log analog
-        # of an HBase scan bounded to a key range. Spark 4.1 exposes
-        # pushFilters on batch readers only, so the stream face takes
-        # the predicate as an option; the translation reuses the batch
-        # reader's exact prefix→numeric-range machinery. None = the
-        # pruning-free mod-slice layout (unchanged default).
-        self._region_ranges = self._plan_regions(
-            options.get("rowkeyPrefix")
-        )
+        # Stream-side region pruning: Spark 4.1 exposes pushFilters on
+        # batch readers only, so the tail takes its rowkey predicate as
+        # the ``rowkeyPrefix`` option — the replication-log analog of an
+        # HBase scan bounded to a key range.
+        self._regions = _plan_regions(options)
         self.out_cols = _parse_columns(options)
-        # event_id always read: the eid mod-slice mask needs it even
-        # when seq is pruned from the projection.
-        self.src_cols = _source_columns(self.out_cols, extra=("event_id",))
+        self.src_cols = _source_columns(self.out_cols)
         self._bounds = None  # (min_eid, max_eid) from the parquet footer
         self._planned = None  # highest eid watermark handed to Spark
         # Observability for the partitions() inverted-range guard: the
@@ -468,24 +445,6 @@ class ChangefeedStreamReader(DataSourceStreamReader):
         # firing makes a protocol-order change observable instead of
         # silent.
         self.inverted_range_count = 0
-
-    @staticmethod
-    def _plan_regions(prefix_opt):
-        """``rowkeyPrefix`` option → {leading digit: union of user_id
-        ranges}, or None when the option is absent/empty (no pruning).
-        A prefix matching no canonical rowkey contributes nothing; all
-        prefixes unmatchable → {} (every micro-batch plans 0 tasks)."""
-        if not prefix_opt:
-            return None
-        regions: dict[str, list[tuple[int, int]]] = {}
-        for prefix in prefix_opt.split(","):
-            prefix = prefix.strip()
-            if not prefix:
-                continue
-            pr = _prefix_ranges(prefix)
-            if pr:
-                regions.setdefault(prefix[0], []).extend(pr)
-        return regions
 
     # -- driver-side helpers (footer metadata only, never data) ------------
     def _eid_bounds(self) -> tuple[int, int]:
@@ -550,55 +509,16 @@ class ChangefeedStreamReader(DataSourceStreamReader):
                     self.inverted_range_count,
                 )
             return []
-        if self._region_ranges is None:
-            return [
-                _EidRangePartition(i, self.n, self.path, lo, hi)
-                for i in range(self.n)
-            ]
-        # Region-pruned plan: only surviving regions get tasks — Spark
-        # never schedules a slice for a region the prefix excludes, the
-        # stream face of cdc_pushdown_region_scan's batch pruning. Each
-        # surviving region is mod-sliced so pruning never costs
-        # parallelism (total tasks ≈ numPartitions regardless of how
-        # many regions survive); fully-pruned plans are empty batches.
-        regions = sorted(self._region_ranges.items())
-        if not regions:
-            return []
-        per_region = max(1, self.n // len(regions))
+        # Only surviving regions get tasks — Spark never schedules one
+        # for a region the prefixes exclude, the stream face of the
+        # batch reader's pruning; a fully-pruned plan is an empty batch.
         return [
-            _EidRangePartition(i, per_region, self.path, lo, hi, ranges)
-            for _, ranges in regions
-            for i in range(per_region)
+            _RegionPartition(self.path, ranges, None, lo, hi)
+            for _, ranges in sorted(self._regions.items())
         ]
 
-    def read(self, partition: _EidRangePartition):
-        # Executor-side: eid-range filter prunes at the row-group level,
-        # so each task reads only its slice of its offset range; when
-        # the plan is region-pruned the region's user_id ranges ride
-        # into the same parquet read as DNF row-group filters. Output
-        # crosses into Spark as Arrow RecordBatches (no per-row Python).
-        import pyarrow.parquet as pq
-
-        eid_conj = [
-            ("event_id", ">", partition.lo),
-            ("event_id", "<=", partition.hi),
-        ]
-        if partition.ranges is None:
-            dnf = [eid_conj]
-        else:
-            dnf = [
-                eid_conj
-                + [("user_id", ">=", rlo), ("user_id", "<=", rhi)]
-                for rlo, rhi in partition.ranges
-            ]
-            if not dnf:
-                return
-        t = pq.read_table(
-            partition.path, columns=self.src_cols, filters=dnf
-        )
-        yield from _changefeed_record_batches(
-            t, partition.mod, partition.n_mod, self.out_cols
-        )
+    def read(self, partition: _RegionPartition):
+        yield from _read_region(partition, self.src_cols, self.out_cols)
 
     def commit(self, end):
         self._anchor(end["eid"])

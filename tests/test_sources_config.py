@@ -103,133 +103,26 @@ def test_config_info(spark):
     assert info["spark.sql.adaptive.enabled"] == "true"
 
 
-def test_python_datasource_stream_restart_exactly_once(spark, sf_dir, tmp_path):
-    """Kill the Python-datasource stream mid-drain and restart from the
-    same checkpoint: the file sink must end with EXACTLY one copy of
-    every mutation — the readBetweenOffsets replay contract (uncommitted
-    ranges re-read, committed ranges never re-emitted)."""
+def test_default_driver_memory(monkeypatch):
+    """A third of physical memory, capped at 16g; SPARK_DRIVER_MEM wins."""
     import os
-    import time
 
-    from hbase_observer_elasticsearch_spark.sources.python_datasource import (
-        register_changefeed_datasource,
-    )
+    from hbase_observer_elasticsearch_spark import session
 
-    register_changefeed_datasource(spark)
-    events_path = os.path.join(sf_dir, "events.parquet")
-    expected = spark.read.parquet(events_path).count()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    page = 4096
 
-    def start():
-        return (
-            spark.readStream.format("changefeed_py")
-            .option("path", events_path)
-            .option("batchSize", str(max(1, expected // 10)))
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(processingTime="0 seconds")
-            .start()
+    def host(mb):
+        pages = mb * (1 << 20) // page
+        monkeypatch.setattr(
+            os,
+            "sysconf",
+            lambda name: {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}[name],
         )
 
-    def committed_rows():
-        # the FileStreamSink metadata log only exposes COMMITTED batches;
-        # raw part-file counting would race in-flight task output (and the
-        # partitioned reader writes numPartitions files per batch anyway)
-        try:
-            return spark.read.parquet(out).count()
-        except Exception:
-            return 0
-
-    q = start()
-    # let at least one micro-batch commit, then kill mid-drain
-    deadline = time.monotonic() + 120
-    while time.monotonic() < deadline:
-        if 0 < committed_rows() < expected:
-            break
-        time.sleep(0.05)
-    q.stop()
-    q.awaitTermination(60)
-    partial = spark.read.parquet(out).count()
-    assert partial < expected, "stream finished before the kill — lower batchSize"
-
-    q2 = start()
-    deadline = time.monotonic() + 120
-    while time.monotonic() < deadline:
-        try:
-            if spark.read.parquet(out).count() >= expected:
-                break
-        except Exception:
-            pass
-        time.sleep(0.2)
-    q2.stop()
-    q2.awaitTermination(60)
-
-    final = spark.read.parquet(out)
-    assert final.count() == expected  # nothing lost, nothing duplicated
-    assert final.select("seq").distinct().count() == expected
-
-
-def test_python_datasource_stream_partition_parallel(spark, sf_dir, tmp_path):
-    """The streaming face of the connector must plan >1 input partition
-    per micro-batch (executors — not the driver — read each offset
-    range; the DataSourceStreamReader plans
-    numPartitions mod-slices of every eid range)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from hbase_observer_elasticsearch_spark.sources.python_datasource import (
-        register_changefeed_datasource,
-    )
-
-    register_changefeed_datasource(spark)
-    events_path = os.path.join(sf_dir, "events.parquet")
-    expected = spark.read.parquet(events_path).count()
-
-    per_batch_partitions: list[int] = []
-    per_batch_rows: list[int] = []
-
-    def observe(batch_df, _batch_id):
-        n = batch_df.select(
-            F.spark_partition_id().alias("pid")
-        ).distinct().count()
-        if n:
-            per_batch_partitions.append(n)
-            per_batch_rows.append(batch_df.count())
-
-    stream = (
-        spark.readStream.format("changefeed_py")
-        .option("path", events_path)
-        .option("batchSize", str(max(1, expected // 3)))
-        .option("numPartitions", "4")
-        .load()
-    )
-    q = (
-        stream.writeStream.foreachBatch(observe)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import time
-
-    deadline = time.monotonic() + 120
-    while time.monotonic() < deadline and sum(per_batch_rows) < expected:
-        time.sleep(0.2)
-    q.stop()
-    q.awaitTermination(60)
-
-    assert sum(per_batch_rows) == expected
-    assert len(per_batch_partitions) >= 2  # genuine multi-batch progression
-    # every full micro-batch was read by multiple executor tasks (a tiny
-    # remainder batch can land < numPartitions rows → fewer non-empty slices)
-    full = [
-        n for n, r in zip(per_batch_partitions, per_batch_rows) if r >= 4
-    ]
-    assert full and all(n > 1 for n in full), (
-        per_batch_partitions,
-        per_batch_rows,
-    )
+    host(15 * 1024)
+    assert session.default_driver_memory() == "5120m"
+    host(256 * 1024)
+    assert session.default_driver_memory() == "16384m"
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    assert session.default_driver_memory() == "3g"
