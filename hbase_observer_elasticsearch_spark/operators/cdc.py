@@ -39,7 +39,6 @@ from ..functions.deterministic import (
 from ..functions.ranking import ranked_topk_per
 from ..registry import register
 from ..sources.changefeed import scratch_dir as _scratch
-from ..session import ensure_session_conf
 
 
 def _latest_event(events: DataFrame) -> DataFrame:
@@ -100,7 +99,6 @@ def cdc_last_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mirrors reference upsert semantics (HbaseDataSyncEsObserver.java:109):
     the state visible in ES for a key is its latest mutation.
     """
-    ensure_session_conf(spark)
     events = load_table(spark, sf_dir, "events")
     latest = _latest_event(events)
     return latest.groupBy("event_type").agg(
@@ -135,7 +133,6 @@ def cdc_delete_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns the delete named — mirroring prepareDelete(index,type,id)
     (HbaseDataSyncEsObserver.java:129).
     """
-    ensure_session_conf(spark)
     events = load_table(spark, sf_dir, "events")
     latest = _latest_event(events)
     surviving = latest.filter(F.col("event_type") != "error")
@@ -166,7 +163,6 @@ def cdc_doc_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's {qualifier: value} map (HbaseDataSyncEsObserver.java:93-102),
     expressed as conditional aggregation so Catalyst keeps it one shuffle.
     """
-    ensure_session_conf(spark)
     events = load_table(spark, sf_dir, "events")
     is_t = lambda t: (F.col("event_type") == t).cast("long")  # noqa: E731
     return events.groupBy("user_id").agg(
@@ -270,7 +266,6 @@ def cdc_nullsafe_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     `=` would put them in a three-valued-logic limbo — `eqNullSafe` is the
     predicate that routes them deterministically (SURVEY §2.3 filters row).
     """
-    ensure_session_conf(spark)
     from ..sources.changefeed import events_as_changefeed
 
     cf = events_as_changefeed(load_table(spark, sf_dir, "events"))
@@ -337,7 +332,6 @@ def cdc_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     converges to exactly the batch answer regardless of micro-batch
     boundaries.
     """
-    ensure_session_conf(spark)
     from ..sources.changefeed import shared_changefeed_stream_dir
     from ..streaming.pipeline import drain
     from ..streaming.stateful import stateful_doc_state
@@ -442,7 +436,6 @@ def cdc_replicate_then_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged once on read); the query is one groupBy over the merged
     cells' document view, pinned before the state dir is removed.
     """
-    ensure_session_conf(spark)
     import os
     import shutil
 
@@ -513,7 +506,6 @@ def cdc_es_bulk_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     Users with only tombstone events get a delete action and no doc line
     — the delete-widening path (#8) expressed in the bulk payload.
     """
-    ensure_session_conf(spark)
     from ..sinks.bulk_format import bulk_lines
 
     ev = load_table(spark, sf_dir, "events")
@@ -577,7 +569,6 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     each key's open row (close it, add one) — exactly the incremental
     merge the bucketed sink does for LWW state, extended with history.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     t_ms = F.unix_millis(F.col("ts").cast("timestamp"))
     w = Window.partitionBy("user_id", "event_type").orderBy(
@@ -621,7 +612,6 @@ def cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     date, the as-of predicate prunes partitions; the reference can only
     answer "now" (its sink holds one doc per key).
     """
-    ensure_session_conf(spark)
     as_of = F.unix_millis(
         F.lit(TIME_TRAVEL_AS_OF).cast("timestamp")
     )
@@ -681,7 +671,6 @@ def cdc_retention_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side. State size after purge is live keys + recent tombstones —
     the bound that matters on an unbounded feed.
     """
-    ensure_session_conf(spark)
     cf = _events_changefeed(spark, sf_dir)
     latest = ranked_topk_per(
         cf, ["rowkey", "qualifier"], [F.col("ts").desc(), F.col("seq").desc()],
@@ -761,7 +750,6 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (t1, t2] range by partition metadata — exactly what the range
     filters here push to the scan.
     """
-    ensure_session_conf(spark)
     cf = _events_changefeed(spark, sf_dir)
     cuts = cf.agg(
         (F.max("ts") - F.expr("INTERVAL 14 DAY")).alias("t1"),
@@ -844,7 +832,6 @@ def cdc_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning, executor-side reads, and a downstream aggregate that must
     equal the relational restatement of the same feed.
     """
-    ensure_session_conf(spark)
     import os
 
     from ..sources.python_datasource import register_changefeed_datasource
@@ -912,7 +899,6 @@ def cdc_pushdown_region_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(matching row groups) IO — the scan cost tracks the SELECTED data,
     not the corpus. No shuffle until the final small groupBy.
     """
-    ensure_session_conf(spark)
     import os
 
     from ..sources.python_datasource import register_changefeed_datasource
@@ -973,7 +959,6 @@ def cdc_projection_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     region reads O(matching row groups × selected columns) — both
     dimensions of the scan cost track the query, not the corpus.
     """
-    ensure_session_conf(spark)
     import os
 
     from ..sources.python_datasource import register_changefeed_datasource
@@ -1057,7 +1042,6 @@ def sink_merge_idempotent_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest swap is the same atomic-rename commit a lakehouse MERGE
     uses.
     """
-    ensure_session_conf(spark)
     from ..sinks.state_sink import EmulatedEsSink, drop_root
     from ..sources.changefeed import events_as_changefeed
     from ..streaming.pipeline import scoped_session, split_epoch
@@ -1171,7 +1155,6 @@ def cdc_version_gc_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics; observer6/HbaseDataSyncEsObserver.java (the observer
     sees exactly the cells this policy retains).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("max_ts"))
     c = ev.crossJoin(F.broadcast(mx)).select(
@@ -1276,7 +1259,6 @@ def sink_bulk_failure_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment POSTs per partition inside foreachPartition with the
     same retry loop, state never centralizing.
     """
-    ensure_session_conf(spark)
     from ..sinks.bulk_replay import (
         FaultInjectingBulkEndpoint,
         epoch_bulk_lines,

@@ -26,7 +26,6 @@ from ..functions.ranking import ranked_topk_per
 from ..functions.vectors import dot, norm, sql_cosine
 from ..memos import Memo
 from ..registry import register
-from ..session import ensure_session_conf
 
 SHINGLE_W = 3  # 3-word shingles discriminate sharply on the fixture corpus
 JACCARD_T = 0.5
@@ -163,7 +162,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: raw content hash + canonicalized (sorted-bag-of-words)
     hash, with per-cluster copy counts. Hash-groupBy — one shuffle on the
     hash, O(1) state per group at any scale."""
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     canon = F.md5(F.concat_ws(" ", F.array_sort(F.split(F.col("text"), " "))))
     out = d.select(
@@ -223,7 +221,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes aggregate + two broadcast-sized join-backs is the right shape
     on Spark.
     """
-    ensure_session_conf(spark)
     return (
         _verified_pairs_memo(spark, sf_dir)
         .filter(F.col("jaccard") >= JACCARD_T)
@@ -324,8 +321,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall threshold — the fixture's near-dup pairs sit at J≈0.99 where
     4×4 banding recall is ~1.)
     """
-    ensure_session_conf(spark)
-
     # LSH buckets → in-bucket pairs, via the process-wide memo (the
     # signature subtree is shared with dedup_lsh_pr_curve)
     cand = _lsh_cand_memo(spark, sf_dir)
@@ -390,7 +385,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. Cross-cell near-dups are the documented recall tradeoff
     (mitigate with multi-probe assignment upstream).
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     # norms once per vector BEFORE the pair join (numerically identical to
     # per-pair norms — same doubles — but ~3× fewer HOF folds per pair)
@@ -463,7 +457,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes and bucket-join per band (hamming ≤ k ⇒ some band equal) — the
     same LSH-join shape as MinHash, never pairwise hamming over n².
     """
-    ensure_session_conf(spark)
     coded = _coded(spark, sf_dir)
     sums = coded.groupBy("doc_id").agg(
         *[
@@ -525,7 +518,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB WITH RECURSIVE transitive closure + MIN over reachable
     ids (exact same fixpoint).
     """
-    ensure_session_conf(spark)
     labels = _jaccard_cc_labels(spark, sf_dir)
 
     return labels.select(
@@ -815,7 +807,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cluster argmax — `max_by` keeps it an aggregate (no full window
     sort of the cluster members).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     labels = _jaccard_cc_labels(spark, sf_dir)
     member = labels.select(
@@ -874,7 +865,6 @@ def dedup_cross_split_contamination(spark: SparkSession, sf_dir: str) -> DataFra
     doc_id — at 100 TB both joins are hash-partitioned on doc_id with the
     pair table orders of magnitude smaller than the corpus.
     """
-    ensure_session_conf(spark)
     from .sampling import split_train_valid_test
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
@@ -927,7 +917,6 @@ def docs_minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     `candidate_pairs` column is exactly the work the capped LSH join
     (PAIR_BUCKET_CAP) would otherwise do.
     """
-    ensure_session_conf(spark)
     bands = _lsh_bands(_coded(spark, sf_dir))
     occ = bands.groupBy("band", "sig").agg(
         F.count(F.lit(1)).cast("bigint").alias("bucket_size")
@@ -979,7 +968,6 @@ def dedup_url_host(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized with the path here because these fixture paths are
     lowercase; a production canonicalizer lowercases scheme+host only.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     host = F.when(
         F.col("doc_id") % 2 == 0, F.upper(F.col("source"))
@@ -1039,7 +1027,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-ordering edges so high-degree hubs don't fan wedges
     quadratically.
     """
-    ensure_session_conf(spark)
     e = _jaccard_pairs_memo(spark, sf_dir).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
@@ -1108,7 +1095,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint lineage truncation exactly as connected_components
     does (dedup.py:490).
     """
-    ensure_session_conf(spark)
     pairs = _jaccard_pairs_memo(spark, sf_dir)
     e = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -1186,7 +1172,6 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle stream and a constant-size lookup. Output is #source-pairs
     rows — constant in corpus size.
     """
-    ensure_session_conf(spark)
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     words = F.split(F.col("text"), " ")
     n = F.size(words)
@@ -1285,7 +1270,6 @@ def text_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation at 100 TB). df > 1 on DISTINCT per-doc shingles counts
     documents, not occurrences.
     """
-    ensure_session_conf(spark)
     sh = _sh(spark, sf_dir)
     docfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     cover = (
@@ -1374,8 +1358,6 @@ def dedup_lsh_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs exploded by 4 literal thresholds. Integer counts; divisions
     written identically in both dialects.
     """
-    ensure_session_conf(spark)
-
     # Both pair tables come from the process-wide memos (checkpointed
     # once, shared with the ngram/CC family and dedup_minhash_lsh) —
     # this query is pure candidate-pair-sized arithmetic on top.
@@ -1478,7 +1460,6 @@ def dedup_cluster_embedding_quality(spark: SparkSession, sf_dir: str) -> DataFra
     Σ member dims, never in member pairs. Decimal sums keep every
     aggregate order-free; the final expression is fixed-form doubles.
     """
-    ensure_session_conf(spark)
     labels = _jaccard_cc_labels(spark, sf_dir).select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -1554,7 +1535,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     join against the doc-id spine for the degree-0 mass. Nothing here
     touches text again.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     pairs = _jaccard_pairs_memo(spark, sf_dir)
     doubled = pairs.select(F.col("doc_a").alias("doc_id")).unionAll(
@@ -1625,7 +1605,6 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     df ≤ 64 bounds every posting bucket's fan-out. No signatures, no
     bands, no recall audit needed — exact by construction.
     """
-    ensure_session_conf(spark)
     sh = _sh(spark, sf_dir)
     dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     shc = sh.join(dfreq, "s").filter(F.col("df") <= PREFIX_DF_CAP)
@@ -1762,7 +1741,6 @@ def dedup_lsh_vs_exact_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ deliberately (capped vocabulary vs full shingle sets) —
     exactly the discrepancy a production scorecard must price.
     """
-    ensure_session_conf(spark)
     ex = _jaccard_pairs_memo(spark, sf_dir)
     # pin the LSH-verified pair set once: it feeds BOTH the n_lsh count
     # and the intersection join, and Spark recomputes diamond subtrees
@@ -1831,7 +1809,6 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_clusters / keep_best / savings — zero incremental subtree),
     then two tiny aggregations: labels→cluster sizes→histogram.
     """
-    ensure_session_conf(spark)
     labels = _jaccard_cc_labels(spark, sf_dir)
     csz = labels.groupBy("label").agg(F.count(F.lit(1)).alias("sz"))
     return csz.groupBy(F.col("sz").cast("bigint").alias("cluster_size")).agg(
@@ -1896,7 +1873,6 @@ def corpus_eval_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure (sketch_bloom_membership is the priced variant) and the
     join collapses to a map-side filter.
     """
-    ensure_session_conf(spark)
     sh = _sh(spark, sf_dir)
     is_eval = (F.col("doc_id") % EVAL_SPLIT_MOD) == 0
     train_sh = sh.filter(~is_eval).select("s").distinct()
@@ -1962,7 +1938,6 @@ def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     no new pairwise work at all; the whole query is a projection over
     already-materialized candidates.
     """
-    ensure_session_conf(spark)
     vp = _verified_pairs_memo(spark, sf_dir)
     sizes = _sh(spark, sf_dir).groupBy(
         "doc_id"
@@ -2027,7 +2002,6 @@ def dedup_pair_mass_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     no pair materialization — the audit of quadratic work is itself
     strictly linear.
     """
-    ensure_session_conf(spark)
     sh = _sh(spark, sf_dir)
     b = (
         sh.groupBy("s")
@@ -2105,7 +2079,6 @@ def corpus_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed per crawl snapshot from the same shingle table the dedup
     family already materializes.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     m = d.agg((F.max("doc_id") + 1).alias("m"))
     sh = _sh(spark, sf_dir)
@@ -2170,7 +2143,6 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract. The split bound is exact integer arithmetic from the data
     (no engine-specific constant drift).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     split_df = d.agg(
         F.expr(
@@ -2312,7 +2284,6 @@ def corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     a projection over artifacts the pipeline already maintains. Each
     retained fraction is one IEEE division of exact integer sums.
     """
-    ensure_session_conf(spark)
     from .text import _merged_dup_spans
 
     d = load_table(spark, sf_dir, "documents")
@@ -2468,7 +2439,6 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Consumes the shared verified-pairs memo (`_jaccard_pairs_memo`), so
     the graph build is charged once to memo_build_dedup_verified_pairs.
     """
-    ensure_session_conf(spark)
     e = _jaccard_pairs_memo(spark, sf_dir).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
@@ -2631,7 +2601,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. Fixed round count = bounded passes; convergence detection at
     scale would reuse the CC loop's observe-metric early-exit idiom.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     pairs = _jaccard_pairs_memo(spark, sf_dir)
     und = pairs.select(
@@ -2711,7 +2680,6 @@ def corpus_decontam_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     × doc pairing anywhere. At 100 TB the eval shingle set ships as a
     bloom filter and the flag join becomes a map-side membership test.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     sh = _sh(spark, sf_dir)
     is_eval = (F.col("doc_id") % EVAL_SPLIT_MOD) == 0
@@ -2805,7 +2773,6 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     doctrine (PAIR_BUCKET_CAP) applying unchanged if a hub appears —
     plus a degree join and an anti-join against existing edges.
     """
-    ensure_session_conf(spark)
     ed = (
         _verified_pairs_memo(spark, sf_dir)
         .filter(F.col("n_shared") >= LINKPRED_MIN_SHARED)
@@ -2907,7 +2874,6 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is exact BIGINT; the only doubles are the two
     division-born ratios and their decimal-summed decile means.
     """
-    ensure_session_conf(spark)
     vp = _verified_pairs_memo(spark, sf_dir)
     pj = vp.select("doc_a", "doc_b", F.col("jaccard").alias("j"))
     pair_docs = (
@@ -3038,7 +3004,6 @@ def corpus_dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     large/small-star output the graph family already shares; the funnel
     itself is two joins + one aggregate at doc grain, no pair work.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     keep_exact = (
         F.col("doc_id")
@@ -3146,7 +3111,6 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     4m^2 both fit BIGINT for any m < 1.5e9 edges per evaluated
     component slice — beyond that the division shifts to DECIMAL(38).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     pairs = _jaccard_pairs_memo(spark, sf_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
@@ -3288,7 +3252,6 @@ def dedup_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number of exact-dup groups; everything after runs on grouped
     sums.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     cc = _jaccard_cc_labels(spark, sf_dir).select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")

@@ -32,7 +32,6 @@ from ..functions import hashing as H
 from ..functions.deterministic import dsum, sql_dsum
 from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..registry import register
-from ..session import ensure_session_conf
 from .text import (
     BM25_B,
     BM25_K1,
@@ -85,7 +84,6 @@ def agg_serial_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — the same coordinator-grain compute ES runs; the bucket table
     is dictionary-small at any corpus size.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     hist = e.groupBy(
         F.date_trunc("day", F.col("ts").cast("timestamp")).alias("day")
@@ -153,7 +151,6 @@ def agg_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds (total/nb/min/max) — the normalize pass never rescans the
     fact table, exactly like ES's coordinator-side pipeline stage.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     hist = e.groupBy(
         F.date_trunc("day", F.col("ts").cast("timestamp")).alias("day")
@@ -222,7 +219,6 @@ def agg_stats_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce over |buckets| rows — sibling pipelines always run at
     bucket grain, never rescan the facts.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     mrev = o.groupBy(
         F.date_trunc("month", F.col("o_orderdate").cast("timestamp")).alias(
@@ -307,7 +303,6 @@ def agg_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the BROADCAST per-group quartile table for the outlier count —
     two linear passes, no holistic buffer.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
     wn = Window.partitionBy("lang")
@@ -397,7 +392,6 @@ def agg_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCAST of the per-group median between them — two linear passes,
     mirroring the two-pass MAD every engine needs.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
     wn = Window.partitionBy("lang")
@@ -483,7 +477,6 @@ def agg_date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     Range predicates this shape also rides into parquet row-group
     pruning when the table is date-partitioned (layout family).
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     d1 = F.lit(DR_D1).cast("timestamp")
     d2 = F.lit(DR_D2).cast("timestamp")
@@ -555,7 +548,6 @@ def agg_global_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     — strictly better than ES's two-scan execution, and the plan
     Catalyst picks naturally from the declarative form.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     is_click = F.col("event_type") == "click"
     click_n = F.count(F.when(is_click, F.lit(1)))
@@ -619,7 +611,6 @@ def agg_diversified_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     the capped survivors (≤ |langs|·{DS_PER_LANG} rows).  The fact
     table is never globally sorted.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     order = [F.col("n_chars").desc(), "doc_id"]
     per_lang = ranked_topk_per(
@@ -678,7 +669,6 @@ def agg_reverse_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain, bounded), one global 2-value broadcast.  No fact rescan per
     bucket.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     ut = e.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("user_total")
@@ -849,7 +839,6 @@ def search_multi_match_cross_fields(
     Top-k compiles to TakeOrderedAndProject after the rank window over
     ≤ matched docs.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     ftok = d.select(
         "doc_id",
@@ -955,7 +944,6 @@ def search_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary) semi-joined to docs; the SHOULD-union is a full outer
     join of two doc-id sets, each far smaller than the corpus.
     """
-    ensure_session_conf(spark)
     term = _bm25_agg(spark, sf_dir, (MBP_TERM,)).select("doc_id", "bm25")
     pref = (
         _postings_memo(spark, sf_dir)
@@ -1046,7 +1034,6 @@ def search_rescore_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     with TakeOrdered; second = a 2-term positional join left-joined to
     {RS_WINDOW} rows.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     first = ranked_topk(
         _bm25_agg(spark, sf_dir, BM25_TERMS),
@@ -1127,7 +1114,6 @@ def search_termvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the target docs' terms only — at 100 TB that join is the
     dictionary lookup ES serves from segment metadata.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tv = (
         d.filter(F.col("doc_id") < TV_MAX_DOC)
@@ -1184,7 +1170,6 @@ def search_sliced_scroll(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials — the slice hash is exactly how the 100 TB export runs k
     independent readers without coordination.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     slice_col = (
         (F.col("doc_id") * F.lit(H.A[0]) + F.lit(H.B[0])) % F.lit(H.P)
@@ -1269,7 +1254,6 @@ def search_phrase_suggester(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins candidates against two bigram slices and two broadcast
     scalars.
     """
-    ensure_session_conf(spark)
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     ug = _postings_memo(spark, sf_dir).groupBy("w").agg(
         F.sum("tf").cast("bigint").alias("c")
@@ -1417,7 +1401,6 @@ def es_compile_filter_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..plans.es_compiler import compile_search
 
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return compile_search(d, ESC_FILTER_REQUEST).select(
         "doc_id", "lang", "source", "n_chars", "total_hits", "rk"
@@ -1476,7 +1459,6 @@ def es_compile_aggs_request(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..plans.es_compiler import compile_search
 
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return compile_search(d, ESC_AGGS_REQUEST)
 
@@ -1524,6 +1506,5 @@ def es_compile_histogram_request(
     """
     from ..plans.es_compiler import compile_search
 
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return compile_search(d, ESC_HIST_REQUEST)

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.deterministic import dsum, sql_dsum
 from ..registry import register
-from ..session import ensure_session_conf
 
 _RT_AGG_SQL = """
 SELECT '{fmt}' AS fmt,
@@ -52,7 +51,6 @@ def source_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema keeps schema inference (a full extra pass at 100 TB)
     out of the plan. Aggregation is one single-row multi-agg per format.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -116,7 +114,6 @@ def sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, no small-file explosion); the read-back touches 2 of 7 year
     directories. Sums go through exact decimals as everywhere.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     base = tempfile.mkdtemp(prefix="io_partitioned_")
     try:
@@ -176,7 +173,6 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the read-back is a parallel columnar scan and the aggregate is one
     single-row multi-agg.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = tempfile.mkdtemp(prefix="io_orc_")
     try:
@@ -232,7 +228,6 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two one-pass writes, one merged scan, one single-row
     multi-agg. No shuffle besides the final aggregate.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     base = tempfile.mkdtemp(prefix="io_evolve_")
     try:
@@ -307,7 +302,6 @@ def layout_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
     write shuffles once on the partition key (anti-small-files);
     the dim side broadcasts.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     base = tempfile.mkdtemp(prefix="io_dpp_")

@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
 from ..registry import register
-from ..session import ensure_session_conf
 
 FRAME_BYTES = 64  # fake "frame" stride inside a payload
 FRAME_STRIDE = 4  # keep every 4th frame (frame-sampling a "video")
@@ -133,7 +132,6 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-side only: blobs stream through Arrow batches and never shuffle;
     the tiny feature rows are what downstream joins/aggs touch.
     """
-    ensure_session_conf(spark)
     m = media_table(spark, sf_dir)
     return m.mapInPandas(
         _decode_batches,
@@ -197,7 +195,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     video-keyframe-extraction shape. Map-side; at 100 TB the only shuffle
     is whatever the downstream consumer does with the small frame table.
     """
-    ensure_session_conf(spark)
     m = media_table(spark, sf_dir)
     return m.mapInPandas(
         _frame_sample_batches,
@@ -260,7 +257,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic pre-shuffle size reducer: run it BEFORE any repartition so the
     wire carries thumbnails, never originals.
     """
-    ensure_session_conf(spark)
     m = media_table(spark, sf_dir)
     return m.mapInPandas(
         _resize_batches,
@@ -522,7 +518,6 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode are one map-side mapInPandas pass, blobs never shuffle, only
     the 9-column feature rows reach the (absent) downstream exchange.
     """
-    ensure_session_conf(spark)
     # The fixture's src0..src19 sources all fall through media_table's
     # source map to 'image'; an md5 modality split sends ~half the docs
     # down the WAV path so the registered row exercises BOTH parsers.
@@ -629,7 +624,6 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit hashes, not media. The DuckDB oracle recomputes the identical
     hash from the payload bytes via exact integer block sums.
     """
-    ensure_session_conf(spark)
     m = media_table(spark, sf_dir)
     hashes = m.mapInPandas(
         _phash_batches,
@@ -717,7 +711,6 @@ def multimodal_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     so byte == character code). Ties on the modal byte break to the
     SMALLEST byte value in both engines.
     """
-    ensure_session_conf(spark)
     import pyspark.sql.types as T
 
     schema = T.StructType(
@@ -780,7 +773,6 @@ def multimodal_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition id), which drops the global sort while keeping every
     shard's locality contract.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").alias("nbytes")
     )

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread
 from ..functions.ranking import range_partitioned, range_prefix_sum
 from ..registry import register
-from ..session import ensure_session_conf
 
 # layout_range_partition_balance
 RANGE_PARTS = 32  # target partition count (mirrors spark.sql.shuffle.partitions)
@@ -122,7 +121,6 @@ def profile_join_cardinality_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     each scanned once and the estimation itself runs on KB-sized stats
     tables — exactly how a CBO consumes statistics.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("d"),
         F.date_format("o_orderdate", "yyyy-MM").alias("m"),
@@ -261,7 +259,6 @@ def layout_range_partition_balance(spark: SparkSession, sf_dir: str) -> DataFram
     set. The boundary table is {RANGE_PARTS}-1 rows: broadcast-scale by
     construction, same doctrine as the IVF codebook.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber"
     )
@@ -374,7 +371,6 @@ def stream_watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFra
     needs. The DuckDB oracle uses the plain global window; the
     block-decomposed Spark plan must (and does) agree exactly.
     """
-    ensure_session_conf(spark)
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -508,7 +504,6 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by (source, bin) — embarrassingly parallel, no shuffle of file
     contents between bins.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     file_id = (
         F.conv(
@@ -667,7 +662,6 @@ def layout_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of raw rows (same shape: zone = file), and candidate keys
     come from predicate-frequency telemetry.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     pred_cols = sorted({w[1] for w in _WORKLOAD})
     # TWO table passes total (a re-scan per (key, predicate) would be
@@ -889,7 +883,6 @@ def layout_partition_pruning_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-ratio divisions; timestamp compares are exact instants
     (session tz pinned UTC).
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderdate")
     kz = F.explode(
         F.array(
@@ -1010,7 +1003,6 @@ def layout_clustering_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem to one partition for the sort: `Exchange SinglePartition` +
     a 600 k-row single-threaded Sort at sf0.1, unbounded at 100 TB).
     """
-    ensure_session_conf(spark)
     sort_cols = ("l_shipdate", "l_orderkey", "l_linenumber")
     li = load_table(spark, sf_dir, "lineitem").select(
         *sort_cols, *CF_COLUMNS

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, register_views, spread
 from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..registry import register
-from ..session import ensure_session_conf
 
 
 @register(
@@ -42,7 +41,6 @@ def profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiles a 100 TB table in one pass; at that scale the exact NDVs
     swap for approx_count_distinct without touching the plan shape.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     cnt = F.count(F.lit(1))
     return d.agg(
@@ -81,7 +79,6 @@ def lateral_topk_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative-SQL path and the DataFrame path converge on one physical
     plan shape at any scale.
     """
-    ensure_session_conf(spark)
     register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
@@ -130,7 +127,6 @@ def profile_column_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     with O(buckets) state — the same pass that would feed ANALYZE-style
     column statistics.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     bucket = F.least(
         F.floor(F.col("value") / HIST_WIDTH).cast("bigint"),
@@ -189,7 +185,6 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the fact table. The exact p99 runs over counts, not rows, and
     at 100 TB you'd swap it for approx_percentile with no other change.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     freq = li.groupBy(F.col("l_orderkey").alias("key")).agg(
         F.count(F.lit(1)).alias("cnt")
@@ -255,7 +250,6 @@ def layout_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     one hash aggregation keyed by bucket (the same key the writer would
     partition on, so the audit's shuffle IS the rewrite's shuffle).
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     # `div` (not "/") keeps the bucket cut in exact integer arithmetic
     z_bucket = F.expr(f"(({_Z_SPARK}) div {_Z_BUCKET})")
@@ -312,7 +306,6 @@ def profile_column_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     global window (the previous p²-sum formulation needed a
     single-partition window to carry n — plan audit flagged it).
     """
-    ensure_session_conf(spark)
     parts = []
     for tbl, col in _GINI_COLS:
         t = load_table(spark, sf_dir, tbl)
@@ -368,7 +361,6 @@ def profile_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Observation contract (metrics surface on action completion);
     what crosses the driver is ONE metrics row.
     """
-    ensure_session_conf(spark)
     from pyspark.sql import Observation
 
     from ..functions.deterministic import dsum
@@ -476,7 +468,6 @@ def layout_rendezvous_sharding(
     table, from which all four statistics reshape without touching the
     corpus again.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
 
     def scored(n: int):
@@ -607,7 +598,6 @@ def layout_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (a real rewrite uses repartitionByRange — audited by
     layout_range_partition_balance in planning.py).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     nat = d.select(
         F.lit("natural").alias("layout"),
@@ -720,7 +710,6 @@ def profile_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table-format writer's planning inputs (parquet
     ColumnChunkMetaData encodings + Delta/Iceberg OPTIMIZE decisions).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     vals = d.selectExpr(
         "doc_id",
@@ -847,7 +836,6 @@ def profile_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass) — the same sketch-before-exact doctrine as the HLL/KLL
     batteries.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     srcs = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
     total = d.count()
@@ -950,7 +938,6 @@ def profile_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregating. One scan, one 1-row shuffle, regardless of how many
     pairs the matrix has.
     """
-    ensure_session_conf(spark)
     # spread: 14 decimal sums per row are compute-bound and the fixture
     # parquet is one partition — partial aggregation wants the cores
     # (measured 5.6 s -> 2.2 s at sf0.1); the merge stays a 1-row shuffle
@@ -1036,7 +1023,6 @@ def profile_entropy_by_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     column's dictionary, orders of magnitude under row grain, so the
     whole audit after the per-column count agg is dictionary-sized.
     """
-    ensure_session_conf(spark)
     out = None
     for table, col in _ENTROPY_COLS:
         t = load_table(spark, sf_dir, table)
@@ -1128,7 +1114,6 @@ def profile_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (map-side combine to r×c rows); margins, expecteds and the
     statistic all run on that grid. At 100 TB: one scan, grid math.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     o = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("obs")

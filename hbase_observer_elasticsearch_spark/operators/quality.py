@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.ranking import ranked_topk
 from ..registry import register
-from ..session import ensure_session_conf
 from .dedup import _SQL_JACCARD_PAIRS, _SQL_SHINGLES, _jaccard_cc_labels
 from .text import BLOCKLIST, STOPWORDS
 
@@ -62,7 +61,6 @@ def quality_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on the key it is already bucketable by. Counts only — nothing
     row-sized crosses an exchange after the join.
     """
-    ensure_session_conf(spark)
     parts = []
     for fk, child, ck, parent, pk in _FK_EDGES:
         c = load_table(spark, sf_dir, child)
@@ -109,7 +107,6 @@ def profile_file_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     against DuckDB's `read_parquet(..., filename=true)` — the layout-
     aware twin the static view-based oracle cannot express.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(
@@ -177,7 +174,6 @@ def corpus_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     than materializing any gate's pass/fail column — which is exactly why
     the report comes first and the gated write second.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_tokens = F.size(words)
@@ -286,7 +282,6 @@ def corpus_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     fractions divide two exact integers as doubles (correctly-rounded in
     both engines).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
 
     raw = d.agg(
@@ -382,7 +377,6 @@ def corpus_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     why the report is expressed threshold-first. Averages go through
     exact decimal sums (order-independent).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(words)) * F.lit(1.0) / F.size(words)
@@ -449,7 +443,6 @@ def quality_pk_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded into one integer expression so the distinct state is a
     single long per key either way.
     """
-    ensure_session_conf(spark)
     parts = []
     for tbl, pk in _PK_EDGES:
         t = load_table(spark, sf_dir, tbl)
@@ -522,7 +515,6 @@ def snapshot_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the bins would come from approx-quantile edges of the
     reference snapshot — same plan shape.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     # FLOOR of a correctly-rounded double division on both sides — a
     # direct double→bigint cast would round in DuckDB but truncate in
@@ -610,7 +602,6 @@ def corr_text_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB), one single-row multi-aggregate — the correlation never
     materializes anything row-sized past the join.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
     words = F.split(F.col("text"), " ")
@@ -704,7 +695,6 @@ def quality_row_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-count aggregates (map-side partials); nothing row-sized
     survives the scan.
     """
-    ensure_session_conf(spark)
     by_table: dict[str, list] = {}
     for rule, tbl, pred in _ROW_RULES:
         by_table.setdefault(tbl, []).append((rule, pred))
@@ -798,7 +788,6 @@ def quality_order_price_reconciliation(
     the same one-shuffle shape as every LWW merge here; at 100 TB both
     sides are bucketed by orderkey and the join is exchange-free.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     prod = (
@@ -866,7 +855,6 @@ def quality_benford_leading_digit(
     Scale shape: map-side digit extraction, one 9-group hash agg, one
     broadcast scalar total. A 100 TB audit is one scan.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") >= 1
     )
@@ -950,7 +938,6 @@ def quality_bucket_checksum_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) before overflow (headroom documented, not needed
     below ~2^31 rows/bucket).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     b = d.filter(F.col("doc_id") % 97 != 13).select(
         "doc_id",
@@ -1053,7 +1040,6 @@ def quality_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized stage and partitions by the QI hash; the histogram is
     KB-sized. Integer-only output — trivially hash-stable.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     cls = (
         d.select(
@@ -1165,7 +1151,6 @@ def quality_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than a broadcast (a trained HASH_DIM-row weight table would
     broadcast at KB size).
     """
-    ensure_session_conf(spark)
     s = _hash_doc_scores(spark, sf_dir)
     return s.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1226,7 +1211,6 @@ def quality_classifier_calibration(
     distributed-rank decomposition sampling.py's split queries use), and
     the decile rollup is 10 rows.
     """
-    ensure_session_conf(spark)
     s = _hash_doc_scores(spark, sf_dir)
     ext = s.agg(F.min("score").alias("mn"), F.max("score").alias("mx"))
     pred = (
@@ -1317,7 +1301,6 @@ def quality_labeler_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic is one corpus pass; at 100 TB the per-labeler passes fuse
     into the same scan when both read ``text``.
     """
-    ensure_session_conf(spark)
     s = _hash_doc_scores(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     # exact integer division (DIV): a double `/` + cast could round across
@@ -1397,7 +1380,6 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads are sequential scans. No joins, no data movement beyond the
     one range exchange.
     """
-    ensure_session_conf(spark)
     s = _hash_doc_scores(spark, sf_dir)
     phased = s.select(
         "doc_id",
@@ -1475,7 +1457,6 @@ def quality_winsorize_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sketches.py) and the clip bounds ship as a broadcast dimension; the
     audit shape is unchanged.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     b = o.groupBy("o_orderpriority").agg(
         F.expr(f"percentile(o_totalprice, {WINSOR_LO!r})").alias("p_lo"),
@@ -1591,7 +1572,6 @@ def quality_gini_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single groupBy; nothing pairwise, nothing row-grain past the first
     aggregate.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     feats = {
@@ -1708,7 +1688,6 @@ def quality_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a sort of all docs, and no O(thresholds × data) sweep. At
     100 TB: one scan + a grid-sized window.
     """
-    ensure_session_conf(spark)
     s = _hash_doc_scores(spark, sf_dir)
     lab = s.select(
         "score", F.when(F.col("lang") == "en", 1).otherwise(0).alias("y")
@@ -1810,7 +1789,6 @@ def quality_ipw_adjusted_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine to 6 partial sums per mapper) + a 1-row extremes broadcast.
     At 100 TB: two scans (score, estimate), zero shuffles beyond them.
     """
-    ensure_session_conf(spark)
     s = _hash_doc_scores(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     ext = s.agg(F.min("score").alias("mn"), F.max("score").alias("mx"))
@@ -1928,7 +1906,6 @@ def quality_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one scan for ȳ, one scan + decile window + fused agg
     for everything else. At 100 TB: two linear passes, grid math after.
     """
-    ensure_session_conf(spark)
     s = _hash_doc_scores(spark, sf_dir)
     ext = s.agg(F.min("score").alias("mn"), F.max("score").alias("mx"))
     ybar_t = s.agg(
@@ -2058,7 +2035,6 @@ def quality_isotonic_calibration(
     decomposition at 100 TB); everything after runs on ISO_BINS rows —
     the segment lattice is BINS^2/2 = 55 rows, broadcast-trivial.
     """
-    ensure_session_conf(spark)
     s = _hash_doc_scores(spark, sf_dir)
     pred = s.select(
         "doc_id",
@@ -2204,7 +2180,6 @@ def quality_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition at scale, as documented for the split family); the
     coverage pass broadcasts the single-row q_hat.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     feat = d.select(
         "doc_id",

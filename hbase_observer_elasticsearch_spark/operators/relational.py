@@ -26,11 +26,6 @@ from ..functions.deterministic import dec, dsum, sql_dsum
 from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..memos import Memo
 from ..registry import register
-from ..session import ensure_session_conf
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # -- exact money arithmetic: cents-scale decimals so products stay inside
@@ -70,8 +65,7 @@ def proj_filter_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     (HbaseDataSyncEsObserver.java:98-99); here the full typed surface.
     Filters and the 6-column projection push down to the parquet scan.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             F.col("l_shipdate").between("1997-01-01", "1997-12-31")
@@ -138,8 +132,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partial+final agg (map-side combine) is automatic; at 100 TB this is a
     single shuffle of ~6 grouped rows per mapper.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     enc = {
         "q": F.round(F.col("l_quantity")),
         "p": F.round(F.col("l_extendedprice") * 100),
@@ -194,10 +187,11 @@ def q3_top_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     on o_orderkey. Top-k via orderBy+limit compiles to
     TakeOrderedAndProject — no global sort materialization at scale.
     """
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     revenue = _c2("l_extendedprice") * (F.lit(1) - _c2("l_discount"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -233,13 +227,14 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     The region filter prunes nations before the broadcast — classic
     star-schema plan that survives 1000 executors unchanged.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(
+        F.col("r_name").isin("ASIA", "EUROPE")
+    )
     revenue = _c2("l_extendedprice") * (F.lit(1) - _c2("l_discount"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -275,9 +270,8 @@ GROUP BY c.c_custkey, c.c_mktsegment
 def join_left_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join keeping order-less customers (NULL-extended side
     aggregates to 0 orders / NULL spend)."""
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey", "c_mktsegment")
@@ -303,14 +297,13 @@ FROM cn FULL OUTER JOIN sn ON cn.nk = sn.nk
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join: nations having customers, suppliers, or both."""
-    ensure_session_conf(spark)
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(F.count(F.lit(1)).alias("n_cust"))
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_nationkey").alias("nk"))
         .agg(F.count(F.lit(1)).alias("n_supp"))
     )
@@ -333,9 +326,8 @@ WHERE EXISTS (SELECT 1 FROM orders o
 )
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join ≡ EXISTS: customers with at least one finished order."""
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
         "c_custkey", "c_name"
     )
@@ -353,9 +345,8 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join ≡ NOT EXISTS — the batch analog of the reference's
     whole-document delete (SURVEY §2.1 #8: state minus deleted keys)."""
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
         "c_custkey", "c_mktsegment"
     )
@@ -371,8 +362,7 @@ WHERE a.r_regionkey <> b.r_regionkey
 )
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join (tiny×tiny only — never cross a fact table at scale)."""
-    ensure_session_conf(spark)
-    r = _t(spark, sf_dir, "region")
+    r = load_table(spark, sf_dir, "region")
     a = r.select(F.col("r_regionkey").alias("ak"), F.col("r_name").alias("from_region"))
     b = r.select(F.col("r_regionkey").alias("bk"), F.col("r_name").alias("to_region"))
     return (
@@ -403,9 +393,8 @@ def join_range_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the range key and equi-join on bucket; see similarity.py for that
     pattern.
     """
-    ensure_session_conf(spark)
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
     cond = F.col("c_acctbal").between(
         F.col("s_acctbal") - 100, F.col("s_acctbal") + 100
     )
@@ -444,10 +433,9 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window pass (single shuffle on the key), not a per-row lookup.
     Equivalent to the reference's 'latest state at time T' enrichment.
     """
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -484,8 +472,7 @@ GROUP BY o_orderstatus
 )
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-distinct aggregation (expand + two-phase agg under the hood)."""
-    ensure_session_conf(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.countDistinct("o_orderpriority").alias("n_priorities"),
@@ -519,8 +506,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     words per sketch) inside the multi-distinct Expand, which replicates
     it per distinct stream — a ~2 000-column aggregation buffer that ran
     25×  slower. Two narrow passes beat one wide one."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     approx = li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_orderkey", rsd=0.02).alias("approx_orders"),
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
@@ -555,9 +541,8 @@ GROUP BY ROLLUP (n.n_name, c.c_mktsegment)
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (nation → segment → grand total)."""
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .rollup("n_name", "c_mktsegment")
@@ -581,8 +566,7 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE: all grouping-set combinations of the two keys."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity").alias("sum_qty"),
         F.count(F.lit(1)).alias("n"),
@@ -602,7 +586,6 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (disjoint rollups in one pass)."""
-    ensure_session_conf(spark)
     register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -640,8 +623,7 @@ def agg_variance_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines/partitionings — unlike the streaming var_samp kernels, whose
     float accumulation order varies.
     """
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     sum_bal = F.sum(dec("c_acctbal")).cast("double")
     s3 = F.col("c_acctbal").cast("decimal(12,3)")
     sum_sq = F.sum(s3 * s3).cast("double")
@@ -665,8 +647,7 @@ HAVING COUNT(*) >= 15
 )
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-aggregation filter (HAVING)."""
-    ensure_session_conf(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("n_orders"))
@@ -688,8 +669,7 @@ GROUP BY 1
 )
 def agg_case_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN bucketing feeding an aggregation."""
-    ensure_session_conf(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 100000, "small")
         .when(F.col("o_totalprice") < 300000, "medium")
@@ -721,8 +701,7 @@ LIMIT 20
 def sort_limit_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-N: TakeOrderedAndProject (per-partition heap + driver
     merge of N×partitions rows — no full sort at any scale)."""
-    ensure_session_conf(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -744,8 +723,7 @@ SELECT 'either' AS which, COUNT(*) AS n FROM (SELECT * FROM f UNION SELECT * FRO
 )
 def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT / INTERSECT / UNION(distinct) over customer key sets."""
-    ensure_session_conf(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     f_keys = o.filter(F.col("o_orderstatus") == "F").select("o_custkey").distinct()
     o_keys = o.filter(F.col("o_orderstatus") == "O").select("o_custkey").distinct()
     counts = [
@@ -767,8 +745,7 @@ SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
 )
 def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicates ≡ SELECT DISTINCT."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_returnflag", "l_linestatus").dropDuplicates()
 
 
@@ -788,7 +765,6 @@ def subquery_scalar_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scalar threshold uses the deterministic decimal avg in both
     dialects so boundary rows cannot flip between engines.
     """
-    ensure_session_conf(spark)
     register_views(spark, sf_dir, "orders", "customer")
     return spark.sql(
         """
@@ -825,9 +801,8 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer's), so no post-join dedup is needed. Shuffle width is
     O(|s|·3 + |c|) instead of |s|·|c| — survives two fact-sized inputs.
     """
-    ensure_session_conf(spark)
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
     lo = F.floor((F.col("s_acctbal") - 100) / 100)
     hi = F.floor((F.col("s_acctbal") + 100) / 100)
     s_binned = s.withColumn("bin", F.explode(F.sequence(lo, hi)))
@@ -887,9 +862,8 @@ def subquery_exists_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     The key sets hash-partition on custkey, same key as the join — at
     100 TB, AQE broadcasts them when small and shuffle-joins when not.
     """
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     open_keys = (
         o.filter(F.col("o_orderstatus") == "O")
         .select(F.col("o_custkey").alias("c_custkey"))
@@ -996,7 +970,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed write is memoized per (application, sf_dir) exactly like a
     production table written at ingest.
     """
-    ensure_session_conf(spark)
     o_name, l_name = _bucketed_facts(spark, sf_dir)
     from ..sinks.bucketed import colocated_join
 
@@ -1055,9 +1028,8 @@ def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lift denominators join from a |brands|-row table. Counts are
     integers; the lift is one double expression written identically.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
         F.col("l_orderkey").alias("okey"), F.col("p_brand").alias("brand")
     )
@@ -1157,7 +1129,6 @@ def obt_star_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs one fact shuffle + map-side lookups, the only OBT plan that
     survives 100 TB. Revenue through exact decimals.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -1218,8 +1189,7 @@ def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins on the value (no sort, no distinct) — one shuffle each on the
     compared column; UNION ALL is a zero-shuffle concatenation.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_quantity") > 45).select("l_partkey")
     b = li.filter(F.col("l_discount") > 0.08).select("l_partkey")
     parts = [
@@ -1281,10 +1251,9 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     a post-window predicate on the carried click timestamp, so it adds
     zero shuffles. Staleness is exact integer microseconds.
     """
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1347,10 +1316,9 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame — Catalyst evaluates first_value over the reversed frame in
     the same sort, so forward costs exactly what backward costs.
     """
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1414,7 +1382,6 @@ def join_fuzzy_levenshtein_blocked(spark: SparkSession, sf_dir: str) -> DataFram
     The oracle recomputes distances with DuckDB's independent
     levenshtein implementation — integer-exact, no float drift.
     """
-    ensure_session_conf(spark)
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_name", F.length("p_name").alias("p_len")
     )
@@ -1503,7 +1470,6 @@ def sort_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     union is a superset) before this exact pass — same
     prune-then-verify doctrine as the dedup family.
     """
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     p = load_table(spark, sf_dir, "part")
@@ -1584,7 +1550,6 @@ def agg_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     — tiny — and the median's sort is per-group; both aggregates reuse
     the one partitioning on the group key.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     freq = o.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -1645,8 +1610,7 @@ def agg_grouping_sets_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     not 4 x |fact|. At 100 TB this replaces four full-scan reports
     with one.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pre = li.select(
         "l_returnflag",
         "l_linestatus",
@@ -1777,9 +1741,8 @@ def basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     itemset keys — the pattern FP-growth implementations reduce to on
     shuffle-based engines.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    pt = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    pt = load_table(spark, sf_dir, "part")
     # materialize the basket table once: five consumers (totals, item
     # counts, pruned baskets, pair and triple explodes) would otherwise
     # each re-run the lineitem⋈part scan — the audited plan had 46
@@ -1936,8 +1899,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     |cohorts| × |ages| rows — window + join run on grid scale. At
     100 TB: one customer-keyed shuffle, then tiny math.
     """
-    ensure_session_conf(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wc = Window.partitionBy("o_custkey")
     f = o.select(
         "o_custkey",
@@ -2019,8 +1981,7 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_vocab_coverage); the output is 3 rows. At 100 TB: one scan +
     one parts-grain window.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pr = li.groupBy("l_partkey").agg(
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
         .cast("bigint")
@@ -2136,7 +2097,6 @@ def join_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-block on the coarsest comparator band; the EM weight-estimation
     loop reuses the same pair frame with agreement-pattern groupBys.
     """
-    ensure_session_conf(spark)
     cents = lambda col: F.round(F.col(col) * 100).cast("long")  # noqa: E731
 
     def fields(df, key, nation, bal, name):
@@ -2311,7 +2271,6 @@ def join_record_linkage_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair pass + O(iters) driver-tiny algebra. At 100 TB the pattern
     histogram is the only reduction of the pair stream.
     """
-    ensure_session_conf(spark)
     cents = lambda col: F.round(F.col(col) * 100).cast("long")  # noqa: E731
 
     def fields(df, key, nation, bal, name):
@@ -2480,7 +2439,6 @@ def join_record_linkage_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram is a two-level hash agg. At 100 TB this is exactly
     the dedup keep-list pipeline re-pointed at party data.
     """
-    ensure_session_conf(spark)
     from .dedup import connected_components
 
     cents = lambda col: F.round(F.col(col) * 100).cast("long")  # noqa: E731
@@ -2619,9 +2577,8 @@ def basket_covisitation_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-item window over an |items|^2-bounded (but co-occurrence-
     sparse) table.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
         F.col("l_orderkey").alias("okey"), F.col("p_brand").alias("brand")
     )
@@ -2736,8 +2693,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), then a group-grain MIN — the same distributed shape as any
     per-key running total; no quantity-row explosion ever happens.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_extendedprice").alias("price"),
         F.col("l_quantity").cast("bigint").alias("wt"),

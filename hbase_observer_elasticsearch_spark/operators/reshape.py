@@ -24,7 +24,6 @@ from ..catalog import load_table
 from ..functions.deterministic import dsum
 from ..functions.ranking import ranked_topk_per
 from ..registry import register
-from ..session import ensure_session_conf
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -47,7 +46,6 @@ def pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     The explicit value list keeps it a single-shuffle conditional agg;
     omitting it would trigger a distinct-values pre-pass (never at 100 TB).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     out = (
         ev.withColumn("cohort", F.col("user_id") % 10)
@@ -84,7 +82,6 @@ def unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unpivot is a pure map-side expression — rows×measures fan-out with no
     shuffle beyond the feeding aggregation.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         dsum("l_quantity").alias("sum_qty"),
@@ -121,7 +118,6 @@ def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     extreme scale swap in `approx_percentile` (t-digest, mergeable) — the
     exact version sorts each group's values.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.25)").alias("p25"),
@@ -151,7 +147,6 @@ def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst flips a right join of (big, broadcast-able) into a left
     join with sides swapped — same plan as join_left_orders_per_customer.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     return (
@@ -182,7 +177,6 @@ def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical mode per group with a deterministic tiebreak (count
     desc, then value desc) — built-in `mode()` tiebreaks are unspecified
     in both engines, so the portable formulation is count + rank."""
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     counts = (
@@ -251,7 +245,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     same output contract (the deciles pattern, corpus_quality_deciles).
     Money through exact decimals everywhere.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     rfm = o.groupBy("o_custkey").agg(
         F.datediff(

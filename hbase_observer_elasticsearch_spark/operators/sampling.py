@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread
 from ..functions.ranking import ranked_topk_per
 from ..registry import register
-from ..session import ensure_session_conf
 
 
 def _gate(key: F.Column, salt: str) -> F.Column:
@@ -54,7 +53,6 @@ def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerun with different partitioning), and any engine can re-derive
     exactly the same subset for audits.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.filter(_gate(F.col("doc_id"), "sample:") < "1a").select(
         "doc_id", "lang", "source", "n_chars"
@@ -81,7 +79,6 @@ def split_train_valid_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-side only; at 100 TB this is the `WHERE split='train'`
     partition-pruning column after one materialization.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     g = _gate(F.col("doc_id"), "split:")
     return d.select(
@@ -117,7 +114,6 @@ def sample_stratified_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition top-k first (map-side), then top-k of candidates —
     rank() over ≤ k×n_partitions rows instead of sorting the stratum.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return ranked_topk_per(
         d.select("doc_id", "lang", "n_chars"),
@@ -157,7 +153,6 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same window, bounded partitions) — packing quality is unchanged
     because bins never span shards in either layout.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " ")).cast("bigint")
     w = (
@@ -203,7 +198,6 @@ def sample_mixture_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible, auditable, and consistent under corpus growth; changing
     the mixture is a threshold edit, not a reshuffle.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     thr = F.lit("19")
     for s, g in MIXTURE_GATES.items():
@@ -256,7 +250,6 @@ def pack_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer arithmetic throughout; the one division is BIGINT/BIGINT →
     DOUBLE written identically in both dialects.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
@@ -311,7 +304,6 @@ def sample_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort materialization: each map task keeps k rows per group before
     the single per-group shuffle).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     order_key = F.md5(F.concat(F.lit("audit:"), F.col("doc_id").cast("string")))
     return ranked_topk_per(
@@ -352,7 +344,6 @@ def sample_weighted_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     data rows. (A fixed weight cap would drop even the MAX pass;
     deriving it keeps the sample self-normalizing as the corpus grows.)
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     maxw = d.agg(F.max("n_chars").alias("maxw"))
     u32 = F.conv(
@@ -436,7 +427,6 @@ def sample_matched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arm. No pairwise blow-up anywhere; at 100 TB the cells stay
     independent so skew is bounded by the largest (lang, decile) cell.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -539,7 +529,6 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     reservoirs = taking the k largest keys of their union, which the
     shuffle-side window performs associatively at any fan-in.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     u32 = F.conv(
         F.substring(
@@ -614,7 +603,6 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator — the allocation table is stratum-sized; the actual
     draw then reuses the md5-gate machinery.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     d6 = lambda c: F.sum(c.cast("decimal(28,6)")).cast("double")  # noqa: E731
     s = d.groupBy("source").agg(
@@ -742,7 +730,6 @@ def sample_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     a classical bootstrap's B full shuffles. Rank step runs on
     |priorities| x 32 rows.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     # spread BEFORE the B-fold expansion: the single-row-group fixture
     # file is one scan split, so without it the 32x explode + per-row
@@ -911,7 +898,6 @@ def sample_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial sums via map-side combine — the shuffle carries 2·B rows.
     Statistic and p-value compute on a {PERM_B}-row table.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     # spread before the B-fold explode for the same single-split reason
     # as sample_poisson_bootstrap_ci: the per-(row, replica) md5 draw is
@@ -1073,7 +1059,6 @@ def sample_group_split_noleak(spark: SparkSession, sf_dir: str) -> DataFrame:
     The same pattern splits by ANY leakage group — site/domain, user,
     session — by swapping the label table.
     """
-    ensure_session_conf(spark)
     labels = _jaccard_cc_labels(spark, sf_dir).select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
     )

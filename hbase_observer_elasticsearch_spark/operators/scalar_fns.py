@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..session import ensure_session_conf
 
 
 @register(
@@ -40,7 +39,6 @@ FROM part
 def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String battery: case, substr, concat, trim, replace, position,
     regexp extract/replace, reverse, pad, split_part."""
-    ensure_session_conf(spark)
     p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -86,7 +84,6 @@ def date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     0=Sunday — both sides use ISO day-of-week instead. `date_format` ↔
     `strftime` for the %Y-%m rendering.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     d = F.col("o_orderdate")
     return o.select(
@@ -131,7 +128,6 @@ def math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Only IEEE-exact ops (sqrt is correctly rounded; no libm-dependent
     exp/log whose last ulp differs across engines).
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
     return li.select(
         "l_orderkey",
@@ -165,7 +161,6 @@ FROM documents
 def array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array battery over tokenized text: size, distinct, contains,
     indexing (1-based both engines; -1 = last), sort, slice+join."""
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     return d.select(
@@ -197,7 +192,6 @@ def higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer lambdas only → exact in both engines. (Same machinery the
     similarity module uses for dot products.)
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     lens = F.transform(words, lambda x: F.length(x).cast("bigint"))
@@ -236,7 +230,6 @@ def map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     element_at. The oracle computes identical scalars without the map —
     the map is the machinery under test on the Spark side.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     per_type = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("n")
@@ -272,7 +265,6 @@ def json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream predicate. (from_json with an explicit schema is the
     schema-full variant; get_json_object is the schema-less one — both
     stay JVM-side.)"""
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     return ev.select(
@@ -321,7 +313,6 @@ def agg_conditional_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All map-side partial-aggregable: one hash shuffle on event_type.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count_if(F.col("value") > 50).cast("bigint").alias("n_high"),
@@ -359,7 +350,6 @@ def bitwise_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Integer-only: no float-determinism machinery needed anywhere.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.bit_and("event_id").cast("bigint").alias("band"),
@@ -397,7 +387,6 @@ def null_handling_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pure map-side expressions over one scan.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     missing = F.get_json_object("props", "$.missing")
     return ev.select(
@@ -440,7 +429,6 @@ def variant_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row × path). The oracle reads the same paths with DuckDB's typed
     json_extract.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     v = F.parse_json("props")
     k = F.try_variant_get(v, "$.k", "bigint")
@@ -496,7 +484,6 @@ def explode_outer_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states the same two behaviors as unnest vs LEFT JOIN LATERAL
     unnest — the ANSI restatements of Spark's inner/outer explode.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     arr = (
         F.when(F.col("doc_id") % 3 == 0, F.array().cast("array<string>"))

@@ -30,7 +30,6 @@ from ..functions.vectors import (
 )
 from ..memos import Memo
 from ..registry import register
-from ..session import ensure_session_conf
 
 TOPK = 10
 N_QUERIES = 5  # vec_id < 5 are the query vectors in fixture queries
@@ -135,7 +134,6 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the candidate set, no shuffle until the final tiny top-k window.
     Memoized per (application, sf_dir) — three recall audits consume it.
     """
-    ensure_session_conf(spark)
     return _TOPK.get(
         spark,
         sf_dir,
@@ -198,7 +196,6 @@ def similarity_nn_same_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     (label equi-join) — the IVF-cell analog of LSH candidate banding; cost
     is Σ cell² instead of n².
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     # norms once per vector before the pair join (same doubles, ~3× fewer
     # HOF folds per pair than per-pair cosine())
@@ -494,7 +491,6 @@ def similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments, and the final aggregate are bit-identical across engines.
     The iterative trainer therefore needs no rows-only exemption.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     # 2 Lloyd iterations: per-iteration wall cost is dominated by plan
     # compile (data-size independent); at 100 TB you would run to
@@ -544,7 +540,6 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the cells would be a partition column so probe pruning
     becomes partition pruning at the scan.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
 
     # centroids per cell: element-wise mean via posexplode + re-assemble;
@@ -648,7 +643,6 @@ def similarity_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     both searches. At 100 TB this query runs on a sampled query set — the
     standard recall-audit sidecar next to a production ANN index.
     """
-    ensure_session_conf(spark)
     bf = similarity_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
@@ -738,7 +732,6 @@ def similarity_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     and SIMD-friendly; the plan is the same broadcast-queries ×
     streamed-candidates scan as the float baseline.
     """
-    ensure_session_conf(spark)
     return _int8_topk(spark, sf_dir)
 
 
@@ -759,7 +752,6 @@ def similarity_recall_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force top-k, per query — the quantization-quality audit that
     decides whether the 4× compression is shippable. Same sampled-query
     sidecar pattern as similarity_recall_ivf."""
-    ensure_session_conf(spark)
     exact = similarity_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
@@ -832,7 +824,6 @@ def similarity_pair_dot_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact, order-independent), and the remaining per-row double ops are
     written in the same order in both dialects.
     """
-    ensure_session_conf(spark)
     e = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
     ex = e.select("label", F.posexplode("embedding").alias("pos", "x"))
     svec = ex.groupBy("label", "pos").agg(
@@ -971,7 +962,6 @@ def similarity_topk_rhp(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the bits (and therefore the candidate set) engine-reproducible —
     what upgrades this from rows-only to hash-checked.
     """
-    ensure_session_conf(spark)
     return _TOPK.get(
         spark,
         sf_dir,
@@ -1149,7 +1139,6 @@ def similarity_recall_rhp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the RHP-LSH ANN against exact brute force per query —
     the quality audit that must accompany any ANN index choice (same
     contract as similarity_recall_ivf / similarity_recall_int8)."""
-    ensure_session_conf(spark)
     ann = similarity_topk_rhp(spark, sf_dir).select("query_id", "neighbor_id")
     bf = similarity_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
@@ -1408,7 +1397,6 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF trainer oracle-checkable; the ADC sum goes through DECIMAL so
     the 4-term addition is order-free.
     """
-    ensure_session_conf(spark)
     return _TOPK.get(
         spark,
         sf_dir,
@@ -1462,7 +1450,6 @@ def similarity_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the deterministic fold — same shape as the brute-force cosine
     baseline; at scale it runs over a query SAMPLE as the audit sidecar.
     """
-    ensure_session_conf(spark)
     ann = similarity_topk_pq(spark, sf_dir).select("query_id", "neighbor_id")
     return _recall(_exact_sq_topk(spark, sf_dir), ann)
 
@@ -1532,7 +1519,6 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline (similarity.py:210) applied to an iterative spectral
     method.
     """
-    ensure_session_conf(spark)
     e = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
     ex = e.select(
         "vec_id", F.posexplode("embedding").alias("pos0", "xf")
@@ -1623,7 +1609,6 @@ def similarity_range_search_rhp(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX/MIN over identical doubles are order-insensitive — hash-exact
     across engines without any float-sum discipline.
     """
-    ensure_session_conf(spark)
     hits = _rhp_scored(spark, sf_dir).filter(F.col("cos_sim") >= RANGE_T)
     return hits.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_in_range"),
@@ -1671,7 +1656,6 @@ def embeddings_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this is a single linear pass that pre-aggregates to
     nothing, the cheapest audit in the vector family.
     """
-    ensure_session_conf(spark)
     e = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
     exu = e.select(
         "vec_id", F.posexplode("embedding").alias("pos", "x")
@@ -1845,7 +1829,6 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit twin is the recall machinery already covering IVF and PQ
     separately.
     """
-    ensure_session_conf(spark)
     return (
         _TOPK.get(
             spark,
@@ -1896,7 +1879,6 @@ def similarity_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_exact_sq_topk` ground truth (same fold/window/tiebreak as the
     re-rank audit).
     """
-    ensure_session_conf(spark)
     exact = _exact_sq_topk(spark, sf_dir)
     ann = similarity_topk_ivfpq(spark, sf_dir).select(
         "query_id", "neighbor_id"
@@ -1956,7 +1938,6 @@ def similarity_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     to their own memo_build rows; fusion itself is list-merge-sized,
     exactly as in a real retrieval stack.
     """
-    ensure_session_conf(spark)
     rhp = similarity_topk_rhp(spark, sf_dir).select(
         "query_id", "neighbor_id", "rk"
     )
@@ -2029,7 +2010,6 @@ def similarity_recall_truncated(
     separate narrower column), same broadcast-queries × candidates
     shape as the brute-force baseline it audits against.
     """
-    ensure_session_conf(spark)
     bf = similarity_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
@@ -2145,7 +2125,6 @@ def similarity_rerank_recall_ivfpq(
     vectors (row-fetch-sized, never a scan) — exactly the I/O contract
     that makes the architecture viable at 100 TB.
     """
-    ensure_session_conf(spark)
     pool = _TOPK.get(
         spark,
         sf_dir,
@@ -2321,7 +2300,6 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds bucket fan-out. SCALE_r8 measured the fixed-k alternative at
     108.8x pair mass / 16.3x wall for 10x data; k ∝ n is the fix.
     """
-    ensure_session_conf(spark)
     asgn = _semdedup_asgn(spark, sf_dir)
     a = asgn.select(
         "cluster_id",
@@ -2408,7 +2386,6 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned, and k scaling with corpus size bounds per-cell probe
     mass exactly as in the full SemDeDup pass.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     split_df = e.agg(
         F.expr(
@@ -2580,7 +2557,6 @@ def search_quality_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized joins and one tiny hash agg. The scorecard adds ZERO index
     work of its own.
     """
-    ensure_session_conf(spark)
     bf = _bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
     fams = {
         "rhp": similarity_topk_rhp(spark, sf_dir),
@@ -2676,7 +2652,6 @@ def search_quality_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     four memoized top-k tables plus the brute-force truth; no index work
     of its own.
     """
-    ensure_session_conf(spark)
     bf = _bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
     fams = {
         "rhp": similarity_topk_rhp(spark, sf_dir),
@@ -2771,7 +2746,6 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells); the brute pass here is the exactness baseline at fixture
     scale, the same audit role _bruteforce_topk plays for recall.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings").withColumn(
         "nrm", norm(F.col("embedding"))
     )
@@ -2862,7 +2836,6 @@ def quality_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference has no embedding surface at all (SURVEY §2.3 north-star
     row); this extends the SemDeDup blocking into the label-QA use case.
     """
-    ensure_session_conf(spark)
     lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     al = _semdedup_asgn(spark, sf_dir).join(lab, "vec_id")
     a = al.select("vec_id", "cluster_id", F.col("embedding").alias("va"),
@@ -2980,7 +2953,6 @@ def similarity_mips_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate, so the audit costs the same one candidate sweep as the
     brute-force baseline plus two tiny per-query top-k windows.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     sq = F.transform("embedding", lambda x: x.cast("double") * x.cast("double"))
     n2c = F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v)
@@ -3099,7 +3071,6 @@ def similarity_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     each); output is k rows. Same probe-side cost as a single IVF
     assignment pass — no pair enumeration anywhere.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     cent = spark.createDataFrame(
         _coarse_cents(spark, sf_dir), "cluster_id int, cv array<float>"
@@ -3234,7 +3205,6 @@ def similarity_pca_collapse_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     corpus is read exactly once, inside the cov build (was 49 re-scans
     when v's lineage rooted in mu).
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     e = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
@@ -3435,7 +3405,6 @@ def similarity_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise sim table is q·k² rows, built once and reused by every
     step.
     """
-    ensure_session_conf(spark)
     bf = similarity_topk_bruteforce(spark, sf_dir)
     cands = bf.select(
         "query_id",
@@ -3598,7 +3567,6 @@ def similarity_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable, output 2*d rows regardless of corpus size; everything
     downstream is d-row arithmetic.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     cohort = F.when(
         F.substring(
@@ -3717,7 +3685,6 @@ def similarity_filtered_ann_recall(
     post-filter side reuses the memoized unfiltered top-k. Output is
     one row per query vector.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings").withColumn(
         "nrm", norm(F.col("embedding"))
     )
@@ -3857,7 +3824,6 @@ def similarity_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is ONE self-join of the (n x k)-row edge list on the
     reversed key, and the rollup is node-grain.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings").withColumn(
         "nrm", norm(F.col("embedding"))
     )

@@ -27,7 +27,6 @@ from ..catalog import load_table
 from ..functions import hashing as H
 from ..functions.ranking import ranked_topk_per
 from ..registry import register
-from ..session import ensure_session_conf
 
 # md5-gate threshold '1a' = 26/256 of the key space (~10.16%) — shared
 # convention with operators/sampling.py so samples line up across ops.
@@ -65,7 +64,6 @@ def sketch_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct counts as values + a Spark-side |approx−exact|/exact ≤ 5%
     audit bit (lgConfigK=14 ⇒ ~0.8% rsd, deterministic on fixtures).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
 
     sketches = ev.groupBy("event_type").agg(
@@ -123,7 +121,6 @@ def agg_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only viable shape. Exact min/max ride along as hash-checked
     values (raw data values, no float arithmetic).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     q = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -178,7 +175,6 @@ def agg_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     high probability — the standard first pass of a skew/salting planner
     (operators/skew_agg.py uses the exact variant).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     exact = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_n")
@@ -268,7 +264,6 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (broadcast-sized by construction). Top-k compiles to
     TakeOrderedAndProject.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     keyed = li.select(
         F.col("l_partkey").alias("k"),
@@ -380,7 +375,6 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT-join the (≤ m row) bit table — broadcast by construction; the
     answer is one aggregate per probe key. Nothing fact-sized shuffles.
     """
-    ensure_session_conf(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     members = (
@@ -449,7 +443,6 @@ def sketch_hll_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific, so exact counts are hash-checked as values and the
     estimate quality as a Spark-side audit boolean per precision.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     aggs = [F.countDistinct("user_id").cast("bigint").alias("exact_users")]
     for lgk in HLL_PRECISIONS:
@@ -525,7 +518,6 @@ def sketch_hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct (type, user) projection whose self-join is bounded by
     |types| × |users|, computed only to audit the estimate.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     du = ev.select("event_type", "user_id").distinct()
     pt = du.groupBy("event_type").agg(
@@ -683,7 +675,6 @@ def sketch_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch rows only. The exact side (distinct self-join) exists purely
     as the audit and is the thing the sketch REPLACES at scale.
     """
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")

@@ -22,7 +22,6 @@ from ..catalog import load_table
 from ..functions.ranking import ranked_topk_per
 from ..functions.skew import two_stage
 from ..registry import register
-from ..session import ensure_session_conf
 
 
 @register(
@@ -44,7 +43,6 @@ def agg_salted_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reducer ever sees more than 1/n_salt of a hot key's rows (stage 1)
     or more than one row per (key, salt) (stage 2).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
 
     base = two_stage(
@@ -142,7 +140,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     Answer is oracle-identical to the plain join: salting only re-keys
     the physical distribution.
     """
-    ensure_session_conf(spark)
     n_salt = 8
     fact, dim = skewed_fact_dim(spark, sf_dir)
     fact = fact.withColumn(
@@ -187,7 +184,6 @@ def agg_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Decimal partials make the merge order-insensitive; the final cast to
     DOUBLE happens once, after the merge.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     month = F.date_trunc("month", "o_orderdate")
     cut = F.lit("1997-01-01").cast("date")
@@ -245,7 +241,6 @@ def events_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation to ~|event types| rows; pass 2 re-scans with the
     broadcast moments — no shuffle of the fact stream at all.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -316,7 +311,6 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     medians/MADs (group-count-sized) back onto the event stream — the
     events themselves shuffle once, on event_type.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)").alias(
@@ -423,7 +417,6 @@ def mv_join_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the end, so full == incremental is byte-exact, and the driver hash
     checks both paths.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     o0 = o.filter(F.col("o_orderkey") % 7 != 0)
@@ -695,7 +688,6 @@ def cdc_live_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(18,6) (value casts are identical on both sides of every
     delta), so live == recompute is byte-exact in both engines.
     """
-    ensure_session_conf(spark)
     ch = _ivm_change_stream(spark, sf_dir)
     w = Window.partitionBy("rowkey").orderBy("seq")
     lagged = ch.select(
@@ -815,7 +807,6 @@ def join_range_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate EVERYTHING — compute them as a plain agg); this query
     keeps one in deliberately to prove the plan survives the mistake.
     """
-    ensure_session_conf(spark)
     B = RANGE_BIN_SEC
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",

@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.ranking import ranked_topk_per
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources.changefeed import scratch_dir as _scratch
 from ..sources.changefeed import write_changefeed_stream_dir
 from ..streaming.pipeline import (
@@ -108,7 +107,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     every epoch (picks up refreshes without restart) and must stay
     broadcast-sized or be pre-bucketed on the join key.
     """
-    ensure_session_conf(spark)
     cf_dir = _changefeed_dir(spark, sf_dir)
 
     def build(s: SparkSession) -> DataFrame:
@@ -149,7 +147,6 @@ def stream_put_delete_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event rate inside the horizon — the requirement for an unbounded
     100 TB feed.
     """
-    ensure_session_conf(spark)
     return _put_delete_join(spark, sf_dir, "inner").select(
         "rowkey", "qualifier", "put_ts", "put_seq", "del_ts"
     )
@@ -203,7 +200,6 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the same bound is why outer-join state stays
     O(rate x (horizon + within)) instead of growing with history.
     """
-    ensure_session_conf(spark)
     return _put_delete_join(spark, sf_dir, "leftOuter").select(
         "rowkey", "qualifier", "put_ts", "put_seq", "del_ts"
     )
@@ -259,7 +255,6 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     classes were traced to exact agreement (38/751/165 at sf0.001)
     before this oracle was written.
     """
-    ensure_session_conf(spark)
     return _put_delete_join(spark, sf_dir, "fullOuter")
 
 
@@ -292,7 +287,6 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed windows are evicted after watermark passage, so open-window
     state stays O(windows in the horizon × op types) on an unbounded feed.
     """
-    ensure_session_conf(spark)
     cf_dir = _changefeed_dir(spark, sf_dir)
 
     def build(s: SparkSession) -> DataFrame:
@@ -361,7 +355,6 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides. State cost on an unbounded feed: O(open sessions) per
     key-range, bounded by the gap + horizon.
     """
-    ensure_session_conf(spark)
     cf_dir = _changefeed_dir(spark, sf_dir)
 
     def build(s: SparkSession) -> DataFrame:
@@ -413,7 +406,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     that never ends. Both deliveries of a seq arrive in the same
     micro-batch file here, well inside any horizon.
     """
-    ensure_session_conf(spark)
     cf_dir = _changefeed_dir(spark, sf_dir)
     return drain(
         spark,
@@ -467,7 +459,6 @@ def stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain shares one watermark, so neither operator blocks the other's
     eviction.
     """
-    ensure_session_conf(spark)
     cf_dir = _changefeed_dir(spark, sf_dir)
     return drain(
         spark,
@@ -516,7 +507,6 @@ def stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     event's time, which no built-in dedup expresses — the minimal
     genuine custom-state operator. State is one long per active key.
     """
-    ensure_session_conf(spark)
     from ..streaming.stateful import stateful_debounce
 
     cf_dir = _changefeed_dir(spark, sf_dir)
@@ -605,7 +595,6 @@ def cdc_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     same connector class serves batch reads (cdc_python_datasource) AND
     resumable partition-parallel streams.
     """
-    ensure_session_conf(spark)
     return _tail_python_datasource(spark, sf_dir)
 
 
@@ -649,7 +638,6 @@ def stream_pushdown_region_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate must equal the batch relational restatement over the
     prefix-filtered feed — the stream face of `cdc_pushdown_region_scan`'s contract.
     """
-    ensure_session_conf(spark)
     # the source emits only the rows that survive region pruning
     expected = (
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -708,7 +696,6 @@ def stream_exact_dedup_keyed_state(
     array_sort — no Python in the per-row path; Python touches only
     grouped first-sight batches).
     """
-    ensure_session_conf(spark)
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -804,7 +791,6 @@ def stream_semantic_admission(
     per micro-batch cost is batch-rows x probed-cell size, the same
     bound as the batch query, paid incrementally at ingest frequency.
     """
-    ensure_session_conf(spark)
     from ..functions.vectors import cosine, dot, norm
     from ..operators.similarity import (
         SEM_INCR_DEN,
@@ -936,7 +922,6 @@ def stream_live_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch shuffles only its own mutations by rowkey, and the
     standing rollup is O(groups) — ingest cost never touches history.
     """
-    ensure_session_conf(spark)
     from ..operators.skew_agg import (
         _ivm_change_stream,
         _ivm_recompute,
@@ -1055,7 +1040,6 @@ def stream_daily_active_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission: a day emits iff its end ≤ final watermark
     (max(ts) − 1 h), mirrored exactly in the oracle's cutoff.
     """
-    ensure_session_conf(spark)
     cf_dir = _changefeed_dir(spark, sf_dir)
 
     def build(s: SparkSession) -> DataFrame:
@@ -1130,7 +1114,6 @@ def stream_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Final-row selection takes each key's last emission (max batch
     counter), which the update-mode memory sink makes deterministic.
     """
-    ensure_session_conf(spark)
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T

@@ -16,7 +16,6 @@ from ..functions.deterministic import dsum, sql_dsum
 from ..functions.ranking import range_prefix_sum, ranked_topk, ranked_topk_per
 from ..memos import Memo
 from ..registry import register
-from ..session import ensure_session_conf
 
 # A small shared stopword lexicon (per-language) for lang-ID scoring and
 # stopword-ratio quality signals.
@@ -50,7 +49,6 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     These are the standard pre-training quality filters (cf. C4/Gopher
     rules): all integer counts + deterministic int/int double divisions.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n = F.size(words).cast("bigint")
@@ -95,7 +93,6 @@ GROUP BY source
 def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-gate funnel per source: kept vs rejected (too-short /
     repetitive) — the shape of a corpus-curation report at 100 TB."""
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n = F.size(words).cast("bigint")
@@ -127,7 +124,6 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token accounting three ways: whitespace, BPE-ish regex
     (letter-runs / digit-runs / other), and the chars/4 heuristic —
     the budget arithmetic of training-data pipelines."""
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     bpeish = F.expr(r"regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)")
@@ -164,7 +160,6 @@ def text_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Real lang-ID would use char n-gram profiles per language — same
     map-side shape, bigger lexicon broadcast.)
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     en_score = (
@@ -203,7 +198,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-weighted rolling-hash document fingerprint (mod-prime
     integer arithmetic over portable token codes) — order-sensitive, unlike
     the bag-of-words hashes in dedup_exact."""
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     wp = d.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("i", "w")
@@ -244,7 +238,6 @@ def text_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines implement classic integer Levenshtein — exact parity; the
     threshold form prunes the DP early on the Spark side.
     """
-    ensure_session_conf(spark)
     p = load_table(spark, sf_dir, "part")
     vocab = p.select("p_name").distinct()
     band = F.floor(F.length("p_name") / _LEN_BAND).cast("int")
@@ -299,7 +292,6 @@ def text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset so Spark and DuckDB agree byte-for-byte. Map-side only — no
     shuffle, scales as a pure scan like every per-row text op.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     body = F.concat(
         F.lit("contact user"),
@@ -356,7 +348,6 @@ def text_rarest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceed broadcast size → the join falls back to shuffle-on-term, which
     AQE decides from runtime stats; nothing else changes.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     dw = d.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("term")
@@ -427,7 +418,6 @@ def text_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     second pass over the raw text. All ratios are single BIGINT/BIGINT
     divisions (deterministic across engines).
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -509,7 +499,6 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     original text column avoids materializing token arrays. Both engines
     use identical 1-based, length-clamped substring semantics.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     starts = F.sequence(
         F.lit(1),
@@ -553,7 +542,6 @@ def text_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial aggregation; COUNT(DISTINCT) expands only within
     each tiny length group. No skew risk at any corpus size.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(F.explode(F.split("text", " ")).alias("w"))
     return toks.groupBy(
@@ -598,7 +586,6 @@ def text_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING keeps the output to actual boilerplate, which is tiny relative
     to the corpus at any scale.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     starts = F.sequence(
         F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(CHUNK_STRIDE)
@@ -662,7 +649,6 @@ def text_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost class as text_rarest_terms). Everything here is map-side array
     HOF math over one corpus scan: no explode, no shuffle, no join.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     block = F.array(*[F.lit(t) for t in BLOCKLIST])
     words = F.split(F.col("text"), " ")
@@ -713,7 +699,6 @@ def text_prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     key); one hash aggregation; HAVING keeps only actual groups, which
     shrink the output to the duplicated remainder.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     pre = d.filter(F.size(words) >= PREFIX_W).select(
@@ -792,7 +777,6 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a separate linear aggregate. Top-k compiles to
     TakeOrderedAndProject. No dense vectors, no n² anywhere.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("w"))
     tf = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
@@ -879,7 +863,6 @@ def corpus_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus tokens, and skew is impossible to create here — the
     aggregate's value is two counters.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     # single-file fixture scan = one partition; spread so the explode +
@@ -947,7 +930,6 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (log-spaced histogram) and walk the ~100-bucket CDF instead, same
     output contract. Levels are a 4-row literal cross join.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
@@ -1029,7 +1011,6 @@ def corpus_unigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens are broadcast as a map-side dictionary; the plan is otherwise
     scan-shaped with no pairwise work.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
@@ -1136,7 +1117,6 @@ def corpus_mix_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     milliseconds from the source-stats table and drives the downstream
     per-source sampling gates (sampling.py).
     """
-    ensure_session_conf(spark)
     alloc = _waterfill_capacities(
         spark, sf_dir, capacity=F.col("n_tokens"), budget_expr="sum(n_tokens) DIV 2"
     )
@@ -1280,7 +1260,6 @@ def text_chunk_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus self-join; the feeding subtree is computed once, not per
     join side.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
     from .dedup import _pairs_from_groups
 
@@ -1500,7 +1479,6 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables are the persisted index; a query touches only its terms'
     postings — never the corpus.
     """
-    ensure_session_conf(spark)
     agg = _bm25_agg(spark, sf_dir, BM25_TERMS)
     return ranked_topk(
         agg, [F.col("bm25").desc(), F.col("doc_id")], BM25_TOPK,
@@ -1572,7 +1550,6 @@ def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     with map-side combine, then all allocation math on the |sources|-row
     stats table (one broadcast scalar row, one window over sources).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = (
         d.groupBy("source")
@@ -1665,7 +1642,6 @@ def search_phrase_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional-list intersection. At 100 TB the (w, doc_id, i) table is
     the persisted positional index, partitioned by term.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     pos = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("i", "w")
@@ -1768,7 +1744,6 @@ def corpus_bigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     same mitigation as corpus_unigram_familiarity (salt or broadcast
     the head). No pairwise work anywhere.
     """
-    ensure_session_conf(spark)
     scored = _bigram_backoff_scored(spark, sf_dir, heldout_only=True)
     return scored.groupBy("lang").agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
@@ -1900,7 +1875,6 @@ def text_dup_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     own ≤ len/stride chunk rows. Linear end to end; the only shuffles
     are the hash agg and the per-doc window.
     """
-    ensure_session_conf(spark)
     spans = _merged_dup_spans(spark, sf_dir)
     return spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_spans"),
@@ -1970,7 +1944,6 @@ def search_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary only. The expensive corpus-wide structures (postings,
     df) are exactly the ones a search engine already maintains.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     n_docs = d.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -2105,7 +2078,6 @@ def search_bm25_expanded(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings before any shuffle. Nothing corpus-wide is added beyond
     the df stats pass 1 already needs.
     """
-    ensure_session_conf(spark)
     exp_rows = (
         search_prf_expansion(spark, sf_dir).select("term").collect()
     )
@@ -2230,7 +2202,6 @@ def text_dedup_apply_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     that doc's own span rows (≤ len/stride). No pairwise anything; the
     full text moves through exactly one groupBy, partitioned by doc_id.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sp = _merged_dup_spans(spark, sf_dir).select(
         "doc_id", F.col("span_start").alias("s"),
@@ -2365,7 +2336,6 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 1e11 ≪ 2^53) so the ratio is exact-integer-valued on both sides
     of the one division.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     is_t = F.col("doc_id") % 10 == 0
@@ -2572,7 +2542,6 @@ def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each round's cost is vocabulary-sized, independent of corpus
     token count.
     """
-    ensure_session_conf(spark)
     merges, seg = _bpe_train(spark, sf_dir)
     final_syms = seg.agg(
         F.sum(
@@ -2633,7 +2602,6 @@ def corpus_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus). The compression ratio is one IEEE division of two exact
     integer sums.
     """
-    ensure_session_conf(spark)
     _, seg = _bpe_train(spark, sf_dir)
     wsym = seg.select(
         "word",
@@ -2817,7 +2785,6 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     same buckets, no global sort; ntile is the exact-arithmetic twin
     the oracle can check.
     """
-    ensure_session_conf(spark)
     scored = _bigram_backoff_scored(spark, sf_dir, heldout_only=False)
     per_doc = scored.groupBy("doc_id", "lang").agg(
         (
@@ -2909,7 +2876,6 @@ def search_postings_delta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by term, Zipf-head skew bounded because postings are DISTINCT
     doc ids <= |docs|) -> term-grain rollup to ~64 octave rows.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
@@ -3031,7 +2997,6 @@ def corpus_mix_unimax(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB corpus are computed from the source-stats table in
     milliseconds.
     """
-    ensure_session_conf(spark)
     alloc = _waterfill_capacities(
         spark,
         sf_dir,
@@ -3124,7 +3089,6 @@ def search_champion_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     are a top-m-per-term window over the tf table, built once at index
     time; idf/dl stay full-corpus statistics (tiny broadcast).
     """
-    ensure_session_conf(spark)
     agg = _bm25_agg(spark, sf_dir, BM25_TERMS)
     # the component relations champion pruning needs (tf/dfq/dl/stats)
     # are index-time tables — read them from the shared postings +
@@ -3236,7 +3200,6 @@ def corpus_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-aggregation count tables, orders of magnitude under token grain.
     The two 1-row totals broadcast.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -3329,7 +3292,6 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully partition-local after spread) into a (source, band) hash agg
     whose key space is tiny. No joins, no window, one shuffle.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -3441,7 +3403,6 @@ def text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocabulary, and a vocabulary-keyed join back — the same
     postings economics as BM25; nothing is pairwise.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -3587,7 +3548,6 @@ def corpus_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning of the explode. The V and split gates are one broadcast
     row + a hash compare.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -3780,7 +3740,6 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncapped form is quadratic in corpus size on Zipf boilerplate). At
     100 TB the report joins capped fingerprint tables, never documents.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -3934,7 +3893,6 @@ def search_bool_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k is a rank window over the qualifying docs only. At 100 TB a
     query touches its terms' postings, never the corpus.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -4042,7 +4000,6 @@ def search_prefix_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream is equi-joins + hash aggs; top-k per clause is a rank
     window over qualifying docs.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -4149,7 +4106,6 @@ def corpus_collocations_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     words with the 1-row total broadcast. At 100 TB: one scan, Zipf-
     bounded count tables.
     """
-    ensure_session_conf(spark)
     from ..catalog import spread
 
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -4275,7 +4231,6 @@ def search_function_score_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row stats broadcast; the decay multiply is per-matching-doc
     scalar math and the top-k is one global window over matches only.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     # tf/dl/stats from the shared postings + dl/stats memos (r13
     # optimization round: this query re-tokenized the corpus and
@@ -4432,7 +4387,6 @@ def search_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query itself is a {MLT_MAX_QUERY_TERMS}-row broadcast against
     the postings — identical cost to any other bounded multi-term BM25.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     # The postings table (doc, term, tf) is the one corpus-pass artifact;
     # every downstream relation (doc lengths, term dfs, seed terms, the
@@ -4586,7 +4540,6 @@ def search_fuzzy_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     the postings join; everything downstream is the bounded multi-term
     BM25 shape.
     """
-    ensure_session_conf(spark)
     # dl/stats/dictionary/scoring all derive from the shared postings
     # memo (the MLT diamond-DAG doctrine; the un-checkpointed build
     # audited at 5 parquet scans).
@@ -4711,7 +4664,6 @@ def search_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the counts table IS the persisted term-stats index; a foreground
     query touches term stats, never documents.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     postings = (
         d.select("doc_id", "source", F.explode(F.split("text", " ")).alias("w"))
@@ -4828,7 +4780,6 @@ def search_rank_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents scan — no extra pass. Top-k compiles to
     TakeOrderedAndProject.
     """
-    ensure_session_conf(spark)
     bm = _bm25_agg(spark, sf_dir, (RF_TERM,)).select(
         "doc_id", F.col("bm25")
     )
@@ -4916,7 +4867,6 @@ def search_dis_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined on doc_id — cost tracks the two terms' postings, never the
     corpus; identical shuffle class as any bounded multi-term query.
     """
-    ensure_session_conf(spark)
     a = _bm25_agg(spark, sf_dir, (DM_TERM_A,)).select(
         "doc_id", F.col("bm25").alias("sa")
     )
@@ -5010,7 +4960,6 @@ def search_match_phrase_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the (w, doc_id, i) table is the persisted positional
     index, partitioned by term.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     pos = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("i", "w")
@@ -5100,7 +5049,6 @@ def search_collapse_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a second corpus pass. At 100 TB this is the per-shard
     collapse + coordinator merge ES itself runs.
     """
-    ensure_session_conf(spark)
     bm = _bm25_agg(spark, sf_dir, (RF_TERM,)).select("doc_id", "bm25")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     scored = bm.join(d, "doc_id")
@@ -5189,7 +5137,6 @@ def search_highlight_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     highlight cost tracks the page's hits × their term occurrences,
     never the corpus.
     """
-    ensure_session_conf(spark)
     bm = _bm25_agg(spark, sf_dir, BM25_TERMS)
     top = (
         ranked_topk(bm, [F.col("bm25").desc(), "doc_id"], HL_TOPK)
@@ -5253,7 +5200,6 @@ def search_composite_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinator-side pagination ES runs; at 100 TB the bucket table is
     tiny next to the fact scan that built it.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     buckets = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("doc_count"),
@@ -5352,7 +5298,6 @@ def search_terms_agg_shard_error(
     combinable), per-shard top-k windows over shard-local rows, then
     coordinator-side merge on the tiny candidate x shard lattice.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     sharded = d.select(
         "doc_id",
@@ -5461,7 +5406,6 @@ def search_date_histogram_pipeline(
     is the documented aggregated-grain exemption — at 100 TB you'd
     partition the cumulative by calendar year and stitch offsets.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -5554,7 +5498,6 @@ def search_percolate_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole point at 100 TB (percolating N queries costs ONE pass,
     not N).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     stored = spark.createDataFrame(
         [(qid, t) for qid, ts in PERCOLATE_QUERIES for t in ts],
@@ -5633,7 +5576,6 @@ def search_term_suggester(spark: SparkSession, sf_dir: str) -> DataFrame:
     join_fuzzy_levenshtein_blocked — the suggester is the single-column
     special case of that registered blocked fuzzy join.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
@@ -5716,7 +5658,6 @@ def search_es_join_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     precisely a co-partitioned join at 100 TB; the bucketed-join twin
     (join_bucketed_colocated) carries that layout story.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     hc_children = li.filter(
@@ -5829,7 +5770,6 @@ def search_nested_block_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — exactly Lucene's same-block locality, expressed as a
     groupBy on doc_id.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("i", "w")
@@ -5926,7 +5866,6 @@ def search_after_cursor(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages. At 100 TB a deep-paging export walks the whole hit list in
     O(n) total instead of O(n²/size).
     """
-    ensure_session_conf(spark)
     scored = _bm25_agg(spark, sf_dir, (SA_TERM,)).select("doc_id", "bm25")
     w = Window.orderBy(F.col("bm25").desc(), "doc_id")
     cursor = (
@@ -6019,7 +5958,6 @@ def search_span_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is per-doc-keyed, never cross-doc. At 100 TB this is the
     standard positional-index span scan, partitioned by term then doc.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     pos = (
         d.select(
@@ -6077,7 +6015,6 @@ def search_terms_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-count — the same plan ES runs against the terms'
     postings with a CoveringScorer quorum.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     matched = (
         d.select(
@@ -6135,7 +6072,6 @@ def search_boosting_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes only a DISTINCT doc-id set LEFT-JOINED at hit grain
     (postings mass, no corpus scan); top-k at the end.
     """
-    ensure_session_conf(spark)
     pos = _bm25_agg(spark, sf_dir, (BQ_POS,)).select("doc_id", "bm25")
     neg = (
         _postings_memo(spark, sf_dir)
@@ -6200,7 +6136,6 @@ def search_function_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan); top-k at the end. At 100 TB the field factor reads a
     doc-values column exactly like ES.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     b = _bm25_agg(spark, sf_dir, (FSM_TERM,)).select("doc_id", "bm25")
     ff = F.sqrt(F.col("n_chars").cast("double"))
@@ -6264,7 +6199,6 @@ def agg_date_histogram_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned window is the right plan at any corpus size (the
     same coordinator-side compute ES runs).
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     hist = e.groupBy(
         F.date_trunc("day", F.col("ts").cast("timestamp")).alias("day")
@@ -6332,7 +6266,6 @@ def agg_adjacency_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew). ES caps filters at ~100 for the same quadratic-in-filters,
     linear-in-docs reason.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     flags = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
@@ -6418,7 +6351,6 @@ def agg_histogram_empty_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-independent) and broadcast-joinable. At 100 TB the spine is
     still tiny; empty-bucket fill never touches the fact table.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     counts = e.groupBy(
         F.floor(F.col("value") / float(HIST_INTERVAL))
@@ -6492,7 +6424,6 @@ def agg_extended_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums and squared sums are the textbook distributive aggregates, so
     at 100 TB this is a single shuffle of |buckets| partial states.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     s = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -6558,7 +6489,6 @@ def agg_percentile_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents is avoided because ranks of GIVEN values need counts,
     not order statistics).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     t = spark.createDataFrame(
         [(int(v),) for v in PR_THRESHOLDS], "threshold bigint"
@@ -6608,7 +6538,6 @@ def agg_filters_other_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     DSL and deliberately so here (the row exists to pin other_bucket
     SEMANTICS, not plan complexity).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     bucket = (
         F.when(F.col("lang") == FA_LANG_A, F.lit(FA_LANG_A))
@@ -6655,7 +6584,6 @@ def agg_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     rk<=k limit into the sort via WindowGroupLimit), never a global
     sort.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return ranked_topk_per(
         d.select(
@@ -6706,7 +6634,6 @@ def search_geo_distance_plane(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes by cell first (the IVF-cell pattern the ANN family already
     carries); the post-prune per-candidate kernel is THIS query.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     px = F.element_at("embedding", 1).cast("double") * GEO_SCALE
     py = F.element_at("embedding", 2).cast("double") * GEO_SCALE
@@ -6772,7 +6699,6 @@ def search_regexp_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped pass. At 100 TB the dictionary is the persisted term FST
     and this is an index-only query.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     matched = (
@@ -6822,7 +6748,6 @@ def agg_sampler_lang_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     on k rows regardless of corpus size — exactly the cost bound the
     ES agg exists to provide.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     sampled = ranked_topk(
         d.select("doc_id", "lang"),
@@ -6863,7 +6788,6 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two distributive sums per bucket — map-side
     combinable, one shuffle at bucket grain.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     wcol = (F.col("user_id") % WA_MOD + 1).cast("bigint")
     wv = F.col("value") * (F.col("user_id") % WA_MOD + 1)
@@ -6910,7 +6834,6 @@ def agg_missing_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the AGG layer, distinct from the CDC layer's tombstone
     semantics which delete state).
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     q = F.when(
         F.col("event_type") == "error", F.lit(None).cast("string")
@@ -6964,7 +6887,6 @@ def agg_geo_bounds_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined partials, one shuffle at bucket grain, the same
     plan at any corpus size.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     px = F.element_at("embedding", 1).cast("double") * GEO_SCALE
     py = F.element_at("embedding", 2).cast("double") * GEO_SCALE
@@ -7030,7 +6952,6 @@ def agg_bucket_script_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sort/truncate runs over |buckets| rows (dictionary-small) —
     coordinator-side work in ES, a k-row window here.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     buckets = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -7083,7 +7004,6 @@ def agg_range_open_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable — like the filters agg, the row pins SEMANTICS
     (half-open edges, open ends, key naming), not plan complexity.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     e0, e1, e2 = RANGE_EDGES
     bucket = (
@@ -7166,7 +7086,6 @@ def search_intervals_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings pruned at token grain before the per-doc position join;
     the order predicate (b.i > a.i) just halves the pair mass.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     pos = (
         d.select(
@@ -7227,7 +7146,6 @@ def agg_multi_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     search_terms_agg_shard_error documents); the engine computes it
     exactly.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     buckets = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("doc_count"),
@@ -7292,7 +7210,6 @@ def agg_auto_date_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — the adaptive choice costs one extra tiny pass, the
     histogram itself is the same plan as the fixed-interval agg.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     ep = e.select(
         F.expr(
@@ -7380,7 +7297,6 @@ def search_pinned_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard postings-pruned scored top-k. The union sorts
     |pinned| + top-k rows.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     pinned = spark.createDataFrame(
         [(int(i), p + 1) for p, i in enumerate(PIN_IDS)],
@@ -7471,7 +7387,6 @@ def agg_sibling_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     |buckets| rows — the second stage is a 1-row all-reduce, free at
     any corpus size.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     hist = (
         e.select(
@@ -7574,7 +7489,6 @@ def search_explain_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs, per hit, which is why ES scopes it to single documents;
     here the top-k page is explained in one plan.
     """
-    ensure_session_conf(spark)
     tf_all = _postings_memo(spark, sf_dir)
     dl, stats = _dl_stats_memo(spark, sf_dir)
     tf = tf_all.filter(F.col("w") == EXP_TERM).select("doc_id", "tf")
@@ -7646,7 +7560,6 @@ def search_track_total_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark expresses that as LIMIT pushdown on the distinct feed) —
     documented here, measured irrelevant at fixture scale.
     """
-    ensure_session_conf(spark)
     hits = (
         _postings_memo(spark, sf_dir)
         .filter(F.col("w") == TTH_TERM)
@@ -7716,7 +7629,6 @@ def search_script_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     observer6/ElasticSearchBulkOperator.java:84; the script here
     reads one pruned column).
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     b = _bm25_agg(spark, sf_dir, (SSC_TERM,)).select("doc_id", "bm25")
     nc = F.col("n_chars").cast("double")
@@ -7805,7 +7717,6 @@ def agg_geohash_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     At a deeper precision the agg stays distributive — doc_count and
     centroid sums combine map-side.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     pts = e.select(
         (F.element_at("embedding", 1).cast("double") * GEO_SCALE).alias("px"),
@@ -7890,7 +7801,6 @@ def agg_rare_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     rare_terms as heavier than terms for exactly this reason — here
     it is the same aggregation shape either way.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     # split(text) once into a column before the transform (the inline
     # form re-ran split() three times per bigram: size + both lambda
@@ -7988,7 +7898,6 @@ def agg_matrix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver math. ES computes it per shard + combines; this is the
     same partial-aggregation plan.
     """
-    ensure_session_conf(spark)
     # project to the 3 measure columns, then spread: the per-row decimal
     # casts are the whole cost and the single-row-group fixture file
     # would otherwise run them on one core (guide §2.3 project before
@@ -8075,7 +7984,6 @@ def agg_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary-small. The length stats are plain distributive
     aggregates sharing the same shuffle key.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     base = d.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -8179,7 +8087,6 @@ def agg_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     events pass, one 1-row reduce — the same shard-partial plan ES
     runs. No shuffle beyond the single global aggregate.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     is_a = F.col("event_type") == TT_GROUP_A
     is_b = F.col("event_type") == TT_GROUP_B
@@ -8255,7 +8162,6 @@ def agg_cumulative_cardinality(
     grain. The HLL twin for approximate mode lives in sketches.py —
     this is the exact-path complement.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", F.col("ts").cast("timestamp")).alias("day"),
         "user_id",
@@ -8312,7 +8218,6 @@ def agg_top_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     full per-key sort materializes. At 100 TB this is max_by at
     shard grain, the same plan ES runs.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return (
         ranked_topk_per(
@@ -8377,7 +8282,6 @@ def agg_variable_width_histogram(
     a dictionary-size window for the cumulative rank, and a k-bucket
     reduce. Never sorts the corpus; never buffers it on one node.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     vc = d.groupBy(F.col("n_chars").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -8458,7 +8362,6 @@ def agg_categorize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation at category grain. The 100 TB log-triage pattern:
     billions of lines, thousands of categories.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     sig = d.select(
         "doc_id",
@@ -8517,7 +8420,6 @@ def agg_geo_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     the serialize step, the same size cap ES enforces to bound
     coordinator memory.
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
     qx = F.expr(
         f"CAST(FLOOR(CAST(element_at(embedding, 1) AS DOUBLE)"

@@ -20,7 +20,6 @@ from ..catalog import load_table, spread
 from ..functions.deterministic import dsum, dsum_expr, sql_dsum
 from ..functions.ranking import ranked_topk, ranked_topk_per
 from ..registry import register
-from ..session import ensure_session_conf
 
 
 @register(
@@ -40,7 +39,6 @@ def window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     `F.window(ts, '1 day')` aligns to the epoch, which for whole days ==
     date_trunc('day') — giving the oracle an exact ANSI twin.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -74,7 +72,6 @@ def window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     two windows). The oracle materializes the same assignment with a
     2-way UNION — which is exactly what Spark's window expression expands
     to internally (an explode over duration/slide copies)."""
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "2 days", "1 day").alias("w"))
@@ -117,7 +114,6 @@ def window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     In streaming this same expression runs stateful with a watermark;
     batch and stream share the operator definition.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -170,7 +166,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     power users at 100 TB; this one never holds more than a timestamp
     per user per stage).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     # each stage table is one row per surviving user (tiny) and feeds
     # BOTH the next stage and its own count — checkpointed so the event
@@ -241,7 +236,6 @@ def events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     space regardless of corpus size. All values are dates/ints; no float
     discipline needed.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     first_day = ev.groupBy("user_id").agg(
         F.min(F.date_trunc("day", "ts")).alias("cohort_day")
@@ -325,7 +319,6 @@ def time_asof_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     time axis exact; the interpolation ratio is the only float op and is
     written identically in both dialects.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     pts = ev.groupBy(
         "user_id", F.unix_millis(F.col("ts").cast("timestamp")).alias("t_ms")
@@ -423,7 +416,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (greatest of the two interval starts), which both sides cover by
     construction — dedup by arithmetic, not a distinct() shuffle.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
 
     def intervals(etype: str, prefix: str) -> DataFrame:
@@ -508,7 +500,6 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, no join fan-out at all. Millisecond BIGINTs; tie-break is pure
     integer comparison.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     t_ms = F.unix_millis(F.col("ts").cast("timestamp"))
     err = ev.filter(F.col("event_type") == "error").select(
@@ -614,7 +605,6 @@ def events_ewma_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible contribution for the fixture's value range). One shuffle:
     the (user_id) window sort — same cost class as any per-key window.
     """
-    ensure_session_conf(spark)
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     num, den = _EWMA_NUM, _EWMA_DEN
     return spark.sql(
@@ -669,7 +659,6 @@ def events_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the span, so no key explodes; the grid explode is the
     only row-amplifying step and is proportional to the output itself.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "user_id", F.date_trunc("day", "ts").alias("day")
@@ -743,7 +732,6 @@ def events_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerically sane parameterization at any scale. One hash aggregation
     on user_id; the window MIN shares the same shuffle.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     t_ms = F.unix_millis(F.col("ts").cast("timestamp"))
     w = Window.partitionBy("user_id")
@@ -806,7 +794,6 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row-normalization window runs over that tiny aggregate, not the
     events. Integer counts; one BIGINT/BIGINT-shaped division.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -861,7 +848,6 @@ def events_rolling_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the same shape runs with an HLL sketch per day
     (sketch_battery) when exact distincts stop being worth their shuffle.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     user_days = ev.select(
         "user_id", F.date_trunc("day", "ts").alias("day")
@@ -941,7 +927,6 @@ def recursive_markov_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion order — the same expression tree in both engines, so the
     doubles agree bitwise.
     """
-    ensure_session_conf(spark)
     import uuid as _uuid
 
     # Spark's UnionLoopExec re-evaluates every
@@ -1024,7 +1009,6 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     |channels| rows. The 1-PRECEDING frame excludes the purchase row
     itself without a self-join.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -1090,7 +1074,6 @@ def events_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side date_trunc + hash aggregation. Ratio = double division
     of two exact ints (correctly rounded in both engines).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n_events")
@@ -1152,7 +1135,6 @@ def events_pattern_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, sort within key, done. The HAVING keeps the result to
     converting users only.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     vp = ev.filter(F.col("event_type").isin("view", "purchase")).select(
         "user_id", "event_id", "ts", "event_type"
@@ -1229,7 +1211,6 @@ def events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key, map-side filter. Interval comparison is exact timestamp
     arithmetic in both engines.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     g = ev.select(
@@ -1291,7 +1272,6 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     how many feature versions precede each observation. Feature values
     are carried verbatim (no arithmetic) — hash-exact in both engines.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     vp = ev.filter(F.col("event_type").isin("view", "purchase")).select(
         "event_id", "user_id", "event_type", "value", "ts"
@@ -1362,7 +1342,6 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_rolling_actives (7-day), at the monthly horizon with the
     ratio on top; ratio = double division of exact ints.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select(
         "user_id", F.date_trunc("day", "ts").alias("day")
@@ -1412,7 +1391,6 @@ def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest possible profile of an arbitrarily large event stream.
     Value sums through exact decimals.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(
         F.dayofweek("ts").cast("int").alias("dow"),
@@ -1462,7 +1440,6 @@ def orders_open_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     of rows regardless of order volume, the only sound shape at 100 TB.
     Integer arithmetic end-to-end.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     completion = (
@@ -1525,7 +1502,6 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged, and the window key gains a day bucket so no single type
     serializes on one partition.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     micros = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -1578,7 +1554,6 @@ def orders_ship_latency_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped exact percentile per month (≤ a few hundred groups); the
     approx_percentile swap at 100 TB changes one function name.
     """
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     lat = o.join(li, o["o_orderkey"] == li["l_orderkey"]).select(
@@ -1647,7 +1622,6 @@ def window_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one window pass + one grouped aggregate, the same single-shuffle
     shape at any scale.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     gap = (
         F.when(
@@ -1737,7 +1711,6 @@ def events_cep_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     All arithmetic BIGINT (epoch millis, shifts, integer division) —
     hash-exact across engines.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "click", "purchase")
     )
@@ -1836,7 +1809,6 @@ def events_seq3_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. At 100 TB this is exactly one keyed sort + one aggregation
     regardless of pattern count.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -1935,7 +1907,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration is a |states|²-row join — driver-free, and at 100 TB the
     only data-sized pass is the one LEAD window building the matrix.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
@@ -2059,7 +2030,6 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-sized, not data-sized — same doctrine as the seasonality
     and drift audits.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.date_trunc("day", F.col("ts")).alias("day")
@@ -2188,7 +2158,6 @@ def events_conversion_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (at 100 TB: approx_count_distinct or a pre-deduped daily
     user-activity table); everything after is per-row arithmetic.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     du = ev.groupBy(
         F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
@@ -2309,7 +2278,6 @@ def events_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming deployment maintains incrementally (the same algebraic
     (n, s) state as agg_incremental_rollup).
     """
-    ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "events")
     mx = e.agg((F.max("event_id") + 1).alias("n"))
     ep = (
@@ -2394,7 +2362,6 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     No day x user explode, no distinct-over-frame rescan — at 100 TB the
     window input is thousands of rows regardless of event volume.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select(
         "event_type", "user_id", F.date_trunc("day", "ts").alias("day")
@@ -2492,7 +2459,6 @@ def events_ols_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH dialects — a slope is undefined there, and the engines'
     division-by-zero conventions differ (Spark NULL vs DuckDB inf).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -2626,7 +2592,6 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-scale no matter the event volume. At 100 TB: one scan + one
     user-day-grain shuffle.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "user_id",
@@ -2776,7 +2741,6 @@ def events_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale. The decomposition is the batch twin of what a streaming
     deployment would maintain incrementally per day.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     day = F.date_trunc("day", "ts")
     d = ev.groupBy("event_type", day.alias("day")).agg(
@@ -2912,7 +2876,6 @@ def events_funnel_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the percentile machinery runs on |distinct latency values| rows per
     pair. At 100 TB: one scan, one user-day shuffle, grid-scale math.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     e = ev.filter(
         F.col("event_type").isin("view", "click", "purchase")
@@ -3054,7 +3017,6 @@ def events_uplift_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the pre-aggregated day domain. At 100 TB: two passes of
     pure hash-agg work (or one, fusing the analyses on a wider CASE).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "view")
     )
@@ -3177,7 +3139,6 @@ def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     activity. The final rollup is |types| × 4 rows. One scan, one
     user-day shuffle at any data size.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "user_id",
@@ -3301,7 +3262,6 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size). At 100 TB: one scan + grid math — and the same joins
     maintain incrementally per new day.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type",
@@ -3443,7 +3403,6 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear pre-agg scan grows. The grid self-join is broadcast-size by
     construction; medians are grid-local windows.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -3587,7 +3546,6 @@ def events_quantile_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is |events| x 21 via a broadcast of the tiny candidate grid —
     map-side only, partial-aggregated; the argmin is |types| x 21 rows.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     ranked = ev.select(
@@ -3714,7 +3672,6 @@ def events_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stats/lag branches don't re-derive the scan), and the lag join
     runs on that tiny table. At 100 TB the series is still |days| rows.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy(
         F.to_date(F.date_trunc("day", F.col("ts"))).alias("d")

@@ -24,11 +24,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..session import ensure_session_conf
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _c2(col: str) -> F.Column:
@@ -67,9 +62,8 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     The semi join ships only the join key of the filtered lineitem side;
     no payload columns cross the shuffle.
     """
-    ensure_session_conf(spark)
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
@@ -97,8 +91,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial per mapper + one final row — the cheapest possible 100 TB
     query and the canonical pushdown check.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1998-01-01")
@@ -137,15 +130,14 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both nation copies broadcast; the disjunction is evaluated after the
     (cheap) broadcast joins, never as a cross product.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
     pair = (
@@ -191,11 +183,10 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer/nation broadcast; orders⋈lineitem shuffles; top-k compiles
     to TakeOrderedAndProject (no global sort materialization).
     """
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -232,11 +223,10 @@ GROUP BY l.l_linestatus
 def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional (CASE) aggregation over a fact-fact
     join. (Fixture has no l_shipmode; o_orderpriority plays its role.)"""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -270,11 +260,10 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sums are exact decimals cast to double *before* the division so
     the ratio is bit-identical across engines and partitionings.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-03-01") & (F.col("l_shipdate") < "1997-04-01")
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     disc = _c2("l_extendedprice") * (F.lit(1) - _c2("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", disc).otherwise(
         F.lit(0).cast("decimal(12,2)")
@@ -308,14 +297,15 @@ GROUP BY 1, 2, 3
 def q16_parts_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: NOT-IN subquery (anti join) + 3-key distinct count.
     (Fixture has no partsupp; lineitem is the part↔supplier relation.)"""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & F.col("p_size").isin(1, 5, 10, 15, 20, 25)
     )
-    bad_supp = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
-        "s_suppkey"
+    bad_supp = (
+        load_table(spark, sf_dir, "supplier")
+        .filter(F.col("s_acctbal") < 0)
+        .select("s_suppkey")
     )
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -358,10 +348,9 @@ def q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     The `big` set is tiny after HAVING → broadcast back against orders;
     lineitem re-joins on the already-shuffled l_orderkey key.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("q"))
@@ -406,9 +395,8 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The part-side arms of the disjunction still prune the broadcast
     build side (Catalyst pushes the OR of the part-only predicates)."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     arm1 = (
         (F.col("p_brand") == "Brand#1")
         & F.col("p_size").between(1, 15)
@@ -455,18 +443,17 @@ GROUP BY o_year
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: national market share — ratio of conditional to
     total revenue per order-year across a 6-table star join."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n1 = _t(spark, sf_dir, "nation").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cr_key")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     vol = _c2("l_extendedprice") * (F.lit(1) - _c2("l_discount"))
     nation_vol = F.when(
         F.col("supp_nation") == "NATION_1", vol
@@ -506,9 +493,8 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: histogram of per-customer order counts — a
     two-level aggregation over a left outer join (zero-order customers
     land in bucket 0)."""
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     counts = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -537,11 +523,10 @@ WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: scalar-subquery MAX against a derived revenue view
     (the 'top supplier' pattern: aggregate → global max → filter-back)."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         _rev().alias("total_revenue")
     )
@@ -576,9 +561,8 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg(quantity) is double division of a count — identical fp expression
     both engines, and the 0.5× comparison is exact in doubles.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
     avgq = li.groupBy(F.col("l_partkey").alias("ap_key")).agg(
         F.avg("l_quantity").alias("aq")
     )
@@ -622,9 +606,8 @@ def q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring-derived grouping. (Fixture adaptation: every customer has
     orders, so the anti-join target is urgent orders — 'above-average
     customers who never ordered urgently'.)"""
-    ensure_session_conf(spark)
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
         F.avg("c_acctbal").alias("ab")
     )
@@ -685,12 +668,11 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole query is a single l_orderkey shuffle plus broadcast dims. At
     100 TB that is the difference between one fact shuffle and three.
     """
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
@@ -710,10 +692,12 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey")
     )
     sn = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(
-                _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_9")
+                load_table(spark, sf_dir, "nation").filter(
+                    F.col("n_name") == "NATION_9"
+                )
             ),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
@@ -771,22 +755,21 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_partkey-partitioned pass plus broadcast dims and a TakeOrdered. The
     partsupp relation is restated as (part, supplier) min line price in
     integer cents (exact)."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     ps = li.groupBy("l_partkey", "l_suppkey").agg(
         F.min(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
             "cost_cents"
         )
     )
     rs = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(load_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
             F.broadcast(
-                _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+                load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
             ),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
@@ -797,7 +780,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     reg = reg.withColumn("min_cost", F.min("cost_cents").over(w)).filter(
         F.col("cost_cents") == F.col("min_cost")
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
     return (
         reg.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .select(
@@ -838,16 +821,15 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation, year) grouping. Profit is restated as discounted revenue in
     scaled-integer arithmetic (no ps_supplycost in the fixtures). part /
     supplier / nation broadcast; lineitem⋈orders is the one fact shuffle."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%gear%"))
         .select("p_partkey")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     pcents = F.round(F.col("l_extendedprice") * 100).cast("long")
     dcents = F.round(F.col("l_discount") * 100).cast("long")
     return (
@@ -891,13 +873,14 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast single-row cross join (never a collect), and the value sums
     are exact integer cents so the fraction threshold compares identically
     across engines."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     sn = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(
-                _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+                load_table(spark, sf_dir, "nation").filter(
+                    F.col("n_name") == "NATION_3"
+                )
             ),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
@@ -947,8 +930,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     = shipped more than a sixth of the part's total volume. All-integer
     arithmetic; the pq⋈ptot join is co-partitioned on l_partkey (one
     shuffle, reused exchange)."""
-    ensure_session_conf(spark)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pq = li.groupBy("l_partkey", "l_suppkey").agg(
         F.sum(F.round(F.col("l_quantity")).cast("long")).alias("qty")
     )
@@ -960,9 +942,9 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(load_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(excess, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")

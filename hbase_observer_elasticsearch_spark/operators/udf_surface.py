@@ -34,7 +34,6 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..catalog import load_table
 from ..registry import register
-from ..session import ensure_session_conf
 
 
 # --------------------------------------------------------------------------
@@ -70,7 +69,6 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     The custom-kernel path for 100 TB text pipelines: Arrow batch transfer,
     pandas str kernels, fully partition-parallel, no shuffle.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -133,7 +131,6 @@ def udf_grouped_applyinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     in executor memory: at 100 TB use only on bounded-cardinality groups
     (here: 6 flag×status groups), never on raw high-cardinality keys.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").applyInPandas(
         _group_stats, schema=_GROUP_STATS_SCHEMA
@@ -161,7 +158,6 @@ def udf_scalar_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the 25-row nation dim. Each row pays a Python round-trip and breaks
     whole-stage codegen; on a 100 TB fact table this flavor is forbidden
     in favor of built-ins (F.reverse exists!) or pandas_udf."""
-    ensure_session_conf(spark)
     n = load_table(spark, sf_dir, "nation")
     return n.select("n_nationkey", "n_name", _mirror_name("n_name").alias("mirrored"))
 
@@ -198,7 +194,6 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines: sentence splitting, BPE encoding). Fan-out is map-side —
     no shuffle; downstream aggs see ordinary rows.
     """
-    ensure_session_conf(spark)
     spark.udtf.register("hoes_tokenize", _Tokenize)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("hoes_docs_udtf")
     return spark.sql(
@@ -260,7 +255,6 @@ def udf_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key) is otherwise identical. Integer-only kernel ⇒ exact
     oracle equality.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         _pandas_count(F.col("text")).alias("n_docs"),
@@ -295,7 +289,6 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas/Arrow: payload bytes never become Python objects.
     Integer-only kernel ⇒ exact oracle equality.
     """
-    ensure_session_conf(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def batches(it):
@@ -360,8 +353,6 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     is confined to the 25-row nation dim — on a 100 TB fact the built-in
     expression (reverse/length/concat exist!) is still the answer.
     """
-    ensure_session_conf(spark)
-
     @F.udf(returnType="string", useArrow=True)
     def tag(name: str) -> str:
         return f"{name[::-1]}:{len(name)}"
@@ -446,7 +437,6 @@ def udf_cogroup_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     join+aggregate is the faster plan (the oracle is exactly that plan);
     the query exists to pin the cogroup surface with an oracle twin.
     """
-    ensure_session_conf(spark)
     # Project to the UDF's working set BEFORE the cogroup: Catalyst cannot
     # prune columns through FlatMapCoGroupsInPandas (the UDF body is
     # opaque), so without this every customer/orders column rides the

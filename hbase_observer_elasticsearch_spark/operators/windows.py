@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.ranking import ranked_topk_per
 from ..registry import register
-from ..session import ensure_session_conf
 
 
 @register(
@@ -38,7 +37,6 @@ WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)
 )
 def window_rank_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number/rank/dense_rank/ntile/cume_dist/percent_rank per nation."""
-    ensure_session_conf(spark)
     c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey")
@@ -71,7 +69,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 )
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead offsets with defaults + derived delta per user timeline."""
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
@@ -113,7 +110,6 @@ def window_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-portable (a double running sum would drift by accumulation
     order only if the frame were re-partitioned — decimals make it moot).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -144,7 +140,6 @@ FROM events
 )
 def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first_value along both directions of the user timeline."""
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     fwd = (
         Window.partitionBy("user_id")
@@ -180,7 +175,6 @@ def window_range_between(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame over a numeric ordering: peers within ±1000 of each
     order's price. (COUNT only — value-based frames + float measures would
     re-raise accumulation-order issues.)"""
-    ensure_session_conf(spark)
     o = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_orderstatus")
@@ -214,7 +208,6 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this beats a groupBy+collect_list+slice by never
     materializing per-group arrays.
     """
-    ensure_session_conf(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return ranked_topk_per(
@@ -252,7 +245,6 @@ def window_time_range_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on user_id, then a per-partition ordered scan with a sliding
     accumulator — no self-join range lookup per row.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     t_ms = F.unix_millis(F.col("ts").cast("timestamp"))
     w = (
@@ -294,7 +286,6 @@ def window_trailing_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoint average of two doubles is one `/ 2.0` written identically
     in both dialects (DuckDB's median lower/upper interpolation).
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -348,7 +339,6 @@ def window_share_of_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     share division is a correctly-rounded ratio of two deterministic
     doubles.
     """
-    ensure_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     rev = (

@@ -20,6 +20,12 @@ Each query is declared once, by ``@register`` on its function (a callable
 
 ``__spark_entry__.queries()`` / ``oracle_sql()`` read from here.
 
+``register`` pins the session conf: the callable it stores and returns in
+place of ``fn`` runs ``session.ensure_session_conf(spark)`` (UTC time zone,
+AQE, Python data-source filter pushdown) before the query body, so a query
+reached through ``queries()`` or called directly runs on a pinned session,
+whatever session the caller built.
+
 Determinism rules every registered query follows (the driver hash-compares
 values against DuckDB):
 
@@ -37,10 +43,13 @@ values against DuckDB):
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import ensure_session_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -91,7 +100,8 @@ def register(
     name: str, oracle: str | None = None, *, stream: StreamContract | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn`` under ``name`` with an optional oracle
-    and, for a query that starts a stream, its state contract."""
+    and, for a query that starts a stream, its state contract. Registers
+    and returns ``fn`` wrapped to pin the session conf first."""
     if stream is not None and not _is_contract(stream):
         raise ValueError(
             f"{name}: stream= must be 'stateless', 'flat' or "
@@ -101,12 +111,18 @@ def register(
     def deco(fn: QueryFn) -> QueryFn:
         if name in _QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        _QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_session_conf(spark)
+            return fn(spark, sf_dir)
+
+        _QUERIES[name] = pinned
         if oracle is not None:
             _ORACLES[name] = oracle
         if stream is not None:
             _STREAMS[name] = stream
-        return fn
+        return pinned
 
     return deco
 

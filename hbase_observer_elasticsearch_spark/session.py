@@ -78,8 +78,9 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
     """Pin runtime-mutable confs we rely on for oracle-exact results.
 
     The driver may hand us a session it built itself; session timezone and
-    AQE are runtime-settable SQLConf, so pin them here.  Called at the top
-    of every registered query.
+    AQE are runtime-settable SQLConf, so pin them here.  The registry calls
+    it before every registered query (``registry.register``), and
+    ``streaming.pipeline.scoped_session`` on each child session it makes.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -17,24 +17,24 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def action_line(
-    rowkey: Column, is_delete: Column, index: str, doc_type: str = "_doc"
-) -> Column:
-    """`{"update"|"delete": {"_index": ..., "_type": ..., "_id": ...}}`
-
-    The meta object goes through `to_json` so a rowkey containing `"` or
-    `\\` is JSON-escaped instead of corrupting the wire line (the doc line
-    was always safe via to_json; this makes the action line match)."""
-    meta = F.to_json(
+def _meta(rowkey: Column, index: str) -> Column:
+    """`{"_index": ..., "_type": "_doc", "_id": ...}`, through `to_json` so
+    a rowkey containing `"` or `\\` is JSON-escaped instead of corrupting
+    the wire line."""
+    return F.to_json(
         F.struct(
             F.lit(index).alias("_index"),
-            F.lit(doc_type).alias("_type"),
+            F.lit("_doc").alias("_type"),
             rowkey.alias("_id"),
         )
     )
+
+
+def action_line(rowkey: Column, is_delete: Column, index: str) -> Column:
+    """`{"update"|"delete": {"_index": ..., "_type": ..., "_id": ...}}`"""
     return F.concat(
         F.when(is_delete, F.lit('{"delete":')).otherwise(F.lit('{"update":')),
-        meta,
+        _meta(rowkey, index),
         F.lit("}"),
     )
 
@@ -49,21 +49,12 @@ def doc_line(doc: Column) -> Column:
     )
 
 
-def index_action_line(
-    rowkey: Column, index: str, doc_type: str = "_doc"
-) -> Column:
+def index_action_line(rowkey: Column, index: str) -> Column:
     """`{"index": {"_index": ..., "_type": ..., "_id": ...}}` — the
     full-document-replace action. Used where a flush fuses "delete then
     re-insert surviving cells" for one _id into a single commutative
     action (sinks/bulk_replay.py one-action-per-id rule)."""
-    meta = F.to_json(
-        F.struct(
-            F.lit(index).alias("_index"),
-            F.lit(doc_type).alias("_type"),
-            rowkey.alias("_id"),
-        )
-    )
-    return F.concat(F.lit('{"index":'), meta, F.lit("}"))
+    return F.concat(F.lit('{"index":'), _meta(rowkey, index), F.lit("}"))
 
 
 def index_doc_line(doc: Column) -> Column:
@@ -71,14 +62,12 @@ def index_doc_line(doc: Column) -> Column:
     return F.to_json(doc)
 
 
-def bulk_lines(
-    state: DataFrame, index: str, doc_type: str = "_doc"
-) -> DataFrame:
+def bulk_lines(state: DataFrame, index: str) -> DataFrame:
     """(rowkey, action_json, doc_json) for a (rowkey, doc) state frame —
     doc NULL or empty ⇒ a delete action with no doc line."""
     is_del = F.col("doc").isNull() | (F.size("doc") == 0)
     return state.select(
         "rowkey",
-        action_line(F.col("rowkey"), is_del, index, doc_type).alias("action_json"),
+        action_line(F.col("rowkey"), is_del, index).alias("action_json"),
         F.when(~is_del, doc_line(F.col("doc"))).alias("doc_json"),
     )

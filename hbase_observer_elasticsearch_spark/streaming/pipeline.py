@@ -187,97 +187,6 @@ def start_pipeline(
     )
 
 
-def streaming_latest_state(spark: SparkSession, changefeed_dir: str) -> DataFrame:
-    """Pure-streaming last-write-wins doc per key via dropDuplicates on a
-    watermark — the declarative alternative to the foreachBatch MERGE when
-    downstream only needs the latest full put per key within the watermark
-    horizon (append-mode friendly)."""
-    cf = read_feed(spark, changefeed_dir).withWatermark("ts", "1 hour")
-    # latest mutation per (rowkey, qualifier) in arrival order within the
-    # watermark: streaming dedup keeps the FIRST seen, so routing through
-    # max-ts requires update-mode agg:
-    return (
-        cf.filter(F.col("op") == "put")
-        .groupBy("rowkey", "qualifier")
-        .agg(F.max_by("value", F.struct("ts", "seq")).alias("value"))
-    )
-
-
-def streaming_dedup_within_watermark(
-    spark: SparkSession, changefeed_dir: str, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Duplicate-delivery suppression: drop redundant (rowkey, seq) redeliveries
-    arriving within the watermark horizon.
-
-    An at-least-once upstream (Kafka with producer retries, or the
-    reference's variant-C retry loop — SURVEY §2.1 #22) re-delivers
-    mutations; `dropDuplicatesWithinWatermark` suppresses them with state
-    bounded by the watermark (unlike plain `dropDuplicates`, whose state
-    grows forever on an unbounded stream).
-    """
-    cf = read_feed(spark, changefeed_dir).withWatermark("ts", watermark)
-    return cf.dropDuplicatesWithinWatermark(["rowkey", "seq"])
-
-
-def streaming_windowed_mutation_counts(
-    spark: SparkSession,
-    changefeed_dir: str,
-    window_duration: str = "1 minute",
-    watermark: str = "1 minute",
-) -> DataFrame:
-    """Watermarked tumbling-window mutation rates per op type.
-
-    The streaming analog of operators/time_windows.window_tumbling: late
-    events beyond the watermark are dropped (the reference has no notion
-    of event time at all — its only clock is the 30 s flush beeper,
-    observer6/ElasticSearchBulkOperator.java:61). Append output mode:
-    a window emits exactly once, when the watermark passes its end —
-    at scale this is the shape that keeps state bounded (state size =
-    open windows × op types, independent of throughput).
-    """
-    cf = read_feed(spark, changefeed_dir).withWatermark("ts", watermark)
-    return (
-        cf.groupBy(F.window("ts", window_duration), "op")
-        .agg(
-            F.count(F.lit(1)).alias("n_mutations"),
-            F.approx_count_distinct("rowkey").alias("n_keys_approx"),
-        )
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "op",
-            "n_mutations",
-            "n_keys_approx",
-        )
-    )
-
-
-def streaming_mutation_sessions(
-    spark: SparkSession,
-    changefeed_dir: str,
-    gap: str = "2 minutes",
-    watermark: str = "1 minute",
-) -> DataFrame:
-    """Session windows per rowkey: mutation bursts separated by ≥ `gap`.
-
-    Sessions are the merging-window stateful shape (a new event can extend
-    or fuse open sessions); the watermark closes a session once no event
-    can extend it, so state stays bounded by the number of open sessions.
-    Batch twin: operators/time_windows.window_session.
-    """
-    cf = read_feed(spark, changefeed_dir).withWatermark("ts", watermark)
-    return (
-        cf.groupBy(F.session_window("ts", gap), "rowkey")
-        .agg(F.count(F.lit(1)).alias("n_mutations"))
-        .select(
-            F.col("session_window.start").alias("sess_start"),
-            F.col("session_window.end").alias("sess_end"),
-            "rowkey",
-            "n_mutations",
-        )
-    )
-
-
 def streaming_enrich_with_dim(
     spark: SparkSession, changefeed_dir: str, dim: DataFrame, on: str = "rowkey"
 ) -> DataFrame:

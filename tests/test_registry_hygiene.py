@@ -16,6 +16,9 @@ Invariants:
 5. No package code outside ``functions/ranking.py`` filters a
    ``row_number()`` rank to ``<= K`` or ``== 1`` (``apply_changefeed``
    excepted: the independent LWW reference) or range-partitions.
+6. No module under ``operators/`` calls or imports
+   ``ensure_session_conf``: ``register`` pins the session conf for every
+   query, so the policy lives in the registry alone.
 
 Whether a declared contract matches what the query does (it starts a
 stream when it runs, and no undeclared query does) is checked per query
@@ -192,3 +195,45 @@ def test_range_partitioning_goes_through_ranking_module():
     calls = _calls_outside_ranking({"spark_partition_id", "repartitionByRange"})
     found = [f"{rel}:{line} {name}" for rel, line, name, _ in calls]
     assert not found, f"range partitioning outside functions/ranking.py: {found}"
+
+
+_PINNED_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.python.filterPushdown.enabled": "true",
+}
+
+
+def test_operators_never_pin_the_session_conf():
+    found = []
+    for fname in sorted(os.listdir(os.path.join(PKG, "operators"))):
+        if not fname.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(PKG, "operators", fname)).read())
+        for n in ast.walk(tree):
+            names = (
+                [a.name for a in n.names]
+                if isinstance(n, (ast.Import, ast.ImportFrom))
+                else [getattr(n, "id", None), getattr(n, "attr", None)]
+            )
+            if "ensure_session_conf" in names:
+                found.append(f"operators/{fname}:{n.lineno}")
+    assert not found, f"operators pin the session conf themselves: {found}"
+
+
+def test_registered_query_pins_a_handed_session(spark, sf_dir):
+    """A session handed over with other values for the pinned confs is
+    pinned by the call, through ``queries()`` and through the module
+    attribute alike."""
+    from hbase_observer_elasticsearch_spark.operators import cdc
+
+    fn = queries()["cdc_last_state"]
+    assert fn is cdc.cdc_last_state
+    assert (fn.__module__, fn.__name__) == (cdc.__name__, "cdc_last_state")
+    for call in (fn, cdc.cdc_last_state):
+        s = spark.newSession()
+        s.conf.set("spark.sql.session.timeZone", "America/New_York")
+        s.conf.set("spark.sql.adaptive.enabled", "false")
+        s.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+        call(s, sf_dir)
+        assert {k: s.conf.get(k) for k in _PINNED_CONF} == _PINNED_CONF

@@ -150,34 +150,6 @@ def test_stream_parity_any_file_split(spark, tmp_path):
         assert got == EXPECTED_STATE, f"n_files={n_files}: {got}"
 
 
-def test_streaming_latest_state_query(spark, tmp_path):
-    """The declarative streaming LWW aggregation drains to the same
-    per-qualifier latest values as the batch replay."""
-    from hbase_observer_elasticsearch_spark.streaming.pipeline import (
-        streaming_latest_state,
-    )
-
-    cf_dir = str(tmp_path / "cf")
-    write_changefeed_stream_dir(fixture_changefeed(spark), cf_dir, n_files=2)
-    q = (
-        streaming_latest_state(spark, cf_dir)
-        .writeStream.format("memory")
-        .queryName("lww")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["rowkey"], r["qualifier"]): r["value"]
-        for r in spark.sql("SELECT * FROM lww").collect()
-    }
-    # latest put per (rowkey, qualifier) — deletes are not modeled here
-    assert got[("r1", "c1")] == "v1b"
-    assert got[("r4", "c1")] == "winner"
-    assert got[("r2", "c1")] == "new"
-
-
 def test_stateful_lww_applyinpandaswithstate(spark, tmp_path):
     """applyInPandasWithState doc assembly: final emitted doc per key equals
     the batch-replay golden state; deleted keys emit an empty doc."""
@@ -209,134 +181,6 @@ def test_stateful_lww_applyinpandaswithstate(spark, tmp_path):
     got = {r["rowkey"]: json.loads(r["doc_json"]) for r in rows}
     assert {k: v for k, v in got.items() if v} == EXPECTED_STATE
     assert got["r5"] == {}  # tombstoned key emits the delete marker
-
-
-def test_streaming_windowed_counts_late_drop(spark, tmp_path):
-    """Watermarked tumbling-window agg: windows emit once (append mode)
-    when the watermark passes, and a row later than the watermark is
-    dropped rather than re-opening its window."""
-    from hbase_observer_elasticsearch_spark.sources.changefeed import (
-        CHANGEFEED_SCHEMA,
-    )
-    from hbase_observer_elasticsearch_spark.streaming.pipeline import (
-        streaming_windowed_mutation_counts,
-    )
-
-    cf_dir = tmp_path / "wcf"
-
-    def row(seq, minute, sec):
-        return (seq, "put", f"r{seq}", "info", "c", "v", _ts(minute, sec))
-
-    spark.createDataFrame(
-        [row(1, 0, 10), row(2, 0, 20), row(3, 5, 0)], CHANGEFEED_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(str(cf_dir))
-
-    q = (
-        streaming_windowed_mutation_counts(spark, str(cf_dir))
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # seq 4 is 3.5 min late (watermark sits at 4:00 after batch 1) →
-        # dropped; seq 5 advances the watermark so window [5:00,6:00) emits
-        spark.createDataFrame(
-            [row(4, 0, 30), row(5, 8, 0)], CHANGEFEED_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(cf_dir))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (r["win_start"].minute, r["op"]): r["n_mutations"]
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    assert got[(0, "put")] == 2  # late seq-4 row NOT counted
-    assert got[(5, "put")] == 1
-
-
-def test_streaming_session_windows_merge(spark, tmp_path):
-    """Bursts within the gap fuse into one session; a ≥gap pause splits."""
-    from hbase_observer_elasticsearch_spark.sources.changefeed import (
-        CHANGEFEED_SCHEMA,
-    )
-    from hbase_observer_elasticsearch_spark.streaming.pipeline import (
-        streaming_mutation_sessions,
-    )
-
-    cf_dir = tmp_path / "scf"
-
-    def row(seq, minute, sec=0):
-        return (seq, "put", "r1", "info", "c", "v", _ts(minute, sec))
-
-    # burst at 0:00-0:30 (3 events), pause > 2 min, burst at 5:00; a late
-    # closer row at minute 20 pushes the watermark past both sessions
-    spark.createDataFrame(
-        [row(1, 0, 0), row(2, 0, 30), row(3, 1, 0), row(4, 5, 0), row(5, 20, 0)],
-        CHANGEFEED_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(str(cf_dir))
-
-    q = (
-        streaming_mutation_sessions(spark, str(cf_dir))
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (r["sess_start"].minute, r["n_mutations"])
-        for r in spark.sql("SELECT * FROM sessions WHERE rowkey='r1'").collect()
-    }
-    assert (0, 3) in got  # three events fused into one session
-    assert (5, 1) in got  # separated burst is its own session
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Redelivered (rowkey, seq) mutations inside the watermark are
-    suppressed; distinct seqs all pass."""
-    from hbase_observer_elasticsearch_spark.sources.changefeed import (
-        CHANGEFEED_SCHEMA,
-    )
-    from hbase_observer_elasticsearch_spark.streaming.pipeline import (
-        streaming_dedup_within_watermark,
-    )
-
-    cf_dir = tmp_path / "dcf"
-
-    def row(seq, minute):
-        return (seq, "put", "r1", "info", "c", f"v{seq}", _ts(minute))
-
-    # seq 1 delivered three times (same batch and a later batch), seq 2 once
-    spark.createDataFrame(
-        [row(1, 0), row(1, 0), row(2, 1)], CHANGEFEED_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(str(cf_dir))
-
-    q = (
-        streaming_dedup_within_watermark(spark, str(cf_dir))
-        .writeStream.format("memory")
-        .queryName("dedup_wm")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(
-            [row(1, 2)], CHANGEFEED_SCHEMA  # redelivery, still in horizon
-        ).coalesce(1).write.mode("append").parquet(str(cf_dir))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = spark.sql("SELECT seq, COUNT(*) n FROM dedup_wm GROUP BY seq").collect()
-    got = {r["seq"]: r["n"] for r in rows}
-    assert got == {1: 1, 2: 1}
 
 
 def test_cdc_replicator_facade(spark, tmp_path):
