@@ -1227,20 +1227,24 @@ SELECT rowkey, qualifier, CAST(MAX(seq) AS BIGINT) AS last_seq
 FROM live
 GROUP BY rowkey, qualifier
 """,
+    # foreachBatch posts to the endpoint; no stateful operator
+    stream="stateless",
 )
 def sink_bulk_failure_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ES sink's FAILURE modes, end-to-end, converging to the clean
-    final state. The events changefeed is
-    flushed as 3 seq-range epoch bulks through a fault-injecting `_bulk`
-    endpoint that delivers the reference's three distinguishing failure
-    behaviors: per-item 429 rejections on first delivery (retried, the
-    variant-C semantics — README_zh.md:305-312; variants A/B drop them,
-    observer6/ElasticSearchBulkOperator.java:85-90, which is exactly the
-    data loss this design rejects), one connection-refused transport
-    fault (whole-bulk requeue, :91-98), and one LOST RESPONSE — the bulk
-    applies server-side but the client must blind-replay it. The retry
-    client (sinks/bulk_replay.post_bulk_with_retry) converges because
-    every epoch body follows the one-action-per-_id rule: "delete then
+    final state. The replicator drains the events changefeed, laid out
+    as 3 seq-ordered files, in 3 micro-batches into the `_bulk` sink
+    (sinks/bulk_replay.EsBulkSink), which posts each epoch to a
+    fault-injecting endpoint that delivers the reference's three
+    distinguishing failure behaviors: per-item 429 rejections on first
+    delivery (retried, the variant-C semantics — README_zh.md:305-312;
+    variants A/B drop them, observer6/ElasticSearchBulkOperator.java:85-90,
+    which is exactly the data loss this design rejects), one
+    connection-refused transport fault (whole-bulk requeue, :91-98), and
+    one LOST RESPONSE in epoch 1 — the bulk applies server-side but the
+    client must blind-replay it. The retry client
+    (sinks/bulk_replay.post_bulk_with_retry) converges because every
+    epoch body follows the one-action-per-_id rule: "delete then
     surviving puts" for a key is FUSED into one full-document `index`
     action, so items commute and replays are absorbed.
 
@@ -1252,19 +1256,23 @@ def sink_bulk_failure_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-format-free and uniquely identifies the winner, the
     sink_merge_idempotent_epochs convention.
 
-    Scale shape: each epoch compaction is one seq-range-pruned scan +
-    one hash shuffle on rowkey; the driver-side collect ships only the
-    compacted NDJSON lines (O(live keys), not O(mutations)) because
+    Scale shape: each epoch compaction is one hash shuffle on rowkey
+    inside the stream's foreachBatch; the driver-side collect ships only
+    the compacted NDJSON lines (O(live keys), not O(mutations)) because
     this sandbox's endpoint lives in driver memory — a cluster
     deployment POSTs per partition inside foreachPartition with the
     same retry loop, state never centralizing.
     """
-    from ..sinks.bulk_replay import (
-        FaultInjectingBulkEndpoint,
-        epoch_bulk_lines,
-        post_bulk_with_retry,
+    import functools
+    import os
+    import shutil
+
+    from ..replicator import CdcReplicator
+    from ..sinks.bulk_replay import EsBulkSink, FaultInjectingBulkEndpoint
+    from ..sources.changefeed import (
+        events_as_changefeed,
+        write_changefeed_stream_dir,
     )
-    from ..sources.changefeed import events_as_changefeed
 
     # doc values carry the winning put's seq; application order for this
     # feed is seq order (arrival order): with one constant ts and no
@@ -1277,13 +1285,6 @@ def sink_bulk_failure_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("seq").cast("string").alias("value"),
         F.timestamp_seconds(F.lit(0)).alias("ts"),
     )
-    lo, hi = cf.agg(F.min("seq"), F.max("seq")).first()
-    n_epochs = 3
-    span = (hi - lo + n_epochs) // n_epochs
-    ranges = [
-        (lo + i * span, min(lo + (i + 1) * span - 1, hi))
-        for i in range(n_epochs)
-    ]
 
     # fault schedule (deterministic): the FIRST post is connection-
     # refused before applying; epoch 1's first successful-apply post
@@ -1292,27 +1293,37 @@ def sink_bulk_failure_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoint = FaultInjectingBulkEndpoint(
         item_fail_mod=4, drop_request_before=frozenset({0})
     )
-    n_keys = 0
-    for i, (e_lo, e_hi) in enumerate(ranges):
-        ep = cf.filter((F.col("seq") >= e_lo) & (F.col("seq") <= e_hi))
-        lines = epoch_bulk_lines(ep)
-        if i == 1:
-            endpoint.arm_drop_response_next()
-        post_bulk_with_retry(endpoint, lines)
-        n_keys = max(n_keys, len(lines))
+
+    class FaultScheduledSink(EsBulkSink):
+        def apply(self, cells, dels, epoch_id=None):
+            if epoch_id == 1:
+                self.endpoint.arm_drop_response_next()
+            super().apply(cells, dels, epoch_id)
+
+    base = _scratch("bulk_replay_")
+    try:
+        cf_dir = os.path.join(base, "cf")
+        write_changefeed_stream_dir(cf, cf_dir, n_files=3)
+        rep = CdcReplicator(
+            spark, cf_dir, os.path.join(base, "state"), os.path.join(base, "ckpt")
+        )
+        rep.start(
+            sink_cls=functools.partial(FaultScheduledSink, endpoint=endpoint),
+            trigger={"availableNow": True},
+        )
+        rep.await_drained(timeout_s=300)
+        rep.stop()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
     # loud failure if the injection machinery silently did nothing
     if endpoint.n_transport_faults != 2:
         raise RuntimeError(
             f"expected 2 injected transport faults, saw {endpoint.n_transport_faults}"
         )
-    if n_keys >= 40 and endpoint.n_item_rejections == 0:
-        raise RuntimeError(f"no item rejections injected over {n_keys} bulk lines")
+    n_docs = len(endpoint.docs)
+    if n_docs >= 10 and endpoint.n_item_rejections == 0:
+        raise RuntimeError(f"no item rejections injected over {n_docs} documents")
 
-    out_rows = [
-        (rowkey, qual, int(seq_str))
-        for rowkey, doc in endpoint.docs.items()
-        for qual, seq_str in doc.items()
-    ]
-    return spark.createDataFrame(
-        out_rows, "rowkey string, qualifier string, last_seq bigint"
-    )
+    return rep.state().select(
+        "rowkey", F.explode("doc").alias("qualifier", "last_seq")
+    ).withColumn("last_seq", F.col("last_seq").cast("bigint"))

@@ -14,6 +14,13 @@ and reading `.state()` instead of querying ES — same document shape
 (`{qualifier: value}` per rowkey, optional "info" envelope at the query
 layer), strictly better delivery semantics (checkpointed exactly-once end
 state vs the reference's at-most-once buffer).
+
+`start(sink_cls=...)` picks what each epoch is written to; both sinks take
+`apply(cells, dels, epoch_id)` from the same foreachBatch stream:
+
+    rep.start()  # EmulatedEsSink: parquet runs + manifest
+    rep.start(sink_cls=functools.partial(EsBulkSink, endpoint=endpoint))
+                 # sinks/bulk_replay.EsBulkSink: one `_bulk` POST per epoch
 """
 
 from __future__ import annotations
@@ -46,7 +53,8 @@ class CdcReplicator:
         """Begin replication. kwargs pass through to start_pipeline
         (`trigger={"availableNow": True}` drains-and-stops for tests;
         default is the reference-parity 30 s processing-time trigger).
-        `sink_cls` builds the sink (EmulatedEsSink or a subclass); the
+        `sink_cls` builds the sink (EmulatedEsSink, or a callable with its
+        constructor such as a `functools.partial` of EsBulkSink); the
         constructed sink is kept so `state()` / `cells()` read through the
         object this replicator actually writes."""
         if self._query is not None:

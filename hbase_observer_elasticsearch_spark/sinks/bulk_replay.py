@@ -19,12 +19,19 @@ module reproduces and *proves convergent*:
   a bulk is ALGEBRAICALLY ABSORBED — the same property that makes the
   foreachBatch epoch replay idempotent in sinks/state_sink.py.
 
+``EsBulkSink`` is the `_bulk` implementer of the sink write contract
+``apply(cells, dels, epoch_id)``: the replicator's stream
+(streaming.pipeline.start_pipeline, one foreachBatch call per epoch)
+hands it each epoch's raw puts and deletes, and it posts them as one
+body through the retry client. A checkpoint replay of an epoch posts it
+again, which the body's upserts and deletes absorb.
+
 ``FaultInjectingBulkEndpoint`` is the same in-memory document store the
 wire-format test drives over real HTTP (tests/test_es_bulk_endpoint.py),
 plus deterministic fault hooks. Determinism matters: the registered
-query ``sink_bulk_failure_replay`` (operators/cdc.py) runs this under
-the DuckDB oracle gate, so the injected faults must be a pure function
-of the data, never of wall-clock or randomness.
+query ``sink_bulk_failure_replay`` (operators/cdc.py) drains the
+replicator into it under the DuckDB oracle gate, so the injected faults
+must be a pure function of the data, never of wall-clock or randomness.
 
 ONE-ACTION-PER-ID RULE. Per-item retry is only order-safe if no two
 actions in a body touch the same _id (a retried delete landing after a
@@ -42,6 +49,12 @@ from __future__ import annotations
 
 import hashlib
 import json
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .bulk_format import action_line, doc_line, index_action_line, index_doc_line
+from .state_sink import EsSinkConfig, _epoch_rows, _lww
 
 
 def _stable_bucket(key: str, mod: int) -> int:
@@ -200,36 +213,30 @@ def post_bulk_with_retry(
     return stats
 
 
-def epoch_bulk_lines(ep, index: str = "docs") -> list[str]:
+def epoch_bulk_lines(
+    cells: DataFrame, dels: DataFrame, index: str = "docs"
+) -> list[str]:
     """Compact one epoch of changefeed mutations into NDJSON bulk lines
     obeying the one-action-per-_id rule.
 
-    The epoch is reduced by the sink's last-writer-wins merge
-    (state_sink._lww over split_epoch's halves): per rowkey, the latest
-    delete and the winning put per qualifier among the puts after it.
-    Then per rowkey: a delete and no surviving cells emits one `delete`;
-    a delete and cells FUSE into one full-doc `index`; cells alone emit
-    one partial-doc `update` (doc_as_upsert). The returned list is
-    rowkey-ordered for deterministic bodies.
+    The input is the sink MERGE's: ``cells`` the epoch's puts and
+    ``dels`` the (rowkey, ts, seq) of its deletes, as
+    streaming.pipeline.split_epoch returns them. They are reduced by the
+    sink's last-writer-wins merge (state_sink._lww): per rowkey, the
+    latest delete and the winning put per qualifier among the puts after
+    it. Then per rowkey: a delete and no surviving cells emits one
+    `delete`; a delete and cells FUSE into one full-doc `index`; cells
+    alone emit one partial-doc `update` (doc_as_upsert). The returned
+    list is rowkey-ordered for deterministic bodies.
 
-    Driver-side collect is bounded by live keys (post-compaction), not
-    mutations; a cluster deployment runs the identical plan and POSTs
-    per partition instead of collecting.
+    ``EsBulkSink.apply`` calls it once per epoch, inside the stream's
+    foreachBatch. The driver-side collect is bounded by live keys
+    (post-compaction), not mutations; a cluster deployment runs the
+    identical plan and POSTs per partition instead of collecting.
     """
-    from pyspark.sql import functions as F
-
-    from ..streaming.pipeline import split_epoch
-    from .bulk_format import (
-        action_line,
-        doc_line,
-        index_action_line,
-        index_doc_line,
-    )
-    from .state_sink import _epoch_rows, _lww
-
     is_cell = F.col("qualifier").isNotNull()
     keys = (
-        _lww(_epoch_rows(*split_epoch(ep)), False)
+        _lww(_epoch_rows(cells, dels), False)
         .groupBy("rowkey")
         .agg(
             F.bool_or(~is_cell).alias("has_del"),
@@ -265,3 +272,46 @@ def epoch_bulk_lines(ep, index: str = "docs") -> list[str]:
         if r["d"] is not None:
             lines.append(r["d"])
     return lines
+
+
+class EsBulkSink:
+    """The `_bulk` sink: each epoch posted to ``endpoint`` as one
+    one-action-per-_id body (``epoch_bulk_lines``) through
+    ``post_bulk_with_retry``.
+
+    It has EmulatedEsSink's constructor and ``apply`` contract, so
+    ``CdcReplicator.start(sink_cls=functools.partial(EsBulkSink,
+    endpoint=...))`` drains a changefeed into it. ``root`` is unused:
+    the documents live in the endpoint. ``stats`` sums the retry
+    client's counters over every apply. There is no ``read_cells``: an
+    ES index keeps no tombstones.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        config: EsSinkConfig | None = None,
+        *,
+        endpoint,
+    ):
+        self.spark = spark
+        self.config = config or EsSinkConfig()
+        self.endpoint = endpoint
+        self.stats = {"posts": 0, "transport_retries": 0, "item_retries": 0}
+
+    def apply(
+        self, cells: DataFrame, dels: DataFrame, epoch_id: int | None = None
+    ) -> None:
+        """Post one epoch. A replayed ``epoch_id`` is posted again: the
+        body's upserts and deletes absorb a second delivery."""
+        lines = epoch_bulk_lines(cells, dels, self.config.es_index)
+        for k, n in post_bulk_with_retry(self.endpoint, lines).items():
+            self.stats[k] += n
+
+    def read_state(self) -> DataFrame:
+        """(rowkey, doc MAP<STRING,STRING>): the endpoint's documents."""
+        return self.spark.createDataFrame(
+            sorted(self.endpoint.docs.items()),
+            "rowkey string, doc map<string,string>",
+        )

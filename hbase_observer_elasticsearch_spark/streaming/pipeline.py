@@ -166,7 +166,8 @@ def start_pipeline(
     """Start the CDC replication stream: changefeed dir → ``sink``.
 
     ``sink`` is any state sink with ``apply(cells, dels, epoch_id)``
-    (EmulatedEsSink appends a run per epoch and folds runs into a base);
+    (EmulatedEsSink appends a run per epoch and folds runs into a base;
+    sinks/bulk_replay.EsBulkSink posts the epoch as one `_bulk` body);
     CdcReplicator builds it and reads state back through the same object.
     `trigger` defaults to the reference's 30 s flush period; pass
     ``{"availableNow": True}`` to drain the backlog and stop.

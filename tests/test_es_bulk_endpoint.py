@@ -111,7 +111,7 @@ def _serve(store: _FakeEsBulk) -> ThreadingHTTPServer:
 
 def _epoch_bulk_body(epoch_df, index: str) -> str:
     """One bulk POST body for an epoch: one action per touched rowkey."""
-    return "\n".join(epoch_bulk_lines(epoch_df, index)) + "\n"
+    return "\n".join(epoch_bulk_lines(*split_epoch(epoch_df), index)) + "\n"
 
 
 def test_bulk_wire_roundtrip_matches_emulated_sink(spark, tmp_path):

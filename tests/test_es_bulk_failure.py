@@ -11,10 +11,16 @@ Wire realism: the faulty server genuinely closes the TCP connection
 without a response (http.client.RemoteDisconnected on the client), not
 a simulated exception; per-item failures come back as a real
 `"errors": true` bulk response body.
+
+The streaming tests drain the fixture changefeed through
+`CdcReplicator.start(sink_cls=...)` into `EsBulkSink`, the `_bulk`
+implementer of the sink `apply` contract, so each epoch is posted from
+inside the replicator's own foreachBatch stream.
 """
 
 from __future__ import annotations
 
+import functools
 import http.client
 import json
 import threading
@@ -23,10 +29,13 @@ import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from hbase_observer_elasticsearch_spark.replicator import CdcReplicator
 from hbase_observer_elasticsearch_spark.sinks.bulk_replay import (
     BulkTransportError,
+    EsBulkSink,
     FaultInjectingBulkEndpoint,
     _stable_bucket,
     epoch_bulk_lines,
@@ -35,7 +44,9 @@ from hbase_observer_elasticsearch_spark.sinks.bulk_replay import (
 from hbase_observer_elasticsearch_spark.sources.changefeed import (
     EXPECTED_STATE,
     fixture_changefeed,
+    write_changefeed_stream_dir,
 )
+from hbase_observer_elasticsearch_spark.streaming.pipeline import split_epoch
 
 
 def _serve(endpoint: FaultInjectingBulkEndpoint) -> ThreadingHTTPServer:
@@ -94,7 +105,7 @@ class HttpBulkEndpoint:
 def test_bulk_failure_replay_converges_to_clean_state(spark):
     cf = fixture_changefeed(spark)
     epochs = [cf.filter(F.col("seq") <= 2), cf.filter(F.col("seq") > 2)]
-    bodies = [epoch_bulk_lines(ep) for ep in epochs]
+    bodies = [epoch_bulk_lines(*split_epoch(ep)) for ep in epochs]
 
     # clean run: no faults
     clean = FaultInjectingBulkEndpoint()
@@ -144,7 +155,7 @@ def test_per_item_retry_is_order_safe_for_fused_bodies(spark):
     that action cannot resurrect pre-delete state or wipe the reinsert
     (a delete+update pair would, if only the delete 429'd)."""
     cf = fixture_changefeed(spark)
-    lines = epoch_bulk_lines(cf)  # whole feed as one bulk
+    lines = epoch_bulk_lines(*split_epoch(cf))  # whole feed as one bulk
     acts = [json.loads(ln) for ln in lines]
     ids_seen = []
     for a in acts:
@@ -167,56 +178,94 @@ def test_per_item_retry_is_order_safe_for_fused_bodies(spark):
     assert stats["item_retries"] == len(ids_seen)
 
 
+def _fixture_feed(spark, tmp_path) -> None:
+    """The fixture changefeed as a 3-file stream dir at tmp_path/cf:
+    epochs 0, 1 and 2 hold seq 1-5, 6-10 and 11-14, so epoch 1 carries
+    r2's delete and reinsert (one fused `index` action)."""
+    write_changefeed_stream_dir(
+        fixture_changefeed(spark), str(tmp_path / "cf"), n_files=3
+    )
+
+
+def _replicate(spark, tmp_path, sink_cls, endpoint) -> None:
+    """Drain the fixture feed at tmp_path/cf into ``sink_cls`` through
+    the replicator, on the checkpoint at tmp_path/ckpt."""
+    rep = CdcReplicator(
+        spark,
+        str(tmp_path / "cf"),
+        str(tmp_path / "state"),
+        str(tmp_path / "ckpt"),
+    )
+    rep.start(
+        sink_cls=functools.partial(sink_cls, endpoint=endpoint),
+        trigger={"availableNow": True},
+    )
+    try:
+        rep.await_drained()
+    finally:
+        rep.stop()
+
+
 def test_streaming_foreachbatch_drain_through_faulty_endpoint(
     spark, tmp_path
 ):
-    """End-to-end STREAMING fidelity: a real Structured Streaming query
-    drains the fixture changefeed in micro-batches, each epoch flushed
-    to the fault-injecting `_bulk` endpoint from inside foreachBatch —
-    the reference's actual shape (postPut/postDelete buffer → bulk
-    flush) with its actual failure modes live in the loop: the first
-    POST is connection-refused, one mid-stream POST applies fully but
-    loses its response (blind whole-bulk replay inside the SAME
-    foreachBatch call), and half the _ids 429 on first delivery. The
-    endpoint's final state must equal the golden LWW state — streaming,
-    faults, retries and all."""
-    from hbase_observer_elasticsearch_spark.sources.changefeed import (
-        CHANGEFEED_SCHEMA,
-        write_changefeed_stream_dir,
-    )
-
-    cf_dir = str(tmp_path / "cf")
-    ckpt = str(tmp_path / "ckpt")
-    write_changefeed_stream_dir(fixture_changefeed(spark), cf_dir, n_files=3)
-
+    """End-to-end STREAMING fidelity: the replicator's Structured
+    Streaming query drains the fixture changefeed in micro-batches, each
+    epoch posted to the fault-injecting `_bulk` endpoint by EsBulkSink
+    from inside foreachBatch — the reference's actual shape
+    (postPut/postDelete buffer → bulk flush) with its actual failure
+    modes live in the loop: the first POST is connection-refused, one
+    mid-stream POST applies fully but loses its response (blind
+    whole-bulk replay inside the SAME foreachBatch call), and half the
+    _ids 429 on first delivery. The endpoint's final state must equal
+    the golden LWW state — streaming, faults, retries and all."""
+    _fixture_feed(spark, tmp_path)
     endpoint = FaultInjectingBulkEndpoint(
         item_fail_mod=2, drop_request_before=frozenset({0})
     )
-    armed = {"done": False}
 
-    def flush(batch_df, epoch_id):
-        lines = epoch_bulk_lines(batch_df)
-        if not lines:
-            return
-        if not armed["done"] and endpoint.n_posts >= 1:
-            endpoint.arm_drop_response_next()  # mid-stream lost response
-            armed["done"] = True
-        post_bulk_with_retry(endpoint, lines)
+    class MidStreamLostResponse(EsBulkSink):
+        armed = False
 
-    q = (
-        spark.readStream.schema(CHANGEFEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(cf_dir)
-        .writeStream.foreachBatch(flush)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+        def apply(self, cells, dels, epoch_id=None):
+            if not self.armed and self.endpoint.n_posts >= 1:
+                self.endpoint.arm_drop_response_next()
+                self.armed = True
+            super().apply(cells, dels, epoch_id)
+
+    _replicate(spark, tmp_path, MidStreamLostResponse, endpoint)
 
     assert endpoint.docs == EXPECTED_STATE
     assert endpoint.n_transport_faults == 2
     assert endpoint.n_item_rejections >= 1
+
+
+def test_crash_after_post_replays_the_epoch_on_restart(spark, tmp_path):
+    """A crash after epoch 1's bulk is applied but before Spark commits
+    that batch: the restarted replicator, on the same checkpoint, runs
+    epoch 1 again with the same id and the sink posts it again. The
+    one-action-per-_id body absorbs the redelivery, so the endpoint
+    ends in the golden state."""
+    _fixture_feed(spark, tmp_path)
+    endpoint = FaultInjectingBulkEndpoint()
+    posted = []
+
+    class CrashOnceAfterEpoch1(EsBulkSink):
+        def apply(self, cells, dels, epoch_id=None):
+            super().apply(cells, dels, epoch_id)
+            posted.append((epoch_id, self.stats["posts"]))
+            if epoch_id == 1 and len(posted) == 2:
+                raise RuntimeError("crash after posting epoch 1")
+
+    with pytest.raises(StreamingQueryException, match="crash after posting"):
+        _replicate(spark, tmp_path, CrashOnceAfterEpoch1, endpoint)
+    assert posted == [(0, 1), (1, 2)] and endpoint.n_posts == 2
+
+    _replicate(spark, tmp_path, CrashOnceAfterEpoch1, endpoint)
+    # the restarted sink posted epoch 1 again, then epoch 2
+    assert posted[2:] == [(1, 1), (2, 2)]
+    assert endpoint.n_posts == 4
+    assert endpoint.docs == EXPECTED_STATE
 
 
 def test_endpoint_rejects_update_without_doc_as_upsert():
@@ -242,4 +291,20 @@ def test_failure_replay_raises_when_a_fault_is_not_injected(
         FaultInjectingBulkEndpoint, "arm_drop_response_next", lambda self: None
     )
     with pytest.raises(RuntimeError, match="transport faults"):
+        sink_bulk_failure_replay(spark, sf_dir)
+
+
+def test_failure_replay_raises_when_no_item_is_rejected(
+    spark, sf_dir, monkeypatch
+):
+    """sink_bulk_failure_replay checks its per-item faults ran: with
+    every 429 disarmed it raises."""
+    from hbase_observer_elasticsearch_spark.operators.cdc import (
+        sink_bulk_failure_replay,
+    )
+
+    monkeypatch.setattr(
+        FaultInjectingBulkEndpoint, "_item_should_fail", lambda self, _id: False
+    )
+    with pytest.raises(RuntimeError, match="no item rejections"):
         sink_bulk_failure_replay(spark, sf_dir)

@@ -1,5 +1,5 @@
-"""r11 operator tests: real BMP/WAV container decode, the fuzzy~1 term
-query, and the replicate-then-query demo."""
+"""Operator tests: real BMP/WAV container decode, the fuzzy~1 term
+query, and the codebook-law parity with DuckDB."""
 
 from __future__ import annotations
 
@@ -101,91 +101,6 @@ class TestFuzzyTerm:
         assert all(r["fz_score"] > 0 for r in rows)
         # ranking is dense and deterministic
         assert [r["rk"] for r in rows] == list(range(1, len(rows) + 1))
-
-
-class TestReplicateThenQuery:
-    def test_matches_batch_replay(self, spark, sf_dir):
-        import pyspark.sql.functions as F
-
-        from hbase_observer_elasticsearch_spark.operators.cdc import (
-            cdc_replicate_then_query,
-        )
-
-        got = {
-            r["n_fields"]: (r["n_docs"], float(r["sum_purchase"]))
-            for r in cdc_replicate_then_query(spark, sf_dir).collect()
-        }
-        assert got, "no docs with a live purchase field"
-        # batch replay of the same LWW semantics directly on events
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        cf = ev.select(
-            F.col("event_id").alias("seq"),
-            F.when(F.col("event_type") == "error", "delete")
-            .otherwise("put")
-            .alias("op"),
-            F.col("user_id").cast("string").alias("rowkey"),
-            F.when(
-                F.col("event_type") != "error", F.col("event_type")
-            ).alias("qualifier"),
-            F.when(F.col("event_type") != "error", F.col("value")).alias(
-                "value"
-            ),
-            "ts",
-        )
-        from pyspark.sql import Window
-
-        lastdel = (
-            cf.filter("op = 'delete'")
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("rowkey").orderBy(
-                        F.desc("ts"), F.desc("seq")
-                    )
-                ),
-            )
-            .filter("rn = 1")
-            .select("rowkey", F.col("ts").alias("dts"), F.col("seq").alias("dseq"))
-        )
-        live = (
-            cf.filter("op = 'put'")
-            .join(lastdel, "rowkey", "left")
-            .filter(
-                F.col("dts").isNull()
-                | (F.struct("ts", "seq") > F.struct("dts", "dseq"))
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("rowkey", "qualifier").orderBy(
-                        F.desc("ts"), F.desc("seq")
-                    )
-                ),
-            )
-            .filter("rn = 1")
-        )
-        docs = live.groupBy("rowkey").agg(
-            F.count(F.lit(1)).alias("n_fields"),
-            F.max(
-                F.when(F.col("qualifier") == "purchase", F.col("value"))
-            ).alias("purchase"),
-        )
-        want = {
-            r["n_fields"]: (r["n_docs"], float(r["sum_purchase"]))
-            for r in docs.filter("purchase IS NOT NULL")
-            .groupBy("n_fields")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.col("purchase").cast("decimal(28,6)"))
-                .cast("double")
-                .alias("sum_purchase"),
-            )
-            .collect()
-        }
-        assert set(got) == set(want)
-        for k in want:
-            assert got[k][0] == want[k][0]
-            assert got[k][1] == pytest.approx(want[k][1], abs=1e-6)
 
 
 class TestCodebookLawParity:

@@ -1,19 +1,14 @@
-"""Operator invariants: HBase TTL+VERSIONS compaction
-classification, Apriori triple support/lift arithmetic, permutation-test
-degeneracy under the null, exact funnel-step percentiles, and DiD
-recovering a planted uplift with a zero placebo."""
+"""Operator invariants: Apriori triple support/lift arithmetic,
+permutation-test degeneracy under the null, exact funnel-step
+percentiles, and DiD recovering a planted uplift with a zero placebo."""
 
 from __future__ import annotations
 
 import datetime
 
-import hbase_observer_elasticsearch_spark.operators.cdc as cdc
 import hbase_observer_elasticsearch_spark.operators.relational as rel
 import hbase_observer_elasticsearch_spark.operators.sampling as sa
 import hbase_observer_elasticsearch_spark.operators.time_windows as tw
-from hbase_observer_elasticsearch_spark.operators.cdc import (
-    cdc_version_gc_policy,
-)
 from hbase_observer_elasticsearch_spark.operators.relational import (
     basket_apriori_triples,
 )
@@ -34,29 +29,6 @@ EVENTS_SCHEMA = (
 
 def _ev(eid, ts, uid=1, etype="click", value=10.0):
     return (eid, ts, uid, etype, value, "{}")
-
-
-def test_version_gc_ttl_then_versions(spark, monkeypatch):
-    base = datetime.datetime(2024, 1, 1)
-
-    def day(i):
-        return base + datetime.timedelta(days=i)
-
-    # days 0,1 expired (age > 10d from max=day23); days 20..23 live:
-    # newest 3 kept, day-20 cell version-purged
-    events = spark.createDataFrame(
-        [_ev(i, day(d)) for i, d in enumerate([0, 1, 20, 21, 22, 23])],
-        EVENTS_SCHEMA,
-    )
-    monkeypatch.setattr(cdc, "load_table", lambda s, sf, n: events)
-    out = cdc_version_gc_policy(spark, "r9e").collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.n_cells, r.n_kept, r.n_purged_ttl, r.n_purged_version) == (
-        6, 3, 2, 1,
-    )
-    assert r.kept_min_ms == int(day(21).timestamp() * 1000)
-    assert r.kept_max_ms == int(day(23).timestamp() * 1000)
 
 
 def test_apriori_triples_planted_basket(spark, monkeypatch):
